@@ -36,7 +36,8 @@ def connect(tmp_dir: str):
     return duck
 
 
-def _files(path: str) -> str:
+def parquet(path: str) -> str:
+    """DuckDB table function over the parquet files of a table directory."""
     return f"read_parquet('{os.path.join(path, '*.parquet')}')"
 
 
@@ -45,7 +46,7 @@ def web_rule_counts(duck, path: str) -> dict:
     cols = ", ".join(f"count(*) FILTER (WHERE {p})" for _, p in WEB_RULES)
     row = duck.execute(
         f"SELECT count(*), count(*) FILTER (WHERE {INVALID}), {cols} "
-        f"FROM {_files(path)}").fetchone()
+        f"FROM {parquet(path)}").fetchone()
     rules: dict = {}
     for (rule, _), n in zip(WEB_RULES, row[2:]):
         rules[rule] = rules.get(rule, 0) + n
@@ -64,10 +65,10 @@ def web_file_counts(duck, path: str) -> dict:
 
 def audit_outputs(duck, audit: str, violations: str) -> dict:
     units, distinct_units, rows = duck.execute(
-        f"SELECT count(*), count(DISTINCT unit), sum(rows) FROM {_files(audit)}"
+        f"SELECT count(*), count(DISTINCT unit), sum(rows) FROM {parquet(audit)}"
     ).fetchone()
     v_rows, v_ids = duck.execute(
-        f"SELECT count(*), count(DISTINCT doc_id) FROM {_files(violations)}"
+        f"SELECT count(*), count(DISTINCT doc_id) FROM {parquet(violations)}"
     ).fetchone()
     return {"units": units, "distinct_units": distinct_units, "rows": rows,
             "violation_rows": v_rows, "violation_ids": v_ids}
@@ -83,7 +84,7 @@ def exact_ks(values, left) -> dict:
 
 
 def table_constraints(duck, path: str) -> dict:
-    t = _files(path)
+    t = parquet(path)
     q = duck.execute
     uniq = q(f"""WITH c AS (SELECT url, count(*) AS n FROM {t} GROUP BY url)
         SELECT sum(n), count(*), count(*) FILTER (WHERE n > 1),
@@ -94,15 +95,6 @@ def table_constraints(duck, path: str) -> dict:
         FROM {t}""").fetchone()
     cells = q(f"""SELECT source = 'src3' AS bucket, lang AS value, count(*) AS n
         FROM {t} GROUP BY ALL""").fetchall()
-    chi = q(f"""WITH c AS (SELECT source = 'src3' AS b, lang AS v, count(*) AS n
-                           FROM {t} GROUP BY ALL),
-        r AS (SELECT b, sum(n) AS rn FROM c GROUP BY b),
-        k AS (SELECT v, sum(n) AS cn FROM c GROUP BY v),
-        g AS (SELECT sum(n) AS gn FROM c)
-        SELECT sum(power(n - rn * cn / gn, 2) / (rn * cn / gn)),
-               (count(DISTINCT b) - 1) * (count(DISTINCT v) - 1),
-               count(DISTINCT b), count(DISTINCT v)
-        FROM c JOIN r USING (b) JOIN k USING (v), g""").fetchone()
     ks = q(f"SELECT epoch(warc_ts)::DOUBLE AS e, source = 'src3' AS g FROM {t}"
            ).fetchnumpy()
     profile = {}
@@ -117,7 +109,6 @@ def table_constraints(duck, path: str) -> dict:
                                 "surplus_rows"), map(int, uniq))),
         "referential": dict(zip(("fact_rows", "orphan_rows", "orphan_keys"), ref)),
         "contingency": {(b, v): n for b, v, n in cells},
-        "chi_square": dict(zip(("statistic", "dof", "n_buckets", "n_values"), chi)),
         "ks": exact_ks(np.asarray(ks["e"]), np.asarray(ks["g"], dtype=bool)),
         "profile": profile,
     }

@@ -1,12 +1,14 @@
 """spark-schema-guard benchmark: one seeded workload on ``local[nproc]``.
 
-    python3 perfbench/run.py --workload row_validation --seed 1 --seconds 8 --trace 0
+    python3 perfbench/run.py --workload row_validation --seed 1 --seconds 2 --trace 0
 
 Run from the repository root (the package is imported from there).  It
 sets up ``SETUPS`` times (session, input generation, plan compile; the
-first also launches the JVM) and reports the median as ``setup_s``, runs
-one warm-up pass, then times passes for ``--seconds``.  It checks every
-output against an independent oracle and prints a table of every metric
+first also launches the JVM) and reports the median of the set-ups after
+the first as ``setup_s``, runs one warm-up pass, then times passes for
+``--seconds``, at least one; each pass gives its seconds and the CPU
+seconds of the driver, the JVM and the Python workers together.  It checks
+every output against an independent oracle and prints a table of every metric
 (median, highest percentile with ten samples beyond it, sample count),
 then one JSON line.  ``--workload all`` runs both benchmark workloads
 in turn in one process.
@@ -45,9 +47,9 @@ SETUPS = 3
 KEPT = ["row_validation", "table_pipeline"]
 WORKLOADS = KEPT + ["validate_scan", "json_dynamic", "audited_resume",
                     "table_constraints"]
-MIN_PASSES = 2
-END_TO_END = [("run_s", "s"), ("rows_per_s", "1/s"), ("setup_s", "s"),
-              ("peak_rss_mb", "MB")]
+MIN_PASSES = 1
+END_TO_END = [("run_s", "s"), ("cpu_s", "s"), ("rows_per_s", "1/s"),
+              ("setup_s", "s"), ("peak_rss_mb", "MB")]
 
 
 class Checks:
@@ -64,6 +66,44 @@ class Checks:
             print(f"CHECK FAILED: {what}: {detail}", file=sys.stderr)
 
 
+CLK_TCK = os.sysconf("SC_CLK_TCK")
+
+
+def descendants(root: int) -> list[int]:
+    """Every process under ``root``, from ``/proc``."""
+    children: dict[int, list[int]] = {}
+    for entry in os.listdir("/proc"):
+        if not entry.isdigit():
+            continue
+        try:
+            with open(f"/proc/{entry}/stat") as fh:
+                ppid = int(fh.read().rsplit(")", 1)[1].split()[1])
+        except (OSError, IndexError, ValueError):
+            continue
+        children.setdefault(ppid, []).append(int(entry))
+    out, todo = [], list(children.get(root, []))
+    while todo:
+        pid = todo.pop()
+        out.append(pid)
+        todo.extend(children.get(pid, []))
+    return out
+
+
+def tree_cpu_s() -> float:
+    """CPU seconds (user + system) used so far by this process and every
+    process under it: the JVM and the Python workers.  A process that has
+    exited counts in its parent's reaped-children time."""
+    ticks = 0
+    for pid in [os.getpid()] + descendants(os.getpid()):
+        try:
+            with open(f"/proc/{pid}/stat") as fh:
+                fields = fh.read().rsplit(")", 1)[1].split()
+        except OSError:  # the process has exited
+            continue
+        ticks += sum(int(x) for x in fields[11:15])
+    return ticks / CLK_TCK
+
+
 class RssSampler(threading.Thread):
     """Peak resident memory of the Python driver, the JVM and the
     processes under the JVM (the Python workers), polled from ``/proc``.
@@ -73,7 +113,7 @@ class RssSampler(threading.Thread):
     at one poll; summing each worker's own peak would count every worker
     ever forked."""
 
-    def __init__(self, interval: float = 0.1):
+    def __init__(self, interval: float = 0.25):
         super().__init__(daemon=True)
         self.interval = interval
         self.peak = {"python driver": 0, "JVM": 0, "workers": 0}
@@ -99,25 +139,6 @@ class RssSampler(threading.Thread):
         except OSError:
             return False
 
-    @staticmethod
-    def _descendants(root: int) -> list[int]:
-        children: dict[int, list[int]] = {}
-        for entry in os.listdir("/proc"):
-            if not entry.isdigit():
-                continue
-            try:
-                with open(f"/proc/{entry}/stat") as fh:
-                    ppid = int(fh.read().rsplit(")", 1)[1].split()[1])
-            except (OSError, IndexError, ValueError):
-                continue
-            children.setdefault(ppid, []).append(int(entry))
-        out, todo = [], list(children.get(root, []))
-        while todo:
-            pid = todo.pop()
-            out.append(pid)
-            todo.extend(children.get(pid, []))
-        return out
-
     def sample(self) -> None:
         from pyspark import SparkContext
 
@@ -126,7 +147,7 @@ class RssSampler(threading.Thread):
         if gateway is not None and getattr(gateway, "proc", None) is not None:
             # Python only: a child the JVM forks to run a shell command
             # shares the JVM's memory until it execs
-            workers = [p for p in self._descendants(gateway.proc.pid)
+            workers = [p for p in descendants(gateway.proc.pid)
                        if self._is_python(p)]
             now["JVM"] = self._status_kb(gateway.proc.pid, "VmHWM:")
             now["workers"] = sum(self._status_kb(p, "VmRSS:") for p in workers)
@@ -226,17 +247,20 @@ def set_up(ctx, workload_cls, index: int):
     return workload
 
 
-def measure(ctx, workload, seconds: float) -> list[float]:
-    """One warm-up pass (not timed), then passes for ``seconds``."""
+def measure(ctx, workload, seconds: float) -> tuple[list, list]:
+    """One warm-up pass (not timed), then passes for ``seconds``: the
+    seconds and the CPU seconds of each."""
     with ctx.tracer.span("pass", warmup=True):
         workload.run_pass(ctx)
     workload.subtimes.clear()
-    samples = []
+    samples, cpu = [], []
     deadline = time.perf_counter() + seconds
     while len(samples) < MIN_PASSES or time.perf_counter() < deadline:
+        cpu0 = tree_cpu_s()
         with ctx.tracer.span("pass"):
             samples.append(workload.run_pass(ctx))
-    return samples
+        cpu.append(tree_cpu_s() - cpu0)
+    return samples, cpu
 
 
 def percentile_label(values) -> tuple[str, float | None]:
@@ -275,7 +299,7 @@ def run_workload(args, name, run_dir, trace_root, checks, sampler):
     seconds = args.seconds / 2 if args.trace else args.seconds
     ctx.tracer = NullTracer()
     t_measure = time.perf_counter()
-    samples = measure(ctx, workload, seconds)
+    samples, cpu = measure(ctx, workload, seconds)
     peak_mb = sampler.stop() if sampler else None
     lines = []
     if args.trace:
@@ -294,7 +318,7 @@ def run_workload(args, name, run_dir, trace_root, checks, sampler):
         with tracer.span("setup"):
             workload = cls()
             workload.setup(ctx)
-        traced = measure(ctx, workload, seconds)
+        traced, _ = measure(ctx, workload, seconds)
     import oracle
     t_check = time.perf_counter()
     ctx.duck = oracle.connect(os.path.join(run_dir, "tmp"))
@@ -327,8 +351,10 @@ def run_workload(args, name, run_dir, trace_root, checks, sampler):
 
     values = {
         "run_s": samples,
+        "cpu_s": cpu,
         "rows_per_s": [cls.rows / s for s in samples],
-        "setup_s": setup_s,
+        # the first set-up also launches the JVM and runs cold
+        "setup_s": setup_s[1:],
         "peak_rss_mb": [peak_mb],
     }
     lines.append(f"{name}: {cls.rows} input rows, {len(samples)} timed passes, "
@@ -347,7 +373,7 @@ def main(argv=None) -> int:
     parser = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     parser.add_argument("--workload", required=True, choices=WORKLOADS + ["all"])
     parser.add_argument("--seed", type=int, default=1)
-    parser.add_argument("--seconds", type=float, default=8)
+    parser.add_argument("--seconds", type=float, default=2)
     parser.add_argument("--trace", type=int, choices=(0, 1), default=0)
     args = parser.parse_args(argv)
 

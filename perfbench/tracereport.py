@@ -280,7 +280,7 @@ class Trace:
         ref_nodes = collections.Counter()
         for x in self.execs(self.within(ids, "referential")):
             ref_nodes.update(self.log.exec_nodes.get(x, {}))
-        drift_ids = self.within(ids, "chi_square", "ks_grid")
+        drift_ids = self.within(ids, "ks_grid")
         stats_ids = self.within(ids, "profile")
         m.update({
             "uniqueness.shuffle_write_bytes": total("sw_bytes", uniq),
