@@ -6,7 +6,7 @@ Public API (driver-side):
   reference library's call signature (fastjsonschema ``__init__.py:135-290``),
   compiled once into Python closures (no exec, no codegen).
 * :func:`compile_plan` — schema → columnar :class:`ValidationPlan` of Spark
-  Column expressions; ``plan.apply(df)`` adds ``verdict`` and ``violations``
+  SQL rule expressions; ``plan.apply(df)`` adds ``verdict`` and ``violations``
   columns evaluated JVM-side by whole-stage codegen.
 * :mod:`spark_schema_guard.operators` — table-level constraint operators:
   column stats, salted uniqueness, referential integrity, distribution

@@ -1,13 +1,18 @@
 """Columnar plan compiler: JSON-Schema definition → ordered list of
-vectorized rule predicates (Spark Column expressions).
+vectorized rule predicates, each written as Spark SQL text.
 
 The Spark analog of the reference's code generator (``generator.py``): one
-driver-side compile turns the schema into declarative Column expressions that
-Catalyst optimizes and whole-stage codegen evaluates JVM-side — no per-row
-Python in the hot path.  Evaluation-order parity: rules are emitted in the
-reference's keyword-registration order (``draft04.py:42-68`` + draft-06/07
-extensions), properties in schema order, so the first element of the
-``violations`` array equals the reference's fast-fail error.
+driver-side compile turns the schema into declarative SQL that Catalyst
+optimizes and whole-stage codegen evaluates JVM-side — no per-row Python
+in the hot path.  Compilation is plain Python string building (zero py4j
+round-trips); the plan parses the finished text when it is applied.
+Typed columns compile here; VARIANT values (open-key and exact-typed JSON
+values, recursive ``$ref``) compile in the mixed-in ``varsql`` world, and
+both emit the same :class:`~.plan.Rule` text.  Evaluation-order parity:
+rules are emitted in the reference's keyword-registration order
+(``draft04.py:42-68`` + draft-06/07 extensions), properties in schema
+order, so the first element of the ``violations`` array equals the
+reference's fast-fail error.
 
 Static-type constant folding (the optimization the reference cannot do, and
 Catalyst cannot either because it doesn't know rule semantics):
@@ -27,19 +32,19 @@ Python-regex parity: ``pattern``/``format`` default to JVM ``rlike`` with the
 ``$``→``\\Z``→``\\z`` end-anchor translation (fast path); ``regex_engine=
 "python"`` switches to an Arrow-batched pandas UDF running the same
 precompiled Python regex bank as the reference for byte-exact semantics.
+Python-UDF predicates (that engine, callable custom formats, ``format:
+regex``) are the only Column-built expressions: each is a plan helper
+column the rule text references by name.
 """
 
 from __future__ import annotations
 
-
-import math
+import dataclasses
 import re
-
-import pandas as pd
 from dataclasses import dataclass
 from decimal import Decimal
 
-from pyspark.sql import Column
+import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -52,9 +57,8 @@ from ..rowcheck.compiler import (
 )
 from . import typemap
 from .plan import Rule, ValidationPlan
-from .varsql import (_NestedSQL, _PackEntries, _PackSingle,
-                     _VariantSQLMixin, _Views)
-from .varsql import sqlstr as _sqlstr
+from .varsql import (_JSON_LITERAL_RE, _NestedSQL, _PackEntries, _PackSingle,
+                     _VariantSQLMixin, _Views, _nf, sqlnum, sqlstr)
 
 _ISO_TS = "yyyy-MM-dd'T'HH:mm:ss'Z'"
 _ISO_DATE = "yyyy-MM-dd"
@@ -62,103 +66,56 @@ _ISO_DATE = "yyyy-MM-dd"
 
 @dataclass
 class _Site:
-    """One value location: a column, struct field, map value, or array
-    element reached via HOF lambda."""
+    """One value location as SQL text: a column, struct field, map value,
+    or array element reached via a HOF lambda."""
 
-    expr: Column | None  # None only for the root row object
+    expr: str | None  # None only for the root row object
     dtype: T.DataType
     sname: str  # static dotted name for plan display
-    name_col: Column  # runtime name expression (handles dynamic indices)
+    name: str | None = None  # runtime name; None = the static sname
     base_uri: str = ""
     # Columns and struct fields follow NULL-means-absent; array elements and
     # map values are always "present" — their NULL is a JSON null value.
     null_is_value: bool = False
     # For struct sites parsed out of a JSON string column: the JSON TEXT of
     # this object (root = the raw column; nested = get_json_object slice).
-    # Lets object keywords see the TRUE runtime key set via
-    # json_object_keys instead of only the schema-declared struct fields.
-    json_expr: Column | None = None
-    # Pre-materialized map<string,variant> view of json_expr (a helper
-    # column, so the parse happens once per row — from_json is
-    # CodegenFallback and would re-evaluate per inline copy).
-    variant_expr: Column | None = None
-    # COLUMN NAME of variant_expr when it is a named (helper) column —
-    # the anchor the SQL-text rule world (varsql) hangs off.
-    variant_name: str | None = None
-    # Pre-materialized json_object_keys(json_expr) (same reasoning: the
-    # JSON expressions re-parse per inline occurrence, and several object
-    # keywords consult the key set).
-    keys_expr: Column | None = None
-    # Owning compiler, for registering helper columns: nested JSON-backed
-    # sites materialize their variant-map/key-set parses as plan aux
-    # columns instead of inlining a re-parse per consulting rule.  Only
-    # row-level sites carry json_expr, so HOF-lambda element sites (whose
-    # exprs are lambda variables, invalid as top-level columns) can never
-    # trigger a registration.
-    compiler: "object | None" = None
+    # Lets object keywords see the TRUE runtime key set instead of only
+    # the schema-declared struct fields.
+    json: str | None = None
+    # Helper column holding the map<string,variant> view of ``json`` — the
+    # anchor the varsql rule world hangs off.
+    variant: str | None = None
+    # Runtime key array of ``json`` (a helper column or map_keys(variant)).
+    # Several object keywords consult it; JSON expressions re-parse per
+    # inline occurrence, so parses are materialized once per row.
+    keys: str | None = None
+    # Inside a HOF lambda: the value is a lambda variable, so it cannot
+    # feed a row-level helper column.
+    lam: bool = False
 
-    def present(self) -> Column:
+    @property
+    def name_sql(self) -> str:
+        return sqlstr(self.sname) if self.name is None else self.name
+
+    def present(self) -> str:
         if self.expr is None or self.null_is_value:
-            return F.lit(True)
-        if self.keys_expr is not None:
+            return "true"
+        if self.keys is not None:
             # JSON-backed object site: presence = the text parsed as a
             # JSON object.  Equivalent to the typed-struct parse being
             # non-null for every row the caller doesn't already override
             # with its malformed-JSON check, and it frees Catalyst to
             # prune the struct parse when all rules compile against the
             # variant view (scalar-only schemas → one parse per row).
-            return self.keys_expr.isNotNull()
-        return self.expr.isNotNull()
+            return f"({self.keys} IS NOT NULL)"
+        return f"({self.expr} IS NOT NULL)"
 
-    def object_variant_map(self) -> Column:
-        """map<string,variant> view of this JSON object's entries
-        (try_parse_json + "$" cast — the native variant parser measures
-        ~16x cheaper than from_json(map<string,variant>))."""
-        if self.variant_expr is None:
-            vm = F.try_variant_get(F.try_parse_json(self.json_expr),
-                                   "$", "map<string,variant>")
-            if self.compiler is not None:
-                vm, self.variant_name = self.compiler._materialize2(
-                    "vmap", vm)
-            self.variant_expr = vm
-        return self.variant_expr
-
-    def object_variant_map_sql(self) -> str:
-        """The variant-map view as SQL text (a quoted helper-column
-        name) — the anchor for the text-mode rule compiler."""
-        self.object_variant_map()
-        if self.variant_name is None:
-            # variant view exists but is unnamed: pin it to a helper
-            self.variant_expr, self.variant_name = \
-                self.compiler._materialize2("vmap", self.variant_expr)
-        return f"`{self.variant_name}`"
-
-    def child(self, expr, dtype, suffix_static, name_col=None,
-              json_expr=None) -> "_Site":
-        return _Site(
-            expr=expr,
-            dtype=dtype,
-            sname=self.sname + suffix_static,
-            name_col=name_col if name_col is not None
-            else F.concat(self.name_col, F.lit(suffix_static)),
-            base_uri=self.base_uri,
-            json_expr=json_expr,
-            compiler=self.compiler,
-        )
-
-    def object_keys(self) -> Column | None:
-        """Runtime key array of this object, when the true key set is
-        knowable (JSON-backed struct sites); None for plain structs."""
-        if self.keys_expr is None:
-            if self.variant_expr is not None:
-                # piggyback on the already-materialized variant parse
-                self.keys_expr = F.map_keys(self.variant_expr)
-            elif self.json_expr is not None:
-                k = F.json_object_keys(self.json_expr)
-                if self.compiler is not None:
-                    k = self.compiler._materialize("keys", k)
-                self.keys_expr = k
-        return self.keys_expr
+    def child(self, expr, dtype, suffix, json=None,
+              null_is_value=False) -> "_Site":
+        name = (None if self.name is None
+                else f"concat({self.name}, {sqlstr(suffix)})")
+        return _Site(expr, dtype, self.sname + suffix, name, self.base_uri,
+                     null_is_value, json=json, lam=self.lam)
 
 
 def _json_path(key: str) -> str:
@@ -166,6 +123,22 @@ def _json_path(key: str) -> str:
     if re.fullmatch(r"[A-Za-z0-9_]+", key):
         return f"$.{key}"
     return "$['" + key.replace("'", "\\'") + "']"
+
+
+def _ident(name: str) -> str:
+    """Quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _and(*parts: str) -> str:
+    parts = [p for p in parts if p != "true"]
+    if not parts:
+        return "true"
+    return parts[0] if len(parts) == 1 else "(" + " AND ".join(parts) + ")"
+
+
+def _or(parts) -> str:
+    return "(" + " OR ".join(parts) + ")" if parts else "false"
 
 
 class PlanUnsupported(SchemaDefinitionError):
@@ -230,7 +203,9 @@ class _PlanCompiler(_VariantSQLMixin):
         # schemas cost 0.03-1.1M chars at depths 3-5 (compile in ms, run
         # JVM-only); the draft-04 metaschema costs 3.9M at depth 1 and
         # ~2 min of Catalyst analysis — the python engine is the right
-        # tool there, so the default budget draws the line between them
+        # tool there, so the default budget draws the line between them.
+        # Only the variant world spends against them: typed-column rules
+        # have no recursion to unroll.
         self._vref_budget = int(options.get("ref_unroll_budget", 4000))
         self._vsql_char_budget = int(
             options.get("plan_text_budget", 2_000_000))
@@ -246,48 +221,62 @@ class _PlanCompiler(_VariantSQLMixin):
         self._v_base_uri: str | None = None
         self.defaults: list[tuple[str, object]] = []  # top-level column defaults
         self._ref_stack: list[tuple[str, str]] = []
-        # helper columns (name, expr) the plan must project before rule
-        # evaluation — nested JSON parses materialized once per row
-        # instead of once per consulting rule (from_json/get_json_object
-        # are CodegenFallback: every inline copy re-parses the text)
-        self.aux_cols: list[tuple[str, Column]] = []
+        # helper columns (name, SQL text or Column thunk) the plan must
+        # project before rule evaluation — nested JSON parses
+        # materialized once per row instead of once per consulting rule
+        # (from_json/get_json_object are CodegenFallback: every inline
+        # copy re-parses the text), and Python-UDF predicates
+        self.aux_cols: list[tuple[str, object]] = []
         self._aux_memo: dict = {}
 
-    def _materialize(self, hint: str, col: Column) -> Column:
-        return self._materialize2(hint, col)[0]
+    def _aux(self, hint: str, sql) -> str:
+        """Register a helper column and return its quoted name.  Text is
+        memoized: combinator branches re-request the same typed
+        projection of the same variant — they must share one helper
+        column, not stack duplicates."""
+        key = (hint, sql) if isinstance(sql, str) else None
+        name = self._aux_memo.get(key)
+        if name is None:
+            name = f"__aux{len(self.aux_cols)}_{hint}__"
+            self.aux_cols.append((name, sql))
+            if key is not None:
+                self._aux_memo[key] = name
+        return f"`{name}`"
 
-    def _materialize2(self, hint: str, col: Column) -> tuple[Column, str]:
-        # memoized on the expression fingerprint: combinator branches
-        # re-request the same typed projection of the same variant —
-        # they must share one helper column, not stack duplicates.
-        # Returns (column, name): the NAME anchors the SQL-text rule
-        # world (varsql) to the materialized helper.
-        key = (hint, str(col))
-        cached = self._aux_memo.get(key)
-        if cached is not None:
-            return F.col(cached), cached
-        name = f"__aux{len(self.aux_cols)}_{hint}__"
-        self.aux_cols.append((name, col))
-        self._aux_memo[key] = name
-        return F.col(name), name
+    def _vmap(self, site: _Site) -> str:
+        """map<string,variant> view of a JSON object site's entries
+        (try_parse_json + "$" cast — the native variant parser measures
+        ~16x cheaper than from_json(map<string,variant>))."""
+        if site.variant is None:
+            site.variant = self._aux(
+                "vmap", f"try_variant_get(try_parse_json({site.json}), "
+                        "'$', 'map<string,variant>')")
+        return site.variant
+
+    def _keys(self, site: _Site) -> str | None:
+        """Runtime key array of this object, when the true key set is
+        knowable (JSON-backed struct sites); None for plain structs."""
+        if site.keys is None:
+            if site.variant is not None:
+                # piggyback on the already-materialized variant parse
+                site.keys = f"map_keys({site.variant})"
+            elif site.json is not None:
+                site.keys = self._aux("keys",
+                                      f"json_object_keys({site.json})")
+        return site.keys
 
     # ------------------------------------------------------------------
     def compile_root(self, definition, df_schema: T.StructType) -> list[Rule]:
-        site = _Site(
-            expr=None,
-            dtype=df_schema,
-            sname="data",
-            name_col=F.lit("data"),
-            base_uri=self.store.root_uri(),
-        )
+        site = _Site(None, df_schema, "data",
+                     base_uri=self.store.root_uri())
         return self.compile_value(definition, site)
 
     def compile_value(self, definition, site: _Site) -> list[Rule]:
         if definition is True or definition == {}:
             return []
         if definition is False:
-            return [Rule(None, site.sname, site.name_col,
-                         F.concat(site.name_col, F.lit(" must not be there")),
+            return [Rule(None, site.sname, site.name_sql,
+                         f"concat({site.name_sql}, ' must not be there')",
                          site.present())]
         if not isinstance(definition, dict):
             raise SchemaDefinitionError("definition must be an object")
@@ -304,15 +293,8 @@ class _PlanCompiler(_VariantSQLMixin):
                 # same site, re-based to the target document — $ref is
                 # transparent, so every value-semantics field (explicit
                 # null handling, JSON text/variant/key views) carries over
-                sub_site = _Site(site.expr, site.dtype, site.sname,
-                                 site.name_col, doc_uri,
-                                 null_is_value=site.null_is_value,
-                                 json_expr=site.json_expr,
-                                 variant_expr=site.variant_expr,
-                                 variant_name=site.variant_name,
-                                 keys_expr=site.keys_expr,
-                                 compiler=site.compiler)
-                return self.compile_value(target, sub_site)
+                return self.compile_value(
+                    target, dataclasses.replace(site, base_uri=doc_uri))
             finally:
                 self._ref_stack.pop()
 
@@ -325,51 +307,65 @@ class _PlanCompiler(_VariantSQLMixin):
                 rules.extend(handler(definition, site) or [])
         return rules
 
-    def _pass_expr(self, definition, site: _Site) -> Column:
-        """Whole-subschema success as one boolean Column (combinator probe)."""
+    def _pass_sql(self, definition, site: _Site) -> str:
+        """Whole-subschema success as one boolean (combinator probe)."""
         rules = self.compile_value(definition, site)
-        ok = F.lit(True)
-        for rule in rules:
-            ok = ok & ~_null_false(rule.fail)
-        return ok
+        if not rules:
+            return "true"
+        return "(" + " AND ".join(f"NOT {_nf(r.fail)}" for r in rules) + ")"
 
     # -- helpers -----------------------------------------------------------
 
     def _rule(self, site, rule_id, message, fail) -> Rule:
-        if isinstance(message, str):
-            message = F.concat(site.name_col, F.lit(" " + message))
-        value_col = site.expr.cast("string") if site.expr is not None else None
-        return Rule(rule_id, site.sname, site.name_col, message,
-                    site.present() & _null_false(fail), value_col=value_col)
+        return Rule(rule_id, site.sname, site.name_sql, _msg(site, message),
+                    _and(site.present(), _nf(fail)),
+                    value=(f"CAST({site.expr} AS STRING)"
+                           if site.expr is not None else None))
 
-    def _string_expr(self, site: _Site) -> Column | None:
+    def _string_expr(self, site: _Site) -> str | None:
         """The value as its JSON string form, or None if never a string."""
         if typemap.is_temporal(site.dtype):
             pattern = _ISO_DATE if isinstance(site.dtype, T.DateType) else _ISO_TS
-            return F.date_format(site.expr, pattern)
+            return f"date_format({site.expr}, {sqlstr(pattern)})"
         if isinstance(site.dtype, (T.StringType, T.CharType, T.VarcharType)):
             return site.expr
         return None
 
-    def _regex_match(self, expr: Column, pattern: str, *, anchored: bool) -> Column:
+    def _regex_match(self, site, expr, pattern: str, *, anchored: bool) -> str:
         """True where the string matches.  anchored=True uses ``.match``
         semantics (formats), else ``.search`` (pattern keyword)."""
         if self.regex_engine == "python":
             compiled = re.compile(pattern)
-            if anchored:
-                @F.pandas_udf(T.BooleanType())
-                def matcher(s: pd.Series) -> pd.Series:
-                    return s.map(lambda v: v is not None and bool(compiled.match(v)))
-            else:
-                @F.pandas_udf(T.BooleanType())
-                def matcher(s: pd.Series) -> pd.Series:
-                    return s.map(lambda v: v is not None and bool(compiled.search(v)))
 
-            return matcher(expr)
+            def test(v):
+                found = compiled.match(v) if anchored else compiled.search(v)
+                return found is not None
+
+            return self._udf_predicate(site, expr, "re", test)
         java = jvm_pattern(pattern)
         if anchored and not java.startswith("^"):
             java = "^(?:" + java + ")"
-        return expr.rlike(java)
+        return f"rlike({expr}, {sqlstr(java)})"
+
+    def _udf_predicate(self, site, expr, hint, test, on_null=False) -> str:
+        """A Python predicate over a string value: an Arrow-batched pandas
+        UDF projected as a plan helper column the rule text references
+        by name.  Element/entry values live inside HOF lambdas, where
+        Spark cannot run a Python UDF."""
+        if site.lam:
+            raise PlanUnsupported(
+                "Python-evaluated predicates (regex_engine='python', "
+                "callable formats, format 'regex') cannot check array "
+                "elements or map entries; use engine='python'")
+
+        def build():
+            @F.pandas_udf(T.BooleanType())
+            def predicate(s: pd.Series) -> pd.Series:
+                return s.map(lambda v: on_null if v is None else bool(test(v)))
+
+            return predicate(F.expr(expr))
+
+        return self._aux(hint, build)
 
     # -- type --------------------------------------------------------------
 
@@ -379,52 +375,48 @@ class _PlanCompiler(_VariantSQLMixin):
         for t in types:
             if t not in ("null", "boolean", "number", "integer", "string", "array", "object"):
                 raise SchemaDefinitionError("Unknown type")
+        message = "must be " + " or ".join(types)
         static = typemap.json_types_of(site.dtype)
         if any(t in types for t in static):
             # statically satisfied for non-null values; a JSON null value
             # (array element / map value) still fails unless null allowed
             if site.null_is_value and "null" not in types:
-                return [self._rule(site, "type", "must be " + " or ".join(types),
-                                   site.expr.isNull())]
+                return [self._rule(site, "type", message,
+                                   f"({site.expr} IS NULL)")]
             return []  # constant-fold away
         if "integer" in types and typemap.is_fractional(site.dtype) and self.integral_float_is_int:
             expr = site.expr
             # modulo, not floor(): floor on a double returns LONG, which
             # overflows (-> NULL/ANSI error) for magnitudes past 2^63 —
             # 1e308 IS integral (float.is_integer() in the reference)
-            is_integral = (expr % F.lit(1.0)) == F.lit(0.0)
+            is_integral = f"(({expr} % 1.0D) = 0.0D)"
             if isinstance(site.dtype, (T.FloatType, T.DoubleType)):
-                inf = float("inf")
-                is_integral = (
-                    ~F.isnan(expr) & (F.abs(expr) != F.lit(inf)) & is_integral
-                )
-            fail = ~is_integral
+                is_integral = (f"(NOT isnan({expr}) AND abs({expr}) != "
+                               f"double('Infinity') AND {is_integral})")
+            fail = f"(NOT {is_integral})"
             if site.null_is_value and "null" not in types:
-                fail = fail | expr.isNull()
-            return [self._rule(site, "type",
-                               "must be " + " or ".join(types), fail)]
+                fail = f"({fail} OR {expr} IS NULL)"
+            return [self._rule(site, "type", message, fail)]
         if site.null_is_value and "null" in types:
             # only the JSON null value satisfies the declared types; when
             # the raw JSON text is available, use it — the typed parse
             # maps non-coercible values to NULL, which would otherwise be
             # indistinguishable from a true JSON null
-            if site.json_expr is not None:
-                return [self._rule(site, "type", "must be " + " or ".join(types),
-                                   site.json_expr.isNotNull())]
-            return [self._rule(site, "type", "must be " + " or ".join(types),
-                               site.expr.isNotNull())]
+            value = site.json if site.json is not None else site.expr
+            return [self._rule(site, "type", message,
+                               f"({value} IS NOT NULL)")]
         # statically impossible: every present value violates.  One
         # exception: a JSON-backed site whose struct inference fell back
         # to string (recursive $ref — no finite static type) may hold a
         # real object/array at runtime; a constant-fail would be silently
         # wrong, so refuse the plan instead.
-        if (site.json_expr is not None
+        if (site.json is not None
                 and isinstance(site.dtype, (T.StringType,))
                 and ("object" in types or "array" in types)):
             raise PlanUnsupported(
                 "recursive $ref object/array schemas have no finite static "
                 "type for the columnar engine; use engine='python'")
-        return [self._rule(site, "type", "must be " + " or ".join(types), F.lit(True))]
+        return [self._rule(site, "type", message, "true")]
 
     # -- enum / const ------------------------------------------------------
 
@@ -436,33 +428,34 @@ class _PlanCompiler(_VariantSQLMixin):
         compatible = [v for v in enum if _value_fits(v, site.dtype)]
         null_passes = site.null_is_value and any(v is None for v in enum)
         if not compatible and not null_passes:
-            return [self._rule(site, "enum", message, F.lit(True))]
+            return [self._rule(site, "enum", message, "true")]
         if not compatible:
             # only the null member can match (e.g. enum [null] on a
             # string site): pass exactly on explicit JSON null
-            return [self._rule(site, "enum", message, site.expr.isNotNull())]
+            return [self._rule(site, "enum", message,
+                               f"({site.expr} IS NOT NULL)")]
         expr = site.expr
         string_expr = self._string_expr(site)
         if string_expr is not None:
             expr = string_expr
             compatible = [v for v in compatible if isinstance(v, str)]
-        ok = F.lit(False)
-        for v in compatible:
-            ok = ok | expr.eqNullSafe(_literal(v, site.dtype))
-        if site.null_is_value and any(v is None for v in enum):
-            ok = ok | site.expr.isNull()
-        return [self._rule(site, "enum", message, ~ok)]
+        ok = [f"({expr} <=> {_lit(v)})" for v in compatible]
+        if null_passes:
+            ok.append(f"({site.expr} IS NULL)")
+        return [self._rule(site, "enum", message, f"NOT {_or(ok)}")]
 
     def _kw_const(self, definition, site):
         const = definition["const"]
         message = f"must be same as const definition: {schema_value_repr(const)}"
         if const is None and site.null_is_value:
-            return [self._rule(site, "const", message, site.expr.isNotNull())]
+            return [self._rule(site, "const", message,
+                               f"({site.expr} IS NOT NULL)")]
         if not _value_fits(const, site.dtype):
-            return [self._rule(site, "const", message, F.lit(True))]
+            return [self._rule(site, "const", message, "true")]
         expr = self._string_expr(site)
         expr = expr if expr is not None else site.expr
-        return [self._rule(site, "const", message, ~expr.eqNullSafe(_literal(const, site.dtype)))]
+        return [self._rule(site, "const", message,
+                           f"NOT ({expr} <=> {_lit(const)})")]
 
     # -- numbers -----------------------------------------------------------
 
@@ -478,39 +471,33 @@ class _PlanCompiler(_VariantSQLMixin):
         # compare what the reference's generated code compares (Decimal
         # bounds re-parse as int/float literals); message keeps str(bound)
         cmp = ref_numeric(bound)
-        lit_bound = F.lit(int(cmp) if isinstance(cmp, bool) else cmp)
-        fail = op(site.expr, lit_bound)
-        return [self._rule(site, keyword, message_tpl.format(bound), fail)]
+        lit_bound = _lit(int(cmp) if isinstance(cmp, bool) else cmp)
+        return [self._rule(site, keyword, message_tpl.format(bound),
+                           f"({site.expr} {op} {lit_bound})")]
 
     def _kw_minimum(self, definition, site):
         # exclusiveMinimum here is the draft-04 boolean modifier, but the
         # reference treats any truthy value as "exclusive" (draft04.py:339)
         if bool(definition.get("exclusiveMinimum", False)):
-            return self._numeric_bound(
-                definition, site, "minimum", lambda c, b: c <= b,
-                "must be bigger than {}")
-        return self._numeric_bound(
-            definition, site, "minimum", lambda c, b: c < b,
-            "must be bigger than or equal to {}")
+            return self._numeric_bound(definition, site, "minimum", "<=",
+                                       "must be bigger than {}")
+        return self._numeric_bound(definition, site, "minimum", "<",
+                                   "must be bigger than or equal to {}")
 
     def _kw_maximum(self, definition, site):
         if bool(definition.get("exclusiveMaximum", False)):
-            return self._numeric_bound(
-                definition, site, "maximum", lambda c, b: c >= b,
-                "must be smaller than {}")
-        return self._numeric_bound(
-            definition, site, "maximum", lambda c, b: c > b,
-            "must be smaller than or equal to {}")
+            return self._numeric_bound(definition, site, "maximum", ">=",
+                                       "must be smaller than {}")
+        return self._numeric_bound(definition, site, "maximum", ">",
+                                   "must be smaller than or equal to {}")
 
     def _kw_exclusive_minimum(self, definition, site):
-        return self._numeric_bound(
-            definition, site, "exclusiveMinimum", lambda c, b: c <= b,
-            "must be bigger than {}")
+        return self._numeric_bound(definition, site, "exclusiveMinimum",
+                                   "<=", "must be bigger than {}")
 
     def _kw_exclusive_maximum(self, definition, site):
-        return self._numeric_bound(
-            definition, site, "exclusiveMaximum", lambda c, b: c >= b,
-            "must be smaller than {}")
+        return self._numeric_bound(definition, site, "exclusiveMaximum",
+                                   ">=", "must be smaller than {}")
 
     def _kw_multiple_of(self, definition, site):
         divisor = definition["multipleOf"]
@@ -524,14 +511,14 @@ class _PlanCompiler(_VariantSQLMixin):
             # exact long modulo — documented deliberate divergence from
             # the reference's float true-division past 2^53 on TYPED
             # integer columns (tests/test_divergences.py)
-            fail = (expr % F.lit(divisor)) != F.lit(0)
+            fail = f"(({expr} % {_lit(divisor)}) != 0)"
         elif isinstance(divisor, (int, bool)) and not isinstance(divisor, float):
             # fractional value, int divisor: mirror the reference's
             # float true-division — invalid iff the double quotient is
             # non-integral, so any |q| >= 2^52 is integral and valid
             # (draft04.py:366)
-            q = expr / F.lit(float(divisor))
-            fail = (q % F.lit(1.0)) != F.lit(0.0)
+            fail = (f"((({expr} / {sqlnum(float(divisor))}) % 1.0D) "
+                    "!= 0.0D)")
         else:
             # Float divisor: double→decimal cast goes through the
             # shortest decimal repr (BigDecimal.valueOf), the JVM analog
@@ -539,46 +526,40 @@ class _PlanCompiler(_VariantSQLMixin):
             # (draft04.py:361-366).  try_cast, with a double-fmod
             # fallback: magnitudes past Decimal(38,18) (~1e20) would
             # raise under ANSI.
-            dec = T.DecimalType(38, 18)
-            fail = F.coalesce(
-                (expr.try_cast(dec) % F.lit(divisor).cast(dec))
-                != F.lit(0).cast(dec),
-                (expr % F.lit(float(divisor))) != F.lit(0.0))
+            dec = "DECIMAL(38,18)"
+            fail = (f"coalesce((try_cast({expr} AS {dec}) % "
+                    f"CAST({_lit(divisor)} AS {dec})) != CAST(0 AS {dec}), "
+                    f"({expr} % {sqlnum(float(divisor))}) != 0.0D)")
         rules = [self._rule(site, "multipleOf",
                             f"must be multiple of {msg_divisor}", fail)]
         if typemap.is_fractional(site.dtype) and not isinstance(site.dtype, T.DecimalType):
-            inf = float("inf")
             rules.append(Rule(
-                "multipleOf", site.sname, site.name_col, F.lit("inifinity reached"),
-                site.present() & _null_false((expr / F.lit(divisor)) == F.lit(inf)),
-            ))
+                "multipleOf", site.sname, site.name_sql, "'inifinity reached'",
+                _and(site.present(), _nf(
+                    f"(({expr} / {_lit(divisor)}) = double('Infinity'))"))))
         return rules
 
     # -- strings -----------------------------------------------------------
 
-    def _kw_min_length(self, definition, site):
-        bound = definition["minLength"]
+    def _length_bound(self, definition, site, keyword, op, message):
+        bound = definition[keyword]
         if not isinstance(bound, (int, float)):
-            raise SchemaDefinitionError("minLength must be a number")
+            raise SchemaDefinitionError(f"{keyword} must be a number")
         expr = self._string_expr(site)
         if expr is None:
             return []
-        return [self._rule(
-            site, "minLength",
-            f"must be longer than or equal to {bound} characters",
-            F.length(expr) < F.lit(bound))]
+        return [self._rule(site, keyword, message.format(bound),
+                           f"(length({expr}) {op} {_lit(bound)})")]
+
+    def _kw_min_length(self, definition, site):
+        return self._length_bound(
+            definition, site, "minLength", "<",
+            "must be longer than or equal to {} characters")
 
     def _kw_max_length(self, definition, site):
-        bound = definition["maxLength"]
-        if not isinstance(bound, (int, float)):
-            raise SchemaDefinitionError("maxLength must be a number")
-        expr = self._string_expr(site)
-        if expr is None:
-            return []
-        return [self._rule(
-            site, "maxLength",
-            f"must be shorter than or equal to {bound} characters",
-            F.length(expr) > F.lit(bound))]
+        return self._length_bound(
+            definition, site, "maxLength", ">",
+            "must be shorter than or equal to {} characters")
 
     def _kw_pattern(self, definition, site):
         pattern = definition["pattern"]
@@ -586,8 +567,9 @@ class _PlanCompiler(_VariantSQLMixin):
         if expr is None:
             return []
         fixed = _UNESCAPED_DOLLAR.sub(r"\\Z", pattern)
-        match = self._regex_match(expr, fixed, anchored=False)
-        return [self._rule(site, "pattern", f"must match pattern {pattern}", ~match)]
+        match = self._regex_match(site, expr, fixed, anchored=False)
+        return [self._rule(site, "pattern", f"must match pattern {pattern}",
+                           f"NOT {match}")]
 
     def _kw_format(self, definition, site):
         if not self.use_formats:
@@ -599,33 +581,30 @@ class _PlanCompiler(_VariantSQLMixin):
         if format_name in self.custom_formats:
             custom = self.custom_formats[format_name]
             if isinstance(custom, str):
-                match = self._regex_match(expr, custom, anchored=True)
+                match = self._regex_match(site, expr, custom, anchored=True)
             else:
-                @F.pandas_udf(T.BooleanType())
-                def matcher(s: pd.Series) -> pd.Series:
-                    return s.map(lambda v: v is not None and bool(custom(v)))
-
-                match = matcher(expr)
-            return [self._rule(site, "format", f"must be {format_name}", ~match)]
+                match = self._udf_predicate(site, expr, "fmt", custom)
+            return [self._rule(site, "format", f"must be {format_name}",
+                               f"NOT {match}")]
         if format_name in self.format_table:
             if typemap.is_temporal(site.dtype) and format_name in ("date-time", "date"):
                 return []  # a real timestamp/date always renders validly
-            match = self._regex_match(expr, self.format_table[format_name], anchored=True)
-            return [self._rule(site, "format", f"must be {format_name}", ~match)]
+            match = self._regex_match(site, expr, self.format_table[format_name],
+                                      anchored=True)
+            return [self._rule(site, "format", f"must be {format_name}",
+                               f"NOT {match}")]
         if format_name == "regex":
-            @F.pandas_udf(T.BooleanType())
-            def compiles(s: pd.Series) -> pd.Series:
-                def try_compile(v):
-                    if v is None:
-                        return True
-                    try:
-                        re.compile(v)
-                        return True
-                    except Exception:
-                        return False
-                return s.map(try_compile)
+            def compiles(v):
+                try:
+                    re.compile(v)
+                    return True
+                except Exception:
+                    return False
 
-            return [self._rule(site, "format", "must be a valid regex", ~compiles(expr))]
+            match = self._udf_predicate(site, expr, "regex", compiles,
+                                        on_null=True)
+            return [self._rule(site, "format", "must be a valid regex",
+                               f"NOT {match}")]
         return []
 
     # -- combinators -------------------------------------------------------
@@ -637,44 +616,38 @@ class _PlanCompiler(_VariantSQLMixin):
         return rules
 
     def _kw_any_of(self, definition, site):
-        passes = [self._pass_expr(sub, site) for sub in definition["anyOf"]]
-        ok = F.lit(False)
-        for p in passes:
-            ok = ok | p
-        return [self._rule(site, "anyOf", "cannot be validated by any definition", ~ok)]
+        passes = [self._pass_sql(sub, site) for sub in definition["anyOf"]]
+        return [self._rule(site, "anyOf", "cannot be validated by any definition",
+                           f"NOT {_or(passes)}")]
 
     def _kw_one_of(self, definition, site):
-        passes = [self._pass_expr(sub, site) for sub in definition["oneOf"]]
-        count = F.lit(0)
-        for p in passes:
-            count = count + p.cast("int")
-        message = F.concat(
-            site.name_col,
-            F.lit(" must be valid exactly by one definition ("),
-            count.cast("string"),
-            F.lit(" matches found)"),
-        )
-        return [Rule("oneOf", site.sname, site.name_col, message,
-                     site.present() & (count != F.lit(1)))]
+        passes = [self._pass_sql(sub, site) for sub in definition["oneOf"]]
+        count = ("(" + " + ".join(f"CAST({p} AS INT)" for p in passes) + ")"
+                 if passes else "0")
+        message = (f"concat({site.name_sql}, ' must be valid exactly by one "
+                   f"definition (', CAST({count} AS STRING), "
+                   "' matches found)')")
+        return [Rule("oneOf", site.sname, site.name_sql, message,
+                     _and(site.present(), f"({count} != 1)"))]
 
     def _kw_not(self, definition, site):
         sub = definition["not"]
         if sub is True:
-            return [self._rule(site, "not", "must not be there", F.lit(True))]
+            return [self._rule(site, "not", "must not be there", "true")]
         if sub is False:
             return []
         return [self._rule(site, "not", "must NOT match a disallowed definition",
-                           self._pass_expr(sub, site))]
+                           self._pass_sql(sub, site))]
 
     def _kw_if(self, definition, site):
-        condition = self._pass_expr(definition["if"], site)
+        condition = self._pass_sql(definition["if"], site)
         rules = []
         if "then" in definition:
             for rule in self.compile_value(definition["then"], site):
                 rules.append(rule.gated(condition))
         if "else" in definition:
             for rule in self.compile_value(definition["else"], site):
-                rules.append(rule.gated(~condition))
+                rules.append(rule.gated(f"NOT {condition}"))
         return rules
 
     # -- arrays ------------------------------------------------------------
@@ -689,7 +662,7 @@ class _PlanCompiler(_VariantSQLMixin):
         if not self._array_guard(site):
             return []
         return [self._rule(site, "minItems", f"must contain at least {bound} items",
-                           F.size(site.expr) < F.lit(bound))]
+                           f"(size({site.expr}) < {_lit(bound)})")]
 
     def _kw_max_items(self, definition, site):
         bound = definition["maxItems"]
@@ -699,130 +672,108 @@ class _PlanCompiler(_VariantSQLMixin):
             return []
         return [self._rule(site, "maxItems",
                            f"must contain less than or equal to {bound} items",
-                           F.size(site.expr) > F.lit(bound))]
+                           f"(size({site.expr}) > {_lit(bound)})")]
 
     def _kw_unique_items(self, definition, site):
         if not definition["uniqueItems"] or not self._array_guard(site):
             return []
-        if isinstance(site.dtype, T.ArrayType) \
-                and isinstance(site.dtype.elementType, T.VariantType):
+        items = site.expr
+        if isinstance(site.dtype.elementType, T.VariantType):
             # variant-typed arrays: the reference's freeze canon
             # (cross-type 1 == 1.0, bool -> "True"/"False" collision,
             # draft04.py:412-421) via canonical strings
-            canons = F.transform(
-                site.expr, lambda x: self._variant_canon(x, self.canon_depth))
-            return [self._rule(
-                site, "uniqueItems", "must contain unique items",
-                F.size(F.array_distinct(canons)) < F.size(site.expr))]
+            x = self._vsql_var()
+            items = (f"transform({site.expr}, {x} -> "
+                     f"{self._variant_canon_sql(x, self.canon_depth)})")
         # Typed arrays are homogeneous, so the reference's freeze
         # canonicalization (bool→str etc., draft04.py:412-419) is a no-op
         # and array_distinct is exact.
         return [self._rule(site, "uniqueItems", "must contain unique items",
-                           F.size(F.array_distinct(site.expr)) < F.size(site.expr))]
+                           f"(size(array_distinct({items})) < size({site.expr}))")]
 
     def _kw_items(self, definition, site):
         items_definition = definition["items"]
         if not self._array_guard(site) or items_definition is True:
             return []
-        element_type = site.dtype.elementType
-        rules = []
-
         if items_definition is False:
             return [self._rule(site, "items", "must not be there",
-                               F.size(site.expr) > F.lit(0))]
+                               f"(size({site.expr}) > 0)")]
 
         if isinstance(items_definition, list):
+            rules = []
             for idx, item_definition in enumerate(items_definition):
-                element_site = _Site(
-                    F.try_element_at(site.expr, F.lit(idx + 1)), element_type,
-                    site.sname + f"[{idx}]",
-                    F.concat(site.name_col, F.lit(f"[{idx}]")),
-                    site.base_uri, null_is_value=True)
+                element_site = site.child(
+                    f"try_element_at({site.expr}, {idx + 1})",
+                    site.dtype.elementType,
+                    f"[{idx}]", null_is_value=True)
                 for rule in self.compile_value(item_definition, element_site):
-                    rules.append(rule.gated(
-                        site.present() & (F.size(site.expr) > F.lit(idx))))
+                    rules.append(rule.gated(_and(
+                        site.present(), f"(size({site.expr}) > {idx})")))
             n_fixed = len(items_definition)
             extra = definition.get("additionalItems")
             if extra is False:
                 rules.append(self._rule(
                     site, "items", "must contain only specified items",
-                    F.size(site.expr) > F.lit(n_fixed)))
+                    f"(size({site.expr}) > {n_fixed})"))
             elif isinstance(extra, (dict, bool)) and extra is not True:
-                fail_idx = self._first_failing_index(
-                    site, extra, element_type, start=n_fixed)
-                if fail_idx is not None:
-                    rules.append(fail_idx)
+                fail_rule = self._elements_rule(site, extra, start=n_fixed)
+                if fail_rule is not None:
+                    rules.append(fail_rule)
             return rules
 
-        fail_rule = self._first_failing_index(site, items_definition, element_type, start=0)
+        fail_rule = self._elements_rule(site, items_definition, start=0)
         return [fail_rule] if fail_rule is not None else []
 
-    def _violation_struct(self, rules) -> Column | None:
-        """First-failing-rule violation struct for a compiled rule list
-        (null when all pass) — carries the exact inner rule id, name and
+    def _violation_of(self, rules) -> str:
+        """First-failing-rule violation struct of a compiled rule list
+        (NULL when all pass) — carries the exact inner rule id, name and
         message, so nested violations match the reference byte-for-byte."""
+        parts = [f"CASE WHEN {rule.fail} THEN {rule.struct_sql()} END"
+                 for rule in rules]
+        return parts[0] if len(parts) == 1 else "coalesce(" + ", ".join(parts) + ")"
+
+    def _first_failing_rule(self, site, rule_id, rule_site, coll, params,
+                            viol) -> Rule:
+        """One rule firing when a member of ``coll`` (array elements or
+        object entries) fails; its violation is the first failing
+        member's struct ``viol`` (lambda ``params``), carrying that
+        member's own name/rule/message (``data.col[i] must be ...``)."""
+        failing = self._failing_sql(coll, params, viol)
+        return Rule(rule_id, rule_site, None, None,
+                    _and(site.present(), _nf(f"size({failing}) > 0")),
+                    dynamic=f"try_element_at({failing}, 1)")
+
+    def _elements_rule(self, site, element_definition, start):
+        """First element from ``start`` violating the element schema."""
+        x, i = self._vsql_var(), self._vsql_var("i")
+        name = (f"concat({site.name_sql}, '[', CAST({i} + {start} AS STRING), "
+                "']')")
+        element = _Site(x, site.dtype.elementType, site.sname + "[*]", name,
+                        site.base_uri, null_is_value=True, lam=True)
+        rules = self.compile_value(element_definition, element)
         if not rules:
             return None
-        branches = [
-            F.when(rule.fail, rule.dynamic) if rule.dynamic is not None
-            else F.when(rule.fail, F.struct(
-                rule.name_col.alias("name"),
-                F.lit(rule.rule).alias("rule"),
-                rule.message.alias("message"),
-            ))
-            for rule in rules
-        ]
-        return F.coalesce(*branches) if len(branches) > 1 else branches[0]
-
-    def _first_failing_index(self, site, element_definition, element_type, start):
-        """One rule firing when any element from ``start`` violates the
-        element schema; name/rule/message come from the first failing
-        element's first failing inner rule (``data.col[i] must be ...``)."""
-
-        def element_violation(x, i):
-            idx = (i + F.lit(start)).cast("string")
-            name_col = F.concat(site.name_col, F.lit("["), idx, F.lit("]"))
-            s = _Site(x, element_type, site.sname + "[*]", name_col,
-                      site.base_uri, null_is_value=True)
-            return self._violation_struct(self.compile_value(element_definition, s))
-
-        if element_violation(F.lit(None).cast(element_type), F.lit(0)) is None:
-            return None
-        tail = F.slice(site.expr, start + 1,
-                       F.greatest(F.size(site.expr) - F.lit(start), F.lit(0)))
-        failing = F.filter(F.transform(tail, element_violation),
-                           lambda y: y.isNotNull())
-        first = F.try_element_at(failing, F.lit(1))
-        return Rule("items", site.sname + "[*]",
-                    first.getField("name"), first.getField("message"),
-                    site.present() & _null_false(F.size(failing) > F.lit(0)),
-                    dynamic=first)
-
-    def _pass_expr_for_expr(self, definition, site: _Site) -> Column:
-        rules = self.compile_value(definition, site)
-        ok = F.lit(True)
-        for rule in rules:
-            ok = ok & ~_null_false(rule.fail)
-        return ok
+        tail = (f"slice({site.expr}, {start + 1}, "
+                f"greatest(size({site.expr}) - {start}, 0))")
+        return self._first_failing_rule(site, "items", site.sname + "[*]",
+                                        tail, f"({x}, {i})",
+                                        self._violation_of(rules))
 
     def _kw_contains(self, definition, site):
         contains_definition = definition["contains"]
         if not self._array_guard(site):
             return []
         if contains_definition is False:
-            return [self._rule(site, "contains", "is always invalid", F.lit(True))]
+            return [self._rule(site, "contains", "is always invalid", "true")]
         if contains_definition is True:
             return [self._rule(site, "contains", "must not be empty",
-                               F.size(site.expr) == F.lit(0))]
-        element_type = site.dtype.elementType
-
-        def element_pass(x):
-            s = _Site(x, element_type, site.sname + "[x]", F.lit(""),
-                      site.base_uri, null_is_value=True)
-            return self._pass_expr_for_expr(contains_definition, s)
-
+                               f"(size({site.expr}) = 0)")]
+        x = self._vsql_var()
+        element = _Site(x, site.dtype.elementType, site.sname + "[x]", "''",
+                        site.base_uri, null_is_value=True, lam=True)
+        element_pass = self._pass_sql(contains_definition, element)
         return [self._rule(site, "contains", "must contain one of contains definition",
-                           ~F.exists(site.expr, element_pass))]
+                           f"NOT exists({site.expr}, {x} -> {element_pass})")]
 
     # -- objects -----------------------------------------------------------
 
@@ -830,16 +781,17 @@ class _PlanCompiler(_VariantSQLMixin):
         """Child site per statically-known field (root columns or struct)."""
         if site.expr is None:
             return {
-                f.name: site.child(F.col(f.name), f.dataType, "." + f.name)
+                f.name: site.child(_ident(f.name), f.dataType, "." + f.name)
                 for f in site.dtype.fields
             }
         if isinstance(site.dtype, T.StructType):
             return {
                 f.name: site.child(
-                    site.expr.getField(f.name), f.dataType, "." + f.name,
-                    json_expr=(
-                        F.get_json_object(site.json_expr, _json_path(f.name))
-                        if site.json_expr is not None
+                    f"{site.expr}.{_ident(f.name)}", f.dataType, "." + f.name,
+                    json=(
+                        f"get_json_object({site.json}, "
+                        f"{sqlstr(_json_path(f.name))})"
+                        if site.json is not None
                         and isinstance(f.dataType, T.StructType) else None))
                 for f in site.dtype.fields
             }
@@ -848,47 +800,41 @@ class _PlanCompiler(_VariantSQLMixin):
     def _is_object_site(self, site) -> bool:
         return site.expr is None or isinstance(site.dtype, (T.StructType, T.MapType))
 
-    def _object_len(self, site) -> Column | None:
+    def _object_len(self, site) -> str | None:
         if isinstance(site.dtype, T.MapType):
-            return F.size(site.expr)
-        keys = site.object_keys()
+            return f"size({site.expr})"
+        keys = self._keys(site)
         if keys is not None:
             # true runtime key count (sees undeclared keys and counts
             # explicit nulls as present, like the reference)
-            return F.size(keys)
+            return f"size({keys})"
         fields = self._field_sites(site)
         if not fields:
             return None
-        count = F.lit(0)
-        for child in fields.values():
-            count = count + child.present().cast("int")
-        return count
+        return "(" + " + ".join(f"CAST({child.present()} AS INT)"
+                                for child in fields.values()) + ")"
+
+    def _properties_bound(self, definition, site, keyword, op, message):
+        bound = definition[keyword]
+        if not isinstance(bound, (int, float)):
+            raise SchemaDefinitionError(f"{keyword} must be a number")
+        if not self._is_object_site(site):
+            return []
+        length = self._object_len(site)
+        if length is None:
+            return []
+        return [self._rule(site, keyword, message.format(bound),
+                           f"({length} {op} {_lit(bound)})")]
 
     def _kw_min_properties(self, definition, site):
-        bound = definition["minProperties"]
-        if not isinstance(bound, (int, float)):
-            raise SchemaDefinitionError("minProperties must be a number")
-        if not self._is_object_site(site):
-            return []
-        length = self._object_len(site)
-        if length is None:
-            return []
-        return [self._rule(site, "minProperties",
-                           f"must contain at least {bound} properties",
-                           length < F.lit(bound))]
+        return self._properties_bound(
+            definition, site, "minProperties", "<",
+            "must contain at least {} properties")
 
     def _kw_max_properties(self, definition, site):
-        bound = definition["maxProperties"]
-        if not isinstance(bound, (int, float)):
-            raise SchemaDefinitionError("maxProperties must be a number")
-        if not self._is_object_site(site):
-            return []
-        length = self._object_len(site)
-        if length is None:
-            return []
-        return [self._rule(site, "maxProperties",
-                           f"must contain less than or equal to {bound} properties",
-                           length > F.lit(bound))]
+        return self._properties_bound(
+            definition, site, "maxProperties", ">",
+            "must contain less than or equal to {} properties")
 
     def _kw_required(self, definition, site):
         required = definition["required"]
@@ -908,45 +854,26 @@ class _PlanCompiler(_VariantSQLMixin):
                     "data: items {} are required but not allowed".format(impossible))
         if not self._is_object_site(site):
             return []
-        keys = site.object_keys()
-        if isinstance(site.dtype, T.MapType):
-            missing_flags = [
-                (key, ~F.map_contains_key(site.expr, F.lit(key))) for key in required
-            ]
-        elif keys is not None:
-            # JSON-backed: true key presence — an explicit null value
-            # satisfies required (reference semantics), unlike the
-            # struct-field NULL-means-absent approximation
-            missing_flags = [
-                (key, ~_null_false(F.array_contains(keys, F.lit(key))))
-                for key in required
-            ]
-        else:
-            fields = self._field_sites(site)
-            missing_flags = []
-            for key in required:
-                if key in fields:
-                    missing_flags.append((key, ~fields[key].present()))
-                else:
-                    missing_flags.append((key, F.lit(True)))
-        any_missing = F.lit(False)
-        for _, flag in missing_flags:
-            any_missing = any_missing | flag
+        # materialize the key set even for an empty list: later rules of
+        # this site read presence from it
+        self._keys(site)
+        # JSON-backed sites test TRUE key presence — an explicit null
+        # value satisfies required (reference semantics), unlike the
+        # struct-field NULL-means-absent approximation
+        missing = [(key, f"NOT {self._presence_of(site, key)}")
+                   for key in required]
         # message lists ONLY the missing keys, sorted (draft04.py:525-528:
         # str(sorted(missing)) — sort the RAW names, then repr-quote).
         # Sorted at COMPILE time and assembled with concat_ws (which skips
         # NULLs), not filter+array_sort lambdas: one HOF in the output
         # projection is CodegenFallback and drops the whole stage out of
         # whole-stage codegen (pinned by test_plan_shape.py).
-        message = F.concat(
-            site.name_col, F.lit(" must contain ["),
-            F.concat_ws(", ", *[F.when(flag, F.lit(repr(key)))
-                                for key, flag in
-                                sorted(missing_flags, key=lambda kf: kf[0])]),
-            F.lit("] properties"),
-        )
-        return [Rule("required", site.sname, site.name_col, message,
-                     site.present() & _null_false(any_missing))]
+        shown = "".join(f", CASE WHEN {flag} THEN {sqlstr(repr(key))} END"
+                        for key, flag in sorted(missing))
+        message = (f"concat({site.name_sql}, ' must contain [', "
+                   f"concat_ws(', '{shown}), '] properties')")
+        return [Rule("required", site.sname, site.name_sql, message,
+                     _and(site.present(), _nf(_or([f for _, f in missing]))))]
 
     def _kw_dependencies(self, definition, site):
         if not self._is_object_site(site):
@@ -956,147 +883,59 @@ class _PlanCompiler(_VariantSQLMixin):
             if requirement == [] or requirement is True:
                 continue
             key_present = self._presence_of(site, key)
-            if key_present is None:
-                continue
             if requirement is False:
                 rules.append(Rule(
-                    "dependencies", site.sname, site.name_col,
-                    F.concat(F.lit(f"{key} in "), site.name_col, F.lit(" must not be there")),
-                    site.present() & _null_false(key_present)))
+                    "dependencies", site.sname, site.name_sql,
+                    f"concat({sqlstr(key + ' in ')}, {site.name_sql}, "
+                    "' must not be there')",
+                    _and(site.present(), _nf(key_present))))
             elif isinstance(requirement, list):
                 for needed in requirement:
-                    needed_present = self._presence_of(site, needed)
-                    absent = F.lit(True) if needed_present is None else ~needed_present
+                    absent = f"NOT {self._presence_of(site, needed)}"
                     rules.append(Rule(
-                        "dependencies", site.sname, site.name_col,
-                        F.concat(site.name_col,
-                                 F.lit(f" missing dependency {needed} for {key}")),
-                        site.present() & _null_false(key_present & absent)))
+                        "dependencies", site.sname, site.name_sql,
+                        f"concat({site.name_sql}, "
+                        f"{sqlstr(f' missing dependency {needed} for {key}')})",
+                        _and(site.present(),
+                             _nf(f"({key_present} AND {absent})"))))
             else:
                 for rule in self.compile_value(requirement, site):
                     rules.append(rule.gated(key_present))
         return rules
 
-    def _presence_of(self, site, key) -> Column | None:
+    def _presence_of(self, site, key) -> str:
         if isinstance(site.dtype, T.MapType):
-            return F.map_contains_key(site.expr, F.lit(key))
-        keys = site.object_keys()
+            return f"map_contains_key({site.expr}, {sqlstr(key)})"
+        keys = self._keys(site)
         if keys is not None:
-            return _null_false(F.array_contains(keys, F.lit(key)))
+            return _nf(f"array_contains({keys}, {sqlstr(key)})")
         fields = self._field_sites(site)
         if key in fields:
             return fields[key].present()
-        return F.lit(False)
+        return "false"
 
     def _kw_properties(self, definition, site):
         rules = []
         fields = self._field_sites(site)
         is_map = isinstance(site.dtype, T.MapType)
-        keys = site.object_keys()
+        keys = self._keys(site)
         for key, prop_definition in definition["properties"].items():
             if not isinstance(prop_definition, (dict, bool)):
                 clean = re.sub(r"[^a-zA-Z0-9]", "", key)
                 raise SchemaDefinitionError("data[{}] must be object".format(clean))
             if keys is not None and not is_map:
-                # JSON-backed struct: gate value rules on TRUE key
-                # presence, and treat a present-but-NULL field as an
-                # explicit JSON null (null_is_value), mirroring the map
-                # branch — so {"k": null} fails `type`, not `required`.
-                # Scalar prop schemas validate the VARIANT value (exact
-                # JSON type — the typed struct parse silently coerces
-                # numbers/booleans into string fields); nested schemas
-                # fall back to the parsed-struct compile.
                 if key in fields:
-                    base = fields[key]
-                    gate = site.present() & _null_false(
-                        F.array_contains(keys, F.lit(key)))
-                    try:
-                        if not self.exact_json_types:
-                            raise PlanUnsupported("coerce mode")
-                        aux_sql = site.object_variant_map_sql()
-                        # materialize the per-key variant AND its type tag
-                        # once per row: variant_get/schema_of_variant are
-                        # CodegenFallback, and every keyword rule of this
-                        # property would otherwise re-run the map lookup +
-                        # type recovery (A/B: ~25% off the events_json
-                        # exact-mode bench query)
-                        vcol, vname = self._materialize2(
-                            "vkey", F.expr(
-                                f"try_element_at({aux_sql}, "
-                                f"{_sqlstr(key)})"))
-                        _, sovname = self._materialize2(
-                            "sov", F.schema_of_variant(vcol))
-                        # rule bodies compile as SQL TEXT (varsql): one
-                        # py4j round-trip per finished rule instead of
-                        # one per expression node — the difference
-                        # between 270s and <5s on recursion-unrolled
-                        # schemas like the draft metaschemas
-                        views = _Views(f"`{vname}`",
-                                       sov_sql=f"`{sovname}`")
-                        saved_base = self._v_base_uri
-                        self._v_base_uri = base.base_uri
-                        try:
-                            triples = self._vpack_compile_top(
-                                prop_definition, _sqlstr(base.sname),
-                                views,
-                                _PackSingle(f"`{vname}`",
-                                            _sqlstr(base.sname)))
-                        finally:
-                            self._v_base_uri = saved_base
-                        for rule_id, message, fail in triples:
-                            if isinstance(rule_id, _NestedSQL):
-                                struct = F.expr(rule_id.struct_sql)
-                                rules.append(Rule(
-                                    None, base.sname,
-                                    struct.getField("name"),
-                                    struct.getField("message"),
-                                    _null_false(gate)
-                                    & _null_false(F.expr(fail)),
-                                    dynamic=struct))
-                            else:
-                                rules.append(Rule(
-                                    rule_id, base.sname, base.name_col,
-                                    F.expr(message),
-                                    _null_false(gate)
-                                    & _null_false(F.expr(fail))))
-                    except PlanTooLarge:
-                        # too-large is a final verdict for the columnar
-                        # engine (the struct fallback would re-raise a
-                        # misleading secondary error); engine="auto"
-                        # routes it to the python engine
-                        raise
-                    except PlanUnsupported:
-                        child = _Site(base.expr, base.dtype, base.sname,
-                                      base.name_col, base.base_uri,
-                                      null_is_value=True,
-                                      json_expr=(base.json_expr
-                                                 if base.json_expr is not None
-                                                 else self._materialize(
-                                                     "jtxt",
-                                                     F.get_json_object(
-                                                         site.json_expr,
-                                                         _json_path(key)))),
-                                      compiler=self)
-                        for rule in self.compile_value(prop_definition, child):
-                            rules.append(rule.gated(gate))
-                if (
-                    self.use_default
-                    and isinstance(prop_definition, dict)
-                    and "default" in prop_definition
-                    and site.expr is None
-                ):
-                    self.defaults.append((key, prop_definition["default"]))
-                continue
-            if is_map:
-                child = _Site(F.try_element_at(site.expr, F.lit(key)),
-                              site.dtype.valueType, site.sname + "." + key,
-                              F.concat(site.name_col, F.lit("." + key)),
-                              site.base_uri, null_is_value=True)
+                    rules.extend(self._json_property_rules(
+                        site, key, fields[key], prop_definition))
+            elif is_map:
+                child = site.child(
+                    f"try_element_at({site.expr}, {sqlstr(key)})",
+                    site.dtype.valueType, "." + key, null_is_value=True)
+                # only applies when the key is present in the map
+                gate = _and(site.present(),
+                            f"map_contains_key({site.expr}, {sqlstr(key)})")
                 for rule in self.compile_value(prop_definition, child):
-                    # only applies when the key is present in the map
-                    rules.append(rule.gated(
-                        site.present()
-                        & F.map_contains_key(site.expr, F.lit(key))))
+                    rules.append(rule.gated(gate))
             elif key in fields:
                 rules.extend(self.compile_value(prop_definition, fields[key]))
             # key can never exist in this static type -> no rules
@@ -1109,202 +948,101 @@ class _PlanCompiler(_VariantSQLMixin):
                 self.defaults.append((key, prop_definition["default"]))
         return rules
 
-    def _map_entry_rule(self, site, key_filter, value_definition, rule_label):
-        """First violating (key, value) entry of a map column, with the
-        inner rule id/name/message surfaced verbatim."""
-        value_type = site.dtype.valueType
-
-        dummy = _Site(F.lit(None).cast(value_type), value_type,
-                      site.sname + ".<k>", F.lit(""), site.base_uri,
-                      null_is_value=True)
-        if not self.compile_value(value_definition, dummy):
-            return None
-
-        def entry_violation(e):
-            k = e.getField("key")
-            name_col = F.concat(site.name_col, F.lit("."), k)
-            s = _Site(e.getField("value"), value_type, site.sname + ".<k>",
-                      name_col, site.base_uri, null_is_value=True)
-            inner = self._violation_struct(self.compile_value(value_definition, s))
-            return F.when(key_filter(k), inner)
-
-        failing = F.filter(F.transform(F.map_entries(site.expr), entry_violation),
-                           lambda y: y.isNotNull())
-        first = F.try_element_at(failing, F.lit(1))
-        return Rule(rule_label, site.sname + ".<" + rule_label + ">",
-                    first.getField("name"), first.getField("message"),
-                    site.present() & _null_false(F.size(failing) > F.lit(0)),
-                    dynamic=first)
-
-    # -- variant value rules (open-key JSON value schemas) -----------------
-    #
-    # Undeclared keys in a JSON column have no static type, so their value
-    # schemas are evaluated over Spark 4 VariantType: the raw text parses
-    # once as map<string,variant>, `schema_of_variant` recovers the exact
-    # JSON type per value, and `try_variant_get` projects typed views.
-    # Keywords the variant rule world (varsql text compiler) expresses;
-    # anything else raises PlanUnsupported (engine="python" is the exact
-    # path there).
-
-    _VARIANT_SUPPORTED = {
-        "type", "enum", "const", "minimum", "maximum", "exclusiveMinimum",
-        "exclusiveMaximum", "multipleOf", "minLength", "maxLength",
-        "pattern", "format",
-        # combinators compose from scalar-subset branches (each branch
-        # recursively compiled to triples; non-scalar branches raise
-        # PlanUnsupported like any other hard keyword)
-        "allOf", "anyOf", "oneOf", "not", "if",
-        # nested containers: the variant casts to array<variant> /
-        # map<string,variant>, element and member schemas recurse with
-        # per-element names carried via _NestedSQL structs; uniqueItems
-        # reproduces the reference's freeze canon (cross-type 1 == 1.0,
-        # bool -> "True"/"False" string collision) via canonical strings
-        "minItems", "maxItems", "items", "contains", "uniqueItems",
-        # recursion: depth-bounded unroll, handled before this table
-        "$ref",
-        "minProperties", "maxProperties", "required", "dependencies",
-        "properties", "patternProperties", "additionalProperties",
-        "propertyNames",
-        # content keywords gate on the TRUE runtime string-ness of the
-        # value (the typed-string fallback would coerce scalars to text
-        # and wrongly fail them)
-        "contentEncoding", "contentMediaType",
-    }
-    _VARIANT_ANNOTATIONS = {
-        "title", "description", "default", "examples", "$comment",
-        "$schema", "$id", "id", "definitions",
-        # consumed by the "if" handler at its keyword position
-        "then", "else",
-        # consumed by the "items" handler at its keyword position
-        "additionalItems",
-    }
-
-
-
-    def _variant_canon(self, v, depth: int):
-        """Column-mode twin of varsql._variant_canon_tpl, kept ONLY for
-        uniqueItems over TYPED variant-array sites (``array<variant>``
-        columns/map values a user supplies directly): their value
-        expressions may be HOF lambda variables with pyspark-generated
-        names, which the text world cannot reference.  The JSON-column
-        path uses the text template (one expr parse instead of ~1k py4j
-        calls per use).
-
-        The reference's uniqueItems freeze canonicalization
-        (draft04.py:412-421) as a canonical STRING of a VARIANT value:
-        two values render equal iff the reference's ``fn`` makes them
-        equal set members —
-
-        * bool -> ``str(var)`` ("True"/"False"), deliberately COLLIDING
-          with the equal strings;
-        * numbers compare cross-type (1 == 1.0 == 1.00): integral values
-          render their exact integer digits (long for |v| < 2^63,
-          decimal(38,0) beyond, double repr past 1e38 where every JSON
-          number is a double anyway), non-integral ones their double
-          repr;
-        * strings are length-prefixed (collision-proof against the
-          container separators);
-        * dict -> frozenset ⇒ sorted key=canon entries; list -> tuple ⇒
-          ordered element canons.
-
-        Containers nested past ``depth`` raise at evaluation time
-        (loud, never a silently wrong verdict)."""
-        sov = F.schema_of_variant(v)
-        is_num = ((sov == F.lit("BIGINT")) | (sov == F.lit("DOUBLE"))
-                  | sov.startswith("DECIMAL"))
-        num = F.try_variant_get(v, "$", "double")
-        lng = F.try_variant_get(v, "$", "long")
-        s = F.try_variant_get(v, "$", "string")
-        b = F.try_variant_get(v, "$", "boolean")
-        inf = float("inf")
-        integral = (~F.isnan(num) & (F.abs(num) != F.lit(inf))
-                    & ((num % F.lit(1.0)) == F.lit(0.0)))
-        exact_digits = F.coalesce(
-            F.when(sov == F.lit("BIGINT"), lng.cast("string")),
-            F.when(F.abs(num) < F.lit(float(2 ** 63)),
-                   num.cast("long").cast("string")),
-            num.try_cast(T.DecimalType(38, 0)).cast("string"),
-            num.cast("string"))
-        num_canon = F.concat(
-            F.lit("n:"),
-            F.when(_null_false(integral), exact_digits)
-            .otherwise(num.cast("string")))
-        str_canon = F.concat(F.lit("s:"), F.length(s).cast("string"),
-                             F.lit(":"), s)
-        bool_canon = F.when(b, F.lit("s:4:True")).otherwise(F.lit("s:5:False"))
-        canon = (
-            F.when(F.is_variant_null(v), F.lit("z"))
-            .when(sov == F.lit("BOOLEAN"), bool_canon)
-            .when(sov == F.lit("STRING"), str_canon)
-            .when(is_num, num_canon))
-        if depth <= 0:
-            deep = F.raise_error(F.lit(
-                "uniqueItems value nests deeper than the canonicalization "
-                f"bound ({self.canon_depth}); raise canon_depth or use "
-                "engine='python'"))
-            return canon.otherwise(deep.cast("string"))
-        arr = F.try_variant_get(v, "$", "array<variant>")
-        arr_canon = F.concat(
-            F.lit("a:["),
-            F.concat_ws("\x1f", F.transform(
-                arr, lambda x: self._variant_canon(x, depth - 1))),
-            F.lit("]"))
-        obj = F.try_variant_get(v, "$", "map<string,variant>")
-        entries = F.transform(
-            F.map_entries(obj),
-            lambda e: F.concat(
-                F.lit("k:"), F.length(e.getField("key")).cast("string"),
-                F.lit(":"), e.getField("key"), F.lit("="),
-                self._variant_canon(e.getField("value"), depth - 1)))
-        obj_canon = F.concat(
-            F.lit("o:{"), F.concat_ws("\x1f", F.array_sort(entries)),
-            F.lit("}"))
-        return (canon
-                .when(sov.startswith("ARRAY"), arr_canon)
-                .when(sov.startswith("OBJECT"), obj_canon)
-                .otherwise(F.concat(F.lit("?"), sov)))
-
-
-    def _json_entry_rule(self, site, key_filter_sql, value_definition,
-                         rule_label):
-        """First violating (key, value) entry of a JSON-backed object's
-        RUNTIME entries (map<string,variant> view of the raw text).
-        ``key_filter_sql``: callable key_sql_text -> boolean SQL text.
-        Rule bodies compile as SQL text (varsql) — the site's name is
-        static for JSON-backed struct sites, so ``site.sname`` is its
-        exact runtime spelling."""
-        if not self.exact_json_types:
-            raise PlanUnsupported(
-                f"{rule_label} value schemas over undeclared keys need "
-                "exact JSON typing; use json_types='exact' (default) or "
-                "engine='python'")
-        aux_sql = site.object_variant_map_sql()
-        e = self._vsql_var("e")
-        y = self._vsql_var("y")
-        se = self._vsql_var("e")
-        name_sql = f"concat({_sqlstr(site.sname)}, '.', {e}.key)"
-        saved_base = self._v_base_uri
-        self._v_base_uri = site.base_uri
+    def _json_property_rules(self, site, key, base, prop_definition):
+        """A declared property of a JSON-backed struct: value rules gated
+        on TRUE key presence, a present-but-NULL field treated as an
+        explicit JSON null (null_is_value, like the map branch) — so
+        {"k": null} fails `type`, not `required`.  The property schema
+        validates the VARIANT value (exact JSON type — the typed struct
+        parse silently coerces numbers/booleans into string fields); what
+        the variant world cannot express falls back to the parsed-struct
+        compile."""
+        gate = _and(site.present(),
+                    _nf(f"array_contains({site.keys}, {sqlstr(key)})"))
         try:
-            triples = self._vpack_compile_top(
-                value_definition, name_sql, _Views(f"{e}.value"),
-                _PackEntries(
-                    f"map_entries({aux_sql})", se,
-                    key_filter_sql(f"{se}.key"), f"{se}.value",
-                    f"concat({_sqlstr(site.sname)}, '.', {se}.key)",
-                    f"{e}.key"))
-        finally:
-            self._v_base_uri = saved_base
-        viol = self._violation_sql(triples, name_sql)
-        entry = f"CASE WHEN {key_filter_sql(e + '.key')} THEN {viol} END"
-        failing = (f"filter(transform(map_entries({aux_sql}), "
-                   f"{e} -> {entry}), {y} -> {y} IS NOT NULL)")
-        first = F.expr(f"try_element_at({failing}, 1)")
-        return Rule(rule_label, site.sname + ".<" + rule_label + ">",
-                    first.getField("name"), first.getField("message"),
-                    site.present()
-                    & _null_false(F.expr(f"size({failing}) > 0")),
-                    dynamic=first)
+            if not self.exact_json_types:
+                raise PlanUnsupported("coerce mode")
+            vmap = self._vmap(site)
+            # materialize the per-key variant AND its type tag once per
+            # row: variant_get/schema_of_variant are CodegenFallback, and
+            # every keyword rule of this property would otherwise re-run
+            # the map lookup + type recovery (A/B: ~25% off the
+            # events_json exact-mode bench query)
+            value = self._aux("vkey",
+                              f"try_element_at({vmap}, {sqlstr(key)})")
+            sov = self._aux("sov", f"schema_of_variant({value})")
+            saved_base = self._v_base_uri
+            self._v_base_uri = base.base_uri
+            try:
+                triples = self._vpack_compile_top(
+                    prop_definition, base.name_sql, _Views(value, sov_sql=sov),
+                    _PackSingle(value, base.name_sql))
+            finally:
+                self._v_base_uri = saved_base
+        except PlanTooLarge:
+            # too-large is a final verdict for the columnar engine (the
+            # struct fallback would re-raise a misleading secondary
+            # error); engine="auto" routes it to the python engine
+            raise
+        except PlanUnsupported:
+            child = dataclasses.replace(
+                base, null_is_value=True,
+                json=(base.json if base.json is not None else self._aux(
+                    "jtxt", f"get_json_object({site.json}, "
+                            f"{sqlstr(_json_path(key))})")))
+            return [rule.gated(gate)
+                    for rule in self.compile_value(prop_definition, child)]
+        rules = []
+        for rule_id, message, fail in triples:
+            fail = f"({_nf(gate)} AND {_nf(fail)})"
+            if isinstance(rule_id, _NestedSQL):
+                rules.append(Rule(None, base.sname, None, None, fail,
+                                  dynamic=rule_id.struct_sql))
+            else:
+                rules.append(Rule(rule_id, base.sname, base.name_sql,
+                                  message, fail))
+        return rules
+
+    def _entry_rule(self, site, key_filter, value_definition, rule_label):
+        """First violating (key, value) entry of an object's runtime
+        entries, with the inner rule id/name/message surfaced verbatim.
+        ``key_filter``: key SQL text -> boolean SQL text.  Map columns
+        compile their typed values; JSON-backed objects validate their
+        entries over the map<string,variant> view (varsql)."""
+        e = self._vsql_var("e")
+        name = f"concat({site.name_sql}, '.', {e}.key)"
+        if isinstance(site.dtype, T.MapType):
+            entries = f"map_entries({site.expr})"
+            value_site = _Site(f"{e}.value", site.dtype.valueType,
+                               site.sname + ".<k>", name, site.base_uri,
+                               null_is_value=True, lam=True)
+            rules = self.compile_value(value_definition, value_site)
+            if not rules:
+                return None
+            viol = self._violation_of(rules)
+        else:
+            if not self.exact_json_types:
+                raise PlanUnsupported(
+                    f"{rule_label} value schemas over undeclared keys need "
+                    "exact JSON typing; use json_types='exact' (default) or "
+                    "engine='python'")
+            entries = f"map_entries({self._vmap(site)})"
+            se = self._vsql_var("e")
+            saved_base = self._v_base_uri
+            self._v_base_uri = site.base_uri
+            try:
+                triples = self._vpack_compile_top(
+                    value_definition, name, _Views(f"{e}.value"),
+                    _PackEntries(entries, se, key_filter(f"{se}.key"),
+                                 f"{se}.value",
+                                 f"concat({site.name_sql}, '.', {se}.key)",
+                                 f"{e}.key"))
+            finally:
+                self._v_base_uri = saved_base
+            viol = self._violation_sql(triples, name)
+        return self._first_failing_rule(
+            site, rule_label, site.sname + ".<" + rule_label + ">", entries, e,
+            f"CASE WHEN {key_filter(e + '.key')} THEN {viol} END")
 
     def _kw_pattern_properties(self, definition, site):
         table = definition["patternProperties"]
@@ -1312,52 +1050,42 @@ class _PlanCompiler(_VariantSQLMixin):
         if isinstance(site.dtype, T.MapType):
             for pattern, sub in table.items():
                 java = jvm_pattern(_UNESCAPED_DOLLAR.sub(r"\\Z", pattern))
-                rule = self._map_entry_rule(
-                    site, lambda k, _j=java: k.rlike(_j), sub, "patternProperties")
+                rule = self._entry_rule(
+                    site, lambda k, _j=java: f"rlike({k}, {sqlstr(_j)})",
+                    sub, "patternProperties")
                 if rule is not None:
                     rules.append(rule)
             return rules
-        keys = site.object_keys()
+        keys = self._keys(site)
         fields = self._field_sites(site)
         if keys is not None:
             # JSON-backed struct: declared fields matching a pattern are
             # validated statically (gated on true presence, null =
-            # JSON null); UNDECLARED runtime keys are visible via
-            # json_object_keys — fully supported for boolean sub-schemas,
-            # PlanUnsupported for value schemas (their values have no
-            # static type; the python engine is the exact path)
+            # JSON null); UNDECLARED runtime keys are checked on the
+            # runtime key set / variant view
             for pattern, sub in table.items():
                 matcher = re.compile(pattern)
                 java = jvm_pattern(_UNESCAPED_DOLLAR.sub(r"\\Z", pattern))
                 for key, base in fields.items():
                     if matcher.search(key) and sub is not False:
-                        child = _Site(base.expr, base.dtype, base.sname,
-                                      base.name_col, base.base_uri,
-                                      null_is_value=True,
-                                      json_expr=base.json_expr,
-                                      compiler=self)
-                        gate = site.present() & _null_false(
-                            F.array_contains(keys, F.lit(key)))
+                        child = dataclasses.replace(base, null_is_value=True)
+                        gate = _and(site.present(), _nf(
+                            f"array_contains({keys}, {sqlstr(key)})"))
                         for rule in self.compile_value(sub, child):
                             rules.append(rule.gated(gate))
                 if sub is True or sub == {}:
                     continue
                 if sub is False:
-                    # NOTE: HOF lambdas must be unary — PySpark inspects
-                    # the signature, and a default arg makes it look like
-                    # the (element, index) form
-                    def _matcher(j):
-                        return lambda k: k.rlike(j)
-
-                    matching = F.filter(keys, _matcher(java))
-                    first = F.try_element_at(F.array_sort(matching), F.lit(1))
-                    name = F.concat(site.name_col, F.lit("."), first)
+                    k = self._vsql_var("k")
+                    matching = f"filter({keys}, {k} -> rlike({k}, {sqlstr(java)}))"
+                    first = f"try_element_at(array_sort({matching}), 1)"
+                    name = f"concat({site.name_sql}, '.', {first})"
                     # rule id None: a boolean-False schema violation has
                     # no keyword id in the reference's error objects
                     rules.append(Rule(
                         None, site.sname + ".<key>", name,
-                        F.concat(name, F.lit(" must not be there")),
-                        site.present() & _null_false(F.size(matching) > 0)))
+                        f"concat({name}, ' must not be there')",
+                        _and(site.present(), _nf(f"size({matching}) > 0"))))
                 else:
                     # value schema over dynamically-typed UNDECLARED keys:
                     # variant view (declared matches were compiled
@@ -1366,12 +1094,12 @@ class _PlanCompiler(_VariantSQLMixin):
                     decl = sorted(fields)
 
                     def matches_undeclared(k_sql, _j=java, _d=decl):
-                        conds = [f"rlike({k_sql}, {_sqlstr(_j)})"]
+                        conds = [f"rlike({k_sql}, {sqlstr(_j)})"]
                         for d in _d:
-                            conds.append(f"{k_sql} != {_sqlstr(d)}")
+                            conds.append(f"{k_sql} != {sqlstr(d)}")
                         return "(" + " AND ".join(conds) + ")"
 
-                    rules.append(self._json_entry_rule(
+                    rules.append(self._entry_rule(
                         site, matches_undeclared, sub, "patternProperties"))
             return rules
         # struct/root: keys are static -> match at plan time
@@ -1379,13 +1107,8 @@ class _PlanCompiler(_VariantSQLMixin):
             matcher = re.compile(pattern)
             for key, child in fields.items():
                 if matcher.search(key):
-                    for rule in self.compile_value(sub, child):
-                        rules.append(rule)
+                    rules.extend(self.compile_value(sub, child))
         return rules
-
-    def _matched_static_keys(self, definition) -> set:
-        keys = set(definition.get("properties", {}).keys())
-        return keys
 
     def _kw_additional_properties(self, definition, site):
         add_definition = definition["additionalProperties"]
@@ -1394,80 +1117,40 @@ class _PlanCompiler(_VariantSQLMixin):
         declared = set(definition.get("properties", {}).keys())
         patterns = [re.compile(p) for p in definition.get("patternProperties", {})]
 
-        if isinstance(site.dtype, T.MapType):
-            java_patterns = [
-                jvm_pattern(_UNESCAPED_DOLLAR.sub(r"\\Z", p))
-                for p in definition.get("patternProperties", {})
-            ]
-
-            def is_extra(k):
-                cond = F.lit(True)
-                for key in declared:
-                    cond = cond & (k != F.lit(key))
-                for j in java_patterns:
-                    cond = cond & ~k.rlike(j)
-                return cond
-
-            extras = F.filter(F.map_keys(site.expr), is_extra)
-            if add_definition is False:
-                shown = F.concat(
-                    F.lit("{"),
-                    F.concat_ws(", ", F.transform(
-                        F.array_sort(extras),
-                        lambda k: F.concat(F.lit("'"), k, F.lit("'")))),
-                    F.lit("}"))
-                message = F.concat(site.name_col, F.lit(" must not contain "),
-                                   shown, F.lit(" properties"))
-                return [Rule("additionalProperties", site.sname, site.name_col, message,
-                             site.present() & _null_false(F.size(extras) > F.lit(0)))]
-            rule = self._map_entry_rule(site, is_extra, add_definition,
-                                        "additionalProperties")
-            return [rule] if rule is not None else []
-
-        keys = site.object_keys()
+        keys = (f"map_keys({site.expr})" if isinstance(site.dtype, T.MapType)
+                else self._keys(site))
         if keys is not None:
-            # JSON-backed struct: the TRUE runtime key set decides what
-            # is "additional" — undeclared keys are no longer invisible
+            # map column or JSON-backed struct: the TRUE runtime key set
+            # decides what is "additional"
             java_patterns = [
-                jvm_pattern(_UNESCAPED_DOLLAR.sub(r"\\Z", p))
-                for p in definition.get("patternProperties", {})
+                jvm_pattern(_UNESCAPED_DOLLAR.sub(r"\\Z", p.pattern))
+                for p in patterns
             ]
 
-            def is_extra(k):
-                cond = F.lit(True)
-                for key in declared:
-                    cond = cond & (k != F.lit(key))
-                for j in java_patterns:
-                    cond = cond & ~k.rlike(j)
-                return cond
-
-            extras = F.filter(keys, is_extra)
-            if add_definition is False:
-                shown = F.concat(
-                    F.lit("{"),
-                    F.concat_ws(", ", F.transform(
-                        F.array_sort(extras),
-                        lambda k: F.concat(F.lit("'"), k, F.lit("'")))),
-                    F.lit("}"))
-                message = F.concat(site.name_col, F.lit(" must not contain "),
-                                   shown, F.lit(" properties"))
-                return [Rule("additionalProperties", site.sname, site.name_col,
-                             message,
-                             site.present() & _null_false(F.size(extras) > F.lit(0)))]
-            # value schema over undeclared keys: evaluated on the
-            # map<string,variant> view of the raw text (scalar keyword
-            # subset; _entry_triples_sql raises PlanUnsupported beyond)
-            def is_extra_sql(k_sql, _d=sorted(declared), _p=java_patterns):
+            def is_extra(k_sql):
                 conds = ["true"]
-                for key in _d:
-                    conds.append(f"{k_sql} != {_sqlstr(key)}")
-                for j in _p:
-                    conds.append(f"NOT rlike({k_sql}, {_sqlstr(j)})")
+                for key in sorted(declared):
+                    conds.append(f"{k_sql} != {sqlstr(key)}")
+                for j in java_patterns:
+                    conds.append(f"NOT rlike({k_sql}, {sqlstr(j)})")
                 return "(" + " AND ".join(conds) + ")"
 
-            return [self._json_entry_rule(site, is_extra_sql,
-                                          add_definition,
-                                          "additionalProperties")]
+            if add_definition is False:
+                k = self._vsql_var("k")
+                extras = f"filter({keys}, {k} -> {is_extra(k)})"
+                shown = (f"concat('{{', concat_ws(', ', transform("
+                         f"array_sort({extras}), {k} -> concat("
+                         f"{sqlstr(chr(39))}, {k}, {sqlstr(chr(39))}))), '}}')")
+                message = (f"concat({site.name_sql}, ' must not contain ', "
+                           f"{shown}, ' properties')")
+                return [Rule("additionalProperties", site.sname, site.name_sql,
+                             message,
+                             _and(site.present(), _nf(f"size({extras}) > 0")))]
+            # value schema over undeclared keys (JSON-backed: the scalar
+            # keyword subset of the variant world; PlanUnsupported beyond)
+            rule = self._entry_rule(site, is_extra, add_definition,
+                                    "additionalProperties")
+            return [rule] if rule is not None else []
 
         fields = self._field_sites(site)
         extra_sites = {
@@ -1477,18 +1160,17 @@ class _PlanCompiler(_VariantSQLMixin):
         if add_definition is False:
             if not extra_sites:
                 return []
-            present_names = F.array_sort(F.filter(
-                F.array(*[F.when(child.present(), F.lit(f"'{key}'"))
-                          for key, child in extra_sites.items()]),
-                lambda x: x.isNotNull()))
-            shown = F.concat(F.lit("{"), F.concat_ws(", ", present_names), F.lit("}"))
-            message = F.concat(site.name_col, F.lit(" must not contain "),
-                               shown, F.lit(" properties"))
-            any_extra = F.lit(False)
-            for child in extra_sites.values():
-                any_extra = any_extra | child.present()
-            return [Rule("additionalProperties", site.sname, site.name_col, message,
-                         site.present() & _null_false(any_extra))]
+            y = self._vsql_var("y")
+            names = ", ".join(
+                f"CASE WHEN {child.present()} THEN {sqlstr(chr(39) + key + chr(39))} END"
+                for key, child in extra_sites.items())
+            shown = (f"concat('{{', concat_ws(', ', array_sort(filter("
+                     f"array({names}), {y} -> {y} IS NOT NULL))), '}}')")
+            message = (f"concat({site.name_sql}, ' must not contain ', "
+                       f"{shown}, ' properties')")
+            any_extra = _or([child.present() for child in extra_sites.values()])
+            return [Rule("additionalProperties", site.sname, site.name_sql, message,
+                         _and(site.present(), _nf(any_extra)))]
         rules = []
         for child in extra_sites.values():
             rules.extend(self.compile_value(add_definition, child))
@@ -1498,42 +1180,26 @@ class _PlanCompiler(_VariantSQLMixin):
         names_definition = definition.get("propertyNames", {})
         if names_definition is True:
             return []
-        if isinstance(site.dtype, T.MapType):
-            if names_definition is False:
-                return [self._rule(site, "propertyNames", "must not be there",
-                                   F.size(site.expr) > F.lit(0))]
-
-            def name_pass(k):
-                s = _Site(k, T.StringType(), site.sname + ".<name>", F.lit(""),
-                          site.base_uri)
-                return self._pass_expr_for_expr(names_definition, s)
-
-            return [self._rule(site, "propertyNames",
-                               "must be named by propertyName definition",
-                               ~F.forall(F.map_keys(site.expr), name_pass))]
-        keys = site.object_keys()
+        keys = (f"map_keys({site.expr})" if isinstance(site.dtype, T.MapType)
+                else self._keys(site))
         if keys is not None:
-            # JSON-backed struct: validate every RUNTIME key name
+            # map column or JSON-backed struct: validate every RUNTIME key
             if names_definition is False:
                 return [self._rule(site, "propertyNames", "must not be there",
-                                   F.size(keys) > F.lit(0))]
-
-            def name_pass(k):
-                s = _Site(k, T.StringType(), site.sname + ".<name>", F.lit(""),
-                          site.base_uri)
-                return self._pass_expr_for_expr(names_definition, s)
-
+                                   f"(size({keys}) > 0)")]
+            k = self._vsql_var("k")
+            key_site = _Site(k, T.StringType(), site.sname + ".<name>", "''",
+                             site.base_uri, lam=True)
+            name_pass = self._pass_sql(names_definition, key_site)
             return [self._rule(site, "propertyNames",
                                "must be named by propertyName definition",
-                               ~F.forall(keys, name_pass))]
+                               f"NOT forall({keys}, {k} -> {name_pass})")]
         fields = self._field_sites(site)
         if not fields:
             return []
         if names_definition is False:
-            any_present = F.lit(False)
-            for child in fields.values():
-                any_present = any_present | child.present()
-            return [self._rule(site, "propertyNames", "must not be there", any_present)]
+            return [self._rule(site, "propertyNames", "must not be there",
+                               _or([c.present() for c in fields.values()]))]
         # static keys: validate names at plan time with the row validator
         from ..rowcheck import compile_row_validator
 
@@ -1541,11 +1207,9 @@ class _PlanCompiler(_VariantSQLMixin):
         bad = [key for key in fields if name_validator.collect(key)]
         if not bad:
             return []
-        any_bad_present = F.lit(False)
-        for key in bad:
-            any_bad_present = any_bad_present | fields[key].present()
         return [self._rule(site, "propertyNames",
-                           "must be named by propertyName definition", any_bad_present)]
+                           "must be named by propertyName definition",
+                           _or([fields[key].present() for key in bad]))]
 
     # -- content -----------------------------------------------------------
 
@@ -1558,31 +1222,32 @@ class _PlanCompiler(_VariantSQLMixin):
         # reference parity: base64.b64decode WITHOUT validate discards
         # non-alphabet chars, then requires mod-4 padding on what
         # remains; try_to_binary alone is laxer (accepts 'abc')
-        filtered = F.regexp_replace(expr, "[^A-Za-z0-9+/=]", "")
-        decoded = F.try_to_binary(filtered, F.lit("base64"))
-        fail = (F.length(filtered) % 4 != 0) | decoded.isNull()
-        return [Rule(None, site.sname, site.name_col,
-                     F.concat(site.name_col, F.lit(" must be encoded by base64")),
-                     site.present() & _null_false(fail))]
+        filtered = f"regexp_replace({expr}, '[^A-Za-z0-9+/=]', '')"
+        fail = (f"((length({filtered}) % 4) != 0 "
+                f"OR try_to_binary({filtered}, 'base64') IS NULL)")
+        return [Rule(None, site.sname, site.name_sql,
+                     _msg(site, "must be encoded by base64"),
+                     _and(site.present(), _nf(fail)))]
 
     def _kw_content_media_type(self, definition, site):
         if definition["contentMediaType"] != "application/json":
             return []
         if isinstance(site.dtype, T.BinaryType):
-            expr = site.expr.cast("string")
+            expr = f"CAST({site.expr} AS STRING)"
         else:
             expr = self._string_expr(site)
         if expr is None:
             return []
-        parsed = F.get_json_object(expr, "$")
-        literal_ok = expr.rlike(r"^\s*(-?\d+(\.\d+)?([eE][+-]?\d+)?|true|false|null|\".*\")\s*$")
-        return [Rule(None, site.sname, site.name_col,
-                     F.concat(site.name_col, F.lit(" must be valid JSON")),
-                     site.present() & _null_false(parsed.isNull() & ~literal_ok))]
+        fail = (f"(get_json_object({expr}, '$') IS NULL "
+                f"AND NOT rlike({expr}, {sqlstr(_JSON_LITERAL_RE)}))")
+        return [Rule(None, site.sname, site.name_sql,
+                     _msg(site, "must be valid JSON"),
+                     _and(site.present(), _nf(fail)))]
 
 
-def _null_false(col: Column) -> Column:
-    return F.coalesce(col, F.lit(False))
+def _msg(site: _Site, text: str) -> str:
+    """Message SQL: the runtime name followed by ``text``."""
+    return f"concat({site.name_sql}, {sqlstr(' ' + text)})"
 
 
 def _snake(keyword: str) -> str:
@@ -1615,11 +1280,26 @@ def _value_fits(value, dtype: T.DataType) -> bool:
     return False
 
 
-def _literal(value, dtype: T.DataType):
+def _lit(value) -> str:
+    """SQL literal typed like ``F.lit``: ints INT (BIGINT/DECIMAL as
+    they grow), floats DOUBLE, lists arrays, dicts maps."""
+    if value is None:
+        return "NULL"
+    if isinstance(value, bool):
+        return "true" if value else "false"
+    if isinstance(value, int):
+        return str(value)
+    if isinstance(value, float):
+        return sqlnum(value)
+    if isinstance(value, str):
+        return sqlstr(value)
     if isinstance(value, (list, tuple)):
-        elem = dtype.elementType if isinstance(dtype, T.ArrayType) else None
-        return F.array(*[_literal(v, elem) for v in value])
-    return F.lit(value)
+        return "array(" + ", ".join(_lit(v) for v in value) + ")"
+    if isinstance(value, dict):
+        return "map(" + ", ".join(f"{_lit(k)}, {_lit(v)}"
+                                  for k, v in value.items()) + ")"
+    raise SchemaDefinitionError(
+        f"enum/const member of unsupported type: {type(value).__name__}")
 
 
 def compile_plan_for_column(
@@ -1673,16 +1353,12 @@ def compile_plan_for_column(
         "plan_text_budget": plan_text_budget,
         "pack_recursion": pack_recursion,
     })
-    site = _Site(F.col(column), dtype, "data", F.lit("data"),
-                 compiler.store.root_uri(),
-                 json_expr=(F.col(json_source_col)
-                            if json_source_col else None),
-                 variant_expr=(F.col(variant_source_col)
-                               if variant_source_col else None),
-                 variant_name=variant_source_col,
-                 keys_expr=(F.col(keys_source_col)
-                            if keys_source_col else None),
-                 compiler=compiler)
+    site = _Site(_ident(column), dtype, "data",
+                 base_uri=compiler.store.root_uri(),
+                 json=_ident(json_source_col) if json_source_col else None,
+                 variant=(_ident(variant_source_col)
+                          if variant_source_col else None),
+                 keys=_ident(keys_source_col) if keys_source_col else None)
     rules = compiler.compile_value(definition, site)
     compiler._vpack_flush()
     return ValidationPlan(

@@ -8,80 +8,72 @@
 * ``verdict: boolean`` — ``size(violations) == 0``.
 
 The first array element equals the reference's fast-fail error (rule
-registration order is preserved by the compiler).  All expressions are
-standard Column operations: Catalyst folds the constant parts, prunes
-unused columns, and whole-stage codegen evaluates the rest JVM-side.
+registration order is preserved by the compiler).  Every rule is Spark SQL
+text built in plain Python at compile time; :meth:`ValidationPlan.
+violations_column` parses the finished text once per use, so Catalyst
+folds the constant parts, prunes unused columns, and whole-stage codegen
+evaluates the rest JVM-side.
 """
 
 from __future__ import annotations
 
+import dataclasses
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .varsql import _nf, sqlstr
+
+_NULL_STR = "CAST(NULL AS STRING)"
+
 
 @dataclass
 class Rule:
-    """One vectorized validation rule.
+    """One vectorized validation rule, as SQL text.
 
-    ``fail`` is a boolean Column that is True exactly where the rule is
-    violated (never null — compiler wraps in coalesce).
+    ``fail`` is a boolean expression that is true exactly where the rule
+    is violated (never null — the compiler wraps it in coalesce).
     """
 
     rule: str | None  # keyword id ('type', 'minimum', ...) or None
     site: str  # static dotted path for plan display
-    name_col: Column  # runtime name (may embed dynamic indices/keys)
-    message: Column
-    fail: Column
+    name: str | None  # runtime name (may embed dynamic indices/keys)
+    message: str | None
+    fail: str
     # pre-built violation struct whose rule id varies per row (nested
-    # element/map-entry violations surface their inner rule verbatim)
-    dynamic: Column | None = None
+    # element/map-entry violations surface their inner rule verbatim);
+    # it replaces name/rule/message
+    dynamic: str | None = None
     # offending value as a string (reference error objects carry .value)
-    value_col: Column | None = None
+    value: str | None = None
 
-    def gated(self, condition: Column) -> "Rule":
+    def gated(self, condition: str) -> "Rule":
         """The same rule, active only where ``condition`` holds (if/then,
         positional items length guards...)."""
-        return Rule(self.rule, self.site, self.name_col, self.message,
-                    F.coalesce(condition, F.lit(False)) & self.fail,
-                    self.dynamic, self.value_col)
+        return dataclasses.replace(
+            self, fail=f"({_nf(condition)} AND {self.fail})")
 
-    def as_struct(self, lean: bool = False, include_value: bool = False) -> Column:
-        if include_value and not lean:
-            value = (self.value_col if self.value_col is not None
-                     else F.lit(None).cast("string"))
-            if self.dynamic is not None:
-                return F.when(self.fail, F.struct(
-                    self.dynamic.getField("name").alias("name"),
-                    self.dynamic.getField("rule").alias("rule"),
-                    self.dynamic.getField("message").alias("message"),
-                    value.alias("value")))
-            return F.when(self.fail, F.struct(
-                self.name_col.alias("name"),
-                F.lit(self.rule).alias("rule"),
-                self.message.alias("message"),
-                value.alias("value")))
+    def struct_sql(self, lean: bool = False,
+                   include_value: bool = False) -> str:
+        """The violation struct this rule emits where it fails."""
+        d = f"({self.dynamic})" if self.dynamic is not None else None
+        rule = f"{d}.rule" if d else (
+            sqlstr(self.rule) if self.rule is not None else _NULL_STR)
         if lean:
             # detailed_exceptions=False analog (generator.py:277-282):
             # rule id only, no name/message construction work per row
-            rule = (self.dynamic.getField("rule") if self.dynamic is not None
-                    else F.lit(self.rule))
-            return F.when(self.fail, F.struct(
-                F.lit(None).cast("string").alias("name"),
-                rule.alias("rule"),
-                F.lit(None).cast("string").alias("message"),
-            ))
-        if self.dynamic is not None:
-            return F.when(self.fail, self.dynamic)
-        return F.when(
-            self.fail,
-            F.struct(
-                self.name_col.alias("name"),
-                F.lit(self.rule).alias("rule"),
-                self.message.alias("message"),
-            ),
-        )
+            return (f"named_struct('name', {_NULL_STR}, 'rule', {rule}, "
+                    f"'message', {_NULL_STR})")
+        if d and not include_value:
+            return self.dynamic
+        name, message = ((f"{d}.name", f"{d}.message") if d
+                         else (self.name, self.message))
+        value = ""
+        if include_value:
+            value = f", 'value', {self.value or _NULL_STR}"
+        return (f"named_struct('name', {name}, 'rule', {rule}, "
+                f"'message', {message}{value})")
 
 
 class ValidationPlan:
@@ -89,12 +81,13 @@ class ValidationPlan:
                  row_validator, regex_engine="jvm", detailed=True,
                  include_value=False, options=None, aux_cols=None):
         self.rules = rules
-        # helper columns (name, expr) projected before rule evaluation and
-        # dropped after — nested JSON parses materialized once per row
+        # helper columns (name, SQL text) projected before rule evaluation
+        # and dropped after — nested JSON parses materialized once per row
         # (the parse expressions are CodegenFallback; inline copies would
-        # re-parse the text per consulting rule).  Ordered: later entries
-        # may reference earlier ones.
-        self.aux_cols = aux_cols or []
+        # re-parse the text per consulting rule).  A Python-UDF predicate
+        # is a thunk building its Column at apply time.  Ordered: later
+        # entries may reference earlier ones.
+        self._aux = aux_cols or []
         self.defaults = defaults
         self.schema_definition = schema_definition
         self.df_schema = df_schema
@@ -104,28 +97,33 @@ class ValidationPlan:
         self.include_value = include_value
         self.options = options or {}
 
+    @property
+    def aux_cols(self) -> list[tuple[str, Column]]:
+        """The helper columns as ``(name, Column)`` pairs."""
+        return [(name, F.expr(c) if isinstance(c, str) else c())
+                for name, c in self._aux]
+
     # -- evaluation --------------------------------------------------------
 
     def violations_column(self) -> Column:
-        tail = (",value:string" if self.include_value and self.detailed
+        tail = (",value:STRING" if self.include_value and self.detailed
                 else "")
-        empty = F.array().cast(
-            f"array<struct<name:string,rule:string,message:string{tail}>>")
-        if not self.rules:
-            return empty
+        empty = ("CAST(array() AS "
+                 f"ARRAY<STRUCT<name:STRING,rule:STRING,message:STRING{tail}>>)")
         # concat of per-rule conditional singleton arrays, NOT
         # filter(array(...), lambda): higher-order functions are
         # CodegenFallback, and one in the output projection drops the
         # whole stage out of whole-stage codegen — A/B measured ~35%
         # off the events_json bench query by keeping this codegen-able
         parts = [
-            F.when(rule.fail, F.array(rule.as_struct(
-                lean=not self.detailed, include_value=self.include_value)))
-            .otherwise(empty)
+            f"CASE WHEN {rule.fail} THEN array("
+            f"{rule.struct_sql(not self.detailed, self.include_value)}) "
+            f"ELSE {empty} END"
             for rule in self.rules]
-        if len(parts) == 1:
-            return parts[0]
-        return F.concat(*parts)
+        if not parts:
+            return F.expr(empty)
+        return F.expr(parts[0] if len(parts) == 1
+                      else "concat(" + ", ".join(parts) + ")")
 
     def with_aux(self, df: DataFrame) -> DataFrame:
         """Project the plan's helper columns (in registration order — later
@@ -136,7 +134,7 @@ class ValidationPlan:
         return out
 
     def drop_aux(self, df: DataFrame) -> DataFrame:
-        return df.drop(*[name for name, _ in self.aux_cols]) if self.aux_cols else df
+        return df.drop(*[name for name, _ in self._aux]) if self._aux else df
 
     def apply(self, df: DataFrame, violations_col: str = "violations",
               verdict_col: str = "verdict") -> DataFrame:

@@ -1,14 +1,16 @@
-"""SQL-text compiler for VARIANT value schemas.
+"""SQL-text helpers of the columnar engine, and the rule compiler for
+VARIANT values.
 
-The variant rule world (open-key value schemas, exact-typed declared
-fields, and now depth-bounded recursive ``$ref``) used to build Spark
-Column objects node by node — one py4j round-trip per expression node.
-That is fine for small schemas but explodes for recursion-heavy ones:
-unrolling the draft-04 metaschema ONE level deep costs ~1.45M py4j calls
-(~270 s of driver time) for a plan whose logic is a few hundred KB of
-SQL.  This module generates the SAME rule triples as SQL text — Python
-string concatenation, zero py4j — and the boundary wraps each finished
-rule in a single ``F.expr`` (one JVM parse per rule).
+Every rule the engine emits is SQL text built by Python string
+concatenation — zero py4j round-trips at compile time; the plan parses
+the finished text when it is applied.  (Building Column objects node by
+node cost one round-trip per expression node: unrolling the draft-04
+metaschema ONE level deep took ~1.45M py4j calls, ~270 s of driver time,
+for a plan whose logic is a few hundred KB of SQL.)  This module holds
+the literal/violation-struct helpers both rule worlds share, and the
+variant world itself: open-key value schemas, exact-typed declared JSON
+fields and depth-bounded recursive ``$ref``, compiled to
+``(rule_id, message, fail)`` triples over typed views of one VARIANT.
 
 Semantics are a 1:1 mirror of the reference validator's keyword order
 and messages (fastjsonschema draft04.py:42-68 keyword registration;
@@ -304,7 +306,7 @@ class _PackFrame:
 
 
 def _nf(x: str) -> str:
-    """NULL-as-false coalesce (compiler._null_false)."""
+    """NULL-as-false coalesce."""
     return f"coalesce({x}, false)"
 
 
@@ -316,13 +318,52 @@ _JSON_LITERAL_RE = (r"^\s*(-?\d+(\.\d+)?([eE][+-]?\d+)?|true|false|null|\".*\")\
 
 
 class _VariantSQLMixin:
-    """SQL-text twins of the Column-building variant rule methods.
+    """The VARIANT-value rule compiler (triples of SQL text).
 
     Reads from the host compiler: ``store``, ``keyword_order``,
     ``format_table``, ``custom_formats``, ``use_formats``,
     ``integral_float_is_int``, ``regex_engine``, ``ref_unroll_depth``,
     ``on_depth_exceeded``, ``canon_depth``, ``_vref_budget``,
     ``_vref_stack``, ``_v_base_uri``."""
+
+    # Keywords the variant rule world expresses; anything else raises
+    # PlanUnsupported (engine="python" is the exact path there).  Undeclared
+    # keys in a JSON column have no static type, so their value schemas are
+    # evaluated over Spark 4 VariantType: the raw text parses once as
+    # map<string,variant>, `schema_of_variant` recovers the exact JSON type
+    # per value, and `try_variant_get` projects typed views.
+    _VARIANT_SUPPORTED = {
+        "type", "enum", "const", "minimum", "maximum", "exclusiveMinimum",
+        "exclusiveMaximum", "multipleOf", "minLength", "maxLength",
+        "pattern", "format",
+        # combinators compose from scalar-subset branches (each branch
+        # recursively compiled to triples; non-scalar branches raise
+        # PlanUnsupported like any other hard keyword)
+        "allOf", "anyOf", "oneOf", "not", "if",
+        # nested containers: the variant casts to array<variant> /
+        # map<string,variant>, element and member schemas recurse with
+        # per-element names carried via _NestedSQL structs; uniqueItems
+        # reproduces the reference's freeze canon (cross-type 1 == 1.0,
+        # bool -> "True"/"False" string collision) via canonical strings
+        "minItems", "maxItems", "items", "contains", "uniqueItems",
+        # recursion: depth-bounded unroll, handled before this table
+        "$ref",
+        "minProperties", "maxProperties", "required", "dependencies",
+        "properties", "patternProperties", "additionalProperties",
+        "propertyNames",
+        # content keywords gate on the TRUE runtime string-ness of the
+        # value (the typed-string fallback would coerce scalars to text
+        # and wrongly fail them)
+        "contentEncoding", "contentMediaType",
+    }
+    _VARIANT_ANNOTATIONS = {
+        "title", "description", "default", "examples", "$comment",
+        "$schema", "$id", "id", "definitions",
+        # consumed by the "if" handler at its keyword position
+        "then", "else",
+        # consumed by the "items" handler at its keyword position
+        "additionalItems",
+    }
 
     # -- plumbing ----------------------------------------------------------
 
@@ -352,6 +393,16 @@ class _VariantSQLMixin:
                 "is too large for expression form; raise plan_text_budget "
                 "or use engine='python'")
         return text
+
+    def _vref_spend(self) -> None:
+        """Count one recursive $ref expansion (inline or packed site)
+        against ``ref_unroll_budget``."""
+        self._vref_budget -= 1
+        if self._vref_budget < 0:
+            self._plan_too_large(
+                "recursive $ref unrolling exceeds the expansion "
+                "budget (ref_unroll_budget); lower ref_unroll_depth "
+                "or use engine='python'")
 
     # -- packed recursion ---------------------------------------------------
 
@@ -477,7 +528,7 @@ class _VariantSQLMixin:
         cidx = comp.index(canonical)
         tag = len(group.segments)
         group.segments.append(ctx.segment(tag, cidx))
-        self._vref_budget -= 1
+        self._vref_spend()
         rv = self._vsql_var("r")
         corr = ctx.corr(rv)
         if pass_only:
@@ -579,10 +630,9 @@ class _VariantSQLMixin:
         fr = getattr(self, "_vpack_global_", None)
         if fr is None or not fr.groups:
             return
-        from pyspark.sql import functions as F
         for group in fr.groups.values():
             rs = self._vpack_child_sql(group)
-            self.aux_cols.append((group.rsvar.strip("`"), F.expr(rs)))
+            self.aux_cols.append((group.rsvar.strip("`"), rs))
         fr.groups.clear()
 
     def _vpack_bind(self, frame: _PackFrame, text: str) -> str:
@@ -662,7 +712,8 @@ class _VariantSQLMixin:
                   f"WHEN {w.is_num} THEN {num_canon} ")
         if depth <= 0:
             deep = ("CAST(raise_error('uniqueItems value nests deeper "
-                    "than the canonicalization bound; raise canon_depth "
+                    "than the canonicalization bound "
+                    f"({self.canon_depth}); raise canon_depth "
                     "or use engine=\\'python\\'') AS STRING)")
             tpl = scalar + f"ELSE {deep} END"
         else:
@@ -686,8 +737,7 @@ class _VariantSQLMixin:
         return tpl
 
     def _variant_canon_sql(self, v_sql: str, depth: int) -> str:
-        return self._vsql_spend(
-            self._variant_canon_tpl(depth).replace(_CANON_V, v_sql))
+        return self._variant_canon_tpl(depth).replace(_CANON_V, v_sql)
 
     def _variant_too_deep_tpl(self, depth: int) -> str:
         """Boolean template over ``__CANON_V__``: does the value contain
@@ -821,6 +871,14 @@ class _VariantSQLMixin:
             return parts[0]
         return "coalesce(" + ", ".join(parts) + ")"
 
+    def _failing_sql(self, coll: str, params: str, viol: str) -> str:
+        """The violation structs of ``coll``'s failing members, in order:
+        ``viol`` maps one member (lambda ``params``) to its struct or
+        NULL.  ``try_element_at(.., 1)`` is the first failing member."""
+        y = self._vsql_var("y")
+        return (f"filter(transform({coll}, {params} -> {viol}), "
+                f"{y} -> {y} IS NOT NULL)")
+
     def _branch_pass_sql(self, sub, name_sql, w: _Views,
                          ctx=None) -> str:
         """True where a subschema accepts the VARIANT value — no triple
@@ -880,12 +938,7 @@ class _VariantSQLMixin:
                 # per-level site count (SCALE.md jsoncol section)
                 return self._vpack_register(canonical, target, doc_uri,
                                             ctx, w, pass_only)
-            self._vref_budget -= 1
-            if self._vref_budget < 0:
-                self._plan_too_large(
-                    "recursive $ref unrolling exceeds the expansion "
-                    "budget (ref_unroll_budget); lower ref_unroll_depth "
-                    "or use engine='python'")
+            self._vref_spend()
             self._vref_stack.append(canonical)
             saved = self._v_base_uri
             self._v_base_uri = doc_uri
@@ -967,8 +1020,7 @@ class _VariantSQLMixin:
         def first_failing_elems(sub, start):
             """First array element from ``start`` violating the element
             schema (name ``data...[i]``)."""
-            x, i, y = self._vsql_var(), self._vsql_var("i"), \
-                self._vsql_var("y")
+            x, i = self._vsql_var(), self._vsql_var("i")
             tail = (f"slice({w.arr}, {start + 1}, "
                     f"greatest(size({w.arr}) - {start}, 0))")
             if pass_only:
@@ -981,6 +1033,7 @@ class _VariantSQLMixin:
                     return
                 bools = (f"transform({tail}, ({x}, {i}) -> "
                          f"{any_fail(triples)})")
+                y = self._vsql_var("y")
                 out.append((None, "NULL",
                             f"({w.is_arr} AND {_nf(f'exists({bools}, {y} -> {y})')})"))
                 return
@@ -990,9 +1043,8 @@ class _VariantSQLMixin:
                                               ctx=elems_ctx(start, i))
             if not triples:
                 return
-            viol = self._violation_sql(triples, ename)
-            failing = (f"filter(transform({tail}, ({x}, {i}) -> {viol}), "
-                       f"{y} -> {y} IS NOT NULL)")
+            failing = self._failing_sql(
+                tail, f"({x}, {i})", self._violation_sql(triples, ename))
             out.append((
                 _NestedSQL(f"try_element_at({failing}, 1)", w.is_arr),
                 "CAST(NULL AS STRING)",
@@ -1015,7 +1067,7 @@ class _VariantSQLMixin:
         def first_failing_entry(key_filter, sub, rule_label):
             """First (key, value) entry passing ``key_filter`` whose
             value violates ``sub`` (name ``data...key``)."""
-            e, y = self._vsql_var("e"), self._vsql_var("y")
+            e = self._vsql_var("e")
             if pass_only:
                 triples = self._entry_triples_sql(
                     sub, "NULL", _Views(f"{e}.value"), pass_only=True,
@@ -1035,10 +1087,9 @@ class _VariantSQLMixin:
             if not triples:
                 return
             viol = self._violation_sql(triples, ename)
-            entry = (f"CASE WHEN {key_filter(e + '.key')} "
-                     f"THEN {viol} END")
-            failing = (f"filter(transform(map_entries({w.obj}), "
-                       f"{e} -> {entry}), {y} -> {y} IS NOT NULL)")
+            failing = self._failing_sql(
+                f"map_entries({w.obj})", e,
+                f"CASE WHEN {key_filter(e + '.key')} THEN {viol} END")
             out.append((
                 _NestedSQL(f"try_element_at({failing}, 1)", w.is_obj),
                 "CAST(NULL AS STRING)",
@@ -1345,7 +1396,8 @@ class _VariantSQLMixin:
             elif keyword == "uniqueItems":
                 if definition["uniqueItems"]:
                     x = self._vsql_var()
-                    canon = self._variant_canon_sql(x, self.canon_depth)
+                    canon = self._vsql_spend(
+                        self._variant_canon_sql(x, self.canon_depth))
                     canons = f"transform({w.arr}, {x} -> {canon})"
                     dup = (f"({w.is_arr} AND size({w.arr}) > "
                            f"size(array_distinct({canons})))")

@@ -22,7 +22,7 @@ and falls back to the python engine only on ``PlanUnsupported``):
   ``try_variant_get`` drive scalar keyword checks with reference-parity
   messages; ``enum``/``const`` members that are themselves arrays or
   objects compare with the reference's type-strict deep equality,
-  unrolled to a static Column tree at compile time).  A field-level type mismatch on a DECLARED key parses to a
+  unrolled to static SQL text at compile time).  A field-level type mismatch on a DECLARED key parses to a
   NULL field while the key stays visible, so the type rule fires instead
   of a blanket invalid-JSON sentinel; "must be valid JSON" is reserved
   for text that is not a JSON object at all.  Combinators

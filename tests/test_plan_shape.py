@@ -123,6 +123,53 @@ def test_jsoncol_parses_json_once(spark, sf_dir):
     assert "Exchange" not in text
 
 
+TREE_SCHEMA = {
+    "definitions": {"node": {
+        "type": "object",
+        "required": ["v"],
+        "properties": {
+            "v": {"type": "integer", "minimum": 0},
+            "tag": {"type": "string", "maxLength": 6},
+            "next": {"$ref": "#/definitions/node"},
+            "kids": {"type": "array", "items": {"$ref": "#/definitions/node"}},
+        },
+        "additionalProperties": {"type": "string"},
+    }},
+    "$ref": "#/definitions/node",
+}
+
+
+def test_compile_makes_no_py4j_round_trips(spark, sf_dir, monkeypatch):
+    """Plan construction is pure Python: every rule is SQL text, so
+    compiling makes zero py4j round-trips (schemas without Python-UDF
+    predicates); the text is parsed only when the plan is applied."""
+    from py4j.java_gateway import GatewayClient
+
+    from spark_schema_guard.columnar import spark_struct_for
+    from spark_schema_guard.columnar.compiler import compile_plan_for_column
+
+    web_schema = web_pages(
+        spark.read.parquet(f"{sf_dir}/documents.parquet")).schema
+    tree_type = spark_struct_for(TREE_SCHEMA)
+    calls = []
+    send = GatewayClient.send_command
+
+    def counted(self, *args, **kwargs):
+        calls.append(args[:1])
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counted)
+    web_plan = ssg.compile_plan(WEB_PAGE_SCHEMA, web_schema)
+    tree_plan = compile_plan_for_column(
+        TREE_SCHEMA, "__parsed__", tree_type, json_source_col="doc",
+        variant_source_col="__variants__", keys_source_col="__json_keys__")
+    assert calls == []
+    assert web_plan.rules and tree_plan.rules
+    # applying the plan is where the JVM first sees the text
+    web_plan.violations_column()
+    assert calls
+
+
 def test_nested_jsoncol_materializes_parses(spark):
     # nested object schemas register aux columns (text slice, variant
     # map, key array) so each is parsed once per row, never once per

@@ -237,6 +237,70 @@ def test_packed_recursion_matches_inline(spark):
     assert packed[4][0] is False and packed[8][0] is False
 
 
+MUTUAL_SCHEMA = {
+    "definitions": {
+        "a": {"type": "object",
+              "properties": {"b": {"$ref": "#/definitions/b"},
+                             "n": {"type": "integer"}}},
+        "b": {"type": "object",
+              "properties": {"a": {"$ref": "#/definitions/a"},
+                             "s": {"type": "string"}}},
+    },
+    "$ref": "#/definitions/a",
+}
+
+
+def test_packed_vs_inline_depth_bound_on_mutual_recursion(spark):
+    """Pinned divergence at exactly ref_unroll_depth: packed recursion
+    bounds a ref cycle by chain LEVELS (each level pushes every
+    component member once), the inline unroll by repeats of each
+    canonical along the path.  Data ``ref_unroll_depth`` hops deep
+    validates exactly under both; one hop deeper, packed reports the
+    depth bound while inline still validates (a/b alternate, so each
+    canonical has only been repeated about half as often)."""
+    depth = 2
+    docs = [
+        {"b": {"a": {"n": "bad"}}},       # exactly `depth` hops
+        {"b": {"a": {"n": 1}}},
+        {"b": {"a": {"b": {"s": 5}}}},    # depth + 1 hops
+        {"b": {"a": {"b": {}}}},
+    ]
+    bound = ("data.b.a.b exceeds the columnar plan's $ref unroll depth "
+             "(2); raise ref_unroll_depth or use engine='python'")
+    packed = _jsoncol_results(spark, MUTUAL_SCHEMA, docs,
+                              ref_unroll_depth=depth, mode="scale")
+    inline = _jsoncol_results(spark, MUTUAL_SCHEMA, docs,
+                              ref_unroll_depth=depth, mode="scale",
+                              pack_recursion=False)
+    within = {0: (False, ["data.b.a.n must be integer"]), 1: (True, [])}
+    assert {i: packed[i] for i in within} == within
+    assert {i: inline[i] for i in within} == within
+    assert packed[2] == packed[3] == (False, [bound])
+    assert inline[2] == (False, ["data.b.a.b.s must be string"])
+    assert inline[3] == (True, [])
+
+
+def test_packed_sites_spend_ref_unroll_budget():
+    """ref_unroll_budget bounds the packed path too: every packed
+    recursion site counts one expansion, like an inline unroll."""
+    from spark_schema_guard.columnar import spark_struct_for
+    from spark_schema_guard.columnar.compiler import (PlanTooLarge,
+                                                      compile_plan_for_column)
+
+    schema = {"type": "object",
+              "properties": {f"p{i}": {"$ref": "#"} for i in range(30)}}
+    st = spark_struct_for(schema)
+
+    def compile_(**kw):
+        return compile_plan_for_column(
+            schema, "__parsed__", st, json_source_col="doc",
+            variant_source_col="__v__", keys_source_col="__k__", **kw)
+
+    assert compile_(ref_unroll_budget=4000).rules
+    with pytest.raises(PlanTooLarge, match="ref_unroll_budget"):
+        compile_(ref_unroll_budget=20)
+
+
 def test_packed_recursion_text_linear(spark):
     """Generated text must stay near-linear in unroll depth — the whole
     point of packing (inline text multiplies per site per level)."""
