@@ -6,12 +6,16 @@ exposes it, ``input_file_name()`` as fallback — an empty unit raises
 rather than silently collapsing all rows into one resumable ''):
 stable across retries and cluster sizes, unlike partition ids.  A run:
 
-1. anti-joins the input's file list against the audit table's completed
-   units (resume = skip everything already validated);
-2. validates the remaining files, aggregating per-file metrics (rows,
-   valid, violations, per-rule counts) in the same pass as the verdicts;
-3. appends per-file metric rows + lineage (run id, schema hash, wall time)
-   to the audit table.
+1. prunes completed files: the audit table's completed units for this
+   schema hash are collected to the driver and the input is filtered by
+   ``NOT (__unit IN (...))``, which Spark applies to the file listing —
+   completed files are never opened (resume = skip everything already
+   validated);
+2. validates the remaining files in two scans: one writes the violation
+   rows, one aggregates per-file metrics (rows, valid, violations,
+   per-rule counts) in a single grouping that is collected to the driver;
+3. appends the per-file metric rows + lineage (run id, schema hash, wall
+   time) to the audit table, last, as one file shipped through Arrow.
 
 Every location (input, audit, violations) is a table reference
 (``io.py``): a parquet path locally, or a catalog identifier such as
@@ -20,27 +24,40 @@ Every location (input, audit, violations) is a table reference
 atomic snapshot commit and resume-after-crash sees only whole units.
 
 Crash mid-run ⇒ files whose metrics were not appended are re-validated on
-the next run; completed files are never recomputed.  Violation-row output
-is partitioned by the same unit so re-runs overwrite per-unit
-(idempotent).
+the next run; completed files are never recomputed.  Violation rows are
+plain appends written before the audit rows, so a crash between the two
+leaves violation rows for units the next run validates again.
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
-import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from spark_schema_guard.columnar.varsql import sqlstr
 from spark_schema_guard.io import append_table, read_table, try_read_table
 
-AUDIT_COLUMNS = [
-    "run_id", "unit", "schema_hash", "rows", "valid_rows", "violation_count",
-    "rule_counts", "started_at", "finished_at", "wall_ms",
-]
+# The one audit-table schema: AuditedRun and streaming.stream_to_audit
+# both write it, and resume reads with it (int ``started_at`` files from
+# older runs widen to bigint on read).
+AUDIT_SCHEMA = T.StructType([
+    T.StructField("run_id", T.StringType()),
+    T.StructField("unit", T.StringType()),
+    T.StructField("schema_hash", T.StringType()),
+    T.StructField("rows", T.LongType()),
+    T.StructField("valid_rows", T.LongType()),
+    T.StructField("violation_count", T.LongType()),
+    T.StructField("rule_counts", T.MapType(T.StringType(), T.LongType())),
+    T.StructField("started_at", T.LongType()),
+    T.StructField("finished_at", T.LongType()),
+    T.StructField("wall_ms", T.LongType()),
+])
+AUDIT_COLUMNS = AUDIT_SCHEMA.fieldNames()
 
 
 def schema_hash(definition) -> str:
@@ -48,11 +65,13 @@ def schema_hash(definition) -> str:
         json.dumps(definition, sort_keys=True).encode()).hexdigest()[:16]
 
 
-def _completed_units(spark: SparkSession, audit_path: str, s_hash: str):
-    audit = try_read_table(spark, audit_path)
+def _completed_units(spark: SparkSession, audit_path: str,
+                     s_hash: str) -> list[str]:
+    audit = try_read_table(spark, audit_path, schema=AUDIT_SCHEMA)
     if audit is None:
-        return None
-    return audit.where(F.col("schema_hash") == s_hash).select("unit").distinct()
+        return []
+    rows = audit.where(F.col("schema_hash") == s_hash).select("unit").collect()
+    return sorted({r["unit"] for r in rows})
 
 
 class AuditedRun:
@@ -73,7 +92,7 @@ class AuditedRun:
         # sources and Iceberg/DSv2 scans); ``input_file_name()`` is only
         # the fallback, because DSv2 scans commonly return '' from it.
         # An EMPTY unit fails LOUDLY at evaluation time: if '' ever
-        # reached the audit table, the next resume's anti-join would
+        # reached the audit table, the next resume's filter would
         # silently skip ALL new data — the exact inversion of the
         # crash-consistency contract.
         src = read_table(self.spark, self.input_path)
@@ -91,10 +110,14 @@ class AuditedRun:
                     "would silently skip data — pass a file-backed input "
                     "or a catalog table with file metadata"))))
         done = _completed_units(self.spark, self.audit_path, self.s_hash)
-        if done is not None:
-            df = df.join(
-                F.broadcast(done.withColumnRenamed("unit", "__unit")),
-                "__unit", "left_anti")
+        if done:
+            # One SQL-text predicate (Column.isin costs a py4j call per
+            # unit).  Units come from the audit table's stored values,
+            # which are _metadata.file_path strings, so Spark evaluates
+            # the filter against the file listing and never opens a
+            # completed file.
+            df = df.where(F.expr(
+                f"NOT (__unit IN ({', '.join(map(sqlstr, done))}))"))
         return df
 
     def run(self, violations_path: str | None = None) -> dict:
@@ -103,35 +126,6 @@ class AuditedRun:
         pending = self.pending_input()
         applied = self.plan.apply(pending)
 
-        per_unit = (
-            applied.groupBy(F.col("__unit").alias("unit"))
-            .agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.sum(F.col("verdict").cast("long")).alias("valid_rows"),
-                F.sum(F.size("violations")).alias("violation_count"),
-            )
-        )
-        # per-rule counts: explode only invalid rows, two-level agg
-        rule_counts = (
-            applied.where(~F.col("verdict"))
-            .select(F.col("__unit").alias("unit"), F.explode("violations").alias("v"))
-            .groupBy("unit", F.coalesce(F.col("v.rule"), F.lit("<none>")).alias("rule"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .groupBy("unit")
-            .agg(F.map_from_entries(
-                F.collect_list(F.struct("rule", "n"))).alias("rule_counts"))
-        )
-        finished_rows = (
-            per_unit
-            .join(rule_counts, "unit", "left")
-            .withColumn("run_id", F.lit(self.run_id))
-            .withColumn("schema_hash", F.lit(self.s_hash))
-            .withColumn("started_at", F.lit(int(started)))
-            .withColumn("finished_at", F.unix_timestamp())
-            .withColumn("wall_ms",
-                        (F.unix_timestamp() - F.lit(int(started))) * 1000)
-        )
-
         if violations_path:
             violation_rows = (
                 applied.where(~F.col("verdict"))
@@ -139,16 +133,51 @@ class AuditedRun:
                                                   if c != "__unit"]))
             append_table(violation_rows, violations_path)
 
-        append_table(finished_rows.select(*AUDIT_COLUMNS), self.audit_path)
+        # One grouping per (unit, rule).  posexplode_outer yields pos NULL
+        # for a row without violations and 0..k-1 for a row with k, so
+        # pos NULL or 0 counts input rows once; verdict is false on every
+        # exploded row of an invalid row, so its sum counts valid rows.
+        per_rule = (
+            applied.select(F.col("__unit").alias("unit"), "verdict",
+                           F.posexplode_outer("violations.rule")
+                           .alias("pos", "rule"))
+            .groupBy("unit", "rule")
+            .agg(F.count_if(F.coalesce("pos", F.lit(0)) == 0).alias("rows"),
+                 F.sum(F.col("verdict").cast("long")).alias("valid_rows"),
+                 F.count("pos").alias("n"))
+            .collect())
+        units: dict[str, dict] = {}
+        for r in per_rule:
+            u = units.setdefault(r["unit"], {
+                "rows": 0, "valid_rows": 0, "violation_count": 0,
+                "rule_counts": {}})
+            u["rows"] += r["rows"]
+            u["valid_rows"] += r["valid_rows"] or 0
+            u["violation_count"] += r["n"]
+            if r["n"]:
+                rule = "<none>" if r["rule"] is None else r["rule"]
+                u["rule_counts"][rule] = u["rule_counts"].get(rule, 0) + r["n"]
 
-        audit = read_table(self.spark, self.audit_path)
-        mine = audit.where(F.col("run_id") == self.run_id)
-        agg = mine.agg(F.count(F.lit(1)).alias("units"),
-                       F.sum("rows").alias("rows"),
-                       F.sum("valid_rows").alias("valid_rows")).collect()[0]
+        if units:
+            import pandas as pd
+
+            finished = time.time()
+            lineage = {"run_id": self.run_id, "schema_hash": self.s_hash,
+                       "started_at": int(started),
+                       "finished_at": int(finished),
+                       "wall_ms": int((finished - started) * 1000)}
+            rows = pd.DataFrame(
+                [{**lineage, **m, "unit": unit,
+                  "rule_counts": m["rule_counts"] or None}
+                 for unit, m in sorted(units.items())],
+                columns=AUDIT_COLUMNS)
+            # audit rows last, as one Arrow-shipped file
+            append_table(
+                self.spark.createDataFrame(rows, AUDIT_SCHEMA).coalesce(1),
+                self.audit_path)
         return {
             "run_id": self.run_id,
-            "units_validated": agg["units"],
-            "rows": agg["rows"] or 0,
-            "valid_rows": agg["valid_rows"] or 0,
+            "units_validated": len(units),
+            "rows": sum(u["rows"] for u in units.values()),
+            "valid_rows": sum(u["valid_rows"] for u in units.values()),
         }

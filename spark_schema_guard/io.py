@@ -32,6 +32,7 @@ import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _IDENTIFIER = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*(\.[A-Za-z_][A-Za-z0-9_]*){0,2}$")
 _URI_SCHEME = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*://")
@@ -66,29 +67,38 @@ def _strip(ref: str) -> str:
     return ref
 
 
-def read_table(spark: SparkSession, ref: str, fmt: str = "parquet") -> DataFrame:
-    """Load a dataset by reference (catalog table or path)."""
+def read_table(spark: SparkSession, ref: str, fmt: str = "parquet",
+               schema: StructType | str | None = None) -> DataFrame:
+    """Load a dataset by reference (catalog table or path).
+
+    ``schema`` reads a path with that schema instead of inferring one
+    (no inference job); a catalog table carries its own and ignores it.
+    """
     if is_catalog_ref(ref):
         return spark.read.table(_strip(ref))
     ref = _strip(ref)
+    reader = spark.read if schema is None else spark.read.schema(schema)
     if fmt == "csv":
-        return (spark.read.option("header", "true")
-                .option("inferSchema", "true").csv(ref))
+        reader = reader.option("header", "true")
+        if schema is None:
+            reader = reader.option("inferSchema", "true")
+        return reader.csv(ref)
     if fmt == "json":
-        return spark.read.json(ref)
+        return reader.json(ref)
     if fmt == "parquet":
-        return spark.read.parquet(ref)
+        return reader.parquet(ref)
     # orc/text are Spark-native; avro needs the spark-avro module — let
     # the generic reader surface ITS error rather than silently reading
     # the path as parquet (the old fall-through mis-read .orc refs)
-    return spark.read.format(fmt).load(ref)
+    return reader.format(fmt).load(ref)
 
 
-def try_read_table(spark: SparkSession, ref: str, fmt: str = "parquet"):
+def try_read_table(spark: SparkSession, ref: str, fmt: str = "parquet",
+                   schema: StructType | str | None = None):
     """``read_table`` returning ``None`` when the dataset does not exist
     yet (first run against an empty audit location)."""
     try:
-        df = read_table(spark, ref, fmt)
+        df = read_table(spark, ref, fmt, schema)
         df.schema  # force resolution for lazy table refs
         return df
     except Exception:

@@ -322,19 +322,26 @@ def ks_drift(
         # arithmetic as the SQL it replaces: long cumsums, double
         # division.
         rows = sorted(binned.collect(), key=lambda r: r["b"])
-        spark = df.sparkSession
-        out_schema = "statistic double, n_left long, n_right long"
+
+        def result(stat, tl, tr):
+            # JVM-local one-row frame: a row-object createDataFrame would
+            # run a Python-worker job on every read
+            return df.sparkSession.range(1, numPartitions=1).select(
+                F.lit(stat).cast("double").alias("statistic"),
+                F.lit(tl).cast("long").alias("n_left"),
+                F.lit(tr).cast("long").alias("n_right"))
+
         if not rows:
-            return spark.createDataFrame([(None, None, None)], out_schema)
+            return result(None, None, None)
         tl = sum(r["n_l"] for r in rows)
         tr = sum(r["n_r"] for r in rows)
         if not tl or not tr:
-            return spark.createDataFrame([(None, tl, tr)], out_schema)
+            return result(None, tl, tr)
         stat = cl = cr = 0
         for r in rows:
             cl += r["n_l"]
             cr += r["n_r"]
             stat = max(stat, abs(cl / tl - cr / tr))
-        return spark.createDataFrame([(float(stat), tl, tr)], out_schema)
+        return result(float(stat), tl, tr)
 
     raise ValueError(f"unknown mode {mode!r}")

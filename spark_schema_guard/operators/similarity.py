@@ -57,6 +57,7 @@ from __future__ import annotations
 
 
 import math
+import numbers
 import random
 import warnings
 
@@ -297,20 +298,20 @@ def _auto_n_centroids(n: int) -> int:
                min(IVF_MAX_CENTROIDS, round(math.sqrt(max(n, 1)))))
 
 
-def _validate_max_bucket(max_bucket) -> None:
+def _validate_max_bucket(max_bucket):
     """Reject typo'd strings ('aut0' used to fall into the int branch
     and Spark coerced the long<=string comparison — silent wrong
-    filtering) and non-int garbage."""
+    filtering) and non-integer garbage; any ``numbers.Integral`` but
+    ``bool`` is a cap (``numpy.int64`` included), returned as ``int``."""
     if max_bucket is None or max_bucket == "auto":
-        return
-    if isinstance(max_bucket, str):
-        raise ValueError(
-            f"max_bucket must be an int, None, or 'auto'; got {max_bucket!r}")
-    if isinstance(max_bucket, bool) or not isinstance(max_bucket, int):
+        return max_bucket
+    if isinstance(max_bucket, bool) or not isinstance(max_bucket,
+                                                      numbers.Integral):
         raise ValueError(
             f"max_bucket must be an int, None, or 'auto'; got {max_bucket!r}")
     if max_bucket <= 0:
         raise ValueError(f"max_bucket must be positive; got {max_bucket}")
+    return int(max_bucket)
 
 
 def _cap_buckets(data: DataFrame, key: str, max_bucket,
@@ -340,7 +341,7 @@ def _cap_buckets(data: DataFrame, key: str, max_bucket,
     The eager histogram costs one narrow job; the previous in-plan form
     recomputed the same histogram inside the candidate job anyway, so
     total scan work is unchanged while the join disappears."""
-    _validate_max_bucket(max_bucket)
+    max_bucket = _validate_max_bucket(max_bucket)
     if max_bucket is None:
         return data
     sizes = data.groupBy(key).agg(F.count(F.lit(1)).alias("__bn"))

@@ -222,7 +222,9 @@ def violation_streaks(
 
 def stream_to_audit(validated: DataFrame, audit_path: str, run_id: str):
     """writeStream foreachBatch sink: per-micro-batch metrics appended to
-    the audit table (unit = batch id)."""
+    the audit table (unit = batch id), in ``audit.AUDIT_SCHEMA``."""
+    from spark_schema_guard.audit import AUDIT_SCHEMA
+    from spark_schema_guard.io import append_table
 
     def write_batch(batch_df: DataFrame, batch_id: int):
         metrics = batch_df.agg(
@@ -232,16 +234,12 @@ def stream_to_audit(validated: DataFrame, audit_path: str, run_id: str):
         ).withColumn("run_id", F.lit(run_id)) \
          .withColumn("unit", F.lit(f"batch-{batch_id}")) \
          .withColumn("schema_hash", F.lit("stream")) \
-         .withColumn("rule_counts",
-                     F.lit(None).cast("map<string,bigint>")) \
+         .withColumn("rule_counts", F.lit(None)) \
          .withColumn("started_at", F.unix_timestamp()) \
          .withColumn("finished_at", F.unix_timestamp()) \
-         .withColumn("wall_ms", F.lit(0).cast("long"))
-        metrics.select(
-            "run_id", "unit", "schema_hash", "rows", "valid_rows",
-            "violation_count", "rule_counts", "started_at", "finished_at",
-            "wall_ms",
-        ).write.mode("append").parquet(audit_path)
+         .withColumn("wall_ms", F.lit(0))
+        append_table(metrics.select(*[F.col(f.name).cast(f.dataType)
+                                      for f in AUDIT_SCHEMA]), audit_path)
 
     return validated.writeStream.foreachBatch(write_batch)
 

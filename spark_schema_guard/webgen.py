@@ -116,7 +116,12 @@ LANGUAGES_DIM = [
 
 
 def languages(spark) -> DataFrame:
-    return spark.createDataFrame(LANGUAGES_DIM, "lang_code string, lang_name string")
+    # an inline table is a JVM-local relation: reading it starts no
+    # Python worker, unlike a row-object createDataFrame
+    from spark_schema_guard.columnar.varsql import sqlstr
+
+    rows = ", ".join(f"({sqlstr(c)}, {sqlstr(n)})" for c, n in LANGUAGES_DIM)
+    return spark.sql(f"SELECT * FROM VALUES {rows} AS t(lang_code, lang_name)")
 
 
 def lined_docs(documents: DataFrame, *, chunk_tokens: int = 8,

@@ -70,6 +70,30 @@ def test_orphan_rows(spark, sf_dir):
     assert report["fact_rows"] == orders.count()
 
 
+@pytest.mark.parametrize("broadcast_dim", [True, False])
+@pytest.mark.parametrize("null_is_violation", [False, True])
+def test_referential_report_counts_orphan_rows(spark, broadcast_dim,
+                                               null_is_violation):
+    """The one-scan report equals counts derived from orphan_rows under
+    the same flags: NULL fks, duplicated dimension keys and a NULL
+    dimension key included."""
+    fact = spark.createDataFrame(
+        [(i, k) for i, k in enumerate(
+            ["en", "en", "de", "xx", "xx", "yy", None, None, "fr", None])],
+        "id long, lang string")
+    dim = spark.createDataFrame(
+        [("en",), ("de",), ("de",), ("fr",), (None,)], "code string")
+    flags = {"broadcast_dim": broadcast_dim,
+             "null_is_violation": null_is_violation}
+    report = referential_report(fact, dim, "lang", "code", **flags).collect()[0]
+    orphans = orphan_rows(fact, dim, "lang", "code", **flags)
+    keys = {r["lang"] for r in orphans.collect()} - {None}
+    assert report.asDict() == {"fact_rows": 10,
+                               "orphan_rows": orphans.count(),
+                               "orphan_keys": len(keys)}
+    assert report["orphan_rows"] == (6 if null_is_violation else 3)
+
+
 def test_chi_square_manual(spark):
     # 2x2 contingency: buckets A/B over values x/y with known counts
     rows = ([("A", "x")] * 30 + [("A", "y")] * 10

@@ -86,6 +86,20 @@ def test_max_bucket_rejects_garbage(spark):
     assert _cap_buckets(df, "bucket", "auto", n_buckets=4).count() == 5
 
 
+def test_max_bucket_accepts_numpy_integers(spark):
+    """Any numbers.Integral is a cap (a numpy.int64 from a sizing
+    computation caps exactly like the int); bool is still garbage."""
+    from spark_schema_guard.operators.similarity import _cap_buckets
+
+    # bucket 0 holds 3 rows, bucket 1 holds 2
+    df = spark.range(5).select((F.col("id") % 2).alias("bucket"))
+    for cap, kept in ((np.int64(2), 2), (np.int32(3), 5), (2, 2)):
+        assert _cap_buckets(df, "bucket", cap).count() == kept
+    for bad in (True, np.bool_(True), np.float64(2.0), np.int64(0)):
+        with pytest.raises(ValueError, match="max_bucket"):
+            _cap_buckets(df, "bucket", bad)
+
+
 # --- ADVICE-r04 (medium): the auto cap is reported, not silent --------------
 
 

@@ -1,6 +1,7 @@
 """Synthetic web table, multimodal plumbing, and audited resumable runs."""
 
 import os
+import uuid
 
 import pytest
 
@@ -96,6 +97,221 @@ def test_audited_run_resumes(spark, sf_dir, tmp_path):
     third = AuditedRun(spark, plan, input_path, audit_path, run_id="r3").run()
     assert third["units_validated"] >= 1
     assert third["rows"] == 50
+
+
+class _RulesPlan:
+    """Plan stand-in whose violations come straight from the data: the
+    ``rules`` column lists each row's violated rule ids, NULL ids
+    included (no compiled rule emits those)."""
+
+    schema_definition = {"fixture": "rules column"}
+
+    def apply(self, df):
+        return (df.withColumn("violations", F.expr(
+                    "transform(coalesce(rules, array()), "
+                    "r -> named_struct('rule', r, 'message', 'm'))"))
+                .withColumn("verdict", F.size("violations") == 0))
+
+
+_RULE_ROWS = [[], ["a"], ["a", "b"], [None], ["b", None, "b"], None,
+              ["c"], [], ["a", "a"]]
+
+
+def _write_rule_files(spark, path, n_files):
+    """Append ``n_files`` parquet files to ``path``, each holding every
+    ``_RULE_ROWS`` case once; returns the new file names."""
+    rows = spark.createDataFrame(list(enumerate(_RULE_ROWS)),
+                                 "id long, rules array<string>").coalesce(1)
+    names = []
+    for _ in range(n_files):
+        before = set(os.listdir(path)) if os.path.isdir(path) else set()
+        rows.write.mode("append").parquet(path)
+        names += [f for f in set(os.listdir(path)) - before
+                  if f.endswith(".parquet")]
+    return names
+
+
+def _old_formula(applied):
+    """Per-unit metrics the way the audit computed them before: a count/
+    sum groupBy joined to an explode of the invalid rows' rule ids."""
+    per_unit = applied.groupBy(F.col("__unit").alias("unit")).agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.sum(F.col("verdict").cast("long")).alias("valid_rows"),
+        F.sum(F.size("violations")).alias("violation_count"))
+    rule_counts = (
+        applied.where(~F.col("verdict"))
+        .select(F.col("__unit").alias("unit"),
+                F.explode("violations").alias("v"))
+        .groupBy("unit", F.coalesce(F.col("v.rule"), F.lit("<none>"))
+                 .alias("rule"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .groupBy("unit")
+        .agg(F.map_from_entries(F.collect_list(F.struct("rule", "n")))
+             .alias("rule_counts")))
+    return {r["unit"]: (r["rows"], r["valid_rows"], r["violation_count"],
+                        r["rule_counts"])
+            for r in per_unit.join(rule_counts, "unit", "left").collect()}
+
+
+def test_audit_metrics_match_groupby_explode_formula(spark, tmp_path):
+    input_path = str(tmp_path / "in")
+    _write_rule_files(spark, input_path, 3)
+    # and a file without violations: its rule_counts is NULL
+    spark.createDataFrame([(90, []), (91, None)], "id long, rules array<string>") \
+        .coalesce(1).write.mode("append").parquet(input_path)
+    plan = _RulesPlan()
+    want = _old_formula(plan.apply(AuditedRun(
+        spark, plan, input_path, str(tmp_path / "unused")).pending_input()))
+    assert sorted(str(w[3] and w[3]["<none>"]) for w in want.values()) == [
+        "2", "2", "2", "None"]
+
+    summary = AuditedRun(spark, plan, input_path, str(tmp_path / "audit"),
+                         run_id="r1").run()
+    got = {r["unit"]: (r["rows"], r["valid_rows"], r["violation_count"],
+                       r["rule_counts"])
+           for r in spark.read.parquet(str(tmp_path / "audit")).collect()}
+    assert got == want
+    assert summary == {"run_id": "r1", "units_validated": 4,
+                       "rows": 3 * len(_RULE_ROWS) + 2,
+                       "valid_rows": sum(w[1] for w in want.values())}
+
+
+def _file_scan_metric(df, name):
+    """Metric of the (only) file scan in ``df``'s executed plan; call it
+    after an action on the same DataFrame."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    leaves = plan.collectLeaves()
+    assert leaves.size() == 1
+    return leaves.apply(0).metrics().apply(name).value()
+
+
+def test_resume_scans_only_pending_files(spark, tmp_path):
+    input_path = str(tmp_path / "in")
+    _write_rule_files(spark, input_path, 4)
+    plan = _RulesPlan()
+    first = AuditedRun(spark, plan, input_path, str(tmp_path / "audit"),
+                       run_id="r1").run()
+    assert first["units_validated"] == 4
+    added = _write_rule_files(spark, input_path, 1)
+
+    pending = AuditedRun(spark, plan, input_path, str(tmp_path / "audit"),
+                         run_id="r2").pending_input().select("__unit")
+    units = {r["__unit"] for r in pending.collect()}
+    assert [u.rsplit("/", 1)[1] for u in units] == added
+    # completed files are pruned from the listing, never opened
+    assert _file_scan_metric(pending, "numFiles") == 1
+    assert _file_scan_metric(pending, "numOutputRows") == len(_RULE_ROWS)
+
+
+def _count_jobs(spark, fn):
+    sc = spark.sparkContext
+    group = f"audit-jobs-{uuid.uuid4()}"
+    sc.setJobGroup(group, "count audit jobs")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_audited_run_job_counts(spark, tmp_path):
+    """A first run is at most 5 Spark jobs (input schema, violation
+    write, the per-unit aggregation's two stages, audit write) and a
+    resume adds one collect of the completed units."""
+    files = str(tmp_path / "files")
+    names = _write_rule_files(spark, files, 4)
+    snapshot = tmp_path / "snapshot"
+    snapshot.mkdir()
+    plan = _RulesPlan()
+
+    def run(run_id):
+        return AuditedRun(spark, plan, str(snapshot), str(tmp_path / "audit"),
+                          run_id=run_id).run(
+            violations_path=str(tmp_path / "violations"))
+
+    for name in names[:3]:
+        os.link(os.path.join(files, name), snapshot / name)
+    first, first_jobs = _count_jobs(spark, lambda: run("r1"))
+    os.link(os.path.join(files, names[3]), snapshot / names[3])
+    resume, resume_jobs = _count_jobs(spark, lambda: run("r2"))
+    assert (first["units_validated"], resume["units_validated"]) == (3, 1)
+    assert first_jobs <= 5, first_jobs
+    assert resume_jobs <= 7, resume_jobs
+
+
+def test_pending_input_py4j_calls_do_not_grow_with_units(spark, tmp_path,
+                                                          monkeypatch):
+    """The completed-unit filter is one SQL-text expression, so building
+    pending_input() against 10,000 completed units makes the same number
+    of py4j calls as against 10."""
+    import pandas as pd
+    from py4j.java_gateway import GatewayClient
+    from py4j.protocol import MEMORY_COMMAND_NAME
+
+    from spark_schema_guard.audit import AUDIT_COLUMNS, AUDIT_SCHEMA
+
+    input_path = str(tmp_path / "in")
+    _write_rule_files(spark, input_path, 2)
+    plan = _RulesPlan()
+    calls = {}
+    send = GatewayClient.send_command
+    for n in (10, 10_000):
+        audit = str(tmp_path / f"audit{n}")
+        run = AuditedRun(spark, plan, input_path, audit)
+        units = [f"file:/nowhere/part-{i}.parquet" for i in range(n)]
+        rows = pd.DataFrame({**dict.fromkeys(AUDIT_COLUMNS), "run_id": "old",
+                             "unit": units, "schema_hash": run.s_hash})
+        spark.createDataFrame(rows, AUDIT_SCHEMA).write.parquet(audit)
+        counted = []
+
+        def counting(self, command, *args, **kwargs):
+            # releases of garbage-collected JavaObjects follow Python's GC
+            # timing (earlier tests' garbage too), not the code under test
+            if not command.startswith(MEMORY_COMMAND_NAME):
+                counted.append(command)
+            return send(self, command, *args, **kwargs)
+
+        monkeypatch.setattr(GatewayClient, "send_command", counting)
+        pending = run.pending_input()
+        monkeypatch.setattr(GatewayClient, "send_command", send)
+        calls[n] = len(counted)
+        assert pending.count() == 2 * len(_RULE_ROWS)
+    assert calls[10_000] <= calls[10]
+
+
+def test_stream_and_batch_share_one_audit_schema(spark, tmp_path):
+    """Batch run, then a stream batch, into the same audit table: the
+    whole table reads back with one schema and a batch resume still
+    skips the completed files."""
+    from spark_schema_guard.audit import AUDIT_SCHEMA
+    from spark_schema_guard.streaming import stream_to_audit
+
+    input_path = str(tmp_path / "in")
+    audit_path = str(tmp_path / "audit")
+    _write_rule_files(spark, input_path, 2)
+    plan = _RulesPlan()
+    assert AuditedRun(spark, plan, input_path, audit_path,
+                      run_id="batch1").run()["units_validated"] == 2
+
+    source = spark.readStream.schema(
+        spark.read.parquet(input_path).schema).parquet(input_path)
+    query = (stream_to_audit(plan.apply(source), audit_path, "stream1")
+             .option("checkpointLocation", str(tmp_path / "checkpoint"))
+             .trigger(availableNow=True).start())
+    query.awaitTermination()
+
+    audit = spark.read.parquet(audit_path)
+    assert audit.schema == AUDIT_SCHEMA
+    latest, rows = audit.agg(F.max("started_at"), F.sum("rows")).collect()[0]
+    assert latest > 0 and rows == 2 * 2 * len(_RULE_ROWS)
+
+    resume = AuditedRun(spark, plan, input_path, audit_path, run_id="batch2")
+    assert resume.run()["units_validated"] == 0
+    _write_rule_files(spark, input_path, 1)
+    assert resume.run()["units_validated"] == 1
 
 
 def test_languages_dim_fk(spark, sf_dir):
