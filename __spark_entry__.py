@@ -362,8 +362,8 @@ def q_drift_lang_by_unit(spark, sf_dir):
     per-partition outcomes): chi-square goodness-of-fit of each unit's
     lang mix against the pooled corpus.  The unit here is a
     deterministic doc_id bucket so the SQL oracle can reproduce it; the
-    production default (``unit_col=None``) units by input_file_name()
-    — covered by tests/test_operators.py on a multi-file table."""
+    production default (``unit_col=None``) units by data file, like the
+    audit table — covered by tests on a multi-file table."""
     docs = _read(spark, sf_dir, "documents")
     out = chi_square_by_unit(docs, "lang", F.col("doc_id") % 8)
     return out.select("unit", "n_rows",
@@ -374,7 +374,7 @@ def q_drift_lang_by_unit(spark, sf_dir):
 def q_drift_lang_psi(spark, sf_dir):
     """PSI per unit (ML-monitoring drift score) of the lang mix vs the
     pooled corpus, deterministic doc_id buckets as units (production
-    default is input_file_name())."""
+    default is the data file, the audit unit)."""
     docs = _read(spark, sf_dir, "documents")
     out = psi_by_unit(docs, "lang", F.col("doc_id") % 8)
     return out.select("unit", "n_rows",

@@ -120,7 +120,8 @@ def main():
     report["lang_drift_chisq"] = round(drift["statistic"], 2)
     # per-unit drift verdicts: which slice of the corpus shifted, by
     # chi-square GoF and PSI against the pooled lang mix (production
-    # jobs unit by input_file_name(); doc_id buckets keep the demo tiny)
+    # jobs unit by data file, like the audit table; doc_id buckets keep
+    # the demo tiny)
     by_unit = chi_square_by_unit(web, "lang", F.col("doc_id") % 4).collect()
     report["lang_drift_by_unit"] = {
         str(r["unit"]): round(r["statistic"], 2) for r in by_unit}

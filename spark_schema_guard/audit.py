@@ -1,10 +1,11 @@
 """Checkpointed, resumable validation runs with a per-unit audit table
 (SURVEY.md §2.7, north-rule requirement).
 
-Unit of work = input file (``_metadata.file_path`` when the source
-exposes it, ``input_file_name()`` as fallback — an empty unit raises
-rather than silently collapsing all rows into one resumable ''):
-stable across retries and cluster sizes, unlike partition ids.  A run:
+Unit of work = input file (:func:`unit_column`: ``_metadata.file_path``
+when the source exposes it, ``input_file_name()`` as fallback — an empty
+unit raises rather than silently collapsing all rows into one resumable
+''): stable across retries and cluster sizes, unlike partition ids.  The
+``*_by_unit`` drift and mining operators default to the same unit.  A run:
 
 1. prunes completed files: the audit table's completed units for this
    schema hash are collected to the driver and the input is filtered by
@@ -35,7 +36,7 @@ import hashlib
 import json
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -74,6 +75,29 @@ def _completed_units(spark: SparkSession, audit_path: str,
     return sorted({r["unit"] for r in rows})
 
 
+def unit_column(df: DataFrame) -> Column:
+    """The work unit of each row: its underlying data file.
+
+    Prefers the source's hidden metadata column (``_metadata.file_path``
+    — defined for file sources and Iceberg/DSv2 scans);
+    ``input_file_name()`` is only the fallback, because DSv2 scans
+    commonly return '' from it and it spells local paths ``file:///…``
+    where the metadata column (and so the audit table) has ``file:/…``.
+    An EMPTY unit fails LOUDLY at evaluation time: if '' ever reached
+    the audit table, the next resume's filter would silently skip ALL
+    new data — the exact inversion of the crash-consistency contract."""
+    try:
+        df.select(F.col("_metadata.file_path"))
+        raw = F.col("_metadata.file_path")
+    except Exception:
+        raw = F.input_file_name()
+    return F.when(F.length(raw) > 0, raw).otherwise(F.raise_error(F.lit(
+        "audit unit is empty: this source exposes neither "
+        "_metadata.file_path nor input_file_name(); resume would silently "
+        "skip data — pass a file-backed input or a catalog table with "
+        "file metadata")))
+
+
 class AuditedRun:
     """One resumable validation pass of a plan over a file-backed input."""
 
@@ -87,28 +111,8 @@ class AuditedRun:
         self.s_hash = schema_hash(plan.schema_definition)
 
     def pending_input(self) -> DataFrame:
-        # Unit = underlying data file.  Prefer the source's hidden
-        # metadata column (``_metadata.file_path`` — defined for file
-        # sources and Iceberg/DSv2 scans); ``input_file_name()`` is only
-        # the fallback, because DSv2 scans commonly return '' from it.
-        # An EMPTY unit fails LOUDLY at evaluation time: if '' ever
-        # reached the audit table, the next resume's filter would
-        # silently skip ALL new data — the exact inversion of the
-        # crash-consistency contract.
-        src = read_table(self.spark, self.input_path)
-        try:
-            src.select(F.col("_metadata.file_path"))
-            raw_unit = F.col("_metadata.file_path")
-        except Exception:
-            raw_unit = F.input_file_name()
-        df = src.withColumn(
-            "__unit",
-            F.when(F.length(raw_unit) > 0, raw_unit).otherwise(
-                F.raise_error(F.lit(
-                    "audit unit is empty: this source exposes neither "
-                    "_metadata.file_path nor input_file_name(); resume "
-                    "would silently skip data — pass a file-backed input "
-                    "or a catalog table with file metadata"))))
+        df = read_table(self.spark, self.input_path)
+        df = df.withColumn("__unit", unit_column(df))
         done = _completed_units(self.spark, self.audit_path, self.s_hash)
         if done:
             # One SQL-text predicate (Column.isin costs a py4j call per

@@ -56,7 +56,7 @@ from ..rowcheck.compiler import (
     ref_numeric, schema_value_repr,
 )
 from . import typemap
-from .plan import Rule, ValidationPlan
+from .plan import _NULL_STR, Rule, ValidationPlan
 from .varsql import (_JSON_LITERAL_RE, _NestedSQL, _PackEntries, _PackSingle,
                      _VariantSQLMixin, _Views, _nf, sqlnum, sqlstr)
 
@@ -130,6 +130,17 @@ def _ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
+def _ddl(dtype: T.DataType) -> str:
+    """DDL type string with every field name quoted: JSON keys may hold
+    spaces, dots, colons and backticks."""
+    if isinstance(dtype, T.StructType):
+        return "struct<" + ",".join(f"{_ident(f.name)}:{_ddl(f.dataType)}"
+                                    for f in dtype.fields) + ">"
+    if isinstance(dtype, T.ArrayType):
+        return f"array<{_ddl(dtype.elementType)}>"
+    return dtype.simpleString()
+
+
 def _and(*parts: str) -> str:
     parts = [p for p in parts if p != "true"]
     if not parts:
@@ -169,9 +180,9 @@ class _PlanCompiler(_VariantSQLMixin):
         self.use_default = options.get("use_default", True)
         self.custom_formats = options.get("formats") or {}
         # exact JSON value typing for declared fields / undeclared value
-        # schemas via VariantType; False = legacy coercing struct parse
+        # schemas via VariantType; "coerce" = the typed struct parse
         # (faster, documented string-coercion caveat)
-        self.exact_json_types = options.get("exact_json_types", True)
+        self.exact_json_types = options.get("json_types", "exact") == "exact"
         # recursive $ref over JSON/variant values: per-path unroll depth
         # (each canonical ref may repeat this many times along one
         # compile path — the reference compiles recursion to recursive
@@ -270,6 +281,37 @@ class _PlanCompiler(_VariantSQLMixin):
         site = _Site(None, df_schema, "data",
                      base_uri=self.store.root_uri())
         return self.compile_value(definition, site)
+
+    def compile_json_column(self, definition, column: str):
+        """Rules over a JSON string column, and the not-a-JSON-object
+        guard.  The plan owns its parse: the schema-typed struct, the
+        map<string,variant> view (exact mode) and the runtime key array
+        are its first helper columns, materialized once per row (the
+        JSON expressions are CodegenFallback; inline copies would
+        re-parse the text per rule).  Catalyst prunes the struct parse
+        whenever every declared-field rule compiles against the variant
+        view."""
+        text = _ident(column)
+        dtype = typemap.spark_struct_for(definition)
+        site = _Site(self._aux("parsed", f"from_json({text}, "
+                                         f"{sqlstr(_ddl(dtype))})"),
+                     dtype, "data", base_uri=self.store.root_uri(),
+                     json=text)
+        if self.exact_json_types:
+            # the variant builder rejects duplicate keys unless
+            # spark.sql.variant.allowDuplicateKeys is set (plan.apply
+            # sets it): last-wins, like the reference's json.loads
+            site.keys = self._aux("keys", f"map_keys({self._vmap(site)})")
+        else:
+            site.keys = self._aux("keys", f"json_object_keys({text})")
+        # not a JSON object at all (broken syntax, or a scalar/array where
+        # an object is required).  A field-level type mismatch parses to a
+        # NULL field while the key stays visible, so the declared-field
+        # type rules fire instead of this blanket sentinel.
+        guard = (f"({text} IS NOT NULL AND {site.keys} IS NULL)",
+                 f"named_struct('name', 'data', 'rule', {_NULL_STR}, "
+                 "'message', 'data must be valid JSON')")
+        return self.compile_value(definition, site), guard
 
     def compile_value(self, definition, site: _Site) -> list[Rule]:
         if definition is True or definition == {}:
@@ -1302,20 +1344,39 @@ def _lit(value) -> str:
         f"enum/const member of unsupported type: {type(value).__name__}")
 
 
+def _build_plan(definition, options: dict, compile_rules,
+                **plan_args) -> ValidationPlan:
+    """The one plan builder: check the definition, then compile its
+    rules.  The row-level compile raises every ``SchemaDefinitionError``
+    the reference would raise at compile time; ``compile_rules`` maps the
+    configured :class:`_PlanCompiler` to ``(rules, guard)``."""
+    from ..rowcheck import compile_row_validator
+
+    compile_row_validator(
+        definition, handlers=options["handlers"], formats=options["formats"],
+        use_default=options["use_default"],
+        use_formats=options["use_formats"], fast_fail=False)
+    compiler = _PlanCompiler(
+        SchemaStore(definition, handlers=options["handlers"]),
+        _pick_dialect(definition), options)
+    rules, guard = compile_rules(compiler)
+    compiler._vpack_flush()
+    return ValidationPlan(
+        rules=rules, aux_cols=compiler.aux_cols, defaults=compiler.defaults,
+        schema_definition=definition, regex_engine=options["regex_engine"],
+        guard=guard, options=options, **plan_args)
+
+
 def compile_plan_for_column(
     definition,
     column: str,
-    dtype: T.DataType,
     *,
+    json_types: str = "exact",
     regex_engine: str = "jvm",
     use_formats: bool = True,
     use_default: bool = True,
     formats: dict | None = None,
     handlers: dict | None = None,
-    json_source_col: str | None = None,
-    variant_source_col: str | None = None,
-    keys_source_col: str | None = None,
-    exact_json_types: bool = True,
     ref_unroll_depth: int = 3,
     on_depth_exceeded: str = "error",
     canon_depth: int = 5,
@@ -1323,68 +1384,34 @@ def compile_plan_for_column(
     plan_text_budget: int = 2_000_000,
     pack_recursion: bool = True,
 ) -> ValidationPlan:
-    """Compile a schema whose root is one (struct/map-typed) column rather
-    than the whole row — used for ``from_json``-parsed JSON columns.
+    """Compile a schema for a JSON string column into a plan that parses
+    the column itself: ``plan.apply(df)`` validates ``df[column]``, and
+    the plan saves and reloads like a table plan.
 
-    ``json_source_col`` names the RAW JSON string column the struct was
-    parsed from; when given, object keywords see the true runtime key
-    set (``json_object_keys``) so open-key semantics
+    Object keywords see the true runtime key set, so open-key semantics
     (additionalProperties: false, propertyNames, min/maxProperties,
     required-with-explicit-null) match the reference instead of only the
-    schema-declared struct fields."""
-    from ..rowcheck import compile_row_validator
-
-    row_validator = compile_row_validator(
-        definition, handlers=handlers, formats=formats,
-        use_default=use_default, use_formats=use_formats, fast_fail=False,
-    )
-    dialect = _pick_dialect(definition)
-    store = SchemaStore(definition, handlers=handlers)
-    compiler = _PlanCompiler(store, dialect, {
+    schema-declared struct fields.  ``json_types="exact"`` types values
+    from the variant view; ``"coerce"`` validates the schema-typed struct
+    parse (see :func:`~spark_schema_guard.jsoncol.validate_json_column`).
+    """
+    if json_types not in ("exact", "coerce"):
+        raise ValueError(f"unknown json_types {json_types!r}")
+    return _build_plan(definition, {
+        "json_column": column,
+        "json_types": json_types,
         "regex_engine": regex_engine,
         "use_formats": use_formats,
         "use_default": use_default,
         "formats": formats,
-        "exact_json_types": exact_json_types,
+        "handlers": handlers,
         "ref_unroll_depth": ref_unroll_depth,
         "on_depth_exceeded": on_depth_exceeded,
         "canon_depth": canon_depth,
         "ref_unroll_budget": ref_unroll_budget,
         "plan_text_budget": plan_text_budget,
         "pack_recursion": pack_recursion,
-    })
-    site = _Site(_ident(column), dtype, "data",
-                 base_uri=compiler.store.root_uri(),
-                 json=_ident(json_source_col) if json_source_col else None,
-                 variant=(_ident(variant_source_col)
-                          if variant_source_col else None),
-                 keys=_ident(keys_source_col) if keys_source_col else None)
-    rules = compiler.compile_value(definition, site)
-    compiler._vpack_flush()
-    return ValidationPlan(
-        rules=rules, defaults=[], schema_definition=definition,
-        df_schema=None, row_validator=row_validator, regex_engine=regex_engine,
-        aux_cols=compiler.aux_cols,
-        options={
-            "column_root": column,
-            "column_dtype": dtype.json(),
-            "json_source_col": json_source_col,
-            "variant_source_col": variant_source_col,
-            "keys_source_col": keys_source_col,
-            "exact_json_types": exact_json_types,
-            "ref_unroll_depth": ref_unroll_depth,
-            "on_depth_exceeded": on_depth_exceeded,
-            "canon_depth": canon_depth,
-            "ref_unroll_budget": ref_unroll_budget,
-            "plan_text_budget": plan_text_budget,
-            "pack_recursion": pack_recursion,
-            "regex_engine": regex_engine,
-            "use_formats": use_formats,
-            "use_default": use_default,
-            "formats": formats,
-            "handlers": handlers,
-        },
-    )
+    }, lambda c: c.compile_json_column(definition, column), df_schema=None)
 
 
 def compile_plan(
@@ -1400,46 +1427,15 @@ def compile_plan(
     handlers: dict | None = None,
 ) -> ValidationPlan:
     """Compile a JSON-Schema definition against a DataFrame schema into a
-    :class:`ValidationPlan` of vectorized rules.
-
-    The definition is first compiled by the row-level compiler, which
-    raises every ``SchemaDefinitionError`` the reference would raise at
-    compile time, and supplies the row validator used for dynamic (JSON
-    string) columns.
-    """
-    from ..rowcheck import compile_row_validator
-
-    row_validator = compile_row_validator(
-        definition, handlers=handlers, formats=formats,
-        use_default=use_default, use_formats=use_formats, fast_fail=False,
-    )
-    dialect = _pick_dialect(definition)
-    store = SchemaStore(definition, handlers=handlers)
-    compiler = _PlanCompiler(store, dialect, {
+    :class:`ValidationPlan` of vectorized rules."""
+    return _build_plan(definition, {
         "regex_engine": regex_engine,
         "use_formats": use_formats,
         "use_default": use_default,
+        "detailed_exceptions": detailed_exceptions,
+        "include_value": include_value,
         "formats": formats,
-    })
-    rules = compiler.compile_root(definition, df_schema)
-    compiler._vpack_flush()
-    return ValidationPlan(
-        rules=rules,
-        aux_cols=compiler.aux_cols,
-        defaults=compiler.defaults,
-        schema_definition=definition,
-        df_schema=df_schema,
-        row_validator=row_validator,
-        regex_engine=regex_engine,
-        detailed=detailed_exceptions,
-        include_value=include_value,
-        options={
-            "regex_engine": regex_engine,
-            "use_formats": use_formats,
-            "use_default": use_default,
-            "detailed_exceptions": detailed_exceptions,
-            "include_value": include_value,
-            "formats": formats,
-            "handlers": handlers,
-        },
-    )
+        "handlers": handlers,
+    }, lambda c: (c.compile_root(definition, df_schema), None),
+        df_schema=df_schema, detailed=detailed_exceptions,
+        include_value=include_value)

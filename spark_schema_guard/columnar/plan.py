@@ -13,6 +13,10 @@ text built in plain Python at compile time; :meth:`ValidationPlan.
 violations_column` parses the finished text once per use, so Catalyst
 folds the constant parts, prunes unused columns, and whole-stage codegen
 evaluates the rest JVM-side.
+
+A JSON-column plan (``compile_plan_for_column``) carries its own parse
+helpers and a not-a-JSON-object guard, so ``apply`` is the one way every
+plan is evaluated, and ``to_spec``/``load_plan`` round-trip it too.
 """
 
 from __future__ import annotations
@@ -78,20 +82,23 @@ class Rule:
 
 class ValidationPlan:
     def __init__(self, rules, defaults, schema_definition, df_schema,
-                 row_validator, regex_engine="jvm", detailed=True,
-                 include_value=False, options=None, aux_cols=None):
+                 regex_engine="jvm", detailed=True, include_value=False,
+                 options=None, aux_cols=None, guard=None):
         self.rules = rules
         # helper columns (name, SQL text) projected before rule evaluation
-        # and dropped after — nested JSON parses materialized once per row
-        # (the parse expressions are CodegenFallback; inline copies would
+        # and dropped after — JSON parses materialized once per row (the
+        # parse expressions are CodegenFallback; inline copies would
         # re-parse the text per consulting rule).  A Python-UDF predicate
         # is a thunk building its Column at apply time.  Ordered: later
         # entries may reference earlier ones.
         self._aux = aux_cols or []
+        # (condition, violation struct) as SQL text: where the condition
+        # holds, that one violation replaces the rule list (a JSON plan's
+        # not-a-JSON-object check)
+        self.guard = guard
         self.defaults = defaults
         self.schema_definition = schema_definition
         self.df_schema = df_schema
-        self.row_validator = row_validator
         self.regex_engine = regex_engine
         self.detailed = detailed
         self.include_value = include_value
@@ -120,10 +127,12 @@ class ValidationPlan:
             f"{rule.struct_sql(not self.detailed, self.include_value)}) "
             f"ELSE {empty} END"
             for rule in self.rules]
-        if not parts:
-            return F.expr(empty)
-        return F.expr(parts[0] if len(parts) == 1
-                      else "concat(" + ", ".join(parts) + ")")
+        body = (empty if not parts else parts[0] if len(parts) == 1
+                else "concat(" + ", ".join(parts) + ")")
+        if self.guard is not None:
+            condition, struct = self.guard
+            body = f"CASE WHEN {condition} THEN array({struct}) ELSE {body} END"
+        return F.expr(body)
 
     def with_aux(self, df: DataFrame) -> DataFrame:
         """Project the plan's helper columns (in registration order — later
@@ -138,6 +147,19 @@ class ValidationPlan:
 
     def apply(self, df: DataFrame, violations_col: str = "violations",
               verdict_col: str = "verdict") -> DataFrame:
+        """Append ``violations_col`` and ``verdict_col``.
+
+        Session side effect (exact-mode JSON plans): sets
+        ``spark.sql.variant.allowDuplicateKeys=true`` SESSION-WIDE so the
+        variant parse treats duplicate JSON keys as last-wins like the
+        reference's ``json.loads``.  The conf is read when the returned
+        (lazy) DataFrame executes, so it cannot be scoped to this plan
+        and is deliberately not restored — sessions that rely on strict
+        duplicate-key rejection for their OWN variant parses should use
+        ``json_types="coerce"`` plans or a separate session."""
+        if self.options.get("json_types") == "exact":
+            df.sparkSession.conf.set(
+                "spark.sql.variant.allowDuplicateKeys", "true")
         out = self.with_aux(df).withColumn(violations_col, self.violations_column())
         out = self.drop_aux(out)
         return out.withColumn(verdict_col, F.size(F.col(violations_col)) == F.lit(0))
@@ -256,15 +278,13 @@ def load_plan(path_or_spec, df_schema=None, *, formats=None, handlers=None):
             raise ValueError(
                 f"plan spec names custom handlers {sorted(named_handlers)}; "
                 f"handlers= is missing {missing}")
-    column_root = opts.pop("column_root", None)
-    column_dtype = opts.pop("column_dtype", None)
-    if column_root is not None:
+    json_column = opts.pop("json_column", None)
+    if json_column is not None:
         from .compiler import compile_plan_for_column
 
-        return compile_plan_for_column(
-            spec["definition"], column_root,
-            T._parse_datatype_json_string(column_dtype),
-            formats=formats, handlers=handlers, **opts)
+        return compile_plan_for_column(spec["definition"], json_column,
+                                       formats=formats, handlers=handlers,
+                                       **opts)
     if df_schema is None and spec.get("df_schema"):
         df_schema = T.StructType.fromJson(spec["df_schema"])
 

@@ -27,30 +27,6 @@ from pyspark.sql import types as T
 
 from .textstats import word_ngram_stack
 
-# Live bench-matrix broadcast handles from embedding_decontaminate
-# calls (ADVICE-r04): each holds tens of MB on executors until GC of
-# the Python handle happens to release it.  Long-running sessions that
-# issue many decontamination passes should call
-# release_bench_broadcasts() once the output frames are materialized.
-_BENCH_BROADCASTS: list = []
-
-
-def release_bench_broadcasts() -> int:
-    """Destroy every bench-matrix broadcast created by
-    :func:`embedding_decontaminate` in this process and return how many
-    were released.  Only call AFTER the returned frames have been fully
-    materialized (written/collected) — a destroyed broadcast breaks any
-    still-lazy plan that references it."""
-    n = 0
-    while _BENCH_BROADCASTS:
-        bc = _BENCH_BROADCASTS.pop()
-        try:
-            bc.destroy()
-            n += 1
-        except Exception:
-            pass
-    return n
-
 
 def ngram_decontaminate(
     df: DataFrame,
@@ -169,11 +145,10 @@ def embedding_decontaminate(
     thr = float(threshold)
     # broadcast, not closure capture: the bench matrix ships to each
     # executor once via torrent instead of riding every task's
-    # serialized closure.  The handle is registered so long sessions
-    # can reclaim executor memory with release_bench_broadcasts()
-    # (destroying it eagerly here would break the returned lazy frame).
+    # serialized closure.  It lives as long as the returned frame's plan
+    # (the JVM PythonFunction holds it); Spark's ContextCleaner reclaims
+    # it after that — destroying it eagerly would break the lazy frame.
     bc = df.sparkSession.sparkContext.broadcast((B, bnorm))
-    _BENCH_BROADCASTS.append(bc)
 
     def score(batches):
         Bm, Bn = bc.value

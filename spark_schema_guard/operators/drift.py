@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..audit import unit_column
+
 
 def contingency(df: DataFrame, value_col: str, bucket_col: Column | str) -> DataFrame:
     """bucket × value counts — the shared input of both tests."""
@@ -61,6 +63,15 @@ def chi_square_drift(
     )
 
 
+def unit_of(df: DataFrame, unit_col: Column | str | None) -> Column:
+    """``unit_col`` as a Column; None = the audit table's work unit
+    (:func:`~spark_schema_guard.audit.unit_column`: the row's data
+    file)."""
+    if unit_col is None:
+        return unit_column(df)
+    return F.col(unit_col) if isinstance(unit_col, str) else unit_col
+
+
 def chi_square_by_unit(
     df: DataFrame,
     value_col: str,
@@ -70,7 +81,7 @@ def chi_square_by_unit(
     one row per unit — ``unit, n_rows, statistic, dof`` — where
     ``statistic`` is the chi-square goodness-of-fit of the unit's
     ``value_col`` distribution against the POOLED corpus distribution.
-    ``unit_col=None`` units by ``input_file_name()``, the same stable
+    ``unit_col=None`` units by the row's data file, the same stable
     work unit the audit table uses, so a monitoring job can point at
     the exact files whose language mix (or any categorical) drifted.
 
@@ -82,12 +93,7 @@ def chi_square_by_unit(
     at 10^12 rows the shuffled state is the contingency table, not the
     data.
     """
-    if unit_col is None:
-        unit = F.input_file_name()
-    elif isinstance(unit_col, str):
-        unit = F.col(unit_col)
-    else:
-        unit = unit_col
+    unit = unit_of(df, unit_col)
     value = F.col(value_col)
     cells = (
         df.where(value.isNotNull())
@@ -154,12 +160,7 @@ def ks_by_unit(
     |units| × |grid| frame built from the binned aggregate, not the
     data), because the pooled CDF moves where a unit's doesn't.
     """
-    if unit_col is None:
-        unit = F.input_file_name()
-    elif isinstance(unit_col, str):
-        unit = F.col(unit_col)
-    else:
-        unit = unit_col
+    unit = unit_of(df, unit_col)
     value = F.col(value_col).cast("double")
     tagged = df.select(unit.alias("unit"), value.alias("v")).where(
         F.col("v").isNotNull())
@@ -218,12 +219,7 @@ def psi_by_unit(
     engine-portable — the oracle applies the identical clamp).
     ``value_col`` is categorical; bin continuous columns first.
     """
-    if unit_col is None:
-        unit = F.input_file_name()
-    elif isinstance(unit_col, str):
-        unit = F.col(unit_col)
-    else:
-        unit = unit_col
+    unit = unit_of(df, unit_col)
     value = F.col(value_col)
     cells = (
         df.where(value.isNotNull())

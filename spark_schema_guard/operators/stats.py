@@ -289,8 +289,8 @@ def domain_report(
 def partition_verdicts(applied: DataFrame) -> DataFrame:
     """Per-partition pass/fail rollup (north rule): one row per input
     partition with row/valid/violation counts — the distributed analog of
-    the reference's per-call exception stream, and the shape appended to
-    the audit table."""
+    the reference's per-call exception stream.  (The audit table's rows
+    are per data file, not per partition: see ``audit.AuditedRun``.)"""
     return (
         applied.groupBy(F.spark_partition_id().alias("partition_id"))
         .agg(F.count(F.lit(1)).alias("rows"),

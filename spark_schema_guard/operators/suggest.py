@@ -44,6 +44,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .drift import unit_of
+
 _NUMERIC = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
             T.FloatType, T.DoubleType, T.DecimalType)
 _INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
@@ -286,8 +288,8 @@ def suggest_by_unit(
 ) -> DataFrame:
     """Per-UNIT constraint mining: :func:`suggest_constraints`' profile,
     one row per ``(unit, column)`` — the contract-tracking analog of the
-    ``*_by_unit`` drift operators (``unit_col=None`` units by
-    ``input_file_name()``, the audit table's work unit, so every crawl
+    ``*_by_unit`` drift operators (``unit_col=None`` units by the row's
+    data file, the audit table's work unit, so every crawl
     snapshot / input file gets its own mined contract).  A unit's slice
     feeds :func:`constraint_drift` directly::
 
@@ -320,12 +322,7 @@ def suggest_by_unit(
         raise ValueError("distinct must be 'approx' or 'exact'")
     if enum_max < 1:
         raise ValueError("enum_max must be >= 1")
-    if unit_col is None:
-        unit = F.input_file_name()
-    elif isinstance(unit_col, str):
-        unit = F.col(unit_col)
-    else:
-        unit = unit_col
+    unit = unit_of(df, unit_col)
     fields = {f.name: f.dataType for f in df.schema.fields}
     columns = list(columns or fields)
     for c in columns:

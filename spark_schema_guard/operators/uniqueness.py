@@ -19,6 +19,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _key_counts(df: DataFrame, keys: list[str] | str,
+                salted: bool) -> DataFrame:
+    """``keys..., dup_count``: rows per key, salted or not."""
+    if isinstance(keys, str):
+        keys = [keys]
+    if salted:
+        partials = (
+            df.groupBy(*keys, F.spark_partition_id().alias("__salt"))
+            .agg(F.count(F.lit(1)).alias("__partial"))
+        )
+        return partials.groupBy(*keys).agg(F.sum("__partial").alias("dup_count"))
+    return df.groupBy(*keys).agg(F.count(F.lit(1)).alias("dup_count"))
+
+
 def duplicate_keys(
     df: DataFrame,
     keys: list[str] | str,
@@ -29,35 +43,16 @@ def duplicate_keys(
 
     Returns ``keys... , dup_count`` sorted nowhere (caller orders).
     """
-    if isinstance(keys, str):
-        keys = [keys]
-    if salted:
-        partials = (
-            df.groupBy(*keys, F.spark_partition_id().alias("__salt"))
-            .agg(F.count(F.lit(1)).alias("__partial"))
-        )
-        counts = partials.groupBy(*keys).agg(F.sum("__partial").alias("dup_count"))
-    else:
-        counts = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("dup_count"))
-    return counts.where(F.col("dup_count") > 1)
+    return _key_counts(df, keys, salted).where(F.col("dup_count") > 1)
 
 
 def uniqueness_report(df: DataFrame, keys: list[str] | str, *, salted: bool = True) -> DataFrame:
     """One-row summary: total rows, distinct keys, duplicated keys, extra
     rows attributable to duplicates."""
-    if isinstance(keys, str):
-        keys = [keys]
-    if salted:
-        partials = (
-            df.groupBy(*keys, F.spark_partition_id().alias("__salt"))
-            .agg(F.count(F.lit(1)).alias("__partial"))
-        )
-        counts = partials.groupBy(*keys).agg(F.sum("__partial").alias("n"))
-    else:
-        counts = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("n"))
-    return counts.agg(
-        F.sum("n").alias("total_rows"),
+    n = F.col("dup_count")
+    return _key_counts(df, keys, salted).agg(
+        F.sum(n).alias("total_rows"),
         F.count(F.lit(1)).alias("distinct_keys"),
-        F.sum((F.col("n") > 1).cast("long")).alias("duplicated_keys"),
-        F.sum(F.when(F.col("n") > 1, F.col("n") - 1).otherwise(0)).alias("surplus_rows"),
+        F.sum((n > 1).cast("long")).alias("duplicated_keys"),
+        F.sum(F.when(n > 1, n - 1).otherwise(0)).alias("surplus_rows"),
     )

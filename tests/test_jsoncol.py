@@ -1,5 +1,6 @@
-"""JSON string column validation: python (exact) and columnar (from_json)
-engines over events.props and synthetic open-key documents."""
+"""JSON string column validation: python (exact) and columnar engines
+over events.props and synthetic open-key documents, and JSON-column
+plans as standalone artifacts (apply, save/reload, AuditedRun)."""
 
 import json
 
@@ -482,3 +483,141 @@ def test_combinators_on_declared_json_fields(spark):
                               for x in r["violations"]])
                 for r in out.collect()}
         assert res["python"] == res["columnar"], (sch, res)
+
+
+# -- a JSON-column plan is one self-contained artifact ----------------------
+
+APPLY_DOCS = [
+    '{"k": 5}', '{"k": -1}', '{"k": 5, "k": 90}', '{"x": 1}', '{"k": "5"}',
+    "not json", "[1, 2]", '"text"', None,
+]
+NOT_AN_OBJECT = [{"name": "data", "rule": None,
+                  "message": "data must be valid JSON"}]
+
+
+@pytest.mark.parametrize("json_types", ["exact", "coerce"])
+def test_json_plan_applies_by_itself(spark, json_types):
+    """A JSON-column plan parses its own column: applied directly, and
+    after a save/reload through its spec, it gives the rows of
+    validate_json_column's columnar engine — non-object text, NULL and
+    duplicate keys (last wins, like json.loads) included."""
+    from spark_schema_guard.columnar.compiler import compile_plan_for_column
+    from spark_schema_guard.columnar.plan import load_plan
+
+    df = spark.createDataFrame(list(enumerate(APPLY_DOCS)),
+                               "i int, doc string")
+    schema = {**PROPS_SCHEMA, "additionalProperties": False}
+    plan = compile_plan_for_column(schema, "doc", json_types=json_types)
+    reloaded = load_plan(json.loads(json.dumps(plan.to_spec())))
+
+    def rows(out):
+        return [(r["verdict"], [v.asDict() for v in r["violations"]])
+                for r in out.orderBy("i").collect()]
+
+    want = rows(validate_json_column(df, "doc", schema, engine="columnar",
+                                     json_types=json_types))
+    assert rows(plan.apply(df)) == want
+    assert rows(reloaded.apply(df)) == want
+    assert want[0] == (True, [])
+    assert want[5:] == [(False, NOT_AN_OBJECT)] * 3 + [(True, [])]
+    if json_types == "exact":
+        assert [v["rule"] for v in want[2][1]] == ["maximum"]
+
+
+def test_audited_run_over_json_plan(spark, tmp_path):
+    """AuditedRun runs a JSON-column plan; its per-unit rows, valid rows
+    and violation counts equal rowcheck's over the same files."""
+    from spark_schema_guard.audit import AuditedRun
+    from spark_schema_guard.columnar.compiler import compile_plan_for_column
+
+    input_path = str(tmp_path / "docs")
+    files = [['{"k": 5}', '{"k": -1}', None, '{"k": 90, "k": 1}'],
+             ['{"x": 1}', '{"k": 7}', '{"k": 81}']]
+    for i, docs in enumerate(files):
+        spark.createDataFrame([(d,) for d in docs], "doc string") \
+            .coalesce(1).write.mode("append" if i else "error") \
+            .parquet(input_path)
+    plan = compile_plan_for_column(PROPS_SCHEMA, "doc")
+    audit_path = str(tmp_path / "audit")
+    AuditedRun(spark, plan, input_path, audit_path, run_id="r1").run()
+    got = {r["unit"]: (r["rows"], r["valid_rows"], r["violation_count"])
+           for r in spark.read.parquet(audit_path).collect()}
+
+    validator = ssg.compile(PROPS_SCHEMA, fast_fail=False)
+    want = {}
+    for r in spark.read.parquet(input_path).select(
+            F.col("_metadata.file_path").alias("unit"), "doc").collect():
+        n = 0 if r["doc"] is None else len(
+            validator.collect(json.loads(r["doc"])))
+        rows, valid, violations = want.get(r["unit"], (0, 0, 0))
+        want[r["unit"]] = (rows + 1, valid + (n == 0), violations + n)
+    assert got == want
+    assert sorted(got.values()) == [(3, 1, 2), (4, 3, 1)]
+
+
+def test_column_plan_spec_roundtrip(spark):
+    from spark_schema_guard.columnar.compiler import compile_plan_for_column
+    from spark_schema_guard.columnar.plan import load_plan
+
+    schema = {"type": "object", "required": ["k"],
+              "properties": {"k": {"type": "integer", "minimum": 0}}}
+    plan = compile_plan_for_column(schema, "props")
+    reloaded = load_plan(plan.to_spec())
+    df = spark.createDataFrame([('{"k": 5}',), ('{"k": -1}',)],
+                               "props string")
+    a = [(r["verdict"], [v["rule"] for v in r["violations"]])
+         for r in plan.apply(df).collect()]
+    b = [(r["verdict"], [v["rule"] for v in r["violations"]])
+         for r in reloaded.apply(df).collect()]
+    assert a == b
+    assert a[0][0] and not a[1][0]
+
+
+RECURSIVE_SCHEMA = {
+    "type": "object",
+    "definitions": {"arr": {"type": "array", "items": {"$ref": "#"}}},
+    "properties": {
+        "items": {"anyOf": [{"$ref": "#"}, {"$ref": "#/definitions/arr"}]},
+        "name": {"type": "string"},
+    },
+    "additionalProperties": {"$ref": "#"},
+}
+
+
+def test_packed_sites_spend_ref_unroll_budget():
+    """ref_unroll_budget bounds the packed path too: every packed
+    recursion site counts one expansion, like an inline unroll."""
+    from spark_schema_guard.columnar.compiler import (PlanTooLarge,
+                                                      compile_plan_for_column)
+
+    schema = {"type": "object",
+              "properties": {f"p{i}": {"$ref": "#"} for i in range(30)}}
+    assert compile_plan_for_column(schema, "doc",
+                                   ref_unroll_budget=4000).rules
+    with pytest.raises(PlanTooLarge, match="ref_unroll_budget"):
+        compile_plan_for_column(schema, "doc", ref_unroll_budget=20)
+
+
+def test_packed_recursion_text_linear(monkeypatch):
+    """Generated text must stay near-linear in unroll depth — the whole
+    point of packing (inline text multiplies per site per level)."""
+    from spark_schema_guard.columnar.compiler import (_PlanCompiler,
+                                                      compile_plan_for_column)
+
+    spent = []
+    init = _PlanCompiler.__init__
+
+    def recorded(self, *a, **k):
+        init(self, *a, **k)
+        spent.append(self)
+
+    monkeypatch.setattr(_PlanCompiler, "__init__", recorded)
+    sizes = {}
+    for depth in (3, 6):
+        compile_plan_for_column(RECURSIVE_SCHEMA, "doc",
+                                ref_unroll_depth=depth,
+                                plan_text_budget=10**9)
+        sizes[depth] = spent[-1]._vsql_chars
+    # doubling the depth must cost far less than the inline form's
+    # per-level multiplier (>= 3x/level => >= 27x for +3 levels)
+    assert sizes[6] < sizes[3] * 6, sizes

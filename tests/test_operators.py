@@ -134,7 +134,7 @@ def test_chi_square_by_unit_manual_and_missing_cells(spark):
 
 
 def test_chi_square_by_unit_file_default(spark, tmp_path):
-    """Default unit = input_file_name(): one verdict row per parquet
+    """Default unit = the row's data file: one verdict row per parquet
     file, findable by path."""
     from spark_schema_guard.operators import chi_square_by_unit
 

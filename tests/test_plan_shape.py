@@ -145,12 +145,10 @@ def test_compile_makes_no_py4j_round_trips(spark, sf_dir, monkeypatch):
     predicates); the text is parsed only when the plan is applied."""
     from py4j.java_gateway import GatewayClient
 
-    from spark_schema_guard.columnar import spark_struct_for
     from spark_schema_guard.columnar.compiler import compile_plan_for_column
 
     web_schema = web_pages(
         spark.read.parquet(f"{sf_dir}/documents.parquet")).schema
-    tree_type = spark_struct_for(TREE_SCHEMA)
     calls = []
     send = GatewayClient.send_command
 
@@ -160,14 +158,44 @@ def test_compile_makes_no_py4j_round_trips(spark, sf_dir, monkeypatch):
 
     monkeypatch.setattr(GatewayClient, "send_command", counted)
     web_plan = ssg.compile_plan(WEB_PAGE_SCHEMA, web_schema)
-    tree_plan = compile_plan_for_column(
-        TREE_SCHEMA, "__parsed__", tree_type, json_source_col="doc",
-        variant_source_col="__variants__", keys_source_col="__json_keys__")
+    tree_plan = compile_plan_for_column(TREE_SCHEMA, "doc")
     assert calls == []
     assert web_plan.rules and tree_plan.rules
     # applying the plan is where the JVM first sees the text
     web_plan.violations_column()
     assert calls
+
+
+def test_json_engines_reach_the_traced_hooks(spark, monkeypatch):
+    """perfbench's traced run times the JSON engines by wrapping two
+    module attributes (perfbench/run.py): the columnar engine must look
+    up columnar.compiler.compile_plan_for_column, and the python engine
+    jsoncol.compile_row_validator, at call time — once per call."""
+    import spark_schema_guard.columnar.compiler as compiler
+    import spark_schema_guard.jsoncol as jsoncol
+
+    calls = []
+
+    def count(module, attr):
+        original = getattr(module, attr)
+
+        def counted(*args, **kwargs):
+            calls.append(attr)
+            return original(*args, **kwargs)
+
+        monkeypatch.setattr(module, attr, counted)
+
+    count(compiler, "compile_plan_for_column")
+    count(jsoncol, "compile_row_validator")
+    df = spark.createDataFrame([('{"k": 1}',), ('{"k": -1}',)], "props string")
+    schema = {"type": "object",
+              "properties": {"k": {"type": "integer", "minimum": 0}}}
+    for engine, hook in (("columnar", "compile_plan_for_column"),
+                         ("python", "compile_row_validator")):
+        calls.clear()
+        out = jsoncol.validate_json_column(df, "props", schema, engine=engine)
+        assert sorted(r["verdict"] for r in out.collect()) == [False, True]
+        assert calls == [hook], engine
 
 
 def test_nested_jsoncol_materializes_parses(spark):

@@ -130,8 +130,8 @@ _REC = {"definitions": {"node": {
 
 def test_scale_mode_one_deep_row_among_10k_completes(spark):
     """The 100-TB contract: ONE pathological row in a 10k-row job yields
-    ONE violation row and the job COMPLETES (mode="scale"); the strict
-    default still raises for exact-parity runs."""
+    ONE violation row and the job COMPLETES (on_depth_exceeded=
+    "violation"); the strict default still raises for exact-parity runs."""
     from spark_schema_guard.jsoncol import validate_json_column
 
     docs = spark.range(10_000).select(
@@ -141,7 +141,8 @@ def test_scale_mode_one_deep_row_among_10k_completes(spark):
         .otherwise(F.lit('{"next": {"v": 1}}')).alias("props"))
 
     out = validate_json_column(docs, "props", _REC, engine="columnar",
-                               ref_unroll_depth=1, mode="scale").collect()
+                               ref_unroll_depth=1,
+                               on_depth_exceeded="violation").collect()
     assert len(out) == 10_000
     bad = [r for r in out if r["verdict"] is False]
     assert len(bad) == 1 and bad[0]["id"] == 7_777
@@ -154,11 +155,14 @@ def test_scale_mode_one_deep_row_among_10k_completes(spark):
 
 
 def test_scale_mode_validates_mode_value(spark):
+    """on_depth_exceeded is the one depth knob; an unknown value is
+    rejected when the plan compiles."""
     from spark_schema_guard.jsoncol import validate_json_column
 
     df = spark.createDataFrame([('{"v": 1}',)], "props string")
-    with pytest.raises(ValueError, match="mode"):
-        validate_json_column(df, "props", _REC, mode="fast")
+    with pytest.raises(ValueError, match="on_depth_exceeded"):
+        validate_json_column(df, "props", _REC, engine="columnar",
+                             on_depth_exceeded="fast")
 
 
 def test_unique_items_depth_violation_mode(spark):
@@ -177,7 +181,7 @@ def test_unique_items_depth_violation_mode(spark):
 
     out = {r["props"]: r for r in validate_json_column(
         df, "props", schema, engine="columnar", canon_depth=1,
-        mode="scale").collect()}
+        on_depth_exceeded="violation").collect()}
     assert out['{"arr": [1, 2, 3]}']["verdict"] is True
     assert out['{"arr": [1, 2, 1]}']["verdict"] is False
     assert any("unique items" in v["message"]

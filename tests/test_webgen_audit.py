@@ -282,6 +282,32 @@ def test_pending_input_py4j_calls_do_not_grow_with_units(spark, tmp_path,
     assert calls[10_000] <= calls[10]
 
 
+def test_by_unit_operators_default_to_the_audit_unit(spark, tmp_path):
+    """unit_col=None units by the audit table's work unit: the drift and
+    mining operators name the same units an AuditedRun writes over the
+    same files (input_file_name() spells local paths file:///, the
+    audit table file:/)."""
+    from spark_schema_guard.operators import (chi_square_by_unit, ks_by_unit,
+                                              psi_by_unit, suggest_by_unit)
+
+    input_path = str(tmp_path / "in")
+    for i, rows in enumerate([[("en", 1.0), ("de", 2.0)], [("en", 3.0)]]):
+        spark.createDataFrame(rows, "lang string, v double").coalesce(1) \
+            .write.mode("append" if i else "error").parquet(input_path)
+    plan = ssg.compile_plan({"type": "object"},
+                            spark.read.parquet(input_path).schema)
+    audit_path = str(tmp_path / "audit")
+    AuditedRun(spark, plan, input_path, audit_path, run_id="r1").run()
+    audit_units = {r["unit"] for r in spark.read.parquet(audit_path).collect()}
+    assert len(audit_units) == 2
+
+    df = spark.read.parquet(input_path)
+    for out in (chi_square_by_unit(df, "lang"), psi_by_unit(df, "lang"),
+                ks_by_unit(df, "v", grid=[2.0]),
+                suggest_by_unit(df, ["lang"])):
+        assert {r["unit"] for r in out.collect()} == audit_units
+
+
 def test_stream_and_batch_share_one_audit_schema(spark, tmp_path):
     """Batch run, then a stream batch, into the same audit table: the
     whole table reads back with one schema and a batch resume still
