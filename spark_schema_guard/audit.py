@@ -12,11 +12,14 @@ unit raises rather than silently collapsing all rows into one resumable
    ``NOT (__unit IN (...))``, which Spark applies to the file listing —
    completed files are never opened (resume = skip everything already
    validated);
-2. validates the remaining files in two scans: one writes the violation
-   rows, one aggregates per-file metrics (rows, valid, violations,
-   per-rule counts) in a single grouping that is collected to the driver;
-3. appends the per-file metric rows + lineage (run id, schema hash, wall
-   time) to the audit table, last, as one file shipped through Arrow.
+2. validates the remaining files in two scans that run at the same
+   time: the violation-row write starts on a background thread that
+   inherits the caller's job group and description, while the calling
+   thread collects the per-file metrics (rows, valid, violations,
+   per-rule counts) of a single grouping;
+3. waits for the write (re-raising its error), then appends the per-file
+   metric rows + lineage (run id, schema hash, wall time) to the audit
+   table, last, as one file shipped through Arrow.
 
 Every location (input, audit, violations) is a table reference
 (``io.py``): a parquet path locally, or a catalog identifier such as
@@ -26,8 +29,10 @@ atomic snapshot commit and resume-after-crash sees only whole units.
 
 Crash mid-run ⇒ files whose metrics were not appended are re-validated on
 the next run; completed files are never recomputed.  Violation rows are
-plain appends written before the audit rows, so a crash between the two
-leaves violation rows for units the next run validates again.
+plain appends that finish before the audit rows start (overlapping the
+metrics collect does not change that order; a failed write appends no
+audit rows), so a crash between the two leaves violation rows for units
+the next run validates again.
 """
 
 from __future__ import annotations
@@ -36,12 +41,13 @@ import hashlib
 import json
 import time
 
+from pyspark import InheritableThread
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from spark_schema_guard.columnar.varsql import sqlstr
-from spark_schema_guard.io import append_table, read_table, try_read_table
+from spark_schema_guard.io import append_table, read_table, table_exists
 
 # The one audit-table schema: AuditedRun and streaming.stream_to_audit
 # both write it, and resume reads with it (int ``started_at`` files from
@@ -68,9 +74,11 @@ def schema_hash(definition) -> str:
 
 def _completed_units(spark: SparkSession, audit_path: str,
                      s_hash: str) -> list[str]:
-    audit = try_read_table(spark, audit_path, schema=AUDIT_SCHEMA)
-    if audit is None:
+    # an existence probe, not a failed read: converting the missing
+    # table's AnalysisException costs more than the probe
+    if not table_exists(spark, audit_path):
         return []
+    audit = read_table(spark, audit_path, schema=AUDIT_SCHEMA)
     rows = audit.where(F.col("schema_hash") == s_hash).select("unit").collect()
     return sorted({r["unit"] for r in rows})
 
@@ -96,6 +104,25 @@ def unit_column(df: DataFrame) -> Column:
         "_metadata.file_path nor input_file_name(); resume would silently "
         "skip data — pass a file-backed input or a catalog table with "
         "file metadata")))
+
+
+def _start(fn, *args) -> InheritableThread:
+    """Run ``fn(*args)`` on a thread that inherits the caller's Spark
+    local properties (job group, job description), so its jobs stay
+    attributed to the caller.  The thread's ``errors`` holds what ``fn``
+    raised."""
+    errors: list[BaseException] = []
+
+    def target():
+        try:
+            fn(*args)
+        except BaseException as exc:
+            errors.append(exc)
+
+    thread = InheritableThread(target=target)
+    thread.errors = errors
+    thread.start()
+    return thread
 
 
 class AuditedRun:
@@ -130,26 +157,37 @@ class AuditedRun:
         pending = self.pending_input()
         applied = self.plan.apply(pending)
 
+        writer = None
         if violations_path:
             violation_rows = (
                 applied.where(~F.col("verdict"))
                 .select("__unit", "violations", *[c for c in pending.columns
                                                   if c != "__unit"]))
-            append_table(violation_rows, violations_path)
+            # the write and the collect below are independent actions:
+            # run them at the same time
+            writer = _start(append_table, violation_rows, violations_path)
 
         # One grouping per (unit, rule).  posexplode_outer yields pos NULL
         # for a row without violations and 0..k-1 for a row with k, so
         # pos NULL or 0 counts input rows once; verdict is false on every
         # exploded row of an invalid row, so its sum counts valid rows.
-        per_rule = (
-            applied.select(F.col("__unit").alias("unit"), "verdict",
-                           F.posexplode_outer("violations.rule")
-                           .alias("pos", "rule"))
-            .groupBy("unit", "rule")
-            .agg(F.count_if(F.coalesce("pos", F.lit(0)) == 0).alias("rows"),
-                 F.sum(F.col("verdict").cast("long")).alias("valid_rows"),
-                 F.count("pos").alias("n"))
-            .collect())
+        try:
+            per_rule = (
+                applied.select(F.col("__unit").alias("unit"), "verdict",
+                               F.posexplode_outer("violations.rule")
+                               .alias("pos", "rule"))
+                .groupBy("unit", "rule")
+                .agg(F.count_if(F.coalesce("pos", F.lit(0)) == 0)
+                     .alias("rows"),
+                     F.sum(F.col("verdict").cast("long")).alias("valid_rows"),
+                     F.count("pos").alias("n"))
+                .collect())
+        finally:
+            # no write is in flight when run() returns or raises
+            if writer is not None:
+                writer.join()
+        if writer is not None and writer.errors:
+            raise writer.errors[0]
         units: dict[str, dict] = {}
         for r in per_rule:
             u = units.setdefault(r["unit"], {

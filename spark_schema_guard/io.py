@@ -93,10 +93,21 @@ def read_table(spark: SparkSession, ref: str, fmt: str = "parquet",
     return reader.format(fmt).load(ref)
 
 
+def table_exists(spark: SparkSession, ref: str) -> bool:
+    """True when the referenced dataset exists: the catalog's answer for
+    a table identifier, Hadoop ``FileSystem.exists`` for a path."""
+    if is_catalog_ref(ref):
+        return spark.catalog.tableExists(_strip(ref))
+    path = spark._jvm.org.apache.hadoop.fs.Path(_strip(ref))
+    return path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path)
+
+
 def try_read_table(spark: SparkSession, ref: str, fmt: str = "parquet",
                    schema: StructType | str | None = None):
-    """``read_table`` returning ``None`` when the dataset does not exist
-    yet (first run against an empty audit location)."""
+    """``read_table`` returning ``None`` when the dataset cannot be read
+    (it does not exist yet, or does not resolve).  A caller that only
+    needs to know whether it exists asks :func:`table_exists`, which
+    costs no failed read."""
     try:
         df = read_table(spark, ref, fmt, schema)
         df.schema  # force resolution for lazy table refs

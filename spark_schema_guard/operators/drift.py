@@ -12,8 +12,11 @@ KS has two modes:
   ordered window = single-partition sort, fine at test scale and exactly
   reproducible in the DuckDB oracle;
 * ``grid``   — CDFs evaluated at B ``percentile_approx`` grid points;
-  one pass + a B-row comparison, the 10^12-row path (error ≤ 1/B + sketch
-  error, B defaults to 256).
+  one sketch pass for the grid, one histogram pass that bins each row
+  with a log2(B)-deep comparison tree (SQL text, so building it costs
+  the same driver work at any B), and a <=B-row CDF comparison on the
+  driver — the 10^12-row path (error ≤ 1/B + sketch error, B defaults
+  to 256).
 """
 
 from __future__ import annotations
@@ -22,6 +25,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..audit import unit_column
+from ..columnar.varsql import sqlnum
 
 
 def contingency(df: DataFrame, value_col: str, bucket_col: Column | str) -> DataFrame:
@@ -126,18 +130,33 @@ def chi_square_by_unit(
 
 def _grid_bucket(grid: list) -> Column:
     """Bucket index of ``v`` on a sorted grid = count of grid points
-    <= v, as a codegen'd WHEN chain.  The obvious
+    <= v (``bisect_right``), as one SQL-text binary-search CASE tree of
+    depth ceil(log2(B+1)): a data row makes ~log2(B) comparisons, not
+    the up-to-B of a WHEN chain.  The obvious
     ``size(filter(grid_array, q -> q <= v))`` is a higher-order
     function — CodegenFallback on the one DATA-SIZED stage of the KS
-    grid path (the repo's measured HOF invariant); the chain is
-    A/B-measured 2.1x faster on the 2M-row bench leg.  Ties and NaN
-    agree with the filter form (NaN sorts above every grid point ->
-    last bucket).  Grid sizes are bounded (<= grid_size), so the chain
-    stays a few hundred expression nodes."""
-    chain = F.when(F.col("v") < F.lit(float(grid[0])), F.lit(0))
-    for i in range(1, len(grid)):
-        chain = chain.when(F.col("v") < F.lit(float(grid[i])), F.lit(i))
-    return chain.otherwise(F.lit(len(grid)))
+    grid path (the repo's measured HOF invariant).  NaN sorts above
+    every grid point -> last bucket."""
+    points = [sqlnum(float(q)) for q in grid]
+
+    def tree(lo: int, hi: int) -> str:
+        # the answer lies in [lo, hi]; v < grid[mid] splits it in two
+        if lo == hi:
+            return str(lo)
+        mid = (lo + hi) // 2
+        return (f"CASE WHEN v < {points[mid]} THEN {tree(lo, mid)} "
+                f"ELSE {tree(mid + 1, hi)} END")
+
+    return F.expr(tree(0, len(grid)))
+
+
+def _grid_of(tagged: DataFrame, grid_size: int) -> list:
+    """The sorted distinct ``percentile_approx`` grid of ``v`` at
+    probabilities 1/B .. (B-1)/B, one SQL array literal."""
+    probs = ", ".join(sqlnum(i / grid_size) for i in range(1, grid_size))
+    row = tagged.select(F.expr(
+        f"percentile_approx(v, array({probs}), 1000)")).collect()[0]
+    return sorted(set(row[0] or []))
 
 
 def ks_by_unit(
@@ -165,10 +184,7 @@ def ks_by_unit(
     tagged = df.select(unit.alias("unit"), value.alias("v")).where(
         F.col("v").isNotNull())
     if grid is None:
-        probs = [i / grid_size for i in range(1, grid_size)]
-        row = tagged.agg(
-            F.percentile_approx("v", probs, 1000).alias("grid")).collect()[0]
-        grid = sorted(set(row["grid"] or []))
+        grid = _grid_of(tagged, grid_size)
     if not grid:
         return tagged.groupBy("unit").agg(
             F.count(F.lit(1)).alias("n_rows"),
@@ -293,12 +309,10 @@ def ks_drift(
 
     if mode == "grid":
         # binned KS: one percentile sketch pass for the grid, one
-        # histogram pass binning each row into its grid cell (a ~B-element
-        # array filter per row), then the CDF comparison over <=B rows.
-        probs = [i / grid_size for i in range(1, grid_size)]
-        grid_row = tagged.agg(
-            F.percentile_approx("v", probs, 1000).alias("grid")).collect()[0]
-        grid = sorted(set(grid_row["grid"] or []))
+        # histogram pass binning each row into its grid cell (a
+        # log2(B)-deep comparison tree per row), then the CDF comparison
+        # over <=B rows.
+        grid = _grid_of(tagged, grid_size)
         if not grid:
             return tagged.agg(F.lit(0.0).alias("statistic"),
                               F.sum(F.col("g").cast("long")).alias("n_left"),
@@ -320,12 +334,15 @@ def ks_drift(
         rows = sorted(binned.collect(), key=lambda r: r["b"])
 
         def result(stat, tl, tr):
-            # JVM-local one-row frame: a row-object createDataFrame would
-            # run a Python-worker job on every read
-            return df.sparkSession.range(1, numPartitions=1).select(
-                F.lit(stat).cast("double").alias("statistic"),
-                F.lit(tl).cast("long").alias("n_left"),
-                F.lit(tr).cast("long").alias("n_right"))
+            # an inline VALUES relation: a LocalTableScan that runs no job
+            # (a row-object createDataFrame would run a Python-worker job
+            # on every read)
+            def lit(x, sql_type):
+                return f"CAST({'NULL' if x is None else sqlnum(x)} AS {sql_type})"
+            return df.sparkSession.sql(
+                f"SELECT * FROM VALUES ({lit(stat, 'DOUBLE')}, "
+                f"{lit(tl, 'BIGINT')}, {lit(tr, 'BIGINT')}) "
+                "AS t(statistic, n_left, n_right)")
 
         if not rows:
             return result(None, None, None)

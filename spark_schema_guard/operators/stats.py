@@ -15,6 +15,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..columnar.compiler import _ident
+from ..columnar.varsql import sqlnum, sqlstr
+
 
 def _is_numeric(dtype) -> bool:
     return isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
@@ -39,61 +42,39 @@ def column_profile(
     """
     fields = {f.name: f.dataType for f in df.schema.fields}
     columns = columns or list(fields)
-    total = F.count(F.lit(1))
-
-    aggs = [total.alias("__total")]
+    probs = ", ".join(sqlnum(float(q)) for q in quantiles)
+    per_column = []
     for c in columns:
-        col = F.col(c)
-        aggs.append(F.sum(col.isNull().cast("long")).alias(f"{c}__nulls"))
-        if exact_distinct:
-            aggs.append(F.count_distinct(col).alias(f"{c}__distinct"))
-        else:
-            aggs.append(F.approx_count_distinct(col, distinct_rsd).alias(f"{c}__distinct"))
-        aggs.append(F.min(col).cast("string").alias(f"{c}__min"))
-        aggs.append(F.max(col).cast("string").alias(f"{c}__max"))
+        col = _ident(c)
+        nulls = f"sum(CAST({col} IS NULL AS BIGINT))"
+        distinct = (f"count(DISTINCT {col})" if exact_distinct else
+                    f"approx_count_distinct({col}, {sqlnum(float(distinct_rsd))})")
         if _is_numeric(fields[c]):
-            aggs.append(F.avg(col).alias(f"{c}__mean"))
-            aggs.append(F.percentile_approx(col, list(quantiles)).alias(f"{c}__quantiles"))
+            mean = f"avg({col})"
+            quants = f"percentile_approx({col}, array({probs}))"
         else:
-            aggs.append(F.lit(None).cast("double").alias(f"{c}__mean"))
-            aggs.append(F.lit(None).cast("array<double>").alias(f"{c}__quantiles"))
-
-    wide = df.agg(*aggs)
-
-    # pivot the single wide row into one row per column, still lazily
-    per_column = [
-        F.struct(
-            F.lit(c).alias("column"),
-            F.col("__total").alias("count"),
-            F.col(f"{c}__nulls").alias("nulls"),
-            (F.col(f"{c}__nulls") / F.col("__total")).alias("null_frac"),
-            F.col(f"{c}__distinct").alias("distinct"),
-            F.col(f"{c}__min").alias("min"),
-            F.col(f"{c}__max").alias("max"),
-            F.col(f"{c}__mean").alias("mean"),
-            F.col(f"{c}__quantiles").alias("quantiles"),
-        )
-        for c in columns
-    ]
-    return (
-        wide.select(F.explode(F.array(*per_column)).alias("s"))
-        .select("s.*")
-    )
+            mean = "CAST(NULL AS DOUBLE)"
+            quants = "CAST(NULL AS ARRAY<DOUBLE>)"
+        per_column.append(
+            f"named_struct('column', {sqlstr(c)}, 'count', count(1), "
+            f"'nulls', {nulls}, 'null_frac', {nulls} / count(1), "
+            f"'distinct', {distinct}, "
+            f"'min', CAST(min({col}) AS STRING), "
+            f"'max', CAST(max({col}) AS STRING), "
+            f"'mean', {mean}, 'quantiles', {quants})")
+    # one aggregation, pivoted into one row per column by inline()
+    return df.selectExpr(f"inline(array({', '.join(per_column)}))")
 
 
 def null_fractions(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     columns = columns or [f.name for f in df.schema.fields]
-    aggs = [F.count(F.lit(1)).alias("__total")] + [
-        F.sum(F.col(c).isNull().cast("long")).alias(c) for c in columns
-    ]
-    wide = df.agg(*aggs)
-    per_column = [
-        F.struct(F.lit(c).alias("column"),
-                 F.col(c).alias("nulls"),
-                 (F.col(c) / F.col("__total")).alias("null_frac"))
-        for c in columns
-    ]
-    return wide.select(F.explode(F.array(*per_column)).alias("s")).select("s.*")
+    per_column = []
+    for c in columns:
+        nulls = f"sum(CAST({_ident(c)} IS NULL AS BIGINT))"
+        per_column.append(f"named_struct('column', {sqlstr(c)}, "
+                          f"'nulls', {nulls}, "
+                          f"'null_frac', {nulls} / count(1))")
+    return df.selectExpr(f"inline(array({', '.join(per_column)}))")
 
 
 def rank_bounded(df: DataFrame, count_col: str, tie_col: str,
@@ -182,8 +163,8 @@ def heavy_hitters(
 
 def domain_skew(df: DataFrame, url_col: str = "url", *, k: int = 10) -> DataFrame:
     """Hot-domain profile of a web corpus: top-k domains by page count
-    with shares — the diagnostic that motivates salted-key repartitioning
-    for url uniqueness (north rule).  Domain = authority part of the URL,
+    with shares — the diagnostic that sizes the hot key url uniqueness
+    must absorb (north rule).  Domain = authority part of the URL,
     extracted JVM-side."""
     domain = F.regexp_extract(F.col(url_col), r"^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]+)", 1)
     return heavy_hitters(df, F.when(domain != "", domain), k=k)

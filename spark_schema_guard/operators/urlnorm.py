@@ -93,9 +93,10 @@ def duplicate_urls_normalized(
     salted: bool = True,
 ) -> DataFrame:
     """Duplicate groups AFTER canonicalization: ``norm_url, dup_count``.
-    Same salted two-stage aggregate as :func:`uniqueness.duplicate_keys`
-    (hot normalized keys — e.g. a canonicalized hot domain root — never
-    meet their raw siblings on one reducer)."""
+    Same aggregate as :func:`uniqueness.duplicate_keys`: its map-side
+    partial count keeps hot normalized keys — e.g. a canonicalized hot
+    domain root — from meeting their raw siblings on one reducer
+    (``salted`` does not change the plan)."""
     from .uniqueness import duplicate_keys
     normed = df.select(normalize_url(url_col).alias("norm_url"))
     return duplicate_keys(normed, "norm_url", salted=salted)

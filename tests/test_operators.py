@@ -2,7 +2,10 @@
 similarity, text analysis — correctness at test scale (oracle-style checks
 computed in plain Python on collected data)."""
 
+import bisect
 import math
+import random
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -43,13 +46,22 @@ def test_null_fractions(spark):
     assert out["y"] == pytest.approx(2 / 3)
 
 
+def _plan_shape(df) -> str:
+    """Physical plan without expression and exchange ids."""
+    text = df._jdf.queryExecution().executedPlan().toString()
+    return re.sub(r"(#\d+L?|plan_id=\d+)", "", text)
+
+
 def test_duplicate_keys_salted_equals_plain(spark):
+    """``salted`` is accepted for call compatibility: both spellings
+    give the same physical plan (the map-side partial count is what
+    bounds a hot key)."""
     rows = [(i % 7,) for i in range(100)] + [(99,)]
     df = spark.createDataFrame(rows, "k int").repartition(8)
+    for op in (duplicate_keys, uniqueness_report):
+        assert (_plan_shape(op(df, "k", salted=True))
+                == _plan_shape(op(df, "k", salted=False))), op.__name__
     salted = {(r["k"], r["dup_count"]) for r in duplicate_keys(df, "k").collect()}
-    plain = {(r["k"], r["dup_count"])
-             for r in duplicate_keys(df, "k", salted=False).collect()}
-    assert salted == plain
     assert all(c > 1 for _, c in salted)
     report = uniqueness_report(df, "k").collect()[0]
     assert report["total_rows"] == 101
@@ -206,6 +218,54 @@ def test_ks_by_unit_manual(spark):
         expected = max(abs(cdf(vals)[b] - pool[b]) for b in pool)
         assert got[unit]["statistic"] == pytest.approx(expected), unit
         assert got[unit]["n_rows"] == 100
+
+
+def _bucket_cases(rng):
+    """(grid, values) pairs: sorted grids of every size 1-70 and sizes
+    on both sides of the tree's depth steps up to 300, with negative,
+    signed-zero, huge and infinite points, probed on, between, below
+    and above their points and at NaN."""
+    special = [0.0, -0.0, 1e308, -1e308, math.inf, -math.inf, 5e-324]
+    sizes = [*range(1, 71), 127, 128, 129, 200, 255, 256, 257, 299, 300]
+    for size in sizes:
+        points = rng.sample(special, min(size, rng.randint(0, 3)))
+        while len(points) < size:
+            points.append(rng.choice([rng.uniform(-1e6, 1e6),
+                                      float(rng.randint(-50, 50)),
+                                      rng.uniform(-1, 1) * 10.0 ** rng.randint(-300, 300)]))
+        grid = sorted(points)
+        probes = rng.sample(grid, min(size, 20))
+        for _ in range(20):
+            i = rng.randrange(size)
+            j = min(i + 1, size - 1)
+            probes.append((grid[i] + grid[j]) / 2 if math.isfinite(
+                grid[i] + grid[j]) else grid[i])
+        probes += [grid[0] - 1.0, grid[-1] + 1.0, -math.inf, math.inf,
+                   math.nan, 0.0, -0.0]
+        yield grid, probes
+
+
+def test_grid_bucket_equals_bisect_right(spark):
+    """The SQL binary-search tree puts v in bucket bisect_right(grid, v)
+    (NaN: the last bucket), for grid sizes up to 300."""
+    from spark_schema_guard.operators.drift import _grid_bucket
+
+    cases = list(_bucket_cases(random.Random(20261017)))
+    for start in range(0, len(cases), 50):
+        chunk = cases[start:start + 50]
+        rows = [(i, v) for i, (_, probes) in enumerate(chunk) for v in probes]
+        df = spark.createDataFrame(rows, "i int, v double")
+        # every grid of the chunk buckets its own probes: one column
+        # per grid, selected by the row's grid index
+        bucket = F.element_at(F.array(*[_grid_bucket(g) for g, _ in chunk]),
+                              F.col("i") + 1)
+        got = [(r["i"], r["v"], r["b"]) for r in
+               df.select("i", "v", bucket.alias("b")).collect()]
+        for i, v, b in got:
+            grid = chunk[i][0]
+            want = len(grid) if math.isnan(v) else bisect.bisect_right(grid, v)
+            assert b == want, (len(grid), v, b, want)
+        assert len(got) == len(rows)
 
 
 def test_ks_exact_and_grid(spark):

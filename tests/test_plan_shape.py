@@ -2,6 +2,10 @@
 JVM-side (no Python evaluation nodes), read only needed columns, and the
 python regex mode must be the only thing that introduces Arrow UDFs."""
 
+import contextlib
+import math
+import re
+
 from pyspark.sql import functions as F
 
 import spark_schema_guard as ssg
@@ -10,6 +14,43 @@ from spark_schema_guard.webgen import WEB_PAGE_SCHEMA, web_pages
 
 def _physical(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _final_plan(df) -> str:
+    """The executed (final adaptive) plan of ``df``, after running it."""
+    df.collect()
+    return _physical(df).split("== Initial Plan ==")[0]
+
+
+@contextlib.contextmanager
+def _py4j_calls(monkeypatch):
+    """Every py4j command the block sends, as a list that fills while the
+    block runs."""
+    from py4j.java_gateway import GatewayClient
+
+    calls = []
+    send = GatewayClient.send_command
+
+    def counted(self, command, *args, **kwargs):
+        calls.append(command)
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counted)
+    try:
+        yield calls
+    finally:
+        monkeypatch.setattr(GatewayClient, "send_command", send)
+
+
+def _round_trips(monkeypatch, fn) -> int:
+    """py4j commands ``fn()`` sends, except releases of garbage-collected
+    JavaObjects: those follow Python's GC timing, not the code under
+    test."""
+    from py4j.protocol import MEMORY_COMMAND_NAME
+
+    with _py4j_calls(monkeypatch) as calls:
+        fn()
+    return sum(not c.startswith(MEMORY_COMMAND_NAME) for c in calls)
 
 
 def test_jvm_plan_has_no_python_nodes(spark, sf_dir):
@@ -143,27 +184,116 @@ def test_compile_makes_no_py4j_round_trips(spark, sf_dir, monkeypatch):
     """Plan construction is pure Python: every rule is SQL text, so
     compiling makes zero py4j round-trips (schemas without Python-UDF
     predicates); the text is parsed only when the plan is applied."""
-    from py4j.java_gateway import GatewayClient
-
     from spark_schema_guard.columnar.compiler import compile_plan_for_column
 
     web_schema = web_pages(
         spark.read.parquet(f"{sf_dir}/documents.parquet")).schema
-    calls = []
-    send = GatewayClient.send_command
+    with _py4j_calls(monkeypatch) as calls:
+        web_plan = ssg.compile_plan(WEB_PAGE_SCHEMA, web_schema)
+        tree_plan = compile_plan_for_column(TREE_SCHEMA, "doc")
+        assert calls == []
+        assert web_plan.rules and tree_plan.rules
+        # applying the plan is where the JVM first sees the text
+        web_plan.violations_column()
+        assert calls
 
-    def counted(self, *args, **kwargs):
-        calls.append(args[:1])
-        return send(self, *args, **kwargs)
 
-    monkeypatch.setattr(GatewayClient, "send_command", counted)
-    web_plan = ssg.compile_plan(WEB_PAGE_SCHEMA, web_schema)
-    tree_plan = compile_plan_for_column(TREE_SCHEMA, "doc")
-    assert calls == []
-    assert web_plan.rules and tree_plan.rules
-    # applying the plan is where the JVM first sees the text
-    web_plan.violations_column()
-    assert calls
+def _ks_frame(spark, sf_dir):
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return docs.select(F.col("n_chars").cast("double").alias("v"),
+                       (F.col("doc_id") % 2 == 0).alias("g"))
+
+
+def test_table_checks_py4j_calls_do_not_grow_with_their_size(
+        spark, sf_dir, monkeypatch):
+    """ks_drift(grid) builds its bucket tree and probabilities as SQL
+    text and column_profile one aggregation text: building and
+    collecting them costs the same py4j calls at any grid size or
+    column count."""
+    from spark_schema_guard.operators import column_profile, ks_drift
+
+    frame = _ks_frame(spark, sf_dir)
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    cases = {
+        "ks_drift": {b: (lambda b=b: ks_drift(frame, "v", "g", mode="grid",
+                                             grid_size=b).collect())
+                     for b in (16, 256)},
+        "column_profile": {n: (lambda n=n: column_profile(
+            docs, docs.columns[:n]).collect()) for n in (1, 5)},
+    }
+    for name, sizes in cases.items():
+        counts = []
+        for fn in sizes.values():
+            fn()  # warm: first-use lookups are not the operator's cost
+            counts.append(_round_trips(monkeypatch, fn))
+        assert counts[0] == counts[1], (name, counts)
+
+
+def _exchanges(text: str) -> list[str]:
+    return re.findall(r"(?<!Broadcast)Exchange (\w+)", text)
+
+
+def test_uniqueness_report_is_one_aggregation(spark, sf_dir):
+    """One shuffle by key (the map-side partial count bounds a hot key
+    to one row per map partition), then the one-row summary: no salt
+    stage."""
+    from spark_schema_guard.operators import uniqueness_report
+
+    web = web_pages(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    text = _final_plan(uniqueness_report(web, "url"))
+    assert _exchanges(text) == ["SinglePartition", "hashpartitioning"], text
+    assert re.search(r"Exchange hashpartitioning\(url#\d+", text), text
+    assert "partial_count" in text
+    assert "spark_partition_id" not in text.lower()
+
+
+def test_referential_report_is_an_existence_join(spark, sf_dir, tmp_path):
+    """The orphan flag is an existence join over the raw dimension keys:
+    no aggregation deduplicates the dimension, so the plan's only
+    aggregates are the report's own partial + final pair."""
+    from spark_schema_guard.operators import referential_report
+
+    web = web_pages(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    dim = str(tmp_path / "dim")
+    spark.createDataFrame([("en",), ("de",), ("de",), (None,)],
+                          "code string").write.parquet(dim)
+    text = _final_plan(referential_report(web, spark.read.parquet(dim),
+                                          "lang", "code"))
+    assert re.search(r"BroadcastHashJoin .*ExistenceJoin", text), text
+    assert text.count("HashAggregate") == 2, text
+
+
+def _case_depth(sql: str) -> int:
+    depth = deepest = 0
+    for token in re.findall(r"\b(CASE|END)\b", sql):
+        depth += 1 if token == "CASE" else -1
+        deepest = max(deepest, depth)
+    return deepest
+
+
+def test_ks_grid_result_is_local_and_bucket_tree_is_shallow(
+        spark, sf_dir, monkeypatch):
+    """ks_drift(grid)'s result is an inline VALUES relation (a
+    LocalTableScan: reading it runs no job), and its data-sized binning
+    stage is a binary-search CASE tree of depth ceil(log2(B+1)), not a
+    B-branch chain."""
+    from spark_schema_guard.operators import drift
+
+    built = []
+    bucket = drift._grid_bucket
+
+    def recorded(grid):
+        built.append((len(grid), bucket(grid)))
+        return built[-1][1]
+
+    monkeypatch.setattr(drift, "_grid_bucket", recorded)
+    out = drift.ks_drift(_ks_frame(spark, sf_dir), "v", "g", mode="grid",
+                         grid_size=64)
+    assert _physical(out).startswith("LocalTableScan"), _physical(out)
+    [(size, col)] = built
+    assert size > 16
+    depth = _case_depth(str(col))
+    assert depth == math.ceil(math.log2(size + 1)), (size, depth)
 
 
 def test_json_engines_reach_the_traced_hooks(spark, monkeypatch):

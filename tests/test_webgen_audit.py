@@ -242,6 +242,75 @@ def test_audited_run_job_counts(spark, tmp_path):
     assert resume_jobs <= 7, resume_jobs
 
 
+def test_first_run_does_not_read_the_missing_audit_table(spark, tmp_path,
+                                                         monkeypatch):
+    """Resume asks whether the audit table exists before reading it, so
+    a first run makes no failing read; the next run reads it once."""
+    import spark_schema_guard.audit as audit
+
+    input_path = str(tmp_path / "in")
+    audit_path = str(tmp_path / "audit")
+    _write_rule_files(spark, input_path, 1)
+    reads = []
+    read = audit.read_table
+
+    def recorded(spark, ref, *args, **kwargs):
+        reads.append(ref)
+        return read(spark, ref, *args, **kwargs)
+
+    monkeypatch.setattr(audit, "read_table", recorded)
+    plan = _RulesPlan()
+    for run_id, want in (("r1", 1), ("r2", 0)):
+        out = AuditedRun(spark, plan, input_path, audit_path,
+                         run_id=run_id).run()
+        assert out["units_validated"] == want
+    assert reads.count(audit_path) == 1, reads
+
+
+def test_failed_violation_write_appends_no_audit_rows(spark, tmp_path):
+    """The violation write runs beside the metrics collect; when it
+    fails, run() raises and appends no audit rows, and the next run
+    audits every unit exactly once."""
+    input_path = str(tmp_path / "in")
+    _write_rule_files(spark, input_path, 3)
+    audit_path = str(tmp_path / "audit")
+    blocked = tmp_path / "violations-file"
+    blocked.write_text("a regular file, not a table")
+    plan = _RulesPlan()
+    with pytest.raises(Exception):
+        AuditedRun(spark, plan, input_path, audit_path,
+                   run_id="r1").run(violations_path=str(blocked))
+    assert not os.path.exists(audit_path)
+
+    again = AuditedRun(spark, plan, input_path, audit_path, run_id="r2").run(
+        violations_path=str(tmp_path / "violations"))
+    assert again["units_validated"] == 3
+    audit = spark.read.parquet(audit_path)
+    assert audit.count() == audit.select("unit").distinct().count() == 3
+    assert {r["run_id"] for r in audit.collect()} == {"r2"}
+    invalid = 3 * sum(1 for rules in _RULE_ROWS if rules)
+    assert spark.read.parquet(str(tmp_path / "violations")).count() == invalid
+
+
+def test_violation_write_jobs_keep_the_callers_job_group(spark, tmp_path):
+    """The violation write's jobs run on another thread yet carry the
+    caller's job group: a run writing violations has more jobs in the
+    group than one that does not, and none outside it."""
+    input_path = str(tmp_path / "in")
+    _write_rule_files(spark, input_path, 2)
+    plan = _RulesPlan()
+    tracker = spark.sparkContext.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    jobs = {}
+    for label, violations in (("without", None),
+                              ("with", str(tmp_path / "violations"))):
+        run = AuditedRun(spark, plan, input_path, str(tmp_path / label))
+        out, jobs[label] = _count_jobs(spark, lambda: run.run(violations))
+        assert out["units_validated"] == 2
+    assert jobs["with"] > jobs["without"], jobs
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+
+
 def test_pending_input_py4j_calls_do_not_grow_with_units(spark, tmp_path,
                                                           monkeypatch):
     """The completed-unit filter is one SQL-text expression, so building
