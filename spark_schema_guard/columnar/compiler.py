@@ -58,7 +58,7 @@ from ..rowcheck.compiler import (
 from . import typemap
 from .plan import _NULL_STR, Rule, ValidationPlan
 from .varsql import (_JSON_LITERAL_RE, _NestedSQL, _PackEntries, _PackSingle,
-                     _VariantSQLMixin, _Views, _nf, sqlnum, sqlstr)
+                     _VariantSQLMixin, _Views, _nf, sqlident, sqlnum, sqlstr)
 
 _ISO_TS = "yyyy-MM-dd'T'HH:mm:ss'Z'"
 _ISO_DATE = "yyyy-MM-dd"
@@ -125,17 +125,12 @@ def _json_path(key: str) -> str:
     return "$['" + key.replace("'", "\\'") + "']"
 
 
-def _ident(name: str) -> str:
-    """Quoted SQL identifier."""
-    return "`" + name.replace("`", "``") + "`"
-
-
 def _ddl(dtype: T.DataType) -> str:
     """DDL type string with every field name quoted: JSON keys may hold
     spaces, dots, colons and backticks."""
     if isinstance(dtype, T.StructType):
-        return "struct<" + ",".join(f"{_ident(f.name)}:{_ddl(f.dataType)}"
-                                    for f in dtype.fields) + ">"
+        return "struct<" + ",".join(
+            f"{sqlident(f.name)}:{_ddl(f.dataType)}" for f in dtype.fields) + ">"
     if isinstance(dtype, T.ArrayType):
         return f"array<{_ddl(dtype.elementType)}>"
     return dtype.simpleString()
@@ -291,7 +286,7 @@ class _PlanCompiler(_VariantSQLMixin):
         re-parse the text per rule).  Catalyst prunes the struct parse
         whenever every declared-field rule compiles against the variant
         view."""
-        text = _ident(column)
+        text = sqlident(column)
         dtype = typemap.spark_struct_for(definition)
         site = _Site(self._aux("parsed", f"from_json({text}, "
                                          f"{sqlstr(_ddl(dtype))})"),
@@ -823,13 +818,13 @@ class _PlanCompiler(_VariantSQLMixin):
         """Child site per statically-known field (root columns or struct)."""
         if site.expr is None:
             return {
-                f.name: site.child(_ident(f.name), f.dataType, "." + f.name)
+                f.name: site.child(sqlident(f.name), f.dataType, "." + f.name)
                 for f in site.dtype.fields
             }
         if isinstance(site.dtype, T.StructType):
             return {
                 f.name: site.child(
-                    f"{site.expr}.{_ident(f.name)}", f.dataType, "." + f.name,
+                    f"{site.expr}.{sqlident(f.name)}", f.dataType, "." + f.name,
                     json=(
                         f"get_json_object({site.json}, "
                         f"{sqlstr(_json_path(f.name))})"

@@ -42,6 +42,11 @@ def sqlstr(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
+def sqlident(name: str) -> str:
+    """Quoted SQL identifier (backticks doubled)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def sqlnum(x) -> str:
     """SQL literal matching F.lit semantics: ints are BIGINT literals,
     floats DOUBLE literals (bare ``1.5`` would parse as DECIMAL),

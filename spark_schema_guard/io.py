@@ -102,20 +102,6 @@ def table_exists(spark: SparkSession, ref: str) -> bool:
     return path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path)
 
 
-def try_read_table(spark: SparkSession, ref: str, fmt: str = "parquet",
-                   schema: StructType | str | None = None):
-    """``read_table`` returning ``None`` when the dataset cannot be read
-    (it does not exist yet, or does not resolve).  A caller that only
-    needs to know whether it exists asks :func:`table_exists`, which
-    costs no failed read."""
-    try:
-        df = read_table(spark, ref, fmt, schema)
-        df.schema  # force resolution for lazy table refs
-        return df
-    except Exception:
-        return None
-
-
 def _is_v1_write_rejection(exc: Exception) -> bool:
     """True when a V2 ``writeTo(...).append()`` was rejected because the
     target is a V1 session-catalog table.  Keyed on the exception class

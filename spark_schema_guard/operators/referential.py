@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..columnar.compiler import _ident
+from ..columnar.varsql import sqlident
 
 
 def _dim_keys(dim: DataFrame, name: str, pk: str,
@@ -75,9 +75,9 @@ def referential_report(
     hit = keys.where(F.col("__pk") == F.col(fk).outer()).exists()
     orphan = "__orphan"
     if not null_is_violation:
-        orphan += f" AND {_ident(fk)} IS NOT NULL"
+        orphan += f" AND {sqlident(fk)} IS NOT NULL"
     return fact.select(F.col(fk), (~hit).alias("__orphan")).selectExpr(
         "count(1) AS fact_rows",
         f"count_if({orphan}) AS orphan_rows",
-        f"approx_count_distinct(CASE WHEN {orphan} THEN {_ident(fk)} END)"
+        f"approx_count_distinct(CASE WHEN {orphan} THEN {sqlident(fk)} END)"
         " AS orphan_keys")

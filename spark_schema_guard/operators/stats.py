@@ -15,8 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..columnar.compiler import _ident
-from ..columnar.varsql import sqlnum, sqlstr
+from ..columnar.varsql import sqlident, sqlnum, sqlstr
 
 
 def _is_numeric(dtype) -> bool:
@@ -45,7 +44,7 @@ def column_profile(
     probs = ", ".join(sqlnum(float(q)) for q in quantiles)
     per_column = []
     for c in columns:
-        col = _ident(c)
+        col = sqlident(c)
         nulls = f"sum(CAST({col} IS NULL AS BIGINT))"
         distinct = (f"count(DISTINCT {col})" if exact_distinct else
                     f"approx_count_distinct({col}, {sqlnum(float(distinct_rsd))})")
@@ -70,7 +69,7 @@ def null_fractions(df: DataFrame, columns: list[str] | None = None) -> DataFrame
     columns = columns or [f.name for f in df.schema.fields]
     per_column = []
     for c in columns:
-        nulls = f"sum(CAST({_ident(c)} IS NULL AS BIGINT))"
+        nulls = f"sum(CAST({sqlident(c)} IS NULL AS BIGINT))"
         per_column.append(f"named_struct('column', {sqlstr(c)}, "
                           f"'nulls', {nulls}, "
                           f"'null_frac', {nulls} / count(1))")

@@ -9,9 +9,9 @@ before the shuffle, so each map partition ships at most ONE row per key
 — a hot key reaches its reducer as at most (#map partitions) subtotals,
 never as its raw rows.  That is exactly what a salted two-stage
 aggregate (group by key and partition id, then by key) would ship, minus
-the salted stage's own full shuffle, so there is one aggregation and the
-``salted`` keyword is accepted for call compatibility only.  AQE's skew
-handling covers the residual case.
+the salted stage's own full shuffle, so there is one aggregation.
+``uniqueness_report`` still accepts ``salted=`` for existing callers; it
+does not change the plan.  AQE's skew handling covers the residual case.
 """
 
 from __future__ import annotations
@@ -27,16 +27,10 @@ def _key_counts(df: DataFrame, keys: list[str] | str) -> DataFrame:
     return df.groupBy(*keys).agg(F.expr("count(1) AS dup_count"))
 
 
-def duplicate_keys(
-    df: DataFrame,
-    keys: list[str] | str,
-    *,
-    salted: bool = True,
-) -> DataFrame:
+def duplicate_keys(df: DataFrame, keys: list[str] | str) -> DataFrame:
     """Keys appearing more than once, with their multiplicity.
 
     Returns ``keys... , dup_count`` sorted nowhere (caller orders).
-    ``salted`` does not change the plan (module docstring).
     """
     return _key_counts(df, keys).where("dup_count > 1")
 

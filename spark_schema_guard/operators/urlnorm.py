@@ -86,17 +86,11 @@ def normalize_url(url) -> Column:
     return F.when(scheme == F.lit(""), u).otherwise(norm)
 
 
-def duplicate_urls_normalized(
-    df: DataFrame,
-    url_col: str = "url",
-    *,
-    salted: bool = True,
-) -> DataFrame:
+def duplicate_urls_normalized(df: DataFrame, url_col: str = "url") -> DataFrame:
     """Duplicate groups AFTER canonicalization: ``norm_url, dup_count``.
     Same aggregate as :func:`uniqueness.duplicate_keys`: its map-side
     partial count keeps hot normalized keys — e.g. a canonicalized hot
-    domain root — from meeting their raw siblings on one reducer
-    (``salted`` does not change the plan)."""
+    domain root — from meeting their raw siblings on one reducer."""
     from .uniqueness import duplicate_keys
     normed = df.select(normalize_url(url_col).alias("norm_url"))
-    return duplicate_keys(normed, "norm_url", salted=salted)
+    return duplicate_keys(normed, "norm_url")

@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from spark_schema_guard.io import (append_table, is_catalog_ref, read_table,
-                                   table_exists, try_read_table)
+                                   table_exists)
 
 
 def test_ref_classification(tmp_path):
@@ -50,7 +50,6 @@ def _unique_table():
 def test_catalog_create_then_append_roundtrip(spark):
     name = _unique_table()
     df = spark.range(5).withColumn("tag", F.lit("a"))
-    assert try_read_table(spark, name) is None
     assert not table_exists(spark, name)
     append_table(df, name)  # creates via writeTo(...).create()
     assert table_exists(spark, name)
@@ -67,7 +66,6 @@ def test_path_refs_still_parquet(spark, tmp_path):
     append_table(df, target)
     append_table(df, target)
     assert read_table(spark, target).count() == 6
-    assert try_read_table(spark, str(tmp_path / "missing")) is None
     assert table_exists(spark, target)
     assert not table_exists(spark, str(tmp_path / "missing"))
 

@@ -53,16 +53,15 @@ def _plan_shape(df) -> str:
 
 
 def test_duplicate_keys_salted_equals_plain(spark):
-    """``salted`` is accepted for call compatibility: both spellings
-    give the same physical plan (the map-side partial count is what
-    bounds a hot key)."""
+    """``uniqueness_report`` accepts ``salted`` for existing callers:
+    both spellings give the same physical plan (the map-side partial
+    count is what bounds a hot key)."""
     rows = [(i % 7,) for i in range(100)] + [(99,)]
     df = spark.createDataFrame(rows, "k int").repartition(8)
-    for op in (duplicate_keys, uniqueness_report):
-        assert (_plan_shape(op(df, "k", salted=True))
-                == _plan_shape(op(df, "k", salted=False))), op.__name__
-    salted = {(r["k"], r["dup_count"]) for r in duplicate_keys(df, "k").collect()}
-    assert all(c > 1 for _, c in salted)
+    assert (_plan_shape(uniqueness_report(df, "k", salted=True))
+            == _plan_shape(uniqueness_report(df, "k", salted=False)))
+    dups = {(r["k"], r["dup_count"]) for r in duplicate_keys(df, "k").collect()}
+    assert all(c > 1 for _, c in dups)
     report = uniqueness_report(df, "k").collect()[0]
     assert report["total_rows"] == 101
     assert report["distinct_keys"] == 8

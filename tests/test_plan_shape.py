@@ -250,17 +250,33 @@ def test_uniqueness_report_is_one_aggregation(spark, sf_dir):
 def test_referential_report_is_an_existence_join(spark, sf_dir, tmp_path):
     """The orphan flag is an existence join over the raw dimension keys:
     no aggregation deduplicates the dimension, so the plan's only
-    aggregates are the report's own partial + final pair."""
+    aggregates are the report's own partial + final pair.  With both
+    auto-broadcast thresholds off, only the ``broadcast_dim`` hint can
+    make the join a broadcast, so the pin holds for dimensions of any
+    size: broadcast by default and under True, a shuffled join under
+    False."""
     from spark_schema_guard.operators import referential_report
 
     web = web_pages(spark.read.parquet(f"{sf_dir}/documents.parquet"))
     dim = str(tmp_path / "dim")
     spark.createDataFrame([("en",), ("de",), ("de",), (None,)],
                           "code string").write.parquet(dim)
-    text = _final_plan(referential_report(web, spark.read.parquet(dim),
-                                          "lang", "code"))
-    assert re.search(r"BroadcastHashJoin .*ExistenceJoin", text), text
-    assert text.count("HashAggregate") == 2, text
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    try:
+        for broadcast_dim in (None, True, False):
+            text = _final_plan(referential_report(
+                web, spark.read.parquet(dim), "lang", "code",
+                broadcast_dim=broadcast_dim))
+            join = "SortMergeJoin" if broadcast_dim is False \
+                else "BroadcastHashJoin"
+            assert re.search(rf"{join} .*ExistenceJoin", text), text
+            assert ("BroadcastExchange" in text) == (broadcast_dim
+                                                     is not False), text
+            assert text.count("HashAggregate") == 2, text
+    finally:
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
 
 
 def _case_depth(sql: str) -> int:
