@@ -3,26 +3,20 @@
 
 Headline metric: end-to-end validated documents/sec (verdicts + violation
 rows forced) on the synthetic web-page table at $SPARK_GRAFT_SF_DIR
-(default sf0.1), local[$SPARK_GRAFT_CPUS].
-
---scaling runs the same validation job at a ladder of parallelism
-levels (default local[2,4,8,16], separate JVMs, standing in for N vs 4N
-executors) and writes BENCH/BASELINE.md with the throughput ladder and
-N->4N scaling efficiencies (north rule: >= 0.8).
+(default sf0.1), local[$SPARK_GRAFT_CPUS] (default: the CPUs this
+process may run on).
 """
 
 from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def _sf_of(path: str) -> float:
@@ -49,15 +43,12 @@ def run_bench(cores: int, sf_dir: str) -> dict:
 
     # 16MB input splits: the bench tables are sub-GB, so the default 128MB
     # would give fewer splits than cores (single task wave, straggler
-    # bound).  On a real cluster with TB inputs the default is right.
-    # split size: small enough that every core gets many task waves
-    # (stragglers amortize); default 16m ~= 64 splits on the 906MB bench
-    # table.  Scaling runs use 8m so the 16-core leg gets ~7 waves
-    # instead of 4 (a straggling last wave otherwise costs up to 25%).
-    max_part = os.environ.get("SPARK_GRAFT_MAX_PART_BYTES", "16m")
+    # bound).  16m ~= 64 splits on the 906MB bench table, so every core
+    # gets many task waves.  On a real cluster with TB inputs the default
+    # is right.
     spark = build_session(app_name=f"schema-guard-bench-{cores}",
                           cores=cores, shuffle_partitions=max(cores, 8),
-                          extra_conf={"spark.sql.files.maxPartitionBytes": max_part})
+                          extra_conf={"spark.sql.files.maxPartitionBytes": "16m"})
     timings: dict[str, float] = {}
 
     def timed(name, thunk):
@@ -87,8 +78,7 @@ def run_bench(cores: int, sf_dir: str) -> dict:
     # amplification is deterministic — webgen.py replicas).  The base
     # table is a single parquet file = one input split: repartition BEFORE
     # the explode so generation itself parallelizes.
-    target = int(os.environ.get("SPARK_GRAFT_BENCH_ROWS", "2000000"))
-    replicas = max(1, target // max(n_base, 1))
+    replicas = max(1, 2_000_000 // max(n_base, 1))
     n_docs = n_base * replicas
     cache_dir = os.environ.get(
         "SPARK_GRAFT_BENCH_CACHE",
@@ -108,23 +98,9 @@ def run_bench(cores: int, sf_dir: str) -> dict:
             F.sum(F.col("verdict").cast("long")),
             F.sum(F.size("violations"))).collect()
 
-    # warmup (JIT + page cache), then report the best of N steady-state
-    # runs — single-shot timings on a shared VM jitter by 2x
-    repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "2"))
+    # warmup (JIT + page cache), then the best of two steady-state runs
     web_validate()
-    best = None
-    for _ in range(repeats):
-        t0 = time.perf_counter()
-        web_validate()
-        elapsed = time.perf_counter() - t0
-        best = elapsed if best is None else min(best, elapsed)
-    timings["web_validate"] = round(best, 3)
-
-    if os.environ.get("SPARK_GRAFT_BENCH_ONLY") == "web_validate":
-        docs_per_sec = round(n_docs / timings["web_validate"], 1)
-        spark.stop()
-        return {"timings": timings, "rows": n_docs,
-                "docs_per_sec": docs_per_sec, "cores": cores}
+    timed("web_validate", web_validate)
 
     docs_schema = {
         "type": "object",
@@ -566,163 +542,10 @@ def run_bench(cores: int, sf_dir: str) -> dict:
             "cores": cores}
 
 
-def scaling_run():
-    """Same job at a ladder of parallelism levels (north-rule evidence:
-    throughput scaling efficiency >= 0.8 from N to 4N).
-
-    Each core count runs in its own JVM; legs are INTERLEAVED across
-    rounds and each leg keeps its best round, so a transient slowdown of
-    the shared VM degrades one round, not one side of the efficiency
-    ratio.  The input amplification (64M rows) keeps the measured window
-    dominated by work, not the ~2s of fixed job/stage scheduling."""
-    rows = os.environ.get("SPARK_GRAFT_SCALING_ROWS", "64000000")
-    ladder = [int(x) for x in
-              os.environ.get("SPARK_GRAFT_SCALING_CORES", "2,4,8,16").split(",")]
-    rounds = int(os.environ.get("SPARK_GRAFT_SCALING_ROUNDS", "2"))
-    results = {}
-    for _ in range(rounds):
-        for cores in ladder:
-            time.sleep(10)  # let the previous JVM's load fully drain
-            out = subprocess.run(
-                [sys.executable, __file__, "--single-json"],
-                env={**os.environ, "SPARK_GRAFT_CPUS": str(cores),
-                     "SPARK_GRAFT_BENCH_ROWS": rows,
-                     "SPARK_GRAFT_BENCH_ONLY": "web_validate",
-                     "SPARK_GRAFT_MAX_PART_BYTES": "8m",
-                     "SPARK_GRAFT_BENCH_REPEATS":
-                         os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "1")},
-                capture_output=True, text=True, timeout=3600)
-            line = out.stdout.strip().splitlines()[-1]
-            parsed = json.loads(line)
-            prev = results.get(cores)
-            if prev is None or (parsed["queries"]["web_validate"]
-                                < prev["queries"]["web_validate"]):
-                results[cores] = parsed
-
-    def t(c):
-        return results[c]["queries"]["web_validate"]
-
-    def eff(lo, hi):
-        return round((t(lo) / t(hi)) / (hi / lo), 3)
-
-    md = [
-        "# BENCH — measured numbers (spark-schema-guard)",
-        "",
-        f"Input: synthetic web-page table derived from {SF_DIR} "
-        f"documents.parquet ({results[ladder[-1]]['extra']['rows']} rows), "
-        "deterministic seeds (webgen.py).",
-        "",
-        "## Scaling ladder (north rule: same job at N vs 4N parallelism)",
-        "",
-        "| cores | web_validate sec | docs/sec | vs previous (ideal 2.0x) |",
-        "|---|---|---|---|",
-    ]
-    for i, c in enumerate(ladder):
-        speed = "" if i == 0 else f"{t(ladder[i - 1]) / t(c):.2f}x"
-        md.append(f"| local[{c}] | {t(c)} | "
-                  f"{results[c]['extra']['docs_per_sec']} | {speed} |")
-    pairs = [(lo, hi) for lo in ladder for hi in ladder if hi == 4 * lo]
-    md += [""]
-    for lo, hi in pairs:
-        md.append(f"- efficiency local[{lo}] -> local[{hi}] (N -> 4N): "
-                  f"**{eff(lo, hi)}**")
-    # report the highest-core pair as the headline: it is the most
-    # demanding one (a low-core pair can read superlinear when its
-    # small leg caught a slow scheduling window)
-    headline = pairs[-1] if pairs else None
-    if headline:
-        md += [
-            "",
-            f"**Headline N -> 4N efficiency: {eff(*headline)} at "
-            f"local[{headline[0]}] -> local[{headline[1]}]** "
-            "(target >= 0.8).",
-        ]
-    md += [
-        "",
-        "Reading the ladder: per-doubling speedup stays near-ideal while "
-        "total busy threads are a minority of the 32-vCPU box, then rolls "
-        "off as the SINGLE box's shared DRAM bandwidth saturates (the "
-        "workload is a parquet scan + codegen'd predicates — bandwidth "
-        "bound once compute parallelism suffices).  That ceiling is a "
-        "property of co-scheduling all threads on one machine: on the "
-        "cluster the north rule targets, 4N executors bring 4x the "
-        "memory bandwidth and 4x the scan I/O, which is exactly the "
-        "regime the low-thread-count pair models.  The plan itself has "
-        "no scaling obstruction: zero shuffles, no driver-side "
-        "per-row work, split count >> core count "
-        "(tests/test_plan_shape.py pins the plan shape).",
-        "",
-        "Reference single-core baseline: ~40,245 docs/s "
-        "(fastjsonschema fast_compiled, BASELINE.md); per-core rates in "
-        "the ladder above are 5-10x that.",
-        "",
-        "## Full query timings at local[32] (2M-row web table)",
-        "",
-        "| query | sec |",
-        "|---|---|",
-    ]
-    full = subprocess.run(
-        [sys.executable, __file__, "--single-json"],
-        env={**os.environ, "SPARK_GRAFT_CPUS": "32"},
-        capture_output=True, text=True, timeout=3600)
-    full_result = json.loads(full.stdout.strip().splitlines()[-1])
-    for name, sec in full_result["queries"].items():
-        md.append(f"| {name} | {sec} |")
-    os.makedirs(os.path.join(os.path.dirname(__file__), "BENCH"), exist_ok=True)
-    path = os.path.join(os.path.dirname(__file__), "BENCH", "BASELINE.md")
-    with open(path, "w") as fh:
-        fh.write("\n".join(md) + "\n")
-    print(json.dumps({
-        "ladder": {str(c): t(c) for c in ladder},
-        "efficiencies": {f"{lo}->{hi}": eff(lo, hi) for lo, hi in pairs},
-        "report": path,
-    }))
-
-
-def refresh_full_table():
-    """Re-run ONLY the local[32] full-query leg and replace the
-    'Full query timings' table in BENCH/BASELINE.md, keeping the
-    (expensive, independent) scaling ladder above it intact.  Use after
-    a change that touches query legs but not the web_validate job."""
-    full = subprocess.run(
-        [sys.executable, __file__, "--single-json"],
-        env={**os.environ, "SPARK_GRAFT_CPUS": "32"},
-        capture_output=True, text=True, timeout=3600)
-    full_result = json.loads(full.stdout.strip().splitlines()[-1])
-    path = os.path.join(os.path.dirname(__file__), "BENCH", "BASELINE.md")
-    with open(path) as fh:
-        text = fh.read()
-    head, marker, _ = text.partition("## Full query timings")
-    if not marker:
-        raise SystemExit("no 'Full query timings' section to replace; "
-                         "run --scaling first")
-    # preserve any tool-appended sections AFTER the table (single-core
-    # baseline, memory probe, family scaling markers)
-    rest = text[len(head) + len(marker):]
-    after = ""
-    for bound in ("\n## ", "\n<!-- "):
-        i = rest.find(bound)
-        if i != -1:
-            after = rest[i:]
-            break
-    lines = [marker.rstrip("\n") + " at local[32] (2M-row web table)", "",
-             "| query | sec |", "|---|---|"]
-    for name, sec in full_result["queries"].items():
-        lines.append(f"| {name} | {sec} |")
-    with open(path, "w") as fh:
-        fh.write(head + "\n".join(lines) + "\n" + after)
-    print(json.dumps({"refreshed": len(full_result["queries"]),
-                      "report": path}))
-
-
 def main():
-    if "--scaling" in sys.argv:
-        scaling_run()
-        return
-    if "--refresh-full" in sys.argv:
-        refresh_full_table()
-        return
-    result = run_bench(CPUS, SF_DIR)
+    from spark_schema_guard.session import default_cores
+
+    result = run_bench(default_cores(), SF_DIR)
     line = {
         "metric": "validated_docs_per_sec",
         "value": result["docs_per_sec"],
@@ -736,5 +559,4 @@ def main():
 
 
 if __name__ == "__main__":
-    sys.argv.append("--single-json") if False else None
     main()

@@ -368,6 +368,14 @@ class _PlanCompiler(_VariantSQLMixin):
             return site.expr
         return None
 
+    def _numeric_expr(self, site: _Site) -> str | None:
+        """The value as a number, or None if never one.  Booleans count as
+        0/1, as the reference's ``isinstance(x, (int, float, Decimal))``
+        does; ``type``/``enum``/``const`` stay type-strict."""
+        if isinstance(site.dtype, T.BooleanType):
+            return f"CAST({site.expr} AS INT)"
+        return site.expr if typemap.is_numeric(site.dtype) else None
+
     def _regex_match(self, site, expr, pattern: str, *, anchored: bool) -> str:
         """True where the string matches.  anchored=True uses ``.match``
         semantics (formats), else ``.search`` (pattern keyword)."""
@@ -503,14 +511,15 @@ class _PlanCompiler(_VariantSQLMixin):
                 raise SchemaDefinitionError(
                     f"{keyword} must be an integer, a float or a decimal")
             raise SchemaDefinitionError(f"{keyword} must be a number")
-        if not typemap.is_numeric(site.dtype):
+        expr = self._numeric_expr(site)
+        if expr is None:
             return []
         # compare what the reference's generated code compares (Decimal
         # bounds re-parse as int/float literals); message keeps str(bound)
         cmp = ref_numeric(bound)
         lit_bound = _lit(int(cmp) if isinstance(cmp, bool) else cmp)
         return [self._rule(site, keyword, message_tpl.format(bound),
-                           f"({site.expr} {op} {lit_bound})")]
+                           f"({expr} {op} {lit_bound})")]
 
     def _kw_minimum(self, definition, site):
         # exclusiveMinimum here is the draft-04 boolean modifier, but the
@@ -540,10 +549,10 @@ class _PlanCompiler(_VariantSQLMixin):
         divisor = definition["multipleOf"]
         if not isinstance(divisor, (int, float, Decimal)):
             raise SchemaDefinitionError("multipleOf must be a number")
-        if not typemap.is_numeric(site.dtype):
+        expr = self._numeric_expr(site)
+        if expr is None:
             return []
         msg_divisor, divisor = divisor, ref_numeric(divisor)
-        expr = site.expr
         if typemap.is_integral(site.dtype) and isinstance(divisor, int):
             # exact long modulo — documented deliberate divergence from
             # the reference's float true-division past 2^53 on TYPED

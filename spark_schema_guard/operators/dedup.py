@@ -992,10 +992,8 @@ def connected_components(
                 id_type, spark)
     sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).persist()
 
-    import os
     import shutil
     import tempfile
-    import time
     import uuid
 
     own_base = False
@@ -1045,18 +1043,8 @@ def connected_components(
         .select(F.col("a").alias("id"),
                 F.least(F.col("a"), F.col("__mb")).alias("label")), 0)
     changed = None  # None = fixpoint never confirmed (e.g. max_iter=0)
-    # SSG_CC_DEBUG=1: per-phase wall times to stderr (diagnosis only —
-    # no behavior change; the timings ride variables already computed)
-    _dbg = os.environ.get("SSG_CC_DEBUG") == "1"
-
-    def _note(msg):
-        if _dbg:
-            import sys as _sys
-            print(f"[cc] {msg}", file=_sys.stderr, flush=True)
-
     try:
         for rnd in range(1, max_iter + 1):
-            _tr = time.perf_counter()
             if contract_max_edges > 0 and rnd > contract_after_rounds:
                 la = labels.select(F.col("id").alias("a"),
                                    F.col("label").alias("la"))
@@ -1068,11 +1056,7 @@ def connected_components(
                                  F.greatest("la", "lb").alias("y"))
                          .distinct())
                 cprobe = cross.limit(contract_max_edges + 1).toPandas()
-                _note(f"round {rnd}: contraction probe "
-                      f"{len(cprobe)} cross edges in "
-                      f"{time.perf_counter() - _tr:.1f}s")
                 if len(cprobe) <= contract_max_edges:
-                    _tu = time.perf_counter()
                     if len(cprobe):
                         mapping = _driver_union_find(
                             list(zip(cprobe["x"].tolist(),
@@ -1083,11 +1067,8 @@ def connected_components(
                                 "id", "label")), "label", "left")
                             .select("id", F.coalesce("component", "label")
                                     .alias("label")))
-                    _note(f"round {rnd}: driver finish in "
-                          f"{time.perf_counter() - _tu:.1f}s")
                     changed = 0  # exact fixpoint by construction
                     break
-                _tr = time.perf_counter()
             links = labels.where(F.col("id") != F.col("label"))
             hop = links.select(F.col("id").alias("a"), F.col("label").alias("b"))
             all_edges = sym.union(hop).union(
@@ -1114,15 +1095,11 @@ def connected_components(
             )
             labels = _materialize(new_labels, rnd)
             changed = obs.get["n"] or 0  # sum over an empty graph is NULL
-            _note(f"round {rnd}: propagate+write in "
-                  f"{time.perf_counter() - _tr:.1f}s, changed={changed}")
             if not changed:
                 break
         # one caller-owned snapshot so the round dirs can be reclaimed
-        _tc = time.perf_counter()
         out = labels.select("id", F.col("label").alias("component")) \
                     .localCheckpoint(eager=True)
-        _note(f"final localCheckpoint in {time.perf_counter() - _tc:.1f}s")
     finally:
         sym.unpersist()
         if own_base:

@@ -12,6 +12,11 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cores() -> int:
+    """``$SPARK_GRAFT_CPUS`` if set, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+
+
 def build_session(
     app_name: str = "spark-schema-guard",
     cores: int | None = None,
@@ -19,7 +24,7 @@ def build_session(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = default_cores()
     if shuffle_partitions is None:
         # one-to-two shuffle partitions per core locally; on a cluster this
         # is overridden to ~2-3x total executor cores

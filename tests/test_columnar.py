@@ -285,3 +285,42 @@ def test_null_array_elements_and_map_values(spark):
         spark_schema)
     plan = ssg.compile_plan(schema, spark_schema)
     assert_matches_rowcheck(plan, df, schema)
+
+
+@pytest.mark.parametrize("keyword,bounds", [
+    ("minimum", [0, 1, 5, 0.5]),
+    ("maximum", [-1, 0, 1, 0.5]),
+    ("exclusiveMinimum", [-1, 0, 1]),
+    ("exclusiveMaximum", [0, 1, 2]),
+    # int divisors only: a float divisor on a bool raises InvalidOperation
+    # in the reference (Decimal('True')), and rowcheck mirrors that
+    ("multipleOf", [1, 2, 3]),
+])
+def test_numeric_keywords_on_booleans(spark, keyword, bounds):
+    # the reference checks numeric keywords on any isinstance(x, (int,
+    # float, Decimal)) value, bools included: True/False compare as 1/0
+    spark_schema = T.StructType([
+        T.StructField("b", T.BooleanType()),
+        T.StructField("s", T.StructType([T.StructField("flag", T.BooleanType())])),
+        T.StructField("arr", T.ArrayType(T.BooleanType())),
+    ])
+    df = spark.createDataFrame(
+        [(True, (True,), [None, True, False]),
+         (False, (False,), [False]),
+         (None, (None,), []),
+         (True, None, None)],
+        spark_schema)
+    for bound in bounds:
+        kw = {keyword: bound}
+        # one site per schema: columnar reports the first failing array
+        # element, so compare each row's verdict and first violation
+        for prop in ({"b": kw}, {"s": {"properties": {"flag": kw}}},
+                     {"arr": {"items": kw}}):
+            schema = {"type": "object", "properties": prop}
+            validator = ssg.compile(schema, fast_fail=False)
+            for out in ssg.compile_plan(schema, spark_schema).apply(df).collect():
+                data = {f.name: _to_json_value(out[f.name], f.dataType)
+                        for f in spark_schema.fields if out[f.name] is not None}
+                want = [(e.rule, e.name, e.message) for e in validator.collect(data)]
+                have = [(v["rule"], v["name"], v["message"]) for v in out["violations"]]
+                assert (out["verdict"], have[:1]) == (not want, want[:1]), (schema, data)

@@ -4,6 +4,9 @@ example budget — run before each round snapshot to hunt parity bugs
 deeper than the in-suite 400 examples.
 
     python tools/deep_fuzz.py [n_examples] [seed]
+
+Exit status: 0 clean, 1 divergence, 2 not run (the reference oracle is
+not importable).
 """
 
 from __future__ import annotations
@@ -15,15 +18,21 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))), "tests"))
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, "/root/reference")  # read-only, differential oracle only
+REFERENCE_DIR = sys.path[0]
 
 
 def main():
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 5000
     fuzz_seed = int(sys.argv[2]) if len(sys.argv) > 2 else 20260817
 
+    try:
+        import fastjsonschema as reference
+    except ImportError:
+        print(f"deep fuzz: not run: fastjsonschema not importable from "
+              f"{REFERENCE_DIR}")
+        return 2
     from hypothesis import HealthCheck, given, seed, settings
 
-    import fastjsonschema as reference
     import spark_schema_guard as ssg
     import test_fuzz_differential as fuzz
 
