@@ -24,10 +24,13 @@ def sf_dir():
 
 # Differential testing: the reference implementation, imported read-only,
 # drives behavior-parity assertions.  It is used ONLY in tests — the engine
-# itself never touches it.
+# itself never touches it.  Where it is not importable, every test that
+# takes this fixture skips: such a skip means "oracle absent", never
+# "parity shown".
 @pytest.fixture(scope="session")
 def reference():
     sys.path.insert(0, "/root/reference")
-    import fastjsonschema
-
-    return fastjsonschema
+    return pytest.importorskip(
+        "fastjsonschema",
+        reason="reference oracle absent: fastjsonschema is neither "
+               f"installed nor importable from {sys.path[0]}")

@@ -19,8 +19,10 @@ drift from reference behavior.  Instances ride a JSON column in BULK —
 one DataFrame per schema — so the ~2.5k case evaluations cost ~100
 Spark jobs, not ~2.5k.
 
-Per-draft totals are asserted (and printed) by
-test_battery_counts_summary at the end of the module.
+The battery runs once per module (the reference_battery fixture);
+test_keyword_battery asserts each draft's failures and
+test_battery_counts_summary asserts (and prints) the per-draft totals,
+so neither depends on another test having run first.
 """
 
 import ast
@@ -144,10 +146,6 @@ for _schema, _drafts in SCHEMAS:
     for _d in _drafts:
         _DRAFT_CASES.setdefault(_d, []).append(_schema)
 
-RESULTS = {"checked": 0, "by_draft": {}, "columnar_unsupported": 0,
-           "schema_rejected": 0}
-
-
 _SET_MSG = re.compile(r"^(.* must not contain )(\{.*\})( properties)$")
 
 
@@ -182,26 +180,30 @@ def _expected(reference, compiled, value):
         return None, None
 
 
-@pytest.mark.parametrize(
-    "draft", sorted(_DRAFT_CASES),
-    ids=lambda d: d.rsplit("/", 2)[-2])
-def test_keyword_battery(spark, reference, draft):
+def _battery_wrapper(draft, schema):
+    wrapper = {"$schema": draft + "#",
+               "type": "object",
+               "properties": {"v": {k: v for k, v in schema.items()
+                                    if k != "definitions"}}}
+    if "definitions" in schema:
+        wrapper["definitions"] = schema["definitions"]
+    return wrapper
+
+
+def _run_reference_battery(spark, reference, draft):
     """Every battery schema under this draft, against the whole zoo, on
-    both engines — verdicts AND first messages must match the
-    reference."""
-    failures = []
-    checked = 0
+    both engines, checked against the reference's verdict and first
+    message.  Returns the draft's check count, failures, columnar-
+    unsupported instance evaluations and reference-rejected schemas."""
+    result = {"checked": 0, "failures": [], "columnar_unsupported": 0,
+              "schema_rejected": 0}
+    failures = result["failures"]
     for schema in _DRAFT_CASES[draft]:
-        wrapper = {"$schema": draft + "#",
-                   "type": "object",
-                   "properties": {"v": {k: v for k, v in schema.items()
-                                        if k != "definitions"}}}
-        if "definitions" in schema:
-            wrapper["definitions"] = schema["definitions"]
+        wrapper = _battery_wrapper(draft, schema)
         try:
             compiled = reference.compile(wrapper)
         except Exception:
-            RESULTS["schema_rejected"] += 1
+            result["schema_rejected"] += 1
             continue
         docs, expect = [], []
         for value in ZOO:
@@ -222,7 +224,7 @@ def test_keyword_battery(spark, reference, draft):
             outs["columnar"] = validate_json_column(df, "doc", wrapper,
                                                     engine="columnar")
         except PlanUnsupported:
-            RESULTS["columnar_unsupported"] += len(docs)
+            result["columnar_unsupported"] += len(docs)
         for engine, out in outs.items():
             rows = {r["i"]: r for r in out.collect()}
             for i, (valid, message) in enumerate(expect):
@@ -239,27 +241,48 @@ def test_keyword_battery(spark, reference, draft):
                            if r["violations"] else None)
                     failures.append((engine, schema, docs[i],
                                      "message", got, message))
-                checked += 1
-    RESULTS["checked"] += checked
-    RESULTS["by_draft"][draft.rsplit("/", 2)[-2]] = checked
+                result["checked"] += 1
+    return result
+
+
+@pytest.fixture(scope="module")
+def reference_battery(spark, reference):
+    """The reference battery, run once per draft for the whole module:
+    short draft name ("draft-04") -> _run_reference_battery's result."""
+    return {draft.rsplit("/", 2)[-2]:
+            _run_reference_battery(spark, reference, draft)
+            for draft in sorted(_DRAFT_CASES)}
+
+
+@pytest.mark.parametrize(
+    "draft", sorted(_DRAFT_CASES),
+    ids=lambda d: d.rsplit("/", 2)[-2])
+def test_keyword_battery(reference_battery, draft):
+    """Every battery schema under this draft, against the whole zoo, on
+    both engines — verdicts AND first messages must match the
+    reference."""
+    result = reference_battery[draft.rsplit("/", 2)[-2]]
+    failures, checked = result["failures"], result["checked"]
     assert not failures, (
         f"{len(failures)} divergence(s) of {checked} checks; first 5: "
         + repr(failures[:5]))
 
 
-def test_battery_counts_summary():
+def test_battery_counts_summary(reference_battery):
     """Per-draft totals (the 'test header' counts): the battery must
     have actually exercised every draft at meaningful breadth."""
-    counts = RESULTS["by_draft"]
-    print(f"\nconformance battery: {RESULTS['checked']} checks "
+    counts = {d: r["checked"] for d, r in reference_battery.items()}
+    unsupported = sum(r["columnar_unsupported"]
+                      for r in reference_battery.values())
+    rejected = sum(r["schema_rejected"] for r in reference_battery.values())
+    print(f"\nconformance battery: {sum(counts.values())} checks "
           f"({counts}); columnar-unsupported instance-evals: "
-          f"{RESULTS['columnar_unsupported']}, schemas rejected by the "
-          f"reference: {RESULTS['schema_rejected']}")
+          f"{unsupported}, schemas rejected by the reference: {rejected}")
     assert set(counts) == {"draft-04", "draft-06", "draft-07"}
     assert counts["draft-04"] >= 1500
     assert counts["draft-06"] >= 700
     assert counts["draft-07"] >= 1200
-    assert RESULTS["schema_rejected"] == 0
+    assert rejected == 0
 
 
 # --- live battery: columnar vs python, no reference needed ------------------
@@ -270,16 +293,6 @@ def test_battery_counts_summary():
 # Empty: the two engines agreed on every instance when this check was
 # introduced.
 KNOWN_ENGINE_DIVERGENCES: dict = {}
-
-
-def _battery_wrapper(draft, schema):
-    wrapper = {"$schema": draft + "#",
-               "type": "object",
-               "properties": {"v": {k: v for k, v in schema.items()
-                                    if k != "definitions"}}}
-    if "definitions" in schema:
-        wrapper["definitions"] = schema["definitions"]
-    return wrapper
 
 
 def _first_message(violations):

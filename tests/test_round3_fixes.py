@@ -1,8 +1,15 @@
 """Pins for the round-3 VERDICT tasks and ADVICE-r02 findings."""
 
+from pathlib import Path
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+
+# The official json-schema.org draft-04 metaschema, checked in so the
+# metaschema tests below read one document that needs no reference.
+DRAFT04_METASCHEMA = (Path(__file__).parent / "data"
+                      / "draft-04-metaschema.json")
 
 
 # --- VERDICT #1 / ADVICE #4: ANN rank stage + degenerate vectors ------------
@@ -347,13 +354,10 @@ def test_metaschema_columnar_budget_routes_to_python(spark):
     raises PlanTooLarge at COMPILE time (never a stall), and
     engine='auto' lands on the exact python engine."""
     import json
-    from pathlib import Path
     from spark_schema_guard.columnar.compiler import PlanTooLarge
     from spark_schema_guard.jsoncol import validate_json_column
 
-    meta = json.loads(Path(
-        "/root/reference/tests/json_schema/metaschemas/draft-04/schema.json"
-    ).read_text())
+    meta = json.loads(DRAFT04_METASCHEMA.read_text())
     df = spark.createDataFrame([('{"type": "string"}',),
                                 ('{"type": "nope"}',)], "doc string")
     with pytest.raises(PlanTooLarge, match="budget"):
@@ -369,12 +373,9 @@ def test_metaschema_columnar_depth1_parity_slow(spark, reference):
     DOES compile columnar at unroll depth 1 and matches the reference
     message-for-message on schema documents nested within the bound."""
     import json
-    from pathlib import Path
     from spark_schema_guard.jsoncol import validate_json_column
 
-    meta = json.loads(Path(
-        "/root/reference/tests/json_schema/metaschemas/draft-04/schema.json"
-    ).read_text())
+    meta = json.loads(DRAFT04_METASCHEMA.read_text())
     theirs = reference.compile(meta)
     docs = [json.dumps(d, sort_keys=True) for d in [
         {}, {"type": "object",
