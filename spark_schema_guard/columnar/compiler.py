@@ -57,7 +57,8 @@ from ..rowcheck.compiler import (
 )
 from . import typemap
 from .plan import _NULL_STR, Rule, ValidationPlan
-from .varsql import (_JSON_LITERAL_RE, _NestedSQL, _PackEntries, _PackSingle,
+from .varsql import (_JSON_LITERAL_RE, _and, _msg, _NestedSQL, _ObjectKeys,
+                     _or, _PackEntries, _PackFrame, _PackSingle,
                      _VariantSQLMixin, _Views, _nf, sqlident, sqlnum, sqlstr)
 
 _ISO_TS = "yyyy-MM-dd'T'HH:mm:ss'Z'"
@@ -134,17 +135,6 @@ def _ddl(dtype: T.DataType) -> str:
     if isinstance(dtype, T.ArrayType):
         return f"array<{_ddl(dtype.elementType)}>"
     return dtype.simpleString()
-
-
-def _and(*parts: str) -> str:
-    parts = [p for p in parts if p != "true"]
-    if not parts:
-        return "true"
-    return parts[0] if len(parts) == 1 else "(" + " AND ".join(parts) + ")"
-
-
-def _or(parts) -> str:
-    return "(" + " OR ".join(parts) + ")" if parts else "false"
 
 
 class PlanUnsupported(SchemaDefinitionError):
@@ -225,6 +215,18 @@ class _PlanCompiler(_VariantSQLMixin):
         self._vsql_n = 0
         self._vref_stack: list[str] = []
         self._v_base_uri: str | None = None
+        # packed recursion state: the open level frames, and the ONE
+        # frame every top-level compile site shares — its groups' result
+        # arrays become helper columns at _vpack_flush, so all top-level
+        # sites of a recursion target share one packed chain
+        self._vpack_frames: list[_PackFrame] = []
+        self._vpack_global = _PackFrame()
+        self._vref_edges: dict = {}
+        self._vref_targets: dict = {}
+        self._vref_comp_memo: dict = {}
+        self._vpack_body_memo: dict = {}
+        self._canon_tpl_cache: dict = {}
+        self._too_deep_tpl_cache: dict = {}
         self.defaults: list[tuple[str, object]] = []  # top-level column defaults
         self._ref_stack: list[tuple[str, str]] = []
         # helper columns (name, SQL text or Column thunk) the plan must
@@ -354,10 +356,9 @@ class _PlanCompiler(_VariantSQLMixin):
     # -- helpers -----------------------------------------------------------
 
     def _rule(self, site, rule_id, message, fail) -> Rule:
-        return Rule(rule_id, site.sname, site.name_sql, _msg(site, message),
-                    _and(site.present(), _nf(fail)),
-                    value=(f"CAST({site.expr} AS STRING)"
-                           if site.expr is not None else None))
+        return self._triple_rules(
+            site, [(rule_id, _msg(site.name_sql, message), fail)],
+            site.present())[0]
 
     def _string_expr(self, site: _Site) -> str | None:
         """The value as its JSON string form, or None if never a string."""
@@ -843,124 +844,91 @@ class _PlanCompiler(_VariantSQLMixin):
             }
         return {}
 
-    def _is_object_site(self, site) -> bool:
-        return site.expr is None or isinstance(site.dtype, (T.StructType, T.MapType))
-
-    def _object_len(self, site) -> str | None:
+    def _object_keys(self, site) -> _ObjectKeys | None:
+        """The key facts of an object site for the varsql key-set
+        emitters; None where the value is never an object.  The rule's
+        presence gate already implies an object, so the gate is "true"."""
         if isinstance(site.dtype, T.MapType):
-            return f"size({site.expr})"
+            return _ObjectKeys(
+                "true", f"map_keys({site.expr})",
+                lambda key: f"map_contains_key({site.expr}, {sqlstr(key)})")
+        if site.expr is not None and not isinstance(site.dtype, T.StructType):
+            return None
         keys = self._keys(site)
         if keys is not None:
-            # true runtime key count (sees undeclared keys and counts
-            # explicit nulls as present, like the reference)
-            return f"size({keys})"
-        fields = self._field_sites(site)
-        if not fields:
-            return None
-        return "(" + " + ".join(f"CAST({child.present()} AS INT)"
-                                for child in fields.values()) + ")"
+            # JSON-backed sites test TRUE key presence — an explicit null
+            # value is present (reference semantics), unlike the
+            # struct-field NULL-means-absent approximation
+            return _ObjectKeys(
+                "true", keys,
+                lambda key: _nf(f"array_contains({keys}, {sqlstr(key)})"))
+        fields = {key: child.present()
+                  for key, child in self._field_sites(site).items()}
+        return _ObjectKeys("true", None,
+                           lambda key: fields.get(key, "false"), fields)
 
-    def _properties_bound(self, definition, site, keyword, op, message):
-        bound = definition[keyword]
-        if not isinstance(bound, (int, float)):
-            raise SchemaDefinitionError(f"{keyword} must be a number")
-        if not self._is_object_site(site):
+    def _triple_rules(self, site, triples, gate) -> list[Rule]:
+        """Rules of varsql triples at ``site``, active where ``gate``
+        holds: one rule per triple, so collect-all output matches."""
+        value = (f"CAST({site.expr} AS STRING)"
+                 if site.expr is not None else None)
+        rules = []
+        for rule_id, message, fail in triples:
+            fail = _and(gate, _nf(fail))
+            if isinstance(rule_id, _NestedSQL):
+                rules.append(Rule(None, site.sname, None, None, fail,
+                                  dynamic=rule_id.struct_sql, value=value))
+            else:
+                rules.append(Rule(rule_id, site.sname, site.name_sql,
+                                  message, fail, value=value))
+        return rules
+
+    def _key_set_rules(self, site, emit, *args) -> list[Rule]:
+        """Rules of one object key-set keyword: its varsql emitter over
+        this site's key facts."""
+        ok = self._object_keys(site)
+        if ok is None:
             return []
-        length = self._object_len(site)
-        if length is None:
-            return []
-        return [self._rule(site, keyword, message.format(bound),
-                           f"({length} {op} {_lit(bound)})")]
+        saved_base = self._v_base_uri
+        self._v_base_uri = site.base_uri
+        try:
+            return self._triple_rules(
+                site, emit(*args, ok, site.name_sql), site.present())
+        finally:
+            self._v_base_uri = saved_base
 
     def _kw_min_properties(self, definition, site):
-        return self._properties_bound(
-            definition, site, "minProperties", "<",
-            "must contain at least {} properties")
+        return self._key_set_rules(site, self._count_triples, definition,
+                                   "minProperties")
 
     def _kw_max_properties(self, definition, site):
-        return self._properties_bound(
-            definition, site, "maxProperties", ">",
-            "must contain less than or equal to {} properties")
+        return self._key_set_rules(site, self._count_triples, definition,
+                                   "maxProperties")
 
     def _kw_required(self, definition, site):
-        required = definition["required"]
-        if not isinstance(required, (list, tuple)):
-            raise SchemaDefinitionError("required must be an array")
-        if len(required) != len(set(required)):
-            raise SchemaDefinitionError("required must contain unique elements")
-        if not definition.get("additionalProperties", True):
-            patterns = list(definition.get("patternProperties", {}))
-            impossible = [
-                key for key in required
-                if key not in definition.get("properties", {})
-                and not any(re.search(p, key) for p in patterns)
-            ]
-            if impossible:
-                raise SchemaDefinitionError(
-                    "data: items {} are required but not allowed".format(impossible))
-        if not self._is_object_site(site):
-            return []
-        # materialize the key set even for an empty list: later rules of
-        # this site read presence from it
-        self._keys(site)
-        # JSON-backed sites test TRUE key presence — an explicit null
-        # value satisfies required (reference semantics), unlike the
-        # struct-field NULL-means-absent approximation
-        missing = [(key, f"NOT {self._presence_of(site, key)}")
-                   for key in required]
-        # message lists ONLY the missing keys, sorted (draft04.py:525-528:
-        # str(sorted(missing)) — sort the RAW names, then repr-quote).
-        # Sorted at COMPILE time and assembled with concat_ws (which skips
-        # NULLs), not filter+array_sort lambdas: one HOF in the output
-        # projection is CodegenFallback and drops the whole stage out of
-        # whole-stage codegen (pinned by test_plan_shape.py).
-        shown = "".join(f", CASE WHEN {flag} THEN {sqlstr(repr(key))} END"
-                        for key, flag in sorted(missing))
-        message = (f"concat({site.name_sql}, ' must contain [', "
-                   f"concat_ws(', '{shown}), '] properties')")
-        return [Rule("required", site.sname, site.name_sql, message,
-                     _and(site.present(), _nf(_or([f for _, f in missing]))))]
+        return self._key_set_rules(site, self._required_triples, definition)
 
     def _kw_dependencies(self, definition, site):
-        if not self._is_object_site(site):
+        ok = self._object_keys(site)
+        if ok is None:
             return []
         rules = []
         for key, requirement in definition["dependencies"].items():
-            if requirement == [] or requirement is True:
-                continue
-            key_present = self._presence_of(site, key)
-            if requirement is False:
-                rules.append(Rule(
-                    "dependencies", site.sname, site.name_sql,
-                    f"concat({sqlstr(key + ' in ')}, {site.name_sql}, "
-                    "' must not be there')",
-                    _and(site.present(), _nf(key_present))))
-            elif isinstance(requirement, list):
-                for needed in requirement:
-                    absent = f"NOT {self._presence_of(site, needed)}"
-                    rules.append(Rule(
-                        "dependencies", site.sname, site.name_sql,
-                        f"concat({site.name_sql}, "
-                        f"{sqlstr(f' missing dependency {needed} for {key}')})",
-                        _and(site.present(),
-                             _nf(f"({key_present} AND {absent})"))))
+            if isinstance(requirement, dict):
+                rules.extend(rule.gated(ok.has(key))
+                             for rule in self.compile_value(requirement, site))
             else:
-                for rule in self.compile_value(requirement, site):
-                    rules.append(rule.gated(key_present))
+                rules.extend(self._key_set_rules(
+                    site, self._dependency_triples, key, requirement))
         return rules
 
-    def _presence_of(self, site, key) -> str:
-        if isinstance(site.dtype, T.MapType):
-            return f"map_contains_key({site.expr}, {sqlstr(key)})"
-        keys = self._keys(site)
-        if keys is not None:
-            return _nf(f"array_contains({keys}, {sqlstr(key)})")
-        fields = self._field_sites(site)
-        if key in fields:
-            return fields[key].present()
-        return "false"
-
     def _kw_properties(self, definition, site):
+        """Each declared property's value rules.  At a JSON-backed object
+        site every key compiles, also one outside the struct the column
+        parses to (a ``properties`` under a combinator, ``if``/``then``
+        or a schema ``dependencies``): exact mode validates it over the
+        variant view, and coerce mode, with no struct field to validate,
+        raises :class:`PlanUnsupported`."""
         rules = []
         fields = self._field_sites(site)
         is_map = isinstance(site.dtype, T.MapType)
@@ -970,9 +938,8 @@ class _PlanCompiler(_VariantSQLMixin):
                 clean = re.sub(r"[^a-zA-Z0-9]", "", key)
                 raise SchemaDefinitionError("data[{}] must be object".format(clean))
             if keys is not None and not is_map:
-                if key in fields:
-                    rules.extend(self._json_property_rules(
-                        site, key, fields[key], prop_definition))
+                rules.extend(self._json_property_rules(
+                    site, key, fields.get(key), prop_definition))
             elif is_map:
                 child = site.child(
                     f"try_element_at({site.expr}, {sqlstr(key)})",
@@ -994,17 +961,21 @@ class _PlanCompiler(_VariantSQLMixin):
                 self.defaults.append((key, prop_definition["default"]))
         return rules
 
-    def _json_property_rules(self, site, key, base, prop_definition):
-        """A declared property of a JSON-backed struct: value rules gated
-        on TRUE key presence, a present-but-NULL field treated as an
+    def _json_property_rules(self, site, key, field, prop_definition):
+        """One property of a JSON-backed object: value rules gated on
+        TRUE key presence, a present-but-NULL field treated as an
         explicit JSON null (null_is_value, like the map branch) — so
         {"k": null} fails `type`, not `required`.  The property schema
         validates the VARIANT value (exact JSON type — the typed struct
         parse silently coerces numbers/booleans into string fields); what
         the variant world cannot express falls back to the parsed-struct
-        compile."""
+        ``field``.  ``field`` is None for a key outside the parsed
+        struct: then there is nothing to fall back to, and coerce mode
+        or an inexpressible schema raises :class:`PlanUnsupported`."""
         gate = _and(site.present(),
                     _nf(f"array_contains({site.keys}, {sqlstr(key)})"))
+        base = (field if field is not None
+                else site.child(None, T.NullType(), "." + key))
         try:
             if not self.exact_json_types:
                 raise PlanUnsupported("coerce mode")
@@ -1030,24 +1001,23 @@ class _PlanCompiler(_VariantSQLMixin):
             # struct fallback would re-raise a misleading secondary
             # error); engine="auto" routes it to the python engine
             raise
-        except PlanUnsupported:
+        except PlanUnsupported as unsupported:
+            if field is None:
+                raise PlanUnsupported(
+                    f"property {base.sname!r} is declared outside the "
+                    "top-level properties, so the parsed struct has no "
+                    "field for it: the columnar engine validates it only "
+                    "over the variant view (json_types='exact') and only "
+                    f"with keywords that view expresses ({unsupported}); "
+                    "use engine='python'") from unsupported
             child = dataclasses.replace(
-                base, null_is_value=True,
-                json=(base.json if base.json is not None else self._aux(
+                field, null_is_value=True,
+                json=(field.json if field.json is not None else self._aux(
                     "jtxt", f"get_json_object({site.json}, "
                             f"{sqlstr(_json_path(key))})")))
             return [rule.gated(gate)
                     for rule in self.compile_value(prop_definition, child)]
-        rules = []
-        for rule_id, message, fail in triples:
-            fail = f"({_nf(gate)} AND {_nf(fail)})"
-            if isinstance(rule_id, _NestedSQL):
-                rules.append(Rule(None, base.sname, None, None, fail,
-                                  dynamic=rule_id.struct_sql))
-            else:
-                rules.append(Rule(rule_id, base.sname, base.name_sql,
-                                  message, fail))
-        return rules
+        return self._triple_rules(base, triples, gate)
 
     def _entry_rule(self, site, key_filter, value_definition, rule_label):
         """First violating (key, value) entry of an object's runtime
@@ -1064,7 +1034,7 @@ class _PlanCompiler(_VariantSQLMixin):
                                null_is_value=True, lam=True)
             rules = self.compile_value(value_definition, value_site)
             if not rules:
-                return None
+                return []
             viol = self._violation_of(rules)
         else:
             if not self.exact_json_types:
@@ -1086,176 +1056,75 @@ class _PlanCompiler(_VariantSQLMixin):
             finally:
                 self._v_base_uri = saved_base
             viol = self._violation_sql(triples, name)
-        return self._first_failing_rule(
+        return [self._first_failing_rule(
             site, rule_label, site.sname + ".<" + rule_label + ">", entries, e,
-            f"CASE WHEN {key_filter(e + '.key')} THEN {viol} END")
+            f"CASE WHEN {key_filter(e + '.key')} THEN {viol} END")]
 
     def _kw_pattern_properties(self, definition, site):
-        table = definition["patternProperties"]
-        rules = []
-        if isinstance(site.dtype, T.MapType):
-            for pattern, sub in table.items():
-                java = jvm_pattern(_UNESCAPED_DOLLAR.sub(r"\\Z", pattern))
-                rule = self._entry_rule(
-                    site, lambda k, _j=java: f"rlike({k}, {sqlstr(_j)})",
-                    sub, "patternProperties")
-                if rule is not None:
-                    rules.append(rule)
-            return rules
-        keys = self._keys(site)
+        is_map = isinstance(site.dtype, T.MapType)
+        keys = None if is_map else self._keys(site)
         fields = self._field_sites(site)
-        if keys is not None:
-            # JSON-backed struct: declared fields matching a pattern are
-            # validated statically (gated on true presence, null =
-            # JSON null); UNDECLARED runtime keys are checked on the
-            # runtime key set / variant view
-            for pattern, sub in table.items():
-                matcher = re.compile(pattern)
-                java = jvm_pattern(_UNESCAPED_DOLLAR.sub(r"\\Z", pattern))
-                for key, base in fields.items():
-                    if matcher.search(key) and sub is not False:
-                        child = dataclasses.replace(base, null_is_value=True)
-                        gate = _and(site.present(), _nf(
-                            f"array_contains({keys}, {sqlstr(key)})"))
-                        for rule in self.compile_value(sub, child):
-                            rules.append(rule.gated(gate))
-                if sub is True or sub == {}:
-                    continue
-                if sub is False:
-                    k = self._vsql_var("k")
-                    matching = f"filter({keys}, {k} -> rlike({k}, {sqlstr(java)}))"
-                    first = f"try_element_at(array_sort({matching}), 1)"
-                    name = f"concat({site.name_sql}, '.', {first})"
-                    # rule id None: a boolean-False schema violation has
-                    # no keyword id in the reference's error objects
-                    rules.append(Rule(
-                        None, site.sname + ".<key>", name,
-                        f"concat({name}, ' must not be there')",
-                        _and(site.present(), _nf(f"size({matching}) > 0"))))
-                else:
-                    # value schema over dynamically-typed UNDECLARED keys:
-                    # variant view (declared matches were compiled
-                    # statically above — exclude them to avoid double
-                    # reporting)
-                    decl = sorted(fields)
-
-                    def matches_undeclared(k_sql, _j=java, _d=decl):
-                        conds = [f"rlike({k_sql}, {sqlstr(_j)})"]
-                        for d in _d:
-                            conds.append(f"{k_sql} != {sqlstr(d)}")
-                        return "(" + " AND ".join(conds) + ")"
-
-                    rules.append(self._entry_rule(
-                        site, matches_undeclared, sub, "patternProperties"))
-            return rules
-        # struct/root: keys are static -> match at plan time
-        for pattern, sub in table.items():
+        rules = []
+        for pattern, sub in definition["patternProperties"].items():
+            if sub is False:
+                rules.extend(self._key_set_rules(
+                    site, self._pattern_false_triples, pattern))
+                continue
+            if sub is True or sub == {}:
+                continue
             matcher = re.compile(pattern)
-            for key, child in fields.items():
+            java = jvm_pattern(_UNESCAPED_DOLLAR.sub(r"\\Z", pattern))
+            if keys is None and not is_map:
+                # struct/root: keys are static -> match at plan time
+                for key, child in fields.items():
+                    if matcher.search(key):
+                        rules.extend(self.compile_value(sub, child))
+                continue
+            if is_map:
+                rules.extend(self._entry_rule(
+                    site, lambda k, _j=java: f"rlike({k}, {sqlstr(_j)})",
+                    sub, "patternProperties"))
+                continue
+            # JSON-backed object: declared fields matching the pattern
+            # validate their variant value, like `properties`; UNDECLARED
+            # runtime keys are checked on the variant view's entries
+            for key, base in fields.items():
                 if matcher.search(key):
-                    rules.extend(self.compile_value(sub, child))
+                    rules.extend(self._json_property_rules(site, key, base,
+                                                           sub))
+
+            def matches_undeclared(k_sql, _j=java, _d=sorted(fields)):
+                return "(" + " AND ".join(
+                    [f"rlike({k_sql}, {sqlstr(_j)})"]
+                    + [f"{k_sql} != {sqlstr(d)}" for d in _d]) + ")"
+
+            rules.extend(self._entry_rule(site, matches_undeclared, sub,
+                                          "patternProperties"))
         return rules
 
     def _kw_additional_properties(self, definition, site):
         add_definition = definition["additionalProperties"]
         if add_definition is True or add_definition == {}:
             return []
-        declared = set(definition.get("properties", {}).keys())
-        patterns = [re.compile(p) for p in definition.get("patternProperties", {})]
-
-        keys = (f"map_keys({site.expr})" if isinstance(site.dtype, T.MapType)
-                else self._keys(site))
-        if keys is not None:
-            # map column or JSON-backed struct: the TRUE runtime key set
-            # decides what is "additional"
-            java_patterns = [
-                jvm_pattern(_UNESCAPED_DOLLAR.sub(r"\\Z", p.pattern))
-                for p in patterns
-            ]
-
-            def is_extra(k_sql):
-                conds = ["true"]
-                for key in sorted(declared):
-                    conds.append(f"{k_sql} != {sqlstr(key)}")
-                for j in java_patterns:
-                    conds.append(f"NOT rlike({k_sql}, {sqlstr(j)})")
-                return "(" + " AND ".join(conds) + ")"
-
-            if add_definition is False:
-                k = self._vsql_var("k")
-                extras = f"filter({keys}, {k} -> {is_extra(k)})"
-                shown = (f"concat('{{', concat_ws(', ', transform("
-                         f"array_sort({extras}), {k} -> concat("
-                         f"{sqlstr(chr(39))}, {k}, {sqlstr(chr(39))}))), '}}')")
-                message = (f"concat({site.name_sql}, ' must not contain ', "
-                           f"{shown}, ' properties')")
-                return [Rule("additionalProperties", site.sname, site.name_sql,
-                             message,
-                             _and(site.present(), _nf(f"size({extras}) > 0")))]
-            # value schema over undeclared keys (JSON-backed: the scalar
-            # keyword subset of the variant world; PlanUnsupported beyond)
-            rule = self._entry_rule(site, is_extra, add_definition,
-                                    "additionalProperties")
-            return [rule] if rule is not None else []
-
-        fields = self._field_sites(site)
-        extra_sites = {
-            key: child for key, child in fields.items()
-            if key not in declared and not any(p.search(key) for p in patterns)
-        }
         if add_definition is False:
-            if not extra_sites:
-                return []
-            y = self._vsql_var("y")
-            names = ", ".join(
-                f"CASE WHEN {child.present()} THEN {sqlstr(chr(39) + key + chr(39))} END"
-                for key, child in extra_sites.items())
-            shown = (f"concat('{{', concat_ws(', ', array_sort(filter("
-                     f"array({names}), {y} -> {y} IS NOT NULL))), '}}')")
-            message = (f"concat({site.name_sql}, ' must not contain ', "
-                       f"{shown}, ' properties')")
-            any_extra = _or([child.present() for child in extra_sites.values()])
-            return [Rule("additionalProperties", site.sname, site.name_sql, message,
-                         _and(site.present(), _nf(any_extra)))]
+            return self._key_set_rules(site, self._no_additional_triples,
+                                       definition)
+        if isinstance(site.dtype, T.MapType) or self._keys(site) is not None:
+            # map column or JSON-backed object: the TRUE runtime key set
+            # decides what is "additional"
+            return self._entry_rule(site, self._extra_key(definition),
+                                    add_definition, "additionalProperties")
+        declared = definition.get("properties", {})
+        patterns = [re.compile(p) for p in definition.get("patternProperties", {})]
         rules = []
-        for child in extra_sites.values():
-            rules.extend(self.compile_value(add_definition, child))
+        for key, child in self._field_sites(site).items():
+            if key not in declared and not any(p.search(key) for p in patterns):
+                rules.extend(self.compile_value(add_definition, child))
         return rules
 
     def _kw_property_names(self, definition, site):
-        names_definition = definition.get("propertyNames", {})
-        if names_definition is True:
-            return []
-        keys = (f"map_keys({site.expr})" if isinstance(site.dtype, T.MapType)
-                else self._keys(site))
-        if keys is not None:
-            # map column or JSON-backed struct: validate every RUNTIME key
-            if names_definition is False:
-                return [self._rule(site, "propertyNames", "must not be there",
-                                   f"(size({keys}) > 0)")]
-            k = self._vsql_var("k")
-            key_site = _Site(k, T.StringType(), site.sname + ".<name>", "''",
-                             site.base_uri, lam=True)
-            name_pass = self._pass_sql(names_definition, key_site)
-            return [self._rule(site, "propertyNames",
-                               "must be named by propertyName definition",
-                               f"NOT forall({keys}, {k} -> {name_pass})")]
-        fields = self._field_sites(site)
-        if not fields:
-            return []
-        if names_definition is False:
-            return [self._rule(site, "propertyNames", "must not be there",
-                               _or([c.present() for c in fields.values()]))]
-        # static keys: validate names at plan time with the row validator
-        from ..rowcheck import compile_row_validator
-
-        name_validator = compile_row_validator(names_definition)
-        bad = [key for key in fields if name_validator.collect(key)]
-        if not bad:
-            return []
-        return [self._rule(site, "propertyNames",
-                           "must be named by propertyName definition",
-                           _or([fields[key].present() for key in bad]))]
+        return self._key_set_rules(site, self._property_names_triples,
+                                   definition)
 
     # -- content -----------------------------------------------------------
 
@@ -1272,7 +1141,7 @@ class _PlanCompiler(_VariantSQLMixin):
         fail = (f"((length({filtered}) % 4) != 0 "
                 f"OR try_to_binary({filtered}, 'base64') IS NULL)")
         return [Rule(None, site.sname, site.name_sql,
-                     _msg(site, "must be encoded by base64"),
+                     _msg(site.name_sql, "must be encoded by base64"),
                      _and(site.present(), _nf(fail)))]
 
     def _kw_content_media_type(self, definition, site):
@@ -1287,13 +1156,8 @@ class _PlanCompiler(_VariantSQLMixin):
         fail = (f"(get_json_object({expr}, '$') IS NULL "
                 f"AND NOT rlike({expr}, {sqlstr(_JSON_LITERAL_RE)}))")
         return [Rule(None, site.sname, site.name_sql,
-                     _msg(site, "must be valid JSON"),
+                     _msg(site.name_sql, "must be valid JSON"),
                      _and(site.present(), _nf(fail)))]
-
-
-def _msg(site: _Site, text: str) -> str:
-    """Message SQL: the runtime name followed by ``text``."""
-    return f"concat({site.name_sql}, {sqlstr(' ' + text)})"
 
 
 def _snake(keyword: str) -> str:

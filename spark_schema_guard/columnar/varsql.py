@@ -7,9 +7,10 @@ the finished text when it is applied.  (Building Column objects node by
 node cost one round-trip per expression node: unrolling the draft-04
 metaschema ONE level deep took ~1.45M py4j calls, ~270 s of driver time,
 for a plan whose logic is a few hundred KB of SQL.)  This module holds
-the literal/violation-struct helpers both rule worlds share, and the
-variant world itself: open-key value schemas, exact-typed declared JSON
-fields and depth-bounded recursive ``$ref``, compiled to
+the literal/violation-struct helpers both rule worlds share, the one
+emitter per object key-set keyword both worlds call, and the variant
+world itself: open-key value schemas, exact-typed declared JSON fields
+and depth-bounded recursive ``$ref``, compiled to
 ``(rule_id, message, fail)`` triples over typed views of one VARIANT.
 
 Semantics are a 1:1 mirror of the reference validator's keyword order
@@ -28,6 +29,8 @@ from __future__ import annotations
 import decimal
 import math
 import re
+from dataclasses import dataclass
+from typing import Callable
 
 from ..exceptions import SchemaDefinitionError
 from ..formats import jvm_pattern
@@ -315,6 +318,47 @@ def _nf(x: str) -> str:
     return f"coalesce({x}, false)"
 
 
+def _and(*parts: str) -> str:
+    parts = [p for p in parts if p != "true"]
+    if not parts:
+        return "true"
+    return parts[0] if len(parts) == 1 else "(" + " AND ".join(parts) + ")"
+
+
+def _or(parts) -> str:
+    return "(" + " OR ".join(parts) + ")" if parts else "false"
+
+
+def _msg(name_sql: str, text: str, pass_only: bool = False) -> str:
+    """Message SQL: the runtime name followed by ``text`` ("NULL" in a
+    pass-only probe, which never surfaces messages)."""
+    return "NULL" if pass_only else f"concat({name_sql}, {sqlstr(' ' + text)})"
+
+
+@dataclass
+class _ObjectKeys:
+    """The key facts of one object site as SQL text — all that the
+    object key-set keywords read.
+
+    ``gate``: true where the value is an object ("true" where the rule's
+    own presence gate already implies it).  ``keys``: the runtime key
+    array, or None at a static struct site, whose keys are ``fields``
+    (field name -> presence test), known at compile time.
+    ``has(key)``: boolean, the key is present."""
+
+    gate: str
+    keys: str | None
+    has: Callable[[str], str]
+    fields: dict | None = None
+
+    def count(self) -> str:
+        if self.keys is not None:
+            return f"size({self.keys})"
+        return ("(" + " + ".join(f"CAST({p} AS INT)"
+                                 for p in self.fields.values()) + ")"
+                if self.fields else "0")
+
+
 _CANON_V = "__CANON_V__"
 
 # scalar JSON literals get_json_object cannot see (mirrors the typed
@@ -325,11 +369,13 @@ _JSON_LITERAL_RE = (r"^\s*(-?\d+(\.\d+)?([eE][+-]?\d+)?|true|false|null|\".*\")\
 class _VariantSQLMixin:
     """The VARIANT-value rule compiler (triples of SQL text).
 
-    Reads from the host compiler: ``store``, ``keyword_order``,
-    ``format_table``, ``custom_formats``, ``use_formats``,
-    ``integral_float_is_int``, ``regex_engine``, ``ref_unroll_depth``,
-    ``on_depth_exceeded``, ``canon_depth``, ``_vref_budget``,
-    ``_vref_stack``, ``_v_base_uri``."""
+    Its one host, ``compiler._PlanCompiler``, sets every field it reads
+    in ``__init__``: the options (``keyword_order``, ``format_table``,
+    ``custom_formats``, ``use_formats``, ``integral_float_is_int``,
+    ``regex_engine``, ``ref_unroll_depth``, ``on_depth_exceeded``,
+    ``canon_depth``, ``pack_recursion``), ``store``, and the compile
+    state (budgets, counters, the ref stack, packed-recursion frames and
+    memos)."""
 
     # Keywords the variant rule world expresses; anything else raises
     # PlanUnsupported (engine="python" is the exact path there).  Undeclared
@@ -382,7 +428,7 @@ class _VariantSQLMixin:
 
     def _vsql_var(self, hint: str = "x") -> str:
         """Fresh lambda-variable name (text world controls its names)."""
-        self._vsql_n = getattr(self, "_vsql_n", 0) + 1
+        self._vsql_n += 1
         return f"__{hint}{self._vsql_n}"
 
     def _vsql_spend(self, text: str) -> str:
@@ -390,7 +436,7 @@ class _VariantSQLMixin:
         too large to analyze/codegen should fail AT COMPILE TIME with a
         clean PlanUnsupported (engine='auto' falls back to the python
         engine) instead of stalling the driver."""
-        self._vsql_chars = getattr(self, "_vsql_chars", 0) + len(text)
+        self._vsql_chars += len(text)
         if self._vsql_chars > self._vsql_char_budget:
             self._plan_too_large(
                 "columnar plan text exceeds the size budget "
@@ -411,13 +457,6 @@ class _VariantSQLMixin:
 
     # -- packed recursion ---------------------------------------------------
 
-    @property
-    def _vpack_frames(self):
-        frames = getattr(self, "_vpack_frames_", None)
-        if frames is None:
-            frames = self._vpack_frames_ = []
-        return frames
-
     def _vref_graph_scan(self, canonical, target, doc_uri) -> None:
         """Record ``canonical``'s direct $ref edges (and, transitively,
         every canonical it can reach) in ``self._vref_edges`` /
@@ -425,10 +464,7 @@ class _VariantSQLMixin:
         dict/list, so a $ref-shaped DATA literal inside enum/const may
         add an edge — harmless: packing a non-recursive ref is correct,
         just unnecessary."""
-        edges = getattr(self, "_vref_edges", None)
-        if edges is None:
-            edges = self._vref_edges = {}
-            self._vref_targets = {}
+        edges = self._vref_edges
         if canonical in edges:
             return
         self._vref_targets[canonical] = (target, doc_uri)
@@ -463,9 +499,7 @@ class _VariantSQLMixin:
         body per level) serves the whole component; per-member chains
         under mutual recursion would re-create the exponential
         branching packing exists to remove."""
-        memo = getattr(self, "_vref_comp_memo", None)
-        if memo is None:
-            memo = self._vref_comp_memo = {}
+        memo = self._vref_comp_memo
         if canonical in memo:
             return memo[canonical]
         self._vref_graph_scan(canonical, target, doc_uri)
@@ -491,17 +525,6 @@ class _VariantSQLMixin:
                 memo[c] = ()
         return memo[canonical]
 
-    def _vpack_global_frame(self) -> _PackFrame:
-        """The ONE frame shared by every top-level compile site: its
-        groups' result arrays become helper (aux) columns at
-        ``_vpack_flush``, so all top-level sites of a recursion target
-        share a single packed chain instead of one chain per declared
-        property."""
-        fr = getattr(self, "_vpack_global_", None)
-        if fr is None:
-            fr = self._vpack_global_ = _PackFrame()
-        return fr
-
     def _vpack_register(self, canonical, target, doc_uri, ctx, w,
                         pass_only):
         """Register one recursion site in the innermost level frame and
@@ -524,7 +547,7 @@ class _VariantSQLMixin:
         group = frame.groups.get(comp)
         if group is None:
             self._vsql_n += 1
-            top = frame is getattr(self, "_vpack_global_", None)
+            top = frame is self._vpack_global
             rsvar = (f"`__vrs{self._vsql_n}_pack__`" if top
                      else f"__vrs{self._vsql_n}")
             group = _PackGroup(rsvar, comp, list(self._vref_stack))
@@ -580,9 +603,7 @@ class _VariantSQLMixin:
     def _vpack_body(self, group: _PackGroup):
         """Compile (memoized) the component's shared dispatch body as a
         (kvar, violation-struct-text) closed check over one kid."""
-        memo = getattr(self, "_vpack_body_memo", None)
-        if memo is None:
-            memo = self._vpack_body_memo = {}
+        memo = self._vpack_body_memo
         stack = list(group.stack) + list(group.comp)
         counts = {}
         for c in stack:
@@ -632,13 +653,10 @@ class _VariantSQLMixin:
         """Assemble each global group's packed result array into its
         helper column (rules already reference the fixed name).  Called
         once by the plan builders after every rule has compiled."""
-        fr = getattr(self, "_vpack_global_", None)
-        if fr is None or not fr.groups:
-            return
-        for group in fr.groups.values():
+        for group in self._vpack_global.groups.values():
             rs = self._vpack_child_sql(group)
             self.aux_cols.append((group.rsvar.strip("`"), rs))
-        fr.groups.clear()
+        self._vpack_global.groups.clear()
 
     def _vpack_bind(self, frame: _PackFrame, text: str) -> str:
         """Bind every packed group's result array around ``text`` (the
@@ -658,10 +676,10 @@ class _VariantSQLMixin:
         column (``_vpack_flush``) that all consuming rules reference by
         its fixed name — zero per-rule, per-property duplication of the
         packed chain."""
-        if not getattr(self, "pack_recursion", True):
+        if not self.pack_recursion:
             return self._entry_triples_sql(definition, name_sql, views,
                                            pass_only=pass_only, ctx=None)
-        self._vpack_frames.append(self._vpack_global_frame())
+        self._vpack_frames.append(self._vpack_global)
         try:
             return self._entry_triples_sql(definition, name_sql, views,
                                            pass_only=pass_only, ctx=ctx)
@@ -690,9 +708,7 @@ class _VariantSQLMixin:
 
         Containers nested past ``depth`` raise at evaluation time (loud,
         never a silently wrong verdict)."""
-        cache = getattr(self, "_canon_tpl_cache", None)
-        if cache is None:
-            cache = self._canon_tpl_cache = {}
+        cache = self._canon_tpl_cache
         if depth in cache:
             return cache[depth]
         w = _Views(_CANON_V)
@@ -750,9 +766,7 @@ class _VariantSQLMixin:
         data that would hit the canon template's raise branch.  Used by
         ``on_depth_exceeded="violation"`` to flag too-deep rows as
         violations (job completes) instead of raising mid-scan."""
-        cache = getattr(self, "_too_deep_tpl_cache", None)
-        if cache is None:
-            cache = self._too_deep_tpl_cache = {}
+        cache = self._too_deep_tpl_cache
         if depth in cache:
             return cache[depth]
         w = _Views(_CANON_V)
@@ -896,6 +910,178 @@ class _VariantSQLMixin:
         return ("(" + " AND ".join(f"NOT {_nf(fail)}"
                                    for _, _, fail in triples) + ")")
 
+    # -- object key-set keywords: one emitter each, for every site --------
+    #
+    # Each takes the site's key facts (_ObjectKeys) and returns triples:
+    # variant values call them from the keyword table below, typed struct,
+    # map and JSON-backed sites from compiler._PlanCompiler.  Messages
+    # list keys sorted by raw name at compile time where the key set is
+    # static, joined with concat_ws — no lambda in the output projection.
+
+    _COUNT_BOUNDS = {
+        "minProperties": ("<", "must contain at least {} properties"),
+        "maxProperties": (
+            ">", "must contain less than or equal to {} properties"),
+    }
+
+    def _count_triples(self, definition, keyword, ok: _ObjectKeys,
+                       name_sql, pass_only=False):
+        bound = definition[keyword]
+        if not isinstance(bound, (int, float)):
+            raise SchemaDefinitionError(f"{keyword} must be a number")
+        op, template = self._COUNT_BOUNDS[keyword]
+        return [(keyword, _msg(name_sql, template.format(bound), pass_only),
+                 _and(ok.gate, f"({ok.count()} {op} {sqlnum(bound)})"))]
+
+    def _required_triples(self, definition, ok: _ObjectKeys, name_sql,
+                          pass_only=False):
+        required = definition["required"]
+        if not isinstance(required, (list, tuple)):
+            raise SchemaDefinitionError("required must be an array")
+        if len(required) != len(set(required)):
+            raise SchemaDefinitionError(
+                "required must contain unique elements")
+        if not definition.get("additionalProperties", True):
+            patterns = list(definition.get("patternProperties", {}))
+            impossible = [
+                key for key in required
+                if key not in definition.get("properties", {})
+                and not any(re.search(p, key) for p in patterns)
+            ]
+            if impossible:
+                raise SchemaDefinitionError(
+                    "data: items {} are required but not allowed"
+                    .format(impossible))
+        missing = [(key, f"NOT {ok.has(key)}") for key in required]
+        # the message lists ONLY the missing keys, sorted by raw name
+        # then repr-quoted (draft04.py:525-528: str(sorted(missing)));
+        # concat_ws skips the NULLs of present keys
+        shown = "".join(f", CASE WHEN {flag} THEN {sqlstr(repr(key))} END"
+                        for key, flag in sorted(missing))
+        message = ("NULL" if pass_only else
+                   f"concat({name_sql}, ' must contain [', "
+                   f"concat_ws(', '{shown}), '] properties')")
+        return [("required", message,
+                 _and(ok.gate, _or([f for _, f in missing])))]
+
+    def _dependency_triples(self, key, requirement, ok: _ObjectKeys,
+                            name_sql, pass_only=False):
+        """One ``dependencies`` entry in its array or ``false`` form (the
+        schema form validates a value, so each world compiles it)."""
+        if requirement is True:
+            return []
+        if requirement is False:
+            return [("dependencies",
+                     "NULL" if pass_only else
+                     f"concat({sqlstr(key + ' in ')}, {name_sql}, "
+                     "' must not be there')",
+                     _and(ok.gate, ok.has(key)))]
+        return [("dependencies",
+                 _msg(name_sql, f"missing dependency {needed} for {key}",
+                      pass_only),
+                 _and(ok.gate, ok.has(key), f"NOT {ok.has(needed)}"))
+                for needed in requirement]
+
+    def _extra_key(self, definition):
+        """Key SQL -> true where the key is neither declared in
+        ``properties`` nor matched by a ``patternProperties`` pattern."""
+        declared = sorted(definition.get("properties", {}))
+        java = [jvm_pattern(_UNESCAPED_DOLLAR.sub(r"\\Z", p))
+                for p in definition.get("patternProperties", {})]
+
+        def is_extra(k_sql):
+            conds = (["true"] + [f"{k_sql} != {sqlstr(k)}" for k in declared]
+                     + [f"NOT rlike({k_sql}, {sqlstr(j)})" for j in java])
+            return "(" + " AND ".join(conds) + ")"
+
+        return is_extra
+
+    def _no_additional_triples(self, definition, ok: _ObjectKeys, name_sql,
+                               pass_only=False):
+        """``additionalProperties: false``."""
+        if ok.keys is not None:
+            k = self._vsql_var("k")
+            extras = f"filter({ok.keys}, {k} -> {self._extra_key(definition)(k)})"
+            fail = f"size({extras}) > 0"
+            shown = (f"concat_ws(', ', transform(array_sort({extras}), "
+                     f"{k} -> concat({sqlstr(chr(39))}, {k}, "
+                     f"{sqlstr(chr(39))})))")
+        else:
+            declared = definition.get("properties", {})
+            patterns = [re.compile(p)
+                        for p in definition.get("patternProperties", {})]
+            extra = {key: p for key, p in ok.fields.items()
+                     if key not in declared
+                     and not any(m.search(key) for m in patterns)}
+            if not extra:
+                return []
+            fail = _or(list(extra.values()))
+            shown = "concat_ws(', '" + "".join(
+                f", CASE WHEN {p} THEN {sqlstr(repr(key))} END"
+                for key, p in sorted(extra.items())) + ")"
+        return [("additionalProperties",
+                 "NULL" if pass_only else
+                 f"concat({name_sql}, ' must not contain ', "
+                 f"concat('{{', {shown}, '}}'), ' properties')",
+                 _and(ok.gate, fail))]
+
+    def _pattern_false_triples(self, pattern, ok: _ObjectKeys, name_sql,
+                               pass_only=False):
+        """``patternProperties: {pattern: false}``: a violation named by
+        the offending key, with no keyword id (a boolean-false schema's
+        error carries none) — one per matching field at a static site,
+        else one naming the first matching runtime key, in the key
+        array's order (a map's entry order, a JSON text's key order; a
+        variant object's keys come sorted)."""
+        if ok.keys is not None:
+            java = jvm_pattern(_UNESCAPED_DOLLAR.sub(r"\\Z", pattern))
+            k = self._vsql_var("k")
+            matching = f"filter({ok.keys}, {k} -> rlike({k}, {sqlstr(java)}))"
+            hits = [(f"concat({name_sql}, '.', try_element_at({matching}, 1))",
+                     _and(ok.gate, f"size({matching}) > 0"))]
+        else:
+            matcher = re.compile(pattern)
+            hits = [(f"concat({name_sql}, {sqlstr('.' + key)})",
+                     _and(ok.gate, p))
+                    for key, p in ok.fields.items() if matcher.search(key)]
+        if pass_only:
+            return [(None, "NULL", fail) for _, fail in hits]
+        # gate = the FULL fail condition: the struct is non-null even
+        # where nothing matches (a named_struct of a NULL name)
+        return [(_NestedSQL(
+            f"named_struct('name', {kname}, 'rule', CAST(NULL AS STRING), "
+            f"'message', concat({kname}, ' must not be there'))", fail),
+            "CAST(NULL AS STRING)", fail) for kname, fail in hits]
+
+    def _property_names_triples(self, definition, ok: _ObjectKeys, name_sql,
+                                pass_only=False):
+        names_definition = definition["propertyNames"]
+        if names_definition is True or names_definition == {}:
+            return []
+        message = "must be named by propertyName definition"
+        if names_definition is False:
+            message = "must not be there"
+            fail = (f"size({ok.keys}) > 0" if ok.keys is not None
+                    else _or(list(ok.fields.values())))
+        elif ok.keys is not None:
+            # keys are KNOWN strings: str_mode views freeze the type tag
+            # to 'STRING' so the non-string branches fold away
+            k = self._vsql_var("k")
+            name_pass = self._branch_pass_sql(
+                names_definition, "''", _Views(k, str_mode=True))
+            fail = f"NOT {_nf(f'forall({ok.keys}, {k} -> {name_pass})')}"
+        else:
+            # static keys: validate the names at plan time
+            from ..rowcheck import compile_row_validator
+
+            name_validator = compile_row_validator(names_definition)
+            fail = _or([p for key, p in ok.fields.items()
+                        if name_validator.collect(key)])
+        if fail == "false":
+            return []
+        return [("propertyNames", _msg(name_sql, message, pass_only),
+                 _and(ok.gate, fail))]
+
     # -- the keyword table ---------------------------------------------------
 
     def _entry_triples_sql(self, definition, name_sql: str, w: _Views,
@@ -934,7 +1120,7 @@ class _VariantSQLMixin:
             if self._vref_stack.count(canonical) >= self.ref_unroll_depth:
                 return [self._depth_guard_triple_sql(
                     name_sql, w, pass_only=pass_only)]
-            if (getattr(self, "pack_recursion", True) and ctx is not None
+            if (self.pack_recursion and ctx is not None
                     and self._vpack_frames
                     and self._vref_component(canonical, target, doc_uri)):
                 # PACKED recursion: a re-encountered ref becomes a site
@@ -968,11 +1154,12 @@ class _VariantSQLMixin:
                 "undeclared keys; use engine='python'")
 
         out = []
+        facts = _ObjectKeys(
+            w.is_obj, w.okeys,
+            lambda key: _nf(f"map_contains_key({w.obj}, {sqlstr(key)})"))
 
         def msg(text):
-            if pass_only:
-                return "NULL"
-            return f"concat({name_sql}, {sqlstr(' ' + text)})"
+            return _msg(name_sql, text, pass_only)
 
         def any_fail(triples):
             return ("(" + " OR ".join(_nf(f) for _, _, f in triples)
@@ -1475,62 +1662,12 @@ class _VariantSQLMixin:
                                     "definition"),
                                 f"({w.is_arr} AND NOT exists({w.arr}, "
                                 f"{x} -> {elem_pass}))"))
-            elif keyword == "minProperties":
-                b = definition["minProperties"]
-                if not isinstance(b, (int, float)):
-                    raise SchemaDefinitionError(
-                        "minProperties must be a number")
-                out.append(("minProperties",
-                            msg(f"must contain at least {b} properties"),
-                            f"({w.is_obj} AND size({w.okeys}) "
-                            f"< {sqlnum(b)})"))
-            elif keyword == "maxProperties":
-                b = definition["maxProperties"]
-                if not isinstance(b, (int, float)):
-                    raise SchemaDefinitionError(
-                        "maxProperties must be a number")
-                out.append(("maxProperties",
-                            msg(f"must contain less than or equal to {b} "
-                                "properties"),
-                            f"({w.is_obj} AND size({w.okeys}) "
-                            f"> {sqlnum(b)})"))
+            elif keyword in ("minProperties", "maxProperties"):
+                out.extend(self._count_triples(definition, keyword, facts,
+                                               name_sql, pass_only))
             elif keyword == "required":
-                required = definition["required"]
-                if not isinstance(required, (list, tuple)):
-                    raise SchemaDefinitionError("required must be an array")
-                if len(required) != len(set(required)):
-                    raise SchemaDefinitionError(
-                        "required must contain unique elements")
-                if not definition.get("additionalProperties", True):
-                    patterns = list(definition.get("patternProperties",
-                                                   {}))
-                    impossible = [
-                        key for key in required
-                        if key not in definition.get("properties", {})
-                        and not any(re.search(p, key) for p in patterns)
-                    ]
-                    if impossible:
-                        raise SchemaDefinitionError(
-                            "data: items {} are required but not allowed"
-                            .format(impossible))
-                flags = [
-                    (key, f"NOT {_nf(f'map_contains_key({w.obj}, {sqlstr(key)})')}")
-                    for key in required
-                ]
-                any_missing = " OR ".join(f for _, f in flags) or "false"
-                # message lists ONLY the missing keys, sorted
-                # (draft04.py:525-528)
-                quoted = ", ".join(
-                    f"CASE WHEN {flag} THEN {sqlstr(chr(39) + key + chr(39))} END"
-                    for key, flag in flags)
-                y = self._vsql_var("y")
-                out.append(("required",
-                            "NULL" if pass_only else
-                            f"concat({name_sql}, ' must contain [', "
-                            f"concat_ws(', ', array_sort(filter(array("
-                            f"{quoted}), {y} -> {y} IS NOT NULL))), "
-                            "'] properties')",
-                            f"({w.is_obj} AND ({any_missing}))"))
+                out.extend(self._required_triples(definition, facts, name_sql,
+                                                  pass_only))
             elif keyword == "properties":
                 for key, sub in definition["properties"].items():
                     if not isinstance(sub, (dict, bool)):
@@ -1540,8 +1677,7 @@ class _VariantSQLMixin:
                     nested_value(
                         sub, f"concat({name_sql}, {sqlstr('.' + key)})",
                         _Views(f"try_element_at({w.obj}, {sqlstr(key)})"),
-                        f"({w.is_obj} AND "
-                        f"{_nf(f'map_contains_key({w.obj}, {sqlstr(key)})')})",
+                        _and(w.is_obj, facts.has(key)),
                         child_ctx=_derive_ctx(
                             ctx,
                             lambda lv, _k=key: (
@@ -1554,103 +1690,36 @@ class _VariantSQLMixin:
                     raise SchemaDefinitionError(
                         "dependencies must be an object")
                 for key, req in deps.items():
-                    present = (f"({w.is_obj} AND "
-                               f"{_nf(f'map_contains_key({w.obj}, {sqlstr(key)})')})")
-                    if req == [] or req is True:
+                    if not isinstance(req, dict):
+                        out.extend(self._dependency_triples(
+                            key, req, facts, name_sql, pass_only))
                         continue
-                    if req is False:
-                        out.append(("dependencies",
-                                    f"concat({sqlstr(key + ' in ')}, "
-                                    f"{name_sql}, ' must not be there')",
-                                    present))
-                    elif isinstance(req, (list, tuple)):
-                        for needed in req:
-                            out.append((
-                                "dependencies",
-                                f"concat({name_sql}, "
-                                f"{sqlstr(f' missing dependency {needed} for {key}')})",
-                                f"({present} AND NOT "
-                                f"{_nf(f'map_contains_key({w.obj}, {sqlstr(needed)})')})"))
-                    else:
-                        for rid, message, fail in \
-                                self._entry_triples_sql(
-                                    req, name_sql, w,
-                                    pass_only=pass_only, ctx=ctx):
-                            out.append((rid, message,
-                                        f"({present} AND {_nf(fail)})"))
+                    present = _and(w.is_obj, facts.has(key))
+                    for rid, message, fail in self._entry_triples_sql(
+                            req, name_sql, w, pass_only=pass_only, ctx=ctx):
+                        out.append((rid, message,
+                                    f"({present} AND {_nf(fail)})"))
             elif keyword == "additionalProperties":
                 add_def = definition["additionalProperties"]
                 if add_def is True or add_def == {}:
                     continue
-                declared = list(definition.get("properties", {}))
-                java_patterns = [
-                    jvm_pattern(_UNESCAPED_DOLLAR.sub(r"\\Z", p))
-                    for p in definition.get("patternProperties", {})
-                ]
-
-                def is_extra(k_sql):
-                    conds = ["true"]
-                    for key in declared:
-                        conds.append(f"{k_sql} != {sqlstr(key)}")
-                    for j in java_patterns:
-                        conds.append(f"NOT rlike({k_sql}, {sqlstr(j)})")
-                    return "(" + " AND ".join(conds) + ")"
-
                 if add_def is False:
-                    k = self._vsql_var("k")
-                    extras = f"filter({w.okeys}, {k} -> {is_extra(k)})"
-                    if pass_only:
-                        out.append(("additionalProperties", "NULL",
-                                    f"({w.is_obj} AND "
-                                    f"{_nf(f'size({extras}) > 0')})"))
-                        continue
-                    shown = (f"concat('{{', concat_ws(', ', transform("
-                             f"array_sort({extras}), {k} -> concat("
-                             f"\"'\", {k}, \"'\"))), '}}')")
-                    out.append(("additionalProperties",
-                                f"concat({name_sql}, ' must not contain ', "
-                                f"{shown}, ' properties')",
-                                f"({w.is_obj} AND "
-                                f"{_nf(f'size({extras}) > 0')})"))
+                    out.extend(self._no_additional_triples(
+                        definition, facts, name_sql, pass_only))
                 else:
-                    first_failing_entry(is_extra, add_def,
+                    first_failing_entry(self._extra_key(definition), add_def,
                                         "additionalProperties")
             elif keyword == "patternProperties":
                 for pattern, sub in definition["patternProperties"].items():
-                    if sub is True or sub == {}:
-                        continue
-                    java = jvm_pattern(
-                        _UNESCAPED_DOLLAR.sub(r"\\Z", pattern))
-
-                    def matcher(k_sql, _j=java):
-                        return f"rlike({k_sql}, {sqlstr(_j)})"
-
                     if sub is False:
-                        k = self._vsql_var("k")
-                        matching = (f"filter({w.okeys}, {k} -> "
-                                    f"{matcher(k)})")
-                        fail = (f"({w.is_obj} AND "
-                                f"{_nf(f'size({matching}) > 0')})")
-                        if pass_only:
-                            out.append((None, "NULL", fail))
-                            continue
-                        first_k = (f"try_element_at(array_sort("
-                                   f"{matching}), 1)")
-                        kname = f"concat({name_sql}, '.', {first_k})"
-                        # gate = the FULL fail condition: this struct is
-                        # non-null even with zero matches (named_struct
-                        # of a NULL name), unlike the first-failing and
-                        # nested-value structs
-                        out.append((_NestedSQL(
-                            f"named_struct('name', {kname}, 'rule', "
-                            f"CAST(NULL AS STRING), 'message', "
-                            f"concat({kname}, ' must not be there'))",
-                            fail),
-                            "CAST(NULL AS STRING)",
-                            fail))
-                    else:
-                        first_failing_entry(matcher, sub,
-                                            "patternProperties")
+                        out.extend(self._pattern_false_triples(
+                            pattern, facts, name_sql, pass_only))
+                    elif sub is not True and sub != {}:
+                        java = jvm_pattern(
+                            _UNESCAPED_DOLLAR.sub(r"\\Z", pattern))
+                        first_failing_entry(
+                            lambda k, _j=java: f"rlike({k}, {sqlstr(_j)})",
+                            sub, "patternProperties")
             elif keyword == "contentEncoding":
                 if definition["contentEncoding"] == "base64":
                     # the reference runs base64.b64decode WITHOUT
@@ -1672,21 +1741,6 @@ class _VariantSQLMixin:
                         f"({w.is_str} AND get_json_object({w.s}, '$') "
                         f"IS NULL AND NOT {lit_ok})"))
             elif keyword == "propertyNames":
-                nd = definition["propertyNames"]
-                if nd is True or nd == {}:
-                    continue
-                if nd is False:
-                    out.append(("propertyNames", msg("must not be there"),
-                                f"({w.is_obj} AND size({w.okeys}) > 0)"))
-                else:
-                    # keys are KNOWN strings: str_mode views freeze the
-                    # type tag to 'STRING' so non-string branches fold
-                    k = self._vsql_var("k")
-                    name_pass = self._branch_pass_sql(
-                        nd, "''", _Views(k, str_mode=True))
-                    out.append(("propertyNames",
-                                msg("must be named by propertyName "
-                                    "definition"),
-                                f"({w.is_obj} AND NOT "
-                                f"{_nf(f'forall({w.okeys}, {k} -> {name_pass})')})"))
+                out.extend(self._property_names_triples(
+                    definition, facts, name_sql, pass_only))
         return out

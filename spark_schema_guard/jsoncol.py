@@ -47,10 +47,16 @@ and falls back to the python engine only on ``PlanUnsupported``):
   metaschemas (~10 self-refs per level) exceeds ``plan_text_budget``
   and raises ``PlanTooLarge`` at compile time — ``engine="auto"``
   routes those to the python engine, whose compiled-closure validator
-  is the right tool there.  ``json_types="coerce"`` opts out of the
-  variant view for a cheaper plan that validates the typed struct parse
-  directly (string fields silently absorb numbers/bools — the
-  pre-variant behavior, now an explicit choice).
+  is the right tool there.  Every ``properties`` key compiles wherever
+  it is declared: one outside the top-level ``properties`` (under a
+  combinator, ``if``/``then``/``else`` or a schema ``dependencies``) has
+  no field in the parsed struct and validates over the variant view.
+  ``json_types="coerce"`` opts out of the variant view for a cheaper
+  plan that validates the typed struct parse directly (string fields
+  silently absorb numbers/bools — the pre-variant behavior, now an
+  explicit choice); it raises ``PlanUnsupported`` for a property outside
+  the top-level struct, so ``engine="auto"`` runs the python engine
+  there.
 """
 
 from __future__ import annotations
@@ -131,7 +137,8 @@ def validate_json_column(
     semantics for dynamic JSON types, ~1.4x the plan cost of
     ``"coerce"``, which validates the schema-typed struct parse
     directly (numbers/booleans silently coerce into string-typed
-    fields; undeclared-key value schemas raise PlanUnsupported).
+    fields; undeclared-key value schemas, and properties declared
+    outside the top-level ``properties``, raise PlanUnsupported).
 
     ``engine="auto"`` compiles the columnar (JVM, zero-shuffle) plan and
     falls back to the exact Arrow-batched python engine only when the

@@ -485,6 +485,66 @@ def test_combinators_on_declared_json_fields(spark):
         assert res["python"] == res["columnar"], (sch, res)
 
 
+# Object-site cases checked against rowcheck: (schema, docs).
+_M = {"type": "string"}
+KEY_SET_CASES = {
+    # a property declared outside the top-level properties
+    "allOf": ({"type": "object", "allOf": [{"properties": {"m": _M}}]},
+              ['{"m": 7}', '{"m": "x"}', "{}"]),
+    "anyOf": ({"type": "object", "anyOf": [{"properties": {"m": _M}}]},
+              ['{"m": 7}', '{"m": "x"}']),
+    "if-then": ({"type": "object", "if": {"required": ["n"]},
+                 "then": {"properties": {"m": _M}}},
+                ['{"n": 1, "m": 7}', '{"m": 7}', '{"n": 1, "m": "x"}']),
+    "dependencies": ({"type": "object",
+                      "dependencies": {"n": {"properties": {"m": _M}}}},
+                     ['{"n": 1, "m": 7}', '{"m": 7}']),
+    # patternProperties over a declared field sees its JSON value
+    "pattern-maxLength": ({"type": "object", "properties": {"n": _M},
+                           "patternProperties": {"^n$": {"maxLength": 1}}},
+                          ['{"n": true}', '{"n": "ab"}', '{"n": "a"}']),
+    "pattern-type": ({"type": "object", "properties": {"n": _M},
+                      "patternProperties": {"^n$": _M}},
+                     ['{"n": 5}', '{"n": "a"}']),
+    # a nested required lists missing keys sorted by raw name
+    "nested-required": ({"type": "object", "properties": {"o": {
+        "type": "object", "required": ["a", "a b"]}}},
+        ['{"o": {}}', '{"o": {"a b": 1}}', '{"o": {"a": 1}}']),
+}
+
+
+@pytest.mark.parametrize("json_types", ["exact", "coerce"])
+@pytest.mark.parametrize("case", sorted(KEY_SET_CASES))
+def test_object_sites_match_rowcheck(spark, case, json_types):
+    """Object sites give rowcheck's full violations array: every
+    property key compiles wherever it is declared, patternProperties
+    validates a declared field's JSON value, and a nested required lists
+    its missing keys in rowcheck's order.  Coerce mode either agrees or
+    raises PlanUnsupported — it never passes silently."""
+    from spark_schema_guard.columnar.compiler import (PlanUnsupported,
+                                                      compile_plan_for_column)
+    from spark_schema_guard.rowcheck import compile_row_validator
+
+    schema, docs = KEY_SET_CASES[case]
+    try:
+        plan = compile_plan_for_column(schema, "doc", json_types=json_types)
+    except PlanUnsupported as unsupported:
+        # coerce mode has no struct field for a key declared outside the
+        # top-level properties, and says which key; nor does it validate
+        # pattern value schemas
+        assert json_types == "coerce"
+        assert ("'data.m'" in str(unsupported)
+                or "patternProperties" in str(unsupported))
+        return
+    validator = compile_row_validator(schema, fast_fail=False)
+    df = spark.createDataFrame(list(enumerate(docs)), "i int, doc string")
+    got = [[v.asDict() for v in r["violations"]]
+           for r in plan.apply(df).orderBy("i").collect()]
+    want = [[e.as_row() for e in validator.collect(json.loads(d))]
+            for d in docs]
+    assert got == want
+
+
 # -- a JSON-column plan is one self-contained artifact ----------------------
 
 APPLY_DOCS = [

@@ -8,6 +8,10 @@ Violation lists: the columnar engine reports ONE violation per open-key
 rule (the first failing entry, like its map-column design), while the
 python engine reports one per failing key — so the check is containment:
 columnar rules/messages ⊆ python rules/messages, and emptiness agrees.
+
+A second generator declares properties outside the top-level
+``properties`` (under a root allOf / anyOf / if-then / schema
+dependency) and draws patterns that overlap declared keys.
 """
 
 import json
@@ -138,11 +142,31 @@ def _random_open_schema(rng):
     return schema
 
 
-@pytest.mark.parametrize("seed", range(40))
-def test_open_key_fuzz_columnar_matches_python(spark, seed):
-    rng = random.Random(9000 + seed)
-    schema = _random_open_schema(rng)
-    docs = [_random_doc(rng) for _ in range(12)] + ["{broken", None, "{}"]
+def _random_wrapped_schema(rng):
+    """Properties declared outside the top-level ``properties`` (under a
+    root allOf / anyOf / if-then / schema dependency), and patterns that
+    overlap declared keys."""
+    inner = {"properties": {"k": _scalar_schema(rng), "a": _value_schema(rng)}}
+    if rng.random() < 0.4:
+        inner["required"] = rng.sample(["k", "a"], 1)
+    schema = {"type": "object", "properties": {"s": {"type": "string"}}}
+    how = rng.choice(["allOf", "anyOf", "if", "dependencies"])
+    if how == "allOf":
+        schema["allOf"] = [inner, {"minProperties": rng.randint(0, 2)}]
+    elif how == "anyOf":
+        schema["anyOf"] = [inner, {"required": ["zz"]}]
+    elif how == "if":
+        schema["if"] = {"required": ["n"]}
+        schema["then"] = inner
+    else:
+        schema["dependencies"] = {"n": inner}
+    if rng.random() < 0.7:
+        schema["patternProperties"] = {
+            rng.choice(["^s$", "^[ks]", "a|x_"]): _value_schema(rng)}
+    return schema
+
+
+def _check_against_python(spark, schema, docs):
     df = spark.createDataFrame([(d,) for d in docs], "props string")
     py = validate_json_column(df, "props", schema, engine="python")
     try:
@@ -168,3 +192,21 @@ def test_open_key_fuzz_columnar_matches_python(spark, seed):
             assert v["message"] in p_msgs, (
                 f"columnar message {v['message']!r} not among python "
                 f"messages {sorted(p_msgs)} for {doc!r} under {schema!r}")
+
+
+@pytest.mark.parametrize("seed", range(40))
+def test_open_key_fuzz_columnar_matches_python(spark, seed):
+    rng = random.Random(9000 + seed)
+    schema = _random_open_schema(rng)
+    docs = [_random_doc(rng) for _ in range(12)] + ["{broken", None, "{}"]
+    _check_against_python(spark, schema, docs)
+
+
+@pytest.mark.parametrize("seed", range(24))
+def test_wrapped_properties_fuzz_columnar_matches_python(spark, seed):
+    """Every property key validates wherever it is declared, and
+    patternProperties over declared keys sees the JSON value."""
+    rng = random.Random(9500 + seed)
+    schema = _random_wrapped_schema(rng)
+    docs = [_random_doc(rng) for _ in range(12)] + ["{}"]
+    _check_against_python(spark, schema, docs)
