@@ -119,6 +119,11 @@ class _Site:
                      null_is_value, json=json, lam=self.lam)
 
 
+def _value_of(site: _Site) -> str | None:
+    """The site's value as a string, for ``include_value``."""
+    return f"CAST({site.expr} AS STRING)" if site.expr is not None else None
+
+
 def _json_path(key: str) -> str:
     """get_json_object path for a static key."""
     if re.fullmatch(r"[A-Za-z0-9_]+", key):
@@ -356,9 +361,9 @@ class _PlanCompiler(_VariantSQLMixin):
     # -- helpers -----------------------------------------------------------
 
     def _rule(self, site, rule_id, message, fail) -> Rule:
-        return self._triple_rules(
-            site, [(rule_id, _msg(site.name_sql, message), fail)],
-            site.present())[0]
+        return Rule(rule_id, site.sname, site.name_sql,
+                    _msg(site.name_sql, message),
+                    _and(site.present(), _nf(fail)), value=_value_of(site))
 
     def _string_expr(self, site: _Site) -> str | None:
         """The value as its JSON string form, or None if never a string."""
@@ -847,10 +852,16 @@ class _PlanCompiler(_VariantSQLMixin):
     def _object_keys(self, site) -> _ObjectKeys | None:
         """The key facts of an object site for the varsql key-set
         emitters; None where the value is never an object.  The rule's
-        presence gate already implies an object, so the gate is "true"."""
+        presence gate implies an object except where NULL is a value (an
+        array element, a map value, a JSON-backed property: a JSON null
+        or a non-object JSON text parses to NULL), so the object gate
+        there is the NULL test — NULL is not an empty object."""
+        def gate(probe):
+            return f"({probe} IS NOT NULL)" if site.null_is_value else "true"
+
         if isinstance(site.dtype, T.MapType):
             return _ObjectKeys(
-                "true", f"map_keys({site.expr})",
+                gate(site.expr), f"map_keys({site.expr})",
                 lambda key: f"map_contains_key({site.expr}, {sqlstr(key)})")
         if site.expr is not None and not isinstance(site.dtype, T.StructType):
             return None
@@ -860,24 +871,25 @@ class _PlanCompiler(_VariantSQLMixin):
             # value is present (reference semantics), unlike the
             # struct-field NULL-means-absent approximation
             return _ObjectKeys(
-                "true", keys,
+                gate(keys), keys,
                 lambda key: _nf(f"array_contains({keys}, {sqlstr(key)})"))
         fields = {key: child.present()
                   for key, child in self._field_sites(site).items()}
-        return _ObjectKeys("true", None,
+        return _ObjectKeys(gate(site.expr), None,
                            lambda key: fields.get(key, "false"), fields)
 
-    def _triple_rules(self, site, triples, gate) -> list[Rule]:
+    def _triple_rules(self, site, triples, gate, value=None) -> list[Rule]:
         """Rules of varsql triples at ``site``, active where ``gate``
-        holds: one rule per triple, so collect-all output matches."""
-        value = (f"CAST({site.expr} AS STRING)"
-                 if site.expr is not None else None)
+        holds: one rule per triple, so collect-all output matches.
+        ``value``: the site's value SQL for ``include_value``; a nested
+        violation struct's offending value lies below the site, so it
+        carries none."""
         rules = []
         for rule_id, message, fail in triples:
             fail = _and(gate, _nf(fail))
             if isinstance(rule_id, _NestedSQL):
                 rules.append(Rule(None, site.sname, None, None, fail,
-                                  dynamic=rule_id.struct_sql, value=value))
+                                  dynamic=rule_id.struct_sql))
             else:
                 rules.append(Rule(rule_id, site.sname, site.name_sql,
                                   message, fail, value=value))
@@ -885,15 +897,18 @@ class _PlanCompiler(_VariantSQLMixin):
 
     def _key_set_rules(self, site, emit, *args) -> list[Rule]:
         """Rules of one object key-set keyword: its varsql emitter over
-        this site's key facts."""
+        this site's key facts; none at a site that is never an object.
+        (The definition is checked there all the same: ``_build_plan``
+        runs the row-level compile first, which rejects ``required:
+        true`` on a string field as the reference does.)"""
         ok = self._object_keys(site)
         if ok is None:
             return []
         saved_base = self._v_base_uri
         self._v_base_uri = site.base_uri
         try:
-            return self._triple_rules(
-                site, emit(*args, ok, site.name_sql), site.present())
+            return self._triple_rules(site, emit(*args, ok, site.name_sql),
+                                      site.present(), value=_value_of(site))
         finally:
             self._v_base_uri = saved_base
 

@@ -341,7 +341,8 @@ class _ObjectKeys:
     object key-set keywords read.
 
     ``gate``: true where the value is an object ("true" where the rule's
-    own presence gate already implies it).  ``keys``: the runtime key
+    own presence gate already implies it; never "true" where NULL is a
+    value — NULL is not an empty object).  ``keys``: the runtime key
     array, or None at a static struct site, whose keys are ``fields``
     (field name -> presence test), known at compile time.
     ``has(key)``: boolean, the key is present."""
@@ -914,9 +915,13 @@ class _VariantSQLMixin:
     #
     # Each takes the site's key facts (_ObjectKeys) and returns triples:
     # variant values call them from the keyword table below, typed struct,
-    # map and JSON-backed sites from compiler._PlanCompiler.  Messages
-    # list keys sorted by raw name at compile time where the key set is
-    # static, joined with concat_ws — no lambda in the output projection.
+    # map and JSON-backed sites from compiler._PlanCompiler.  Where the
+    # message or the test must walk the keys (additionalProperties: false,
+    # patternProperties: false, propertyNames), the emitter has a second
+    # branch for a static struct site (ok.keys is None) that unrolls the
+    # field names at compile time: it exists only to keep lambdas out of
+    # the typed hot path (whole-stage codegen, test_plan_shape.py), and
+    # no further static/runtime branches belong here.
 
     _COUNT_BOUNDS = {
         "minProperties": ("<", "must contain at least {} properties"),

@@ -287,6 +287,32 @@ def test_null_array_elements_and_map_values(spark):
     assert_matches_rowcheck(plan, df, schema)
 
 
+@pytest.mark.parametrize("keyword", [
+    {"required": ["a"]}, {"minProperties": 1},
+    {"propertyNames": {"maxLength": 1}}, {"dependencies": {"bb": ["a"]}},
+])
+def test_null_object_elements_skip_key_set_keywords(spark, keyword):
+    # a NULL array element of struct or map type is a JSON null, not an
+    # empty object: object key-set keywords do not apply to it.  At most
+    # one element per array fails, as columnar reports the first.
+    schema = {"type": "object",
+              "properties": {"s": {"items": keyword}, "m": {"items": keyword}}}
+    spark_schema = T.StructType([
+        T.StructField("s", T.ArrayType(T.StructType([
+            T.StructField("a", T.LongType()),
+            T.StructField("bb", T.LongType())]))),
+        T.StructField("m", T.ArrayType(
+            T.MapType(T.StringType(), T.LongType()))),
+    ])
+    df = spark.createDataFrame(
+        [([None, {"a": None, "bb": 2}], [None, {"bb": 2}]),
+         ([None], [None]),
+         ([{"a": 1, "bb": None}, None], [{}, None])],
+        spark_schema)
+    plan = ssg.compile_plan(schema, spark_schema)
+    assert_matches_rowcheck(plan, df, schema)
+
+
 @pytest.mark.parametrize("keyword,bounds", [
     ("minimum", [0, 1, 5, 0.5]),
     ("maximum", [-1, 0, 1, 0.5]),

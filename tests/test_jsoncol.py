@@ -487,6 +487,10 @@ def test_combinators_on_declared_json_fields(spark):
 
 # Object-site cases checked against rowcheck: (schema, docs).
 _M = {"type": "string"}
+_NESTED_KEYS = {"properties": {"x": {}}, "required": ["x"],
+                "propertyNames": {"maxLength": 3}}
+_NESTED_DOCS = ['{"o": null}', '{"o": 5}', '{"o": "abcd"}', '{"o": {}}',
+                '{"o": {"x": 1, "long": 2}}']
 KEY_SET_CASES = {
     # a property declared outside the top-level properties
     "allOf": ({"type": "object", "allOf": [{"properties": {"m": _M}}]},
@@ -510,6 +514,12 @@ KEY_SET_CASES = {
     "nested-required": ({"type": "object", "properties": {"o": {
         "type": "object", "required": ["a", "a b"]}}},
         ['{"o": {}}', '{"o": {"a b": 1}}', '{"o": {"a": 1}}']),
+    # a nested object's key-set keywords pass a JSON null or a
+    # non-object: neither is an empty object
+    "nested-null": ({"type": "object", "properties": {"o": _NESTED_KEYS}},
+                    _NESTED_DOCS),
+    "nested-null-typed": ({"type": "object", "properties": {"o": {
+        "type": "object", **_NESTED_KEYS}}}, _NESTED_DOCS),
 }
 
 
@@ -543,6 +553,29 @@ def test_object_sites_match_rowcheck(spark, case, json_types):
     want = [[e.as_row() for e in validator.collect(json.loads(d))]
             for d in docs]
     assert got == want
+
+
+@pytest.mark.parametrize("keyword", [
+    {"required": True}, {"required": ["a", "a"]},
+    {"minProperties": "1"}, {"maxProperties": None},
+    {"additionalProperties": False, "required": ["a"]},
+])
+def test_key_set_definition_checked_at_non_object_site(keyword):
+    """A key-set keyword's definition is checked at every site, also at
+    a field that is never an object (the draft-03 ``required: true``
+    form on a string column): rowcheck rejects the schema, and so does
+    the columnar plan."""
+    from pyspark.sql import types as T
+
+    from spark_schema_guard.rowcheck import compile_row_validator
+
+    schema = {"properties": {"name": {"type": "string", **keyword}}}
+    with pytest.raises(ssg.SchemaDefinitionError) as want:
+        compile_row_validator(schema)
+    with pytest.raises(ssg.SchemaDefinitionError) as got:
+        ssg.compile_plan(
+            schema, T.StructType([T.StructField("name", T.StringType())]))
+    assert str(got.value) == str(want.value)
 
 
 # -- a JSON-column plan is one self-contained artifact ----------------------
