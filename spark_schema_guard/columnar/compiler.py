@@ -6,22 +6,22 @@ driver-side compile turns the schema into declarative SQL that Catalyst
 optimizes and whole-stage codegen evaluates JVM-side — no per-row Python
 in the hot path.  Compilation is plain Python string building (zero py4j
 round-trips); the plan parses the finished text when it is applied.
-Typed columns compile here; VARIANT values (open-key and exact-typed JSON
-values, recursive ``$ref``) compile in the mixed-in ``varsql`` world, and
-both emit the same :class:`~.plan.Rule` text.  Evaluation-order parity:
-rules are emitted in the reference's keyword-registration order
-(``draft04.py:42-68`` + draft-06/07 extensions), properties in schema
-order, so the first element of the ``violations`` array equals the
-reference's fast-fail error.
+This module maps typed columns, struct fields, array elements and map
+values onto sites and compiles the keywords that walk the static Spark
+type (combinators, arrays, properties).  Each scalar keyword and each
+object key-set keyword has ONE emitter, in the mixed-in ``varsql``
+world, which also compiles VARIANT values; a typed site reaches the
+scalar emitters through its views (:meth:`_PlanCompiler._views`).
+Evaluation-order parity: rules are emitted in the reference's
+keyword-registration order (``draft04.py:42-68`` + draft-06/07
+extensions), properties in schema order, so the first element of the
+``violations`` array equals the reference's fast-fail error.
 
-Static-type constant folding (the optimization the reference cannot do, and
-Catalyst cannot either because it doesn't know rule semantics):
-
-* ``type: string`` on a StringType column emits *no rule* (always true);
-* ``type: integer`` on a LongType column likewise; on a DoubleType column it
-  emits the draft-06 integral-float runtime check only;
-* a rule whose guard type can never occur for the column (``minLength`` on a
-  numeric column) is dropped — the reference would no-op it per row.
+Static-type constant folding (the optimization the reference cannot do,
+and Catalyst cannot either because it doesn't know rule semantics): a
+typed site's JSON type facts are Python literals, so ``type: string`` on
+a StringType column, ``minLength`` on a numeric column or ``type:
+integer`` on a LongType column fold away before any text is written.
 
 NULL convention: a NULL cell means the property is *absent* (JSON has
 missing-vs-null; flat columns do not).  Per-value rules are therefore gated
@@ -42,7 +42,6 @@ from __future__ import annotations
 import dataclasses
 import re
 from dataclasses import dataclass
-from decimal import Decimal
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -53,16 +52,13 @@ from ..formats import jvm_pattern
 from ..ref_resolver import SchemaStore
 from ..rowcheck.compiler import (
     _UNESCAPED_DOLLAR, _Compiler as _RowCompiler, _pick_dialect,
-    ref_numeric, schema_value_repr,
 )
 from . import typemap
 from .plan import _NULL_STR, Rule, ValidationPlan
-from .varsql import (_JSON_LITERAL_RE, _and, _msg, _NestedSQL, _ObjectKeys,
-                     _or, _PackEntries, _PackFrame, _PackSingle,
-                     _VariantSQLMixin, _Views, _nf, sqlident, sqlnum, sqlstr)
-
-_ISO_TS = "yyyy-MM-dd'T'HH:mm:ss'Z'"
-_ISO_DATE = "yyyy-MM-dd"
+from .varsql import (_SCALAR_KEYWORDS, _and, _msg, _NestedSQL, _not,
+                     _ObjectKeys, _or, _PackEntries, _PackFrame, _PackSingle,
+                     _typed_views, _VariantSQLMixin, _Views, _nf, sqlident,
+                     sqlnum, sqlstr)
 
 
 @dataclass
@@ -343,11 +339,19 @@ class _PlanCompiler(_VariantSQLMixin):
                 self._ref_stack.pop()
 
         rules: list[Rule] = []
+        views = None
         for keyword in self.keyword_order:
-            if keyword in definition:
-                handler = getattr(self, "_kw_" + _snake(keyword), None)
-                if handler is None:
-                    continue
+            if keyword not in definition:
+                continue
+            if keyword in _SCALAR_KEYWORDS:
+                views = views or self._views(site)
+                rules.extend(self._triple_rules(
+                    site, self._scalar_triples(keyword, definition,
+                                               site.name_sql, views),
+                    site.present(), value=_value_of(site)))
+                continue
+            handler = getattr(self, "_kw_" + _snake(keyword), None)
+            if handler is not None:
                 rules.extend(handler(definition, site) or [])
         return rules
 
@@ -365,50 +369,19 @@ class _PlanCompiler(_VariantSQLMixin):
                     _msg(site.name_sql, message),
                     _and(site.present(), _nf(fail)), value=_value_of(site))
 
-    def _string_expr(self, site: _Site) -> str | None:
-        """The value as its JSON string form, or None if never a string."""
-        if typemap.is_temporal(site.dtype):
-            pattern = _ISO_DATE if isinstance(site.dtype, T.DateType) else _ISO_TS
-            return f"date_format({site.expr}, {sqlstr(pattern)})"
-        if isinstance(site.dtype, (T.StringType, T.CharType, T.VarcharType)):
-            return site.expr
-        return None
+    def _views(self, site: _Site) -> _Views:
+        """The site as the shared scalar emitter reads it: its value
+        views and JSON type facts (the typed world's site mapping).  A
+        Python predicate needs a row-level value: inside a lambda the
+        views refuse one."""
+        return _typed_views(
+            site.expr, site.dtype, site.null_is_value, json=site.json,
+            udf=self._lambda_udf if site.lam else self._udf_predicate)
 
-    def _numeric_expr(self, site: _Site) -> str | None:
-        """The value as a number, or None if never one.  Booleans count as
-        0/1, as the reference's ``isinstance(x, (int, float, Decimal))``
-        does; ``type``/``enum``/``const`` stay type-strict."""
-        if isinstance(site.dtype, T.BooleanType):
-            return f"CAST({site.expr} AS INT)"
-        return site.expr if typemap.is_numeric(site.dtype) else None
-
-    def _regex_match(self, site, expr, pattern: str, *, anchored: bool) -> str:
-        """True where the string matches.  anchored=True uses ``.match``
-        semantics (formats), else ``.search`` (pattern keyword)."""
-        if self.regex_engine == "python":
-            compiled = re.compile(pattern)
-
-            def test(v):
-                found = compiled.match(v) if anchored else compiled.search(v)
-                return found is not None
-
-            return self._udf_predicate(site, expr, "re", test)
-        java = jvm_pattern(pattern)
-        if anchored and not java.startswith("^"):
-            java = "^(?:" + java + ")"
-        return f"rlike({expr}, {sqlstr(java)})"
-
-    def _udf_predicate(self, site, expr, hint, test, on_null=False) -> str:
+    def _udf_predicate(self, expr, hint, test, on_null=False) -> str:
         """A Python predicate over a string value: an Arrow-batched pandas
         UDF projected as a plan helper column the rule text references
-        by name.  Element/entry values live inside HOF lambdas, where
-        Spark cannot run a Python UDF."""
-        if site.lam:
-            raise PlanUnsupported(
-                "Python-evaluated predicates (regex_engine='python', "
-                "callable formats, format 'regex') cannot check array "
-                "elements or map entries; use engine='python'")
-
+        by name."""
         def build():
             @F.pandas_udf(T.BooleanType())
             def predicate(s: pd.Series) -> pd.Series:
@@ -418,246 +391,14 @@ class _PlanCompiler(_VariantSQLMixin):
 
         return self._aux(hint, build)
 
-    # -- type --------------------------------------------------------------
-
-    def _kw_type(self, definition, site):
-        declared = definition["type"]
-        types = declared if isinstance(declared, list) else [declared]
-        for t in types:
-            if t not in ("null", "boolean", "number", "integer", "string", "array", "object"):
-                raise SchemaDefinitionError("Unknown type")
-        message = "must be " + " or ".join(types)
-        static = typemap.json_types_of(site.dtype)
-        if any(t in types for t in static):
-            # statically satisfied for non-null values; a JSON null value
-            # (array element / map value) still fails unless null allowed
-            if site.null_is_value and "null" not in types:
-                return [self._rule(site, "type", message,
-                                   f"({site.expr} IS NULL)")]
-            return []  # constant-fold away
-        if "integer" in types and typemap.is_fractional(site.dtype) and self.integral_float_is_int:
-            expr = site.expr
-            # modulo, not floor(): floor on a double returns LONG, which
-            # overflows (-> NULL/ANSI error) for magnitudes past 2^63 —
-            # 1e308 IS integral (float.is_integer() in the reference)
-            is_integral = f"(({expr} % 1.0D) = 0.0D)"
-            if isinstance(site.dtype, (T.FloatType, T.DoubleType)):
-                is_integral = (f"(NOT isnan({expr}) AND abs({expr}) != "
-                               f"double('Infinity') AND {is_integral})")
-            fail = f"(NOT {is_integral})"
-            if site.null_is_value and "null" not in types:
-                fail = f"({fail} OR {expr} IS NULL)"
-            return [self._rule(site, "type", message, fail)]
-        if site.null_is_value and "null" in types:
-            # only the JSON null value satisfies the declared types; when
-            # the raw JSON text is available, use it — the typed parse
-            # maps non-coercible values to NULL, which would otherwise be
-            # indistinguishable from a true JSON null
-            value = site.json if site.json is not None else site.expr
-            return [self._rule(site, "type", message,
-                               f"({value} IS NOT NULL)")]
-        # statically impossible: every present value violates.  One
-        # exception: a JSON-backed site whose struct inference fell back
-        # to string (recursive $ref — no finite static type) may hold a
-        # real object/array at runtime; a constant-fail would be silently
-        # wrong, so refuse the plan instead.
-        if (site.json is not None
-                and isinstance(site.dtype, (T.StringType,))
-                and ("object" in types or "array" in types)):
-            raise PlanUnsupported(
-                "recursive $ref object/array schemas have no finite static "
-                "type for the columnar engine; use engine='python'")
-        return [self._rule(site, "type", message, "true")]
-
-    # -- enum / const ------------------------------------------------------
-
-    def _kw_enum(self, definition, site):
-        enum = definition["enum"]
-        if not isinstance(enum, (list, tuple)):
-            raise SchemaDefinitionError("enum must be an array")
-        message = f"must be one of {schema_value_repr(enum)}"
-        compatible = [v for v in enum if _value_fits(v, site.dtype)]
-        null_passes = site.null_is_value and any(v is None for v in enum)
-        if not compatible and not null_passes:
-            return [self._rule(site, "enum", message, "true")]
-        if not compatible:
-            # only the null member can match (e.g. enum [null] on a
-            # string site): pass exactly on explicit JSON null
-            return [self._rule(site, "enum", message,
-                               f"({site.expr} IS NOT NULL)")]
-        expr = site.expr
-        string_expr = self._string_expr(site)
-        if string_expr is not None:
-            expr = string_expr
-            compatible = [v for v in compatible if isinstance(v, str)]
-        ok = [f"({expr} <=> {_lit(v)})" for v in compatible]
-        if null_passes:
-            ok.append(f"({site.expr} IS NULL)")
-        return [self._rule(site, "enum", message, f"NOT {_or(ok)}")]
-
-    def _kw_const(self, definition, site):
-        const = definition["const"]
-        message = f"must be same as const definition: {schema_value_repr(const)}"
-        if const is None and site.null_is_value:
-            return [self._rule(site, "const", message,
-                               f"({site.expr} IS NOT NULL)")]
-        if not _value_fits(const, site.dtype):
-            return [self._rule(site, "const", message, "true")]
-        expr = self._string_expr(site)
-        expr = expr if expr is not None else site.expr
-        return [self._rule(site, "const", message,
-                           f"NOT ({expr} <=> {_lit(const)})")]
-
-    # -- numbers -----------------------------------------------------------
-
-    def _numeric_bound(self, definition, site, keyword, op, message_tpl):
-        bound = definition[keyword]
-        if not isinstance(bound, (int, float, Decimal)):
-            if keyword in ("exclusiveMinimum", "exclusiveMaximum"):
-                raise SchemaDefinitionError(
-                    f"{keyword} must be an integer, a float or a decimal")
-            raise SchemaDefinitionError(f"{keyword} must be a number")
-        expr = self._numeric_expr(site)
-        if expr is None:
-            return []
-        # compare what the reference's generated code compares (Decimal
-        # bounds re-parse as int/float literals); message keeps str(bound)
-        cmp = ref_numeric(bound)
-        lit_bound = _lit(int(cmp) if isinstance(cmp, bool) else cmp)
-        return [self._rule(site, keyword, message_tpl.format(bound),
-                           f"({expr} {op} {lit_bound})")]
-
-    def _kw_minimum(self, definition, site):
-        # exclusiveMinimum here is the draft-04 boolean modifier, but the
-        # reference treats any truthy value as "exclusive" (draft04.py:339)
-        if bool(definition.get("exclusiveMinimum", False)):
-            return self._numeric_bound(definition, site, "minimum", "<=",
-                                       "must be bigger than {}")
-        return self._numeric_bound(definition, site, "minimum", "<",
-                                   "must be bigger than or equal to {}")
-
-    def _kw_maximum(self, definition, site):
-        if bool(definition.get("exclusiveMaximum", False)):
-            return self._numeric_bound(definition, site, "maximum", ">=",
-                                       "must be smaller than {}")
-        return self._numeric_bound(definition, site, "maximum", ">",
-                                   "must be smaller than or equal to {}")
-
-    def _kw_exclusive_minimum(self, definition, site):
-        return self._numeric_bound(definition, site, "exclusiveMinimum",
-                                   "<=", "must be bigger than {}")
-
-    def _kw_exclusive_maximum(self, definition, site):
-        return self._numeric_bound(definition, site, "exclusiveMaximum",
-                                   ">=", "must be smaller than {}")
-
-    def _kw_multiple_of(self, definition, site):
-        divisor = definition["multipleOf"]
-        if not isinstance(divisor, (int, float, Decimal)):
-            raise SchemaDefinitionError("multipleOf must be a number")
-        expr = self._numeric_expr(site)
-        if expr is None:
-            return []
-        msg_divisor, divisor = divisor, ref_numeric(divisor)
-        if typemap.is_integral(site.dtype) and isinstance(divisor, int):
-            # exact long modulo — documented deliberate divergence from
-            # the reference's float true-division past 2^53 on TYPED
-            # integer columns (tests/test_divergences.py)
-            fail = f"(({expr} % {_lit(divisor)}) != 0)"
-        elif isinstance(divisor, (int, bool)) and not isinstance(divisor, float):
-            # fractional value, int divisor: mirror the reference's
-            # float true-division — invalid iff the double quotient is
-            # non-integral, so any |q| >= 2^52 is integral and valid
-            # (draft04.py:366)
-            fail = (f"((({expr} / {sqlnum(float(divisor))}) % 1.0D) "
-                    "!= 0.0D)")
-        else:
-            # Float divisor: double→decimal cast goes through the
-            # shortest decimal repr (BigDecimal.valueOf), the JVM analog
-            # of the reference's Decimal(repr(x)) trick
-            # (draft04.py:361-366).  try_cast, with a double-fmod
-            # fallback: magnitudes past Decimal(38,18) (~1e20) would
-            # raise under ANSI.
-            dec = "DECIMAL(38,18)"
-            fail = (f"coalesce((try_cast({expr} AS {dec}) % "
-                    f"CAST({_lit(divisor)} AS {dec})) != CAST(0 AS {dec}), "
-                    f"({expr} % {sqlnum(float(divisor))}) != 0.0D)")
-        rules = [self._rule(site, "multipleOf",
-                            f"must be multiple of {msg_divisor}", fail)]
-        if typemap.is_fractional(site.dtype) and not isinstance(site.dtype, T.DecimalType):
-            rules.append(Rule(
-                "multipleOf", site.sname, site.name_sql, "'inifinity reached'",
-                _and(site.present(), _nf(
-                    f"(({expr} / {_lit(divisor)}) = double('Infinity'))"))))
-        return rules
-
-    # -- strings -----------------------------------------------------------
-
-    def _length_bound(self, definition, site, keyword, op, message):
-        bound = definition[keyword]
-        if not isinstance(bound, (int, float)):
-            raise SchemaDefinitionError(f"{keyword} must be a number")
-        expr = self._string_expr(site)
-        if expr is None:
-            return []
-        return [self._rule(site, keyword, message.format(bound),
-                           f"(length({expr}) {op} {_lit(bound)})")]
-
-    def _kw_min_length(self, definition, site):
-        return self._length_bound(
-            definition, site, "minLength", "<",
-            "must be longer than or equal to {} characters")
-
-    def _kw_max_length(self, definition, site):
-        return self._length_bound(
-            definition, site, "maxLength", ">",
-            "must be shorter than or equal to {} characters")
-
-    def _kw_pattern(self, definition, site):
-        pattern = definition["pattern"]
-        expr = self._string_expr(site)
-        if expr is None:
-            return []
-        fixed = _UNESCAPED_DOLLAR.sub(r"\\Z", pattern)
-        match = self._regex_match(site, expr, fixed, anchored=False)
-        return [self._rule(site, "pattern", f"must match pattern {pattern}",
-                           f"NOT {match}")]
-
-    def _kw_format(self, definition, site):
-        if not self.use_formats:
-            return []
-        format_name = definition["format"]
-        expr = self._string_expr(site)
-        if expr is None:
-            return []
-        if format_name in self.custom_formats:
-            custom = self.custom_formats[format_name]
-            if isinstance(custom, str):
-                match = self._regex_match(site, expr, custom, anchored=True)
-            else:
-                match = self._udf_predicate(site, expr, "fmt", custom)
-            return [self._rule(site, "format", f"must be {format_name}",
-                               f"NOT {match}")]
-        if format_name in self.format_table:
-            if typemap.is_temporal(site.dtype) and format_name in ("date-time", "date"):
-                return []  # a real timestamp/date always renders validly
-            match = self._regex_match(site, expr, self.format_table[format_name],
-                                      anchored=True)
-            return [self._rule(site, "format", f"must be {format_name}",
-                               f"NOT {match}")]
-        if format_name == "regex":
-            def compiles(v):
-                try:
-                    re.compile(v)
-                    return True
-                except Exception:
-                    return False
-
-            match = self._udf_predicate(site, expr, "regex", compiles,
-                                        on_null=True)
-            return [self._rule(site, "format", "must be a valid regex",
-                               f"NOT {match}")]
-        return []
+    @staticmethod
+    def _lambda_udf(*_):
+        # element/entry values live inside HOF lambdas, where Spark
+        # cannot run a Python UDF
+        raise PlanUnsupported(
+            "Python-evaluated predicates (regex_engine='python', "
+            "callable formats, format 'regex') cannot check array "
+            "elements or map entries; use engine='python'")
 
     # -- combinators -------------------------------------------------------
 
@@ -670,7 +411,7 @@ class _PlanCompiler(_VariantSQLMixin):
     def _kw_any_of(self, definition, site):
         passes = [self._pass_sql(sub, site) for sub in definition["anyOf"]]
         return [self._rule(site, "anyOf", "cannot be validated by any definition",
-                           f"NOT {_or(passes)}")]
+                           _not(_or(passes)))]
 
     def _kw_one_of(self, definition, site):
         passes = [self._pass_sql(sub, site) for sub in definition["oneOf"]]
@@ -708,23 +449,15 @@ class _PlanCompiler(_VariantSQLMixin):
         return isinstance(site.dtype, T.ArrayType)
 
     def _kw_min_items(self, definition, site):
-        bound = definition["minItems"]
-        if not isinstance(bound, (int, float)):
-            raise SchemaDefinitionError("minItems must be a number")
-        if not self._array_guard(site):
-            return []
-        return [self._rule(site, "minItems", f"must contain at least {bound} items",
-                           f"(size({site.expr}) < {_lit(bound)})")]
+        return self._item_count_rules(definition, site, "minItems")
 
     def _kw_max_items(self, definition, site):
-        bound = definition["maxItems"]
-        if not isinstance(bound, (int, float)):
-            raise SchemaDefinitionError("maxItems must be a number")
-        if not self._array_guard(site):
-            return []
-        return [self._rule(site, "maxItems",
-                           f"must contain less than or equal to {bound} items",
-                           f"(size({site.expr}) > {_lit(bound)})")]
+        return self._item_count_rules(definition, site, "maxItems")
+
+    def _item_count_rules(self, definition, site, keyword):
+        return self._triple_rules(site, self._item_count_triples(
+            definition, keyword, "true" if self._array_guard(site) else "false",
+            site.expr, site.name_sql), site.present(), value=_value_of(site))
 
     def _kw_unique_items(self, definition, site):
         if not definition["uniqueItems"] or not self._array_guard(site):
@@ -887,6 +620,8 @@ class _PlanCompiler(_VariantSQLMixin):
         rules = []
         for rule_id, message, fail in triples:
             fail = _and(gate, _nf(fail))
+            if fail == "false":
+                continue
             if isinstance(rule_id, _NestedSQL):
                 rules.append(Rule(None, site.sname, None, None, fail,
                                   dynamic=rule_id.struct_sql))
@@ -904,13 +639,9 @@ class _PlanCompiler(_VariantSQLMixin):
         ok = self._object_keys(site)
         if ok is None:
             return []
-        saved_base = self._v_base_uri
-        self._v_base_uri = site.base_uri
-        try:
+        with self._v_based(site.base_uri):
             return self._triple_rules(site, emit(*args, ok, site.name_sql),
                                       site.present(), value=_value_of(site))
-        finally:
-            self._v_base_uri = saved_base
 
     def _kw_min_properties(self, definition, site):
         return self._key_set_rules(site, self._count_triples, definition,
@@ -1003,14 +734,10 @@ class _PlanCompiler(_VariantSQLMixin):
             value = self._aux("vkey",
                               f"try_element_at({vmap}, {sqlstr(key)})")
             sov = self._aux("sov", f"schema_of_variant({value})")
-            saved_base = self._v_base_uri
-            self._v_base_uri = base.base_uri
-            try:
+            with self._v_based(base.base_uri):
                 triples = self._vpack_compile_top(
                     prop_definition, base.name_sql, _Views(value, sov_sql=sov),
                     _PackSingle(value, base.name_sql))
-            finally:
-                self._v_base_uri = saved_base
         except PlanTooLarge:
             # too-large is a final verdict for the columnar engine (the
             # struct fallback would re-raise a misleading secondary
@@ -1059,17 +786,13 @@ class _PlanCompiler(_VariantSQLMixin):
                     "engine='python'")
             entries = f"map_entries({self._vmap(site)})"
             se = self._vsql_var("e")
-            saved_base = self._v_base_uri
-            self._v_base_uri = site.base_uri
-            try:
+            with self._v_based(site.base_uri):
                 triples = self._vpack_compile_top(
                     value_definition, name, _Views(f"{e}.value"),
                     _PackEntries(entries, se, key_filter(f"{se}.key"),
                                  f"{se}.value",
                                  f"concat({site.name_sql}, '.', {se}.key)",
                                  f"{e}.key"))
-            finally:
-                self._v_base_uri = saved_base
             viol = self._violation_sql(triples, name)
         return [self._first_failing_rule(
             site, rule_label, site.sname + ".<" + rule_label + ">", entries, e,
@@ -1141,39 +864,6 @@ class _PlanCompiler(_VariantSQLMixin):
         return self._key_set_rules(site, self._property_names_triples,
                                    definition)
 
-    # -- content -----------------------------------------------------------
-
-    def _kw_content_encoding(self, definition, site):
-        if definition["contentEncoding"] != "base64":
-            return []
-        expr = self._string_expr(site)
-        if expr is None:
-            return []
-        # reference parity: base64.b64decode WITHOUT validate discards
-        # non-alphabet chars, then requires mod-4 padding on what
-        # remains; try_to_binary alone is laxer (accepts 'abc')
-        filtered = f"regexp_replace({expr}, '[^A-Za-z0-9+/=]', '')"
-        fail = (f"((length({filtered}) % 4) != 0 "
-                f"OR try_to_binary({filtered}, 'base64') IS NULL)")
-        return [Rule(None, site.sname, site.name_sql,
-                     _msg(site.name_sql, "must be encoded by base64"),
-                     _and(site.present(), _nf(fail)))]
-
-    def _kw_content_media_type(self, definition, site):
-        if definition["contentMediaType"] != "application/json":
-            return []
-        if isinstance(site.dtype, T.BinaryType):
-            expr = f"CAST({site.expr} AS STRING)"
-        else:
-            expr = self._string_expr(site)
-        if expr is None:
-            return []
-        fail = (f"(get_json_object({expr}, '$') IS NULL "
-                f"AND NOT rlike({expr}, {sqlstr(_JSON_LITERAL_RE)}))")
-        return [Rule(None, site.sname, site.name_sql,
-                     _msg(site.name_sql, "must be valid JSON"),
-                     _and(site.present(), _nf(fail)))]
-
 
 def _snake(keyword: str) -> str:
     out = []
@@ -1184,47 +874,6 @@ def _snake(keyword: str) -> str:
         else:
             out.append(ch)
     return "".join(out)
-
-
-def _value_fits(value, dtype: T.DataType) -> bool:
-    """Can this enum/const value ever equal a value of the static type,
-    under the reference's type-strict matcher?"""
-    if isinstance(value, bool):
-        return isinstance(dtype, T.BooleanType)
-    if isinstance(value, (int, float)):
-        return typemap.is_numeric(dtype)
-    if isinstance(value, str):
-        return typemap.is_stringlike(dtype)
-    if value is None:
-        return False  # NULL means absent; an absent key is never validated
-    if isinstance(value, (list, tuple)):
-        return isinstance(dtype, T.ArrayType) and all(
-            _value_fits(v, dtype.elementType) for v in value)
-    if isinstance(value, dict):
-        return isinstance(dtype, (T.StructType, T.MapType))
-    return False
-
-
-def _lit(value) -> str:
-    """SQL literal typed like ``F.lit``: ints INT (BIGINT/DECIMAL as
-    they grow), floats DOUBLE, lists arrays, dicts maps."""
-    if value is None:
-        return "NULL"
-    if isinstance(value, bool):
-        return "true" if value else "false"
-    if isinstance(value, int):
-        return str(value)
-    if isinstance(value, float):
-        return sqlnum(value)
-    if isinstance(value, str):
-        return sqlstr(value)
-    if isinstance(value, (list, tuple)):
-        return "array(" + ", ".join(_lit(v) for v in value) + ")"
-    if isinstance(value, dict):
-        return "map(" + ", ".join(f"{_lit(k)}, {_lit(v)}"
-                                  for k, v in value.items()) + ")"
-    raise SchemaDefinitionError(
-        f"enum/const member of unsupported type: {type(value).__name__}")
 
 
 def _build_plan(definition, options: dict, compile_rules,

@@ -31,8 +31,8 @@ _ATOMIC = {
     T.TimestampType: ("string",),
     T.TimestampNTZType: ("string",),
     T.DateType: ("string",),
-    # binary surfaces as string for content* keywords
-    T.BinaryType: ("string",),
+    # binary is bytes, no JSON type — as the row-level engine sees it
+    T.BinaryType: (),
     T.ArrayType: ("array",),
     T.MapType: ("object",),
     T.StructType: ("object",),
@@ -45,26 +45,6 @@ def json_types_of(dtype: T.DataType) -> tuple[str, ...]:
         if isinstance(dtype, cls):
             return names
     return ()
-
-
-def is_integral(dtype: T.DataType) -> bool:
-    return isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType))
-
-
-def is_fractional(dtype: T.DataType) -> bool:
-    return isinstance(dtype, (T.FloatType, T.DoubleType, T.DecimalType))
-
-
-def is_numeric(dtype: T.DataType) -> bool:
-    return is_integral(dtype) or is_fractional(dtype)
-
-
-def is_stringlike(dtype: T.DataType) -> bool:
-    return isinstance(
-        dtype,
-        (T.StringType, T.CharType, T.VarcharType, T.TimestampType,
-         T.TimestampNTZType, T.DateType),
-    )
 
 
 def is_temporal(dtype: T.DataType) -> bool:

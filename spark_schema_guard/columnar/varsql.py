@@ -7,11 +7,14 @@ the finished text when it is applied.  (Building Column objects node by
 node cost one round-trip per expression node: unrolling the draft-04
 metaschema ONE level deep took ~1.45M py4j calls, ~270 s of driver time,
 for a plan whose logic is a few hundred KB of SQL.)  This module holds
-the literal/violation-struct helpers both rule worlds share, the one
-emitter per object key-set keyword both worlds call, and the variant
-world itself: open-key value schemas, exact-typed declared JSON fields
-and depth-bounded recursive ``$ref``, compiled to
-``(rule_id, message, fail)`` triples over typed views of one VARIANT.
+the literal/violation-struct helpers both rule worlds share, the ONE
+emitter per scalar keyword and per object key-set keyword both worlds
+call, and the variant world itself: open-key value schemas, exact-typed
+declared JSON fields and depth-bounded recursive ``$ref``, compiled to
+``(rule_id, message, fail)`` triples.  A scalar emitter reads only the
+value's views: :class:`_Views` of a VARIANT test its runtime type tag,
+:class:`_TypedViews` of a typed column carry literal type facts, which
+``_and``/``_or``/``_not`` fold in Python.
 
 Semantics are a 1:1 mirror of the reference validator's keyword order
 and messages (fastjsonschema draft04.py:42-68 keyword registration;
@@ -26,6 +29,7 @@ ref_unroll_depth, canon_depth, ...) and its SchemaStore.
 
 from __future__ import annotations
 
+import contextlib
 import decimal
 import math
 import re
@@ -95,74 +99,195 @@ class _NestedSQL:
 
 
 class _Views:
-    """Typed projections of one VARIANT value as SQL text.  ``str_mode``
-    freezes the value as a known STRING (propertyNames keys): the type
-    tag is a literal and every non-string view a typed NULL, so Catalyst
-    folds the non-string branches away."""
+    """One value as SQL text, as the keyword emitters read it: value
+    views (``num`` double, ``lng`` long, ``dec`` decimal(38,0), ``s``,
+    ``b``, ``arr``, ``obj``), JSON type facts (``is_num``, ``is_numlike``
+    = number or boolean, ``is_bigint``, ``is_intdec``, ``is_str``,
+    ``is_bool``, ``is_arr``, ``is_obj``, ``vnull``) and container
+    members (``nkeys``, ``has``, ``prop``, ``item``).
 
-    __slots__ = ("v", "sov", "num", "lng", "s", "b", "arr", "obj",
-                 "okeys", "vnull", "present")
+    This class views a VARIANT: its facts test the runtime type tag.
+    Three facts are constant here and vary only over typed values
+    (:class:`_TypedViews`): ``temporal`` (a date/timestamp read as its
+    ISO string), ``exact_long`` (an integer column: exact ``multipleOf``)
+    and ``udf`` (the Python-predicate host — a variant value feeds no
+    row-level helper column)."""
 
-    def __init__(self, v_sql: str, sov_sql: str | None = None,
-                 str_mode: bool = False):
+    __slots__ = ("v", "sov", "num", "lng", "dec", "s", "b", "arr", "obj",
+                 "okeys", "vnull", "present", "is_num", "is_numlike",
+                 "is_bigint", "is_intdec", "is_str", "is_bool", "is_arr",
+                 "is_obj")
+    temporal = False
+    exact_long = False
+    udf = None
+
+    def __init__(self, v_sql: str, sov_sql: str | None = None):
         self.v = v_sql
-        if str_mode:
-            self.sov = "'STRING'"
-            self.num = "CAST(NULL AS DOUBLE)"
-            self.lng = "CAST(NULL AS BIGINT)"
-            self.s = v_sql
-            self.b = "CAST(NULL AS BOOLEAN)"
-            self.arr = "CAST(NULL AS ARRAY<VARIANT>)"
-            self.obj = "CAST(NULL AS MAP<STRING,VARIANT>)"
-            self.vnull = "false"
-            self.present = f"({v_sql} IS NOT NULL)"
-        else:
-            self.sov = sov_sql or f"schema_of_variant({v_sql})"
-            self.num = f"try_variant_get({v_sql}, '$', 'double')"
-            self.lng = f"try_variant_get({v_sql}, '$', 'long')"
-            self.s = f"try_variant_get({v_sql}, '$', 'string')"
-            self.b = f"try_variant_get({v_sql}, '$', 'boolean')"
-            self.arr = f"try_variant_get({v_sql}, '$', 'array<variant>')"
-            self.obj = (f"try_variant_get({v_sql}, '$', "
-                        "'map<string,variant>')")
-            self.vnull = f"is_variant_null({v_sql})"
-            self.present = f"({v_sql} IS NOT NULL)"
+        sov = self.sov = sov_sql or f"schema_of_variant({v_sql})"
+        self.num = f"try_variant_get({v_sql}, '$', 'double')"
+        self.lng = f"try_variant_get({v_sql}, '$', 'long')"
+        self.dec = f"try_variant_get({v_sql}, '$', 'decimal(38,0)')"
+        self.s = f"try_variant_get({v_sql}, '$', 'string')"
+        self.b = f"try_variant_get({v_sql}, '$', 'boolean')"
+        self.arr = f"try_variant_get({v_sql}, '$', 'array<variant>')"
+        self.obj = f"try_variant_get({v_sql}, '$', 'map<string,variant>')"
+        self.vnull = f"is_variant_null({v_sql})"
+        self.present = f"({v_sql} IS NOT NULL)"
         self.okeys = f"map_keys({self.obj})"
+        self.is_num = (f"({sov} = 'BIGINT' OR {sov} = 'DOUBLE' "
+                       f"OR startswith({sov}, 'DECIMAL'))")
+        self.is_numlike = f"({self.is_num} OR {sov} = 'BOOLEAN')"
+        self.is_bigint = f"({sov} = 'BIGINT')"
+        self.is_str = f"({sov} = 'STRING')"
+        self.is_bool = f"({sov} = 'BOOLEAN')"
+        # integral DECIMAL tag: a JSON integer beyond long range
+        # (``10000000000000000000`` parses as DECIMAL(20,0)).  Fractional
+        # decimals keep nonzero scale and stay on the double view —
+        # matching the reference, where json.loads already made them
+        # Python floats
+        self.is_intdec = (f"(startswith({sov}, 'DECIMAL') "
+                          f"AND endswith({sov}, ',0)'))")
+        self.is_arr = f"startswith({sov}, 'ARRAY')"
+        self.is_obj = f"startswith({sov}, 'OBJECT')"
 
     @property
-    def is_num(self):
-        return (f"({self.sov} = 'BIGINT' OR {self.sov} = 'DOUBLE' "
-                f"OR startswith({self.sov}, 'DECIMAL'))")
+    def nkeys(self):
+        return f"size({self.obj})"
 
-    @property
-    def is_numlike(self):
-        return f"({self.is_num} OR {self.sov} = 'BOOLEAN')"
+    def has(self, key: str) -> str:
+        return f"map_contains_key({self.obj}, {sqlstr(key)})"
 
-    @property
-    def is_bigint(self):
-        return f"({self.sov} = 'BIGINT')"
+    def prop(self, key: str) -> "_Views":
+        return _Views(f"try_element_at({self.obj}, {sqlstr(key)})")
 
-    @property
-    def is_str(self):
-        return f"({self.sov} = 'STRING')"
+    def item(self, i: int) -> "_Views":
+        return _Views(f"try_element_at({self.arr}, {i + 1})")
 
-    @property
-    def is_intdec(self):
-        """Integral DECIMAL tag: a JSON integer beyond long range
-        (``10000000000000000000`` parses as DECIMAL(20,0)).  Fractional
-        decimals keep nonzero scale and stay on the double view —
-        matching the reference, where json.loads already made them
-        Python floats."""
-        return (f"(startswith({self.sov}, 'DECIMAL') "
-                f"AND endswith({self.sov}, ',0)'))")
+
+_ISO_TS = "yyyy-MM-dd'T'HH:mm:ss'Z'"
+_ISO_DATE = "yyyy-MM-dd"
+
+
+class _TypedViews(_Views):
+    """The views of a value of a static Spark type.  Its type facts are
+    ``true``/``false`` (:func:`typemap.json_types_of`) — or the NULL test
+    where NULL is a value (array elements, map values, JSON-backed
+    properties) — so its rules fold in Python.  A view the type never has
+    is a typed NULL.  ``json``: the text of a JSON-backed value, whose
+    JSON null is the null (the typed parse NULLs what it cannot coerce);
+    a JSON-backed string may hold an object or array the parse flattened
+    (its ``is_arr``/``is_obj`` raise), a JSON-backed struct hides its key
+    set (no members).  ``udf(expr, hint, test, on_null)``: a Python
+    predicate as a helper column, or a refusal inside a lambda."""
+
+    __slots__ = ("temporal", "exact_long", "udf", "_arr", "_obj", "_members")
+    _NO_VIEW = {"num": "DOUBLE", "lng": "BIGINT", "dec": "DECIMAL(38,0)",
+                "s": "STRING", "b": "BOOLEAN", "arr": "ARRAY<VARIANT>",
+                "obj": "MAP<STRING,VARIANT>"}
+
+    def __init__(self, expr: str | None, dtype, null_is_value=False, *,
+                 json: str | None = None, udf=None):
+        from pyspark.sql import types as T
+
+        from . import typemap
+
+        for view, sql_type in self._NO_VIEW.items():
+            setattr(self, view, f"CAST(NULL AS {sql_type})")
+        self.v = expr
+        self.present = "true" if expr is None else _Null(expr, negated=True)
+        self.vnull = (_Null(expr if json is None else json)
+                      if null_is_value else "false")
+        types = typemap.json_types_of(dtype)
+        value = _Null(expr, negated=True) if null_is_value else "true"
+        (self.is_num, self.is_bigint, self.is_str, self.is_bool, self._arr,
+         self._obj) = (value if t in types else "false" for t in (
+             "number", "integer", "string", "boolean", "array", "object"))
+        self.is_numlike = _or([self.is_num, self.is_bool])
+        self.is_intdec = "false"
+        self.temporal = typemap.is_temporal(dtype)
+        self.exact_long = "integer" in types
+        self._members = None
+        if "number" in types:
+            self.num = self.lng = expr
+        elif "boolean" in types:
+            self.b, self.num = expr, f"CAST({expr} AS DOUBLE)"
+        elif "string" in types:
+            self.s = expr
+            if self.temporal:
+                iso = _ISO_DATE if isinstance(dtype, T.DateType) else _ISO_TS
+                self.s = f"date_format({expr}, {sqlstr(iso)})"
+            if json is not None:
+                self._arr = self._obj = None
+        elif "array" in types:
+            self.arr, self._members = expr, dtype.elementType
+        elif json is None and isinstance(dtype, T.StructType):
+            self._members = {
+                f.name: (f.dataType, sqlident(f.name) if expr is None
+                         else f"{expr}.{sqlident(f.name)}")
+                for f in dtype.fields}
+        elif json is None and "object" in types \
+                and isinstance(dtype.keyType, T.StringType):
+            self.obj, self._members = expr, dtype.valueType
+        self.okeys = f"map_keys({self.obj})"
+        self.udf = None if udf is None else (
+            lambda hint, test, on_null=False: udf(self.s, hint, test, on_null))
+
+    @staticmethod
+    def _untyped():
+        from .compiler import PlanUnsupported
+
+        raise PlanUnsupported(
+            "a JSON-backed value typed as string (a recursive $ref, or a "
+            "schema of several types) may hold an object or array the "
+            "typed parse flattened; use engine='python'")
 
     @property
     def is_arr(self):
-        return f"startswith({self.sov}, 'ARRAY')"
+        return self._untyped() if self._arr is None else self._arr
 
     @property
     def is_obj(self):
-        return f"startswith({self.sov}, 'OBJECT')"
+        return self._untyped() if self._obj is None else self._obj
+
+    # ``_members``: a struct's fields as name -> (type, expr), NULL
+    # meaning absent; a map's value type; an array's element type; None
+    # where the true members are unknown
+
+    @property
+    def nkeys(self):
+        if isinstance(self._members, dict):
+            return ("(" + " + ".join(
+                f"CAST(({e} IS NOT NULL) AS INT)"
+                for _, e in self._members.values()) + ")"
+                if self._members else "0")
+        return None if self._members is None else f"size({self.obj})"
+
+    def has(self, key):
+        if isinstance(self._members, dict):
+            member = self._members.get(key)
+            return "false" if member is None else f"({member[1]} IS NOT NULL)"
+        return f"map_contains_key({self.obj}, {sqlstr(key)})"
+
+    def prop(self, key):
+        if isinstance(self._members, dict):
+            dtype, expr = self._members[key]
+            return _typed_views(expr, dtype)
+        return _typed_views(f"try_element_at({self.obj}, {sqlstr(key)})",
+                            self._members, null_is_value=True)
+
+    def item(self, i):
+        return _typed_views(f"try_element_at({self.arr}, {i + 1})",
+                            self._members, null_is_value=True)
+
+
+def _typed_views(expr, dtype, null_is_value=False, **kwargs) -> _Views:
+    """The views of a value of Spark type ``dtype``: a VARIANT keeps
+    its runtime type tag; any other type gets static facts."""
+    from pyspark.sql import types as T
+
+    if isinstance(dtype, T.VariantType):
+        return _Views(expr)
+    return _TypedViews(expr, dtype, null_is_value, **kwargs)
 
 
 class _PackCtx:
@@ -313,12 +438,37 @@ class _PackFrame:
         self.groups: dict = {}
 
 
+class _Null(str):
+    """``(x IS NULL)`` or ``(x IS NOT NULL)``: a test that is never NULL
+    itself, so it may fold against its negation — ``_and``/``_or``/
+    ``_not`` do that in Python, where a typed site's type facts meet."""
+
+    def __new__(cls, x: str, negated: bool = False):
+        self = super().__new__(cls, f"({x} IS {'NOT ' if negated else ''}NULL)")
+        self.x, self.negated = x, negated
+        return self
+
+    @property
+    def complement(self) -> "_Null":
+        return _Null(self.x, not self.negated)
+
+
 def _nf(x: str) -> str:
-    """NULL-as-false coalesce."""
-    return f"coalesce({x}, false)"
+    """NULL-as-false coalesce (a literal needs none)."""
+    return x if x in ("true", "false") else f"coalesce({x}, false)"
+
+
+def _complemented(parts) -> bool:
+    return any(isinstance(p, _Null) and p.complement in parts for p in parts)
 
 
 def _and(*parts: str) -> str:
+    """Conjunction folding literal ``true``/``false`` (and a NULL test
+    met by its negation) in Python, so a statically decided rule
+    disappears from the text.  Each part is one operand: parenthesized,
+    a comparison or a function call."""
+    if "false" in parts or _complemented(parts):
+        return "false"
     parts = [p for p in parts if p != "true"]
     if not parts:
         return "true"
@@ -326,7 +476,20 @@ def _and(*parts: str) -> str:
 
 
 def _or(parts) -> str:
-    return "(" + " OR ".join(parts) + ")" if parts else "false"
+    """Disjunction, folding like :func:`_and`."""
+    parts = list(parts)
+    if "true" in parts or _complemented(parts):
+        return "true"
+    parts = [p for p in parts if p != "false"]
+    if not parts:
+        return "false"
+    return parts[0] if len(parts) == 1 else "(" + " OR ".join(parts) + ")"
+
+
+def _not(x: str) -> str:
+    if isinstance(x, _Null):
+        return x.complement
+    return {"true": "false", "false": "true"}.get(x, f"NOT {x}")
 
 
 def _msg(name_sql: str, text: str, pass_only: bool = False) -> str:
@@ -362,8 +525,15 @@ class _ObjectKeys:
 
 _CANON_V = "__CANON_V__"
 
-# scalar JSON literals get_json_object cannot see (mirrors the typed
-# path's _kw_content_media_type literal_ok regex)
+_JSON_TYPES = ("null", "boolean", "number", "integer", "string", "array",
+               "object")
+
+# the keywords _scalar_triples emits, for every kind of site
+_SCALAR_KEYWORDS = frozenset({
+    "type", "enum", "const", "minimum", "maximum", "exclusiveMinimum",
+    "exclusiveMaximum", "multipleOf", "minLength", "maxLength", "pattern",
+    "format", "contentEncoding", "contentMediaType"})
+
 _JSON_LITERAL_RE = (r"^\s*(-?\d+(\.\d+)?([eE][+-]?\d+)?|true|false|null|\".*\")\s*$")
 
 
@@ -384,10 +554,7 @@ class _VariantSQLMixin:
     # evaluated over Spark 4 VariantType: the raw text parses once as
     # map<string,variant>, `schema_of_variant` recovers the exact JSON type
     # per value, and `try_variant_get` projects typed views.
-    _VARIANT_SUPPORTED = {
-        "type", "enum", "const", "minimum", "maximum", "exclusiveMinimum",
-        "exclusiveMaximum", "multipleOf", "minLength", "maxLength",
-        "pattern", "format",
+    _VARIANT_SUPPORTED = _SCALAR_KEYWORDS | {
         # combinators compose from scalar-subset branches (each branch
         # recursively compiled to triples; non-scalar branches raise
         # PlanUnsupported like any other hard keyword)
@@ -403,10 +570,6 @@ class _VariantSQLMixin:
         "minProperties", "maxProperties", "required", "dependencies",
         "properties", "patternProperties", "additionalProperties",
         "propertyNames",
-        # content keywords gate on the TRUE runtime string-ness of the
-        # value (the typed-string fallback would coerce scalars to text
-        # and wrongly fail them)
-        "contentEncoding", "contentMediaType",
     }
     _VARIANT_ANNOTATIONS = {
         "title", "description", "default", "examples", "$comment",
@@ -426,6 +589,15 @@ class _VariantSQLMixin:
     def _plan_too_large(self, message: str):
         from .compiler import PlanTooLarge
         raise PlanTooLarge(message)
+
+    @contextlib.contextmanager
+    def _v_based(self, uri: str):
+        """Resolve the ``$ref``s compiled inside against ``uri``."""
+        saved, self._v_base_uri = self._v_base_uri, uri
+        try:
+            yield
+        finally:
+            self._v_base_uri = saved
 
     def _vsql_var(self, hint: str = "x") -> str:
         """Fresh lambda-variable name (text world controls its names)."""
@@ -614,7 +786,6 @@ class _VariantSQLMixin:
         if cached is None:
             kvar = self._vsql_var("k")
             saved_stack = self._vref_stack
-            saved_base = self._v_base_uri
             self._vref_stack = stack
             self._vpack_frames.append(_PackFrame())
             try:
@@ -623,10 +794,10 @@ class _VariantSQLMixin:
                 lengths = []
                 for j, canon in enumerate(group.comp):
                     target, uri = self._vref_targets[canon]
-                    self._v_base_uri = uri
-                    triples = self._entry_triples_sql(
-                        target, f"{kvar}.nm", _Views(f"{kvar}.v"),
-                        ctx=ctx)
+                    with self._v_based(uri):
+                        triples = self._entry_triples_sql(
+                            target, f"{kvar}.nm", _Views(f"{kvar}.v"),
+                            ctx=ctx)
                     parts = self._violation_parts(triples, f"{kvar}.nm")
                     lengths.append(len(parts))
                     # per-TRIPLE violation slots, not just the first
@@ -646,7 +817,6 @@ class _VariantSQLMixin:
             finally:
                 self._vpack_frames.pop()
                 self._vref_stack = saved_stack
-                self._v_base_uri = saved_base
             cached = memo[mkey] = (kvar, tuple(lengths), body)
         return cached
 
@@ -789,46 +959,55 @@ class _VariantSQLMixin:
 
     # -- enum/const deep equality ------------------------------------------
 
-    def _member_match_sql(self, w: _Views, m) -> str:
-        """Type-strict deep equality of a VARIANT value against the
-        compile-time enum/const member ``m`` (reference draft04.py:
-        120-155 _enum_value_matches): bool is identity, numbers compare
-        across int/float but never bool, dicts need the exact key set
-        with recursively-matching values, lists exact length with
-        element-wise matches."""
+    def _member_match_sql(self, w: _Views, m, keyword: str) -> str:
+        """Type-strict deep equality of the value against the
+        compile-time ``enum``/``const`` member ``m`` (reference
+        draft04.py:120-155 _enum_value_matches): bool is identity,
+        numbers compare across int/float but never bool, dicts need the
+        exact key set with recursively-matching values, lists exact
+        length with element-wise matches."""
         if m is None:
             return w.vnull
         if isinstance(m, bool):
-            return f"({w.sov} = 'BOOLEAN' AND {w.b} = {str(m).lower()})"
+            return _and(w.is_bool, f"{w.b} = {str(m).lower()}")
         if isinstance(m, (int, float)):
             if (isinstance(m, int) or float(m).is_integer()) \
                     and -2 ** 63 <= int(m) <= 2 ** 63 - 1:
                 mi = int(m)
-                # integral member: exact — BIGINT values match as longs;
-                # DOUBLE values iff integral, in long range (the cast
-                # would clamp, not null, on overflow), equal after cast
-                dbl = (f"({w.is_num} AND NOT {w.is_bigint} "
-                       f"AND ({w.num} % 1.0D) = 0.0D "
-                       f"AND {w.num} >= {sqlnum(float(-2 ** 63))} "
-                       f"AND {w.num} < {sqlnum(float(2 ** 63))} "
-                       f"AND CAST({w.num} AS BIGINT) = {mi}L)")
-                return (f"(({w.is_bigint} AND {w.lng} = {mi}L) OR {dbl})")
-            return f"({w.is_num} AND {w.num} = {sqlnum(float(m))})"
+                # integral member: exact — long values match as longs;
+                # doubles iff integral, in long range, equal after the
+                # cast (try_cast: Catalyst may evaluate it before the
+                # range test, and an out-of-range CAST raises under ANSI)
+                dbl = _and(w.is_num, _not(w.is_bigint),
+                           f"({w.num} % 1.0D) = 0.0D",
+                           f"{w.num} >= {sqlnum(float(-2 ** 63))}",
+                           f"{w.num} < {sqlnum(float(2 ** 63))}",
+                           f"try_cast({w.num} AS BIGINT) = {mi}L")
+                return _or([_and(w.is_bigint, f"{w.lng} = {mi}L"), dbl])
+            return _and(w.is_num, f"{w.num} = {sqlnum(float(m))}")
         if isinstance(m, str):
-            return f"({w.sov} = 'STRING' AND {w.s} = {sqlstr(m)})"
-        if isinstance(m, dict):
-            parts = [w.is_obj, f"size({w.obj}) = {len(m)}L"]
-            for k, item in m.items():
-                child = _Views(f"try_element_at({w.obj}, {sqlstr(k)})")
-                parts.append(f"map_contains_key({w.obj}, {sqlstr(k)})")
-                parts.append(self._member_match_sql(child, item))
-            return "(" + " AND ".join(parts) + ")"
+            return _and(w.is_str, f"{w.s} = {sqlstr(m)}")
         if isinstance(m, (list, tuple)):
-            parts = [w.is_arr, f"size({w.arr}) = {len(m)}L"]
-            for i, item in enumerate(m):
-                child = _Views(f"try_element_at({w.arr}, {i + 1})")
-                parts.append(self._member_match_sql(child, item))
-            return "(" + " AND ".join(parts) + ")"
+            if w.is_arr == "false":
+                return "false"
+            return _and(w.is_arr, f"size({w.arr}) = {len(m)}L", *(
+                self._member_match_sql(w.item(i), item, keyword)
+                for i, item in enumerate(m)))
+        if isinstance(m, dict):
+            if w.is_obj == "false":
+                return "false"
+            if w.nkeys is None:
+                self._plan_unsupported(
+                    f"{keyword} with an object member over a JSON-backed "
+                    "object: its parsed struct does not show the true key "
+                    "set; use engine='python'")
+            parts = [w.is_obj, f"{w.nkeys} = {len(m)}L"]
+            for k, item in m.items():
+                if w.has(k) == "false":
+                    return "false"
+                parts += [w.has(k),
+                          self._member_match_sql(w.prop(k), item, keyword)]
+            return _and(*parts)
         raise SchemaDefinitionError(
             f"enum/const member of unsupported type: {type(m).__name__}")
 
@@ -1069,23 +1248,278 @@ class _VariantSQLMixin:
             fail = (f"size({ok.keys}) > 0" if ok.keys is not None
                     else _or(list(ok.fields.values())))
         elif ok.keys is not None:
-            # keys are KNOWN strings: str_mode views freeze the type tag
-            # to 'STRING' so the non-string branches fold away
+            # keys are KNOWN strings: typed string views, so the
+            # non-string branches fold away in Python
+            from pyspark.sql import types as T
+
             k = self._vsql_var("k")
             name_pass = self._branch_pass_sql(
-                names_definition, "''", _Views(k, str_mode=True))
+                names_definition, "''", _TypedViews(k, T.StringType()))
             fail = f"NOT {_nf(f'forall({ok.keys}, {k} -> {name_pass})')}"
         else:
-            # static keys: validate the names at plan time
-            from ..rowcheck import compile_row_validator
+            # static keys: validate the names at plan time, under the
+            # plan's store (the root's definitions, its handlers) and
+            # formats, as the row-level compile does
+            from ..rowcheck.compiler import RowValidator
+            from ..rowcheck.compiler import _Compiler as _RowCompiler
 
-            name_validator = compile_row_validator(names_definition)
+            names = RowValidator(_RowCompiler(self.store, self.dialect, {
+                "formats": self.custom_formats,
+                "use_formats": self.use_formats,
+            }).compile_node(names_definition,
+                            self._v_base_uri or self.store.root_uri()),
+                fast_fail=False)
             fail = _or([p for key, p in ok.fields.items()
-                        if name_validator.collect(key)])
+                        if names.collect(key)])
         if fail == "false":
             return []
         return [("propertyNames", _msg(name_sql, message, pass_only),
                  _and(ok.gate, fail))]
+
+    # -- scalar keywords: one emitter each, for every site ---------------
+    #
+    # Each reads only the value's views (_Views / _TypedViews): variant
+    # values, typed columns, struct fields, array elements, map values
+    # and propertyNames keys all come here.  A typed site's facts are
+    # literals, so its statically decided rules fold away in Python and
+    # its text stays free of variant functions.  What differs per world
+    # is a fact of the view — never a test of which world called.
+
+    # keyword -> (fail-op, integer-edge transform, message); for an
+    # integer value v: v < b <=> v < ceil(b), v <= b <=> v <= floor(b),
+    # v > b <=> v > floor(b), v >= b <=> v >= ceil(b)
+    _BOUNDS = {
+        "minimum": ("<", math.ceil, "must be bigger than or equal to {}"),
+        "maximum": (">", math.floor, "must be smaller than or equal to {}"),
+        "exclusiveMinimum": ("<=", math.floor, "must be bigger than {}"),
+        "exclusiveMaximum": (">=", math.ceil, "must be smaller than {}"),
+    }
+    _ITEM_COUNTS = {
+        "minItems": ("<", "must contain at least {} items"),
+        "maxItems": (">", "must contain less than or equal to {} items"),
+    }
+    _LENGTHS = {
+        "minLength": ("<", "must be longer than or equal to {} characters"),
+        "maxLength": (">", "must be shorter than or equal to {} characters"),
+    }
+
+    def _type_pass(self, w: _Views, t: str) -> str:
+        if t != "integer":
+            return {"null": w.vnull, "boolean": w.is_bool, "string": w.is_str,
+                    "number": w.is_num}.get(t) or (
+                w.is_arr if t == "array" else w.is_obj)
+        if self.integral_float_is_int:
+            # modulo, not floor(): floor(double) -> LONG overflows past
+            # 2^63 (1e308 is integral)
+            return _or([w.is_bigint, _and(w.is_num, _not(w.is_bigint),
+                                          f"({w.num} % 1.0D) = 0.0D")])
+        # draft-04 strict: json.loads("3.0") is a FLOAT, never an int —
+        # but the variant parser canonicalizes "3.0" to DECIMAL(1,0),
+        # erasing the distinction.  A DECIMAL(p,0) tag can only come from
+        # (a) a decimal-point/exponent literal, or (b) a plain integer too
+        # big for BIGINT (>= 2^63, p >= 19) — so scale-0 decimals count
+        # as integers only past the long range.  Documented corner: a
+        # >=2^63 integral written WITH a decimal point ("9.3e18" style) is
+        # indistinguishable and passes.
+        return _or([w.is_bigint, _and(
+            w.is_intdec, f"abs({w.num}) >= 9.223372036854776E18D")])
+
+    def _py_predicate(self, w: _Views, hint, test, on_null=False) -> str:
+        """A Python predicate over the string value: a helper column the
+        rule text names (``regex_engine='python'``, callable formats)."""
+        if w.udf is None:
+            self._plan_unsupported(
+                "Python-evaluated predicates (regex_engine='python', "
+                "callable formats) cannot check variant values; use "
+                "engine='python'")
+        return w.udf(hint, test, on_null)
+
+    def _regex_fail(self, w: _Views, pattern: str, anchored: bool) -> str:
+        """A string that does not match: ``.match`` semantics when
+        ``anchored`` (formats), else ``.search`` (``pattern``)."""
+        if self.regex_engine == "python":
+            find = (re.compile(pattern).match if anchored
+                    else re.compile(pattern).search)
+            match = self._py_predicate(w, "re",
+                                       lambda v: find(v) is not None)
+        else:
+            java = jvm_pattern(pattern)
+            if anchored and not java.startswith("^"):
+                java = "^(?:" + java + ")"
+            match = f"rlike({w.s}, {sqlstr(java)})"
+        return _and(w.is_str, _not(match))
+
+    def _bound_fail(self, op, edge, b, w: _Views) -> str:
+        # compare the literal the reference's generated source re-parses
+        # (ref_numeric); the message keeps str(b)
+        b = ref_numeric(b)
+        dbl_fail = _and(w.is_numlike, _not(w.is_bigint), _not(w.is_intdec),
+                        f"{w.num} {op} {sqlnum(b)}")
+        # exact long-side comparison for long values — the double view
+        # rounds 2^53+ magnitudes across the bound; and exact for JSON
+        # integers BEYOND long range too (variant tag DECIMAL(p,0)).  A
+        # bound outside a value class's range puts every value on one
+        # side: the constant
+        try:
+            bi = int(edge(b))
+        except (OverflowError, ValueError):  # infinite bound
+            bi = None
+        const = str((b > 0) == (op in ("<", "<="))).lower()
+        big_fail = (_and(w.is_bigint, f"{w.lng} {op} {bi}L")
+                    if bi is not None and -2 ** 63 <= bi <= 2 ** 63 - 1
+                    else _and(w.is_bigint, const))
+        dec_fail = (_and(w.is_intdec,
+                         f"{w.dec} {op} CAST('{bi}' AS DECIMAL(38,0))")
+                    if bi is not None and len(str(abs(bi))) <= 38
+                    else _and(w.is_intdec, const))
+        return _or([dbl_fail, big_fail, dec_fail])
+
+    def _multiple_of_triples(self, divisor, w: _Views, msg):
+        # Decimal divisors compare as the reference's re-parsed source
+        # literal; the message keeps str(original)
+        message = msg(f"must be multiple of {divisor}")
+        divisor = ref_numeric(divisor)
+        if w.exact_long and isinstance(divisor, int):
+            # exact long modulo — documented deliberate divergence from
+            # the reference's float true-division past 2^53 on TYPED
+            # integer columns (tests/test_divergences.py)
+            return [("multipleOf", message,
+                     f"(({w.lng} % {sqlnum(divisor)}) != 0L)")]
+        # the DOUBLE view for every other number, mirroring the
+        # reference exactly:
+        # - int divisor: q = value / divisor via float TRUE DIVISION,
+        #   invalid iff q is non-integral (any |q| >= 2^52 is integral
+        #   and VALID, draft04.py:366)
+        # - float divisor: Decimal(repr(value)) path -> decimal cast
+        #   (try_cast + double-fmod fallback: magnitudes past
+        #   Decimal(38,18) would raise under ANSI)
+        fdiv = sqlnum(float(divisor))
+        if isinstance(divisor, int):
+            fail = f"(({w.num} / {fdiv}) % 1.0D) != 0.0D"
+        else:
+            dec = "DECIMAL(38,18)"
+            div = divisor if isinstance(divisor, decimal.Decimal) \
+                else repr(float(divisor))
+            fail = (f"coalesce((try_cast({w.num} AS {dec}) % "
+                    f"CAST('{div}' AS {dec})) != CAST(0 AS {dec}), "
+                    f"({w.num} % {fdiv}) != 0.0D)")
+        return [("multipleOf", message, _and(w.is_numlike, fail)),
+                ("multipleOf", "'inifinity reached'", _and(
+                    w.is_numlike, f"({w.num} / {fdiv}) = double('Infinity')"))]
+
+    def _format_fail(self, fmt, w: _Views):
+        """(message text, fail) of ``format``; None where it checks
+        nothing."""
+        if fmt in self.custom_formats:
+            custom = self.custom_formats[fmt]
+            if isinstance(custom, str):
+                return f"must be {fmt}", self._regex_fail(w, custom, True)
+            match = self._py_predicate(w, "fmt", custom)
+            return f"must be {fmt}", _and(w.is_str, _not(match))
+        if fmt in self.format_table:
+            if w.temporal and fmt in ("date-time", "date"):
+                return None  # a real timestamp/date always renders validly
+            return f"must be {fmt}", self._regex_fail(
+                w, self.format_table[fmt], True)
+        if fmt == "regex" and w.udf is not None:
+            # a variant value feeds no helper column: format "regex"
+            # goes unchecked there, a known gap
+            def compiles(v):
+                try:
+                    re.compile(v)
+                    return True
+                except Exception:
+                    return False
+
+            match = w.udf("regex", compiles, on_null=True)
+            return "must be a valid regex", _and(w.is_str, _not(match))
+        return None
+
+    def _item_count_triples(self, definition, keyword, is_arr, arr,
+                            name_sql, pass_only=False):
+        """``minItems``/``maxItems`` over an array value ``arr``, where
+        ``is_arr`` holds (no lambda: typed and variant sites share it)."""
+        b = definition[keyword]
+        if not isinstance(b, (int, float)):
+            raise SchemaDefinitionError(f"{keyword} must be a number")
+        op, text = self._ITEM_COUNTS[keyword]
+        return [(keyword, _msg(name_sql, text.format(b), pass_only),
+                 _and(is_arr, f"size({arr}) {op} {sqlnum(b)}"))]
+
+    def _scalar_triples(self, keyword, definition, name_sql, w: _Views,
+                        pass_only=False):
+        """The triples of one scalar keyword (``_SCALAR_KEYWORDS``) over
+        the value's views; a triple that can never fail is dropped.  The
+        definition is checked first, also where the keyword is vacuous."""
+        def msg(text):
+            return _msg(name_sql, text, pass_only)
+
+        value = definition[keyword]
+        if keyword == "type":
+            types = value if isinstance(value, list) else [value]
+            if not all(t in _JSON_TYPES for t in types):
+                raise SchemaDefinitionError("Unknown type")
+            ok = _or([self._type_pass(w, t) for t in types])
+            out = [("type", msg("must be " + " or ".join(types)), _not(ok))]
+        elif keyword in ("enum", "const"):
+            if keyword == "enum" and not isinstance(value, (list, tuple)):
+                raise SchemaDefinitionError("enum must be an array")
+            text = (f"must be one of {schema_value_repr(value)}"
+                    if keyword == "enum" else "must be same as const "
+                    f"definition: {schema_value_repr(value)}")
+            ok = _or([self._member_match_sql(w, m, keyword) for m in
+                      (value if keyword == "enum" else [value])])
+            out = [(keyword, msg(text), _not(ok))]
+        elif keyword in self._BOUNDS or keyword == "multipleOf":
+            if not isinstance(value, (int, float, decimal.Decimal)):
+                raise SchemaDefinitionError(
+                    f"{keyword} must be an integer, a float or a decimal"
+                    if keyword.startswith("exclusive") else
+                    f"{keyword} must be a number")
+            if keyword == "multipleOf":
+                out = self._multiple_of_triples(value, w, msg)
+            else:
+                # minimum/maximum turn exclusive under the draft-04 truthy
+                # modifier (reference draft04.py:339, inherited by later
+                # dialects)
+                modifier = "exclusive" + keyword[0].upper() + keyword[1:]
+                op, edge, text = self._BOUNDS[
+                    modifier if modifier in self._BOUNDS
+                    and definition.get(modifier) else keyword]
+                out = [(keyword, msg(text.format(value)),
+                        self._bound_fail(op, edge, value, w))]
+        elif keyword in self._LENGTHS:
+            if not isinstance(value, (int, float)):
+                raise SchemaDefinitionError(f"{keyword} must be a number")
+            op, text = self._LENGTHS[keyword]
+            out = [(keyword, msg(text.format(value)),
+                    _and(w.is_str, f"length({w.s}) {op} {sqlnum(value)}"))]
+        elif keyword == "pattern":
+            out = [("pattern", msg(f"must match pattern {value}"),
+                    self._regex_fail(w, _UNESCAPED_DOLLAR.sub(r"\\Z", value),
+                                     anchored=False))]
+        elif keyword == "format":
+            checked = self._format_fail(value, w) if self.use_formats \
+                else None
+            out = [("format", msg(checked[0]), checked[1])] if checked \
+                else []
+        elif keyword == "contentEncoding":
+            # the reference runs base64.b64decode WITHOUT validate:
+            # non-alphabet chars are DISCARDED, then the filtered length
+            # must pad to a multiple of 4 — Spark's try_to_binary alone is
+            # laxer (accepts 'abc'), so mirror the filter + padding check
+            filt = f"regexp_replace({w.s}, '[^A-Za-z0-9+/=]', '')"
+            out = [(None, msg("must be encoded by base64"), _and(
+                w.is_str, f"((length({filt}) % 4L) != 0L "
+                          f"OR try_to_binary({filt}, 'base64') IS NULL)"))
+                   ] if value == "base64" else []
+        else:  # contentMediaType; scalar JSON literals get_json_object
+            # cannot see pass by the literal regex
+            out = [(None, msg("must be valid JSON"), _and(
+                w.is_str, f"get_json_object({w.s}, '$') IS NULL",
+                f"NOT rlike({w.s}, {sqlstr(_JSON_LITERAL_RE)})"))
+                   ] if value == "application/json" else []
+        return [t for t in out if t[2] != "false"]
 
     # -- the keyword table ---------------------------------------------------
 
@@ -1136,14 +1570,11 @@ class _VariantSQLMixin:
                                             ctx, w, pass_only)
             self._vref_spend()
             self._vref_stack.append(canonical)
-            saved = self._v_base_uri
-            self._v_base_uri = doc_uri
             try:
-                expanded = self._entry_triples_sql(target, name_sql, w,
-                                                   pass_only=pass_only,
-                                                   ctx=ctx)
+                with self._v_based(doc_uri):
+                    expanded = self._entry_triples_sql(
+                        target, name_sql, w, pass_only=pass_only, ctx=ctx)
             finally:
-                self._v_base_uri = saved
                 self._vref_stack.pop()
             # account each expansion's text against the size budget —
             # recursion blowup shows up here, where it is created
@@ -1292,226 +1723,12 @@ class _VariantSQLMixin:
                 "CAST(NULL AS STRING)",
                 f"({w.is_obj} AND {_nf(f'size({failing}) > 0')})"))
 
-        def type_pass(t):
-            if t == "null":
-                return w.vnull
-            if t == "boolean":
-                return f"({w.sov} = 'BOOLEAN')"
-            if t == "string":
-                return w.is_str
-            if t == "integer":
-                if self.integral_float_is_int:
-                    # modulo, not floor(): floor(double) -> LONG
-                    # overflows past 2^63 (1e308 is integral)
-                    return (f"({w.is_num} AND ({w.num} % 1.0D) = 0.0D)")
-                # draft-04 strict: json.loads("3.0") is a FLOAT, never an
-                # int — but the variant parser canonicalizes "3.0" to
-                # DECIMAL(1,0), erasing the distinction.  A DECIMAL(p,0)
-                # tag can only come from (a) a decimal-point/exponent
-                # literal, or (b) a plain integer too big for BIGINT
-                # (>= 2^63, p >= 19) — so scale-0 decimals count as
-                # integers only past the long range.  Documented corner:
-                # a >=2^63 integral written WITH a decimal point
-                # ("9.3e18" style) is indistinguishable and passes.
-                return (f"({w.sov} = 'BIGINT' OR "
-                        f"(startswith({w.sov}, 'DECIMAL') AND "
-                        f"{w.sov} RLIKE ',0\\\\)$' AND "
-                        f"abs({w.num}) >= 9.223372036854776E18D))")
-            if t == "number":
-                return w.is_num
-            if t == "array":
-                return w.is_arr
-            if t == "object":
-                return w.is_obj
-            raise SchemaDefinitionError("Unknown type")
-
-        def regex_fail(pattern, anchored):
-            """is_str & ~match — PlanUnsupported under the python regex
-            engine (a pandas UDF cannot live inside HOF lambdas; the
-            python engine is the exact-parity path)."""
-            if self.regex_engine == "python":
-                self._plan_unsupported(
-                    "python-regex parity over variant values; use "
-                    "engine='python'")
-            java = jvm_pattern(pattern)
-            if anchored and not java.startswith("^"):
-                java = "^(?:" + java + ")"
-            match = f"rlike({w.s}, {sqlstr(java)})"
-            return f"({w.is_str} AND NOT {_nf(match)})"
-
-        _BOUND_OPS = {
-            # fail-op, integer-edge transform (for an integer value v:
-            # v < b <=> v < ceil(b); v <= b <=> v <= floor(b);
-            # v > b <=> v > floor(b); v >= b <=> v >= ceil(b))
-            "lt": ("<", math.ceil),
-            "le": ("<=", math.floor),
-            "gt": (">", math.floor),
-            "ge": (">=", math.ceil),
-        }
-
-        def bound(keyword, kind, template):
-            b = definition[keyword]
-            from decimal import Decimal
-            if not isinstance(b, (int, float, Decimal)):
-                raise SchemaDefinitionError(f"{keyword} must be a number")
-            op, edge = _BOUND_OPS[kind]
-            # compare the literal the reference's generated source
-            # re-parses (ref_numeric); the message keeps str(b)
-            b_msg, b = b, ref_numeric(b)
-            lit_b = sqlnum(int(b) if isinstance(b, bool) else b)
-            dbl_fail = (f"({w.is_numlike} AND NOT {w.is_bigint} "
-                        f"AND NOT {w.is_intdec} AND {w.num} {op} {lit_b})")
-            # exact long-side comparison for BIGINT values — the double
-            # view rounds 2^53+ magnitudes across the bound
-            try:
-                bi = int(edge(b))
-            except (OverflowError, ValueError):  # infinite bound
-                bi = None
-            # the "every value sits on one side" constant for bounds
-            # outside a value class's range
-            high = b > 0
-            const = str(high if kind in ("lt", "le") else not high).lower()
-            if bi is not None and -2 ** 63 <= bi <= 2 ** 63 - 1:
-                big_fail = f"({w.is_bigint} AND {w.lng} {op} {bi}L)"
-            else:
-                big_fail = f"({w.is_bigint} AND {const})"
-            # exact comparison for JSON integers BEYOND long range too
-            # (variant tag DECIMAL(p,0)): the double view rounds across
-            # the bound exactly as it does for 2^53..2^63 longs
-            dv = f"try_variant_get({w.v}, '$', 'decimal(38,0)')"
-            if bi is not None and len(str(abs(bi))) <= 38:
-                dec_fail = (f"({w.is_intdec} AND {dv} {op} "
-                            f"CAST('{bi}' AS DECIMAL(38,0)))")
-            else:
-                dec_fail = f"({w.is_intdec} AND {const})"
-            return (keyword, msg(template.format(b_msg)),
-                    f"({dbl_fail} OR {big_fail} OR {dec_fail})")
-
         for keyword in self.keyword_order:
             if keyword not in definition:
                 continue
-            if keyword == "type":
-                declared = definition["type"]
-                types = declared if isinstance(declared, list) \
-                    else [declared]
-                for t in types:
-                    if t not in ("null", "boolean", "number", "integer",
-                                 "string", "array", "object"):
-                        raise SchemaDefinitionError("Unknown type")
-                ok = " OR ".join(type_pass(t) for t in types)
-                out.append(("type", msg("must be " + " or ".join(types)),
-                            f"NOT ({ok})"))
-            elif keyword == "enum":
-                enum = definition["enum"]
-                if not isinstance(enum, (list, tuple)):
-                    raise SchemaDefinitionError("enum must be an array")
-                ok = " OR ".join(self._member_match_sql(w, m)
-                                 for m in enum) or "false"
-                out.append(("enum",
-                            msg(f"must be one of {schema_value_repr(enum)}"),
-                            f"NOT ({ok})"))
-            elif keyword == "const":
-                const = definition["const"]
-                out.append(("const",
-                            msg("must be same as const definition: "
-                                f"{schema_value_repr(const)}"),
-                            f"NOT ({self._member_match_sql(w, const)})"))
-            elif keyword == "minimum":
-                # exclusiveMinimum as the draft-04 truthy modifier
-                # (reference draft04.py:339, inherited by later dialects)
-                if bool(definition.get("exclusiveMinimum", False)):
-                    out.append(bound("minimum", "le",
-                                     "must be bigger than {}"))
-                else:
-                    out.append(bound("minimum", "lt",
-                                     "must be bigger than or equal to {}"))
-            elif keyword == "maximum":
-                if bool(definition.get("exclusiveMaximum", False)):
-                    out.append(bound("maximum", "ge",
-                                     "must be smaller than {}"))
-                else:
-                    out.append(bound("maximum", "gt",
-                                     "must be smaller than or equal "
-                                     "to {}"))
-            elif keyword == "exclusiveMinimum":
-                out.append(bound("exclusiveMinimum", "le",
-                                 "must be bigger than {}"))
-            elif keyword == "exclusiveMaximum":
-                out.append(bound("exclusiveMaximum", "ge",
-                                 "must be smaller than {}"))
-            elif keyword == "multipleOf":
-                from decimal import Decimal
-                divisor = definition["multipleOf"]
-                if not isinstance(divisor, (int, float, Decimal)):
-                    raise SchemaDefinitionError(
-                        "multipleOf must be a number")
-                # Decimal divisors compare as the reference's re-parsed
-                # source literal; the message keeps str(original)
-                msg_divisor, divisor = divisor, ref_numeric(divisor)
-                # deliberately the DOUBLE view for every numeric variant,
-                # including BIGINT, mirroring the reference exactly:
-                # - int divisor: q = value / divisor via float TRUE
-                #   DIVISION, invalid iff q is non-integral (any
-                #   |q| >= 2^52 is integral and VALID, draft04.py:366)
-                # - float divisor: Decimal(repr(value)) path -> decimal
-                #   cast (try_cast + double-fmod fallback)
-                if isinstance(divisor, (int, bool)) \
-                        and not isinstance(divisor, float):
-                    q = f"({w.num} / {sqlnum(float(divisor))})"
-                    fail = f"({w.is_numlike} AND ({q} % 1.0D) != 0.0D)"
-                else:
-                    dec = "DECIMAL(38,18)"
-                    div = divisor if isinstance(divisor, Decimal) \
-                        else repr(float(divisor))
-                    fail = (f"({w.is_numlike} AND coalesce("
-                            f"(try_cast({w.num} AS {dec}) % "
-                            f"CAST('{div}' AS {dec})) != CAST(0 AS {dec}), "
-                            f"({w.num} % {sqlnum(float(divisor))}) "
-                            "!= 0.0D))")
-                out.append(("multipleOf",
-                            msg(f"must be multiple of {msg_divisor}"),
-                            fail))
-                out.append(("multipleOf", "'inifinity reached'",
-                            f"({w.is_numlike} AND ({w.num} / "
-                            f"{sqlnum(float(divisor))}) = "
-                            "double('Infinity'))"))
-            elif keyword == "minLength":
-                b = definition["minLength"]
-                out.append(("minLength",
-                            msg(f"must be longer than or equal to {b} "
-                                "characters"),
-                            f"({w.is_str} AND length({w.s}) "
-                            f"< {sqlnum(b)})"))
-            elif keyword == "maxLength":
-                b = definition["maxLength"]
-                out.append(("maxLength",
-                            msg(f"must be shorter than or equal to {b} "
-                                "characters"),
-                            f"({w.is_str} AND length({w.s}) "
-                            f"> {sqlnum(b)})"))
-            elif keyword == "pattern":
-                pattern = definition["pattern"]
-                fixed = _UNESCAPED_DOLLAR.sub(r"\\Z", pattern)
-                out.append(("pattern",
-                            msg(f"must match pattern {pattern}"),
-                            regex_fail(fixed, anchored=False)))
-            elif keyword == "format":
-                if not self.use_formats:
-                    continue
-                fmt = definition["format"]
-                regex = None
-                if fmt in self.custom_formats and \
-                        isinstance(self.custom_formats[fmt], str):
-                    regex = self.custom_formats[fmt]
-                elif fmt in self.custom_formats:
-                    self._plan_unsupported(
-                        f"callable custom format {fmt!r} over undeclared "
-                        "keys; use engine='python'")
-                elif fmt in self.format_table:
-                    regex = self.format_table[fmt]
-                if regex is not None:
-                    out.append(("format", msg(f"must be {fmt}"),
-                                regex_fail(regex, anchored=True)))
+            if keyword in _SCALAR_KEYWORDS:
+                out.extend(self._scalar_triples(keyword, definition,
+                                                name_sql, w, pass_only))
             elif keyword == "allOf":
                 # reference inlines allOf sub-blocks: inner keywords
                 # surface with their own rules/messages (draft04.py:173)
@@ -1548,14 +1765,7 @@ class _VariantSQLMixin:
                 sub = definition["not"]
                 if sub is True:
                     out.append(("not", msg("must not be there"), "true"))
-                elif sub is False:
-                    pass
-                elif isinstance(sub, dict) and not sub:
-                    out.append(("not",
-                                msg("must NOT match a disallowed "
-                                    "definition"),
-                                "true"))
-                else:
+                elif sub is not False:
                     out.append(("not",
                                 msg("must NOT match a disallowed "
                                     "definition"),
@@ -1573,23 +1783,9 @@ class _VariantSQLMixin:
                         pass_only=pass_only, ctx=ctx):
                     out.append((rid, message,
                                 f"(NOT {if_pass} AND {fail})"))
-            elif keyword == "minItems":
-                b = definition["minItems"]
-                if not isinstance(b, (int, float)):
-                    raise SchemaDefinitionError("minItems must be a number")
-                out.append(("minItems",
-                            msg(f"must contain at least {b} items"),
-                            f"({w.is_arr} AND size({w.arr}) "
-                            f"< {sqlnum(b)})"))
-            elif keyword == "maxItems":
-                b = definition["maxItems"]
-                if not isinstance(b, (int, float)):
-                    raise SchemaDefinitionError("maxItems must be a number")
-                out.append(("maxItems",
-                            msg(f"must contain less than or equal to {b} "
-                                "items"),
-                            f"({w.is_arr} AND size({w.arr}) "
-                            f"> {sqlnum(b)})"))
+            elif keyword in self._ITEM_COUNTS:
+                out.extend(self._item_count_triples(
+                    definition, keyword, w.is_arr, w.arr, name_sql, pass_only))
             elif keyword == "uniqueItems":
                 if definition["uniqueItems"]:
                     x = self._vsql_var()
@@ -1725,26 +1921,6 @@ class _VariantSQLMixin:
                         first_failing_entry(
                             lambda k, _j=java: f"rlike({k}, {sqlstr(_j)})",
                             sub, "patternProperties")
-            elif keyword == "contentEncoding":
-                if definition["contentEncoding"] == "base64":
-                    # the reference runs base64.b64decode WITHOUT
-                    # validate: non-alphabet chars are DISCARDED, then
-                    # the filtered length must pad to a multiple of 4 —
-                    # Spark's try_to_binary alone is laxer (accepts
-                    # 'abc'), so mirror the filter + padding check
-                    filt = (f"regexp_replace({w.s}, "
-                            "'[^A-Za-z0-9+/=]', '')")
-                    out.append((
-                        None, msg("must be encoded by base64"),
-                        f"({w.is_str} AND ((length({filt}) % 4L) != 0L "
-                        f"OR try_to_binary({filt}, 'base64') IS NULL))"))
-            elif keyword == "contentMediaType":
-                if definition["contentMediaType"] == "application/json":
-                    lit_ok = (f"rlike({w.s}, {sqlstr(_JSON_LITERAL_RE)})")
-                    out.append((
-                        None, msg("must be valid JSON"),
-                        f"({w.is_str} AND get_json_object({w.s}, '$') "
-                        f"IS NULL AND NOT {lit_ok})"))
             elif keyword == "propertyNames":
                 out.extend(self._property_names_triples(
                     definition, facts, name_sql, pass_only))

@@ -48,9 +48,9 @@ def _to_json_value(value, dtype):
     return value
 
 
-def assert_matches_rowcheck(plan, df, schema, limit=500):
+def assert_matches_rowcheck(plan, df, schema, limit=500, **options):
     applied = plan.apply(df).limit(limit).collect()
-    validator = ssg.compile(schema, fast_fail=False)
+    validator = ssg.compile(schema, fast_fail=False, **options)
     mismatches = []
     for row in applied:
         data = {}
@@ -350,3 +350,42 @@ def test_numeric_keywords_on_booleans(spark, keyword, bounds):
                 want = [(e.rule, e.name, e.message) for e in validator.collect(data)]
                 have = [(v["rule"], v["name"], v["message"]) for v in out["violations"]]
                 assert (out["verdict"], have[:1]) == (not want, want[:1]), (schema, data)
+
+
+@pytest.mark.parametrize("schema,dtype,values", [
+    ({"const": {"a": 1}},
+     T.StructType([T.StructField("a", T.LongType())]),
+     [(1,), (2,), (None,)]),
+    ({"enum": [{"a": 1}, {"b": 2}]},
+     T.MapType(T.StringType(), T.LongType()),
+     [{"a": 1}, {"b": 2}, {"a": 1, "b": 2}, {"a": None}, {}]),
+    ({"const": [{"a": 1}]},
+     T.ArrayType(T.StructType([T.StructField("a", T.LongType())])),
+     [[(1,)], [(2,)], [(1,), (1,)], [None], []]),
+], ids=["struct", "map", "array-of-struct"])
+def test_typed_container_members_match_rowcheck(spark, schema, dtype, values):
+    # an object or array enum/const member compares member by member
+    # over the typed value: key set, then each value, type-strictly
+    spark_schema = T.StructType([T.StructField("o", dtype)])
+    df = spark.createDataFrame([(v,) for v in values], spark_schema)
+    wrapper = {"type": "object", "properties": {"o": schema}}
+    assert_matches_rowcheck(ssg.compile_plan(wrapper, spark_schema), df,
+                            wrapper)
+
+
+@pytest.mark.parametrize("schema,options", [
+    ({"definitions": {"short": {"maxLength": 1}},
+      "propertyNames": {"$ref": "#/definitions/short"}}, {}),
+    ({"propertyNames": {"format": "lower"}},
+     {"formats": {"lower": "^[a-z]$"}}),
+], ids=["root-definitions", "custom-format"])
+def test_static_property_names_match_rowcheck(spark, schema, options):
+    # the field names of a typed table are checked at compile time, under
+    # the plan's own definitions and formats
+    spark_schema = T.StructType([T.StructField("ab", T.LongType()),
+                                 T.StructField("c", T.LongType())])
+    df = spark.createDataFrame([(1, 2), (None, 2), (None, None)],
+                               spark_schema)
+    plan = ssg.compile_plan(schema, spark_schema, **options)
+    assert plan.rules
+    assert_matches_rowcheck(plan, df, schema, **options)

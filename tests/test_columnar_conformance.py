@@ -22,6 +22,12 @@ the value (the columnar model: a typed column, validated in place).
 ``None`` values are routed through the JSON-column path instead, where an
 explicit null is distinguishable from an absent column (columns follow
 NULL-means-absent by design).
+
+Each case runs twice: against the reference (skipped by name where the
+oracle is absent) and, live, against the row-level validator (rowcheck),
+whose verdict and first rule id the columnar engine must give on every
+case — typed columns reach the same scalar keyword emitters as variant
+values, so these cases pin each typed site kind by kind.
 """
 
 import json
@@ -32,6 +38,7 @@ from pyspark.sql import types as T
 import spark_schema_guard as ssg
 from spark_schema_guard.columnar.compiler import PlanUnsupported
 from spark_schema_guard.jsoncol import validate_json_column
+from spark_schema_guard.rowcheck import compile_row_validator
 
 D6 = "http://json-schema.org/draft-06/schema"
 D7 = "http://json-schema.org/draft-07/schema"
@@ -339,3 +346,53 @@ def test_columnar_null_conformance_via_json(spark, reference, schema, value):
         f"for {schema!r} / {value!r}: {row['violations']}")
     if not valid and row["violations"][0]["rule"] is not None:
         assert row["violations"][0]["rule"] == rule
+
+
+# --- live half: the columnar engine against rowcheck, no oracle needed ----
+
+def _wrap(schema):
+    """The case schema as the property ``v`` of an object schema."""
+    wrapper = {"type": "object", "properties": {
+        "v": {k: v for k, v in schema.items()
+              if k not in ("$schema", "definitions")}}}
+    for k in ("$schema", "definitions"):
+        if k in schema:
+            wrapper[k] = schema[k]
+    return wrapper
+
+
+def _rowcheck_outcome(wrapper, doc):
+    """(valid, first rule) according to the row-level validator."""
+    errors = compile_row_validator(wrapper, fast_fail=False).collect(doc)
+    return (not errors, errors[0].rule if errors else None)
+
+
+def _columnar_outcome(row):
+    violations = row["violations"]
+    return (row["verdict"], violations[0]["rule"] if violations else None)
+
+
+@pytest.mark.parametrize("schema,value", CASES,
+                         ids=[f"case{i}" for i in range(len(CASES))])
+def test_columnar_keyword_conformance_live(spark, schema, value):
+    wrapper = _wrap(schema)
+    try:
+        df_schema = T.StructType([T.StructField("v", _spark_type(value))])
+    except _Hetero:
+        pytest.skip("no natural homogeneous Spark type for this value")
+    df = spark.createDataFrame([(_to_row(value),)], df_schema)
+    row = ssg.compile_plan(wrapper, df_schema).apply(df).collect()[0]
+    assert _columnar_outcome(row) == _rowcheck_outcome(wrapper, {"v": value}), (
+        schema, value, row["violations"])
+
+
+@pytest.mark.parametrize("schema,value", NULL_CASES,
+                         ids=[f"null{i}" for i in range(len(NULL_CASES))])
+def test_columnar_null_conformance_live(spark, schema, value):
+    wrapper = _wrap(schema)
+    doc = json.dumps({"v": value})
+    df = spark.createDataFrame([(doc,)], "props string")
+    row = validate_json_column(df, "props", wrapper,
+                               engine="columnar").collect()[0]
+    assert _columnar_outcome(row) == _rowcheck_outcome(
+        wrapper, json.loads(doc)), (schema, value, row["violations"])

@@ -40,13 +40,14 @@ def test_collect_mode_through_ref():
     assert [e.name for e in exc.value.errors] == ["data.a", "data.b"]
 
 
-def test_typed_long_multiple_of_is_exact(spark, reference):
+def test_typed_long_multiple_of_is_exact(spark):
     # Reference computes value/divisor through float true-division for
     # int divisors (draft04.py:366), so any odd int past 2^53 counts as
-    # "a multiple of 2" — a float artifact. On a TYPED integer column
-    # the columnar engine uses exact long modulo instead; the JSON
-    # engines keep byte-parity with the reference's float semantics
-    # (pinned in the bigint conformance test in test_jsoncol.py).
+    # "a multiple of 2" — a float artifact (pinned against the reference
+    # below). On a TYPED integer column the columnar engine uses exact
+    # long modulo instead; the JSON engines keep byte-parity with the
+    # reference's float semantics (pinned in the bigint conformance test
+    # in test_jsoncol.py).
     from pyspark.sql import types as T
 
     df = spark.createDataFrame([(2 ** 60 + 1,), (2 ** 60,), (7,), (6,)],
@@ -55,5 +56,8 @@ def test_typed_long_multiple_of_is_exact(spark, reference):
         {"type": "object", "properties": {"k": {"multipleOf": 2}}}, df.schema)
     got = {r["k"]: r["verdict"] for r in plan.apply(df).collect()}
     assert got == {2 ** 60 + 1: False, 2 ** 60: True, 7: False, 6: True}
+
+
+def test_reference_long_multiple_of_is_float_division(reference):
     # the reference's float path calls the huge odd int valid
     reference.validate({"multipleOf": 2}, 2 ** 60 + 1)  # no raise

@@ -578,6 +578,66 @@ def test_key_set_definition_checked_at_non_object_site(keyword):
     assert str(got.value) == str(want.value)
 
 
+@pytest.mark.parametrize("keyword", [
+    {"minimum": "1"}, {"exclusiveMaximum": None}, {"multipleOf": "2"},
+    {"maxLength": "x"}, {"enum": 5}, {"type": "strin"},
+])
+def test_scalar_definition_checked_at_vacuous_site(keyword):
+    """A scalar keyword's definition is checked also where it can never
+    fail (a bound on a boolean column folds away): rowcheck rejects the
+    schema, and so does the columnar plan, with the same message."""
+    from pyspark.sql import types as T
+
+    from spark_schema_guard.rowcheck import compile_row_validator
+
+    schema = {"$schema": "http://json-schema.org/draft-07/schema#",
+              "properties": {"flag": keyword}}
+    with pytest.raises(ssg.SchemaDefinitionError) as want:
+        compile_row_validator(schema)
+    with pytest.raises(ssg.SchemaDefinitionError) as got:
+        ssg.compile_plan(
+            schema, T.StructType([T.StructField("flag", T.BinaryType())]))
+    assert str(got.value) == str(want.value)
+
+
+@pytest.mark.parametrize("json_types", ["exact", "coerce"])
+@pytest.mark.parametrize("keyword", ["enum", "const"])
+def test_json_object_member_is_plan_unsupported(json_types, keyword):
+    """The parsed struct of a JSON-backed object hides its true key set:
+    an object enum/const member there refuses the plan at compile time,
+    naming the keyword, instead of failing at apply."""
+    from spark_schema_guard.columnar.compiler import (
+        PlanUnsupported, compile_plan_for_column)
+
+    member = {"a": 1}
+    schema = {keyword: [member] if keyword == "enum" else member}
+    with pytest.raises(PlanUnsupported, match=keyword):
+        compile_plan_for_column(schema, "doc", json_types=json_types)
+
+
+@pytest.mark.parametrize("prop", [
+    {"type": ["integer", "null"]},
+    {"type": ["integer", "null"], "enum": [1, None]},
+])
+def test_coerce_null_is_the_json_null(spark, prop):
+    """In coerce mode the typed parse NULLs a value it cannot coerce
+    ("abc" in an integer field); the null a schema allows is the JSON
+    null of the text, so such a value still fails, as in rowcheck."""
+    from spark_schema_guard.columnar.compiler import compile_plan_for_column
+    from spark_schema_guard.rowcheck import compile_row_validator
+
+    schema = {"type": "object", "properties": {"k": prop}}
+    docs = ['{"k": null}', '{"k": "abc"}', '{"k": 1}', '{"k": 2}', '{}']
+    plan = compile_plan_for_column(schema, "doc", json_types="coerce")
+    df = spark.createDataFrame(list(enumerate(docs)), "i int, doc string")
+    got = [[v.asDict() for v in r["violations"]]
+           for r in plan.apply(df).orderBy("i").collect()]
+    validator = compile_row_validator(schema, fast_fail=False)
+    want = [[e.as_row() for e in validator.collect(json.loads(d))]
+            for d in docs]
+    assert got == want
+
+
 # -- a JSON-column plan is one self-contained artifact ----------------------
 
 APPLY_DOCS = [

@@ -198,6 +198,25 @@ def test_compile_makes_no_py4j_round_trips(spark, sf_dir, monkeypatch):
         assert calls
 
 
+def test_typed_plans_fold_type_facts_in_python(spark, sf_dir):
+    """Typed columns reach the scalar keyword emitters the variant world
+    uses, with literal type facts: every statically decided test folds
+    away in Python, so a typed plan's text holds no variant function and
+    no lambda."""
+    from test_columnar import DOCS_SCHEMA
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    for schema, df in ((WEB_PAGE_SCHEMA, web_pages(docs)),
+                       (DOCS_SCHEMA, docs)):
+        plan = ssg.compile_plan(schema, df.schema)
+        assert plan.rules and not plan.aux_cols
+        for rule in plan.rules:
+            for text in (rule.fail, rule.message, rule.name, rule.value):
+                for banned in ("schema_of_variant", "try_variant_get",
+                               "is_variant_null", "->"):
+                    assert banned not in (text or ""), (banned, rule)
+
+
 def _ks_frame(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return docs.select(F.col("n_chars").cast("double").alias("v"),
