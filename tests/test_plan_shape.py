@@ -2,11 +2,15 @@
 JVM-side (no Python evaluation nodes), read only needed columns, and the
 python regex mode must be the only thing that introduces Arrow UDFs."""
 
+import ast
 import contextlib
+import json
 import math
+import os
 import re
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 import spark_schema_guard as ssg
 from spark_schema_guard.webgen import WEB_PAGE_SCHEMA, web_pages
@@ -215,6 +219,129 @@ def test_typed_plans_fold_type_facts_in_python(spark, sf_dir):
                 for banned in ("schema_of_variant", "try_variant_get",
                                "is_variant_null", "->"):
                     assert banned not in (text or ""), (banned, rule)
+
+
+GOLDEN = os.path.join(os.path.dirname(__file__), "data",
+                      "plan_text_golden.json")
+
+# web_pages(documents).schema, spelled out so compiling needs no JVM
+WEB_DF_SCHEMA = T.StructType([
+    T.StructField("url", T.StringType()),
+    T.StructField("warc_ts", T.TimestampType()),
+    T.StructField("html", T.BinaryType()),
+    T.StructField("text", T.StringType()),
+    T.StructField("lang", T.StringType()),
+    T.StructField("doc_id", T.LongType()),
+    T.StructField("source", T.StringType()),
+])
+
+_AB = T.StructType([T.StructField("a", T.LongType()),
+                    T.StructField("b", T.StringType())])
+TYPED_ARRAYS_DF_SCHEMA = T.StructType([
+    T.StructField("nums", T.ArrayType(T.LongType())),
+    T.StructField("recs", T.ArrayType(_AB)),
+    T.StructField("grid", T.ArrayType(T.ArrayType(T.LongType()))),
+    T.StructField("obj", _AB),
+])
+
+# every combinator and array keyword over typed arrays, array elements
+# and a struct column
+TYPED_ARRAYS_SCHEMA = {"properties": {
+    "nums": {"minItems": 1, "maxItems": 4, "uniqueItems": True,
+             "items": {"type": "integer", "minimum": 0},
+             "contains": {"minimum": 10},
+             "anyOf": [{"maxItems": 2}, {"items": {"maximum": 5}}],
+             "not": {"contains": {"const": 7}}},
+    "recs": {"uniqueItems": True,
+             "items": {"required": ["a"],
+                       "properties": {"a": {"minimum": 0},
+                                      "b": {"maxLength": 3}},
+                       "anyOf": [{"required": ["b"]},
+                                 {"properties": {"a": {"maximum": 5}}}]},
+             "contains": {"properties": {"a": {"const": 1}}},
+             "oneOf": [{"items": {"required": ["b"]}}, {"maxItems": 1}]},
+    "grid": {"items": [{"items": {"minimum": 0}},
+                       {"uniqueItems": True, "contains": {"const": 0}}],
+             "additionalItems": {"maxItems": 2, "items": {"maximum": 9},
+                                 "contains": False},
+             "if": {"minItems": 2}, "then": {"items": [{"minItems": 1}]},
+             "else": {"contains": True}},
+    "obj": {"allOf": [{"required": ["a"]},
+                      {"properties": {"b": {"minLength": 1}}}],
+            "anyOf": [{"properties": {"a": {"minimum": 1}}},
+                      {"required": ["b"]}],
+            "oneOf": [{"required": ["a"]}, {"required": ["b"]}],
+            "not": {"properties": {"a": {"const": 0}}},
+            "if": {"required": ["a"]},
+            "then": {"properties": {"a": {"maximum": 100}}},
+            "else": {"required": ["b"]}},
+}}
+
+
+def _perfbench_schemas() -> dict:
+    """perfbench's JSON schemas, read from its source without importing
+    it (the workloads module imports the benchmark's own helpers)."""
+    path = os.path.join(os.path.dirname(os.path.dirname(__file__)),
+                        "perfbench", "workloads.py")
+    with open(path) as fh:
+        module = ast.parse(fh.read())
+    return {target.id: ast.literal_eval(node.value)
+            for node in module.body if isinstance(node, ast.Assign)
+            for target in node.targets
+            if getattr(target, "id", None) in ("FLAT_SCHEMA", "TREE_SCHEMA")}
+
+
+def _plan_text(plan) -> dict:
+    """Everything a plan evaluates, as text: per rule its fail condition
+    and its violation struct (rule id, name, message, value), the helper
+    columns and the guard.  Lambda variables are renumbered in order of
+    first appearance, so a fresh-name counter that moves renames
+    nothing."""
+    rules = [[r.fail, r.struct_sql(include_value=True)] for r in plan.rules]
+    aux = [[name, sql if isinstance(sql, str) else "<python udf>"]
+           for name, sql in plan._aux]
+    text = json.dumps({"rules": rules, "aux": aux,
+                       "guard": list(plan.guard or [])})
+    numbers: dict = {}
+
+    def renumber(match):
+        key = match.group(0)
+        numbers.setdefault(key, len(numbers) + 1)
+        return f"__{match.group(1)}{numbers[key]}"
+
+    return json.loads(re.sub(r"__([a-z]+)(\d+)", renumber, text))
+
+
+def plan_texts() -> dict:
+    """The golden plans: the web table, perfbench's JSON schemas (exact,
+    and the flat one in coerce mode) and every combinator and array
+    keyword over typed arrays."""
+    from spark_schema_guard.columnar.compiler import compile_plan_for_column
+
+    bench = _perfbench_schemas()
+    plans = {
+        "web": ssg.compile_plan(WEB_PAGE_SCHEMA, WEB_DF_SCHEMA),
+        "tree": compile_plan_for_column(bench["TREE_SCHEMA"], "tree"),
+        "flat": compile_plan_for_column(bench["FLAT_SCHEMA"], "props"),
+        "flat_coerce": compile_plan_for_column(
+            bench["FLAT_SCHEMA"], "props", json_types="coerce"),
+        "typed_arrays": ssg.compile_plan(TYPED_ARRAYS_SCHEMA,
+                                         TYPED_ARRAYS_DF_SCHEMA),
+    }
+    return {name: _plan_text(plan) for name, plan in plans.items()}
+
+
+def test_plan_text_golden():
+    """The compiled plan text of the benchmark schemas and of the typed
+    array keywords equals the recorded one (compiling needs no JVM).  A
+    deliberate change rewrites the file with ``python
+    tests/test_plan_shape.py`` and says why in the change log."""
+    with open(GOLDEN) as fh:
+        golden = json.load(fh)
+    texts = plan_texts()
+    assert sorted(texts) == sorted(golden)
+    for name, text in texts.items():
+        assert text == golden[name], name
 
 
 def _ks_frame(spark, sf_dir):
@@ -824,3 +951,9 @@ def test_simhash_near_dups_filters_before_pair_dedup(spark, sf_dir):
     assert "hamming" in lines[dedup_idx], lines[dedup_idx]
     bit_idxs = [i for i, ln in enumerate(lines) if "bit_count" in ln]
     assert bit_idxs and all(i > dedup_idx for i in bit_idxs), text[:3000]
+
+
+if __name__ == "__main__":
+    with open(GOLDEN, "w") as fh:
+        json.dump(plan_texts(), fh, indent=1, sort_keys=True)
+        fh.write("\n")
