@@ -7,11 +7,12 @@ optimizes and whole-stage codegen evaluates JVM-side — no per-row Python
 in the hot path.  Compilation is plain Python string building (zero py4j
 round-trips); the plan parses the finished text when it is applied.
 This module maps typed columns, struct fields, array elements and map
-values onto sites and compiles the keywords that walk the static Spark
-type (combinators, arrays, properties).  Each scalar keyword and each
-object key-set keyword has ONE emitter, in the mixed-in ``varsql``
-world, which also compiles VARIANT values; a typed site reaches the
-scalar emitters through its views (:meth:`_PlanCompiler._views`).
+values onto sites, places emitted rules there (:meth:`_PlanCompiler.
+_placed`) and compiles the object value-schema keywords (``properties``
+and the schema forms of ``patternProperties``, ``additionalProperties``
+and ``dependencies``).  Every other keyword has ONE emitter, in the
+mixed-in ``varsql`` world, which also compiles VARIANT values; a typed
+site reaches them through its views (:meth:`_PlanCompiler._views`).
 Evaluation-order parity: rules are emitted in the reference's
 keyword-registration order (``draft04.py:42-68`` + draft-06/07
 extensions), properties in schema order, so the first element of the
@@ -55,10 +56,9 @@ from ..rowcheck.compiler import (
 )
 from . import typemap
 from .plan import _NULL_STR, Rule, ValidationPlan
-from .varsql import (_SCALAR_KEYWORDS, _and, _msg, _NestedSQL, _not,
-                     _ObjectKeys, _or, _PackEntries, _PackFrame, _PackSingle,
-                     _typed_views, _VariantSQLMixin, _Views, _nf, sqlident,
-                     sqlnum, sqlstr)
+from .varsql import (_KEY_SET_KEYWORDS, _VALUE_KEYWORDS, _and, _nf,
+                     _ObjectKeys, _PackFrame, _PackSingle, _typed_views,
+                     _VariantSQLMixin, _Views, sqlident, sqlstr)
 
 
 @dataclass
@@ -151,6 +151,13 @@ class PlanTooLarge(PlanUnsupported):
     compiled-closure validator is the right tool there; raise
     ``plan_text_budget`` / ``ref_unroll_budget`` to force the columnar
     attempt anyway."""
+
+
+# the object keywords whose values are schemas: each world compiles them
+_OBJECT_VALUE_KEYWORDS = {
+    "dependencies": "_kw_dependencies", "properties": "_kw_properties",
+    "patternProperties": "_kw_pattern_properties",
+    "additionalProperties": "_kw_additional_properties"}
 
 
 class _PlanCompiler(_VariantSQLMixin):
@@ -340,43 +347,36 @@ class _PlanCompiler(_VariantSQLMixin):
 
         rules: list[Rule] = []
         views = None
-        for keyword in self.keyword_order:
-            if keyword not in definition:
-                continue
-            if keyword in _SCALAR_KEYWORDS:
-                views = views or self._views(site)
-                rules.extend(self._triple_rules(
-                    site, self._scalar_triples(keyword, definition,
-                                               site.name_sql, views),
-                    site.present(), value=_value_of(site)))
-                continue
-            handler = getattr(self, "_kw_" + _snake(keyword), None)
-            if handler is not None:
-                rules.extend(handler(definition, site) or [])
+        with self._v_based(site.base_uri):
+            for keyword in self.keyword_order:
+                if keyword not in definition:
+                    continue
+                emit = _VALUE_KEYWORDS.get(keyword)
+                if emit is not None:
+                    views = views or self._views(site)
+                    rules.extend(self._placed(site, getattr(self, emit)(
+                        keyword, definition, site.name_sql, views),
+                        site.present(), value=_value_of(site)))
+                elif keyword in _KEY_SET_KEYWORDS:
+                    rules.extend(self._key_set_rules(site, getattr(
+                        self, _KEY_SET_KEYWORDS[keyword]), keyword,
+                        definition))
+                elif keyword in _OBJECT_VALUE_KEYWORDS:
+                    rules.extend(getattr(self, _OBJECT_VALUE_KEYWORDS[
+                        keyword])(definition, site))
         return rules
-
-    def _pass_sql(self, definition, site: _Site) -> str:
-        """Whole-subschema success as one boolean (combinator probe)."""
-        rules = self.compile_value(definition, site)
-        if not rules:
-            return "true"
-        return "(" + " AND ".join(f"NOT {_nf(r.fail)}" for r in rules) + ")"
 
     # -- helpers -----------------------------------------------------------
 
-    def _rule(self, site, rule_id, message, fail) -> Rule:
-        return Rule(rule_id, site.sname, site.name_sql,
-                    _msg(site.name_sql, message),
-                    _and(site.present(), _nf(fail)), value=_value_of(site))
-
     def _views(self, site: _Site) -> _Views:
-        """The site as the shared scalar emitter reads it: its value
-        views and JSON type facts (the typed world's site mapping).  A
-        Python predicate needs a row-level value: inside a lambda the
-        views refuse one."""
+        """The site as the shared emitters read it: its value views and
+        JSON type facts (the typed world's site mapping), holding the
+        site its subschemas compile at.  A Python predicate needs a
+        row-level value: inside a lambda the views refuse one."""
         return _typed_views(
             site.expr, site.dtype, site.null_is_value, json=site.json,
-            udf=self._lambda_udf if site.lam else self._udf_predicate)
+            udf=self._lambda_udf if site.lam else self._udf_predicate,
+            site=site)
 
     def _udf_predicate(self, expr, hint, test, on_null=False) -> str:
         """A Python predicate over a string value: an Arrow-batched pandas
@@ -399,166 +399,6 @@ class _PlanCompiler(_VariantSQLMixin):
             "Python-evaluated predicates (regex_engine='python', "
             "callable formats, format 'regex') cannot check array "
             "elements or map entries; use engine='python'")
-
-    # -- combinators -------------------------------------------------------
-
-    def _kw_all_of(self, definition, site):
-        rules = []
-        for sub in definition["allOf"]:
-            rules.extend(self.compile_value(sub, site))
-        return rules
-
-    def _kw_any_of(self, definition, site):
-        passes = [self._pass_sql(sub, site) for sub in definition["anyOf"]]
-        return [self._rule(site, "anyOf", "cannot be validated by any definition",
-                           _not(_or(passes)))]
-
-    def _kw_one_of(self, definition, site):
-        passes = [self._pass_sql(sub, site) for sub in definition["oneOf"]]
-        count = ("(" + " + ".join(f"CAST({p} AS INT)" for p in passes) + ")"
-                 if passes else "0")
-        message = (f"concat({site.name_sql}, ' must be valid exactly by one "
-                   f"definition (', CAST({count} AS STRING), "
-                   "' matches found)')")
-        return [Rule("oneOf", site.sname, site.name_sql, message,
-                     _and(site.present(), f"({count} != 1)"))]
-
-    def _kw_not(self, definition, site):
-        sub = definition["not"]
-        if sub is True:
-            return [self._rule(site, "not", "must not be there", "true")]
-        if sub is False:
-            return []
-        return [self._rule(site, "not", "must NOT match a disallowed definition",
-                           self._pass_sql(sub, site))]
-
-    def _kw_if(self, definition, site):
-        condition = self._pass_sql(definition["if"], site)
-        rules = []
-        if "then" in definition:
-            for rule in self.compile_value(definition["then"], site):
-                rules.append(rule.gated(condition))
-        if "else" in definition:
-            for rule in self.compile_value(definition["else"], site):
-                rules.append(rule.gated(f"NOT {condition}"))
-        return rules
-
-    # -- arrays ------------------------------------------------------------
-
-    def _array_guard(self, site):
-        return isinstance(site.dtype, T.ArrayType)
-
-    def _kw_min_items(self, definition, site):
-        return self._item_count_rules(definition, site, "minItems")
-
-    def _kw_max_items(self, definition, site):
-        return self._item_count_rules(definition, site, "maxItems")
-
-    def _item_count_rules(self, definition, site, keyword):
-        return self._triple_rules(site, self._item_count_triples(
-            definition, keyword, "true" if self._array_guard(site) else "false",
-            site.expr, site.name_sql), site.present(), value=_value_of(site))
-
-    def _kw_unique_items(self, definition, site):
-        if not definition["uniqueItems"] or not self._array_guard(site):
-            return []
-        items = site.expr
-        if isinstance(site.dtype.elementType, T.VariantType):
-            # variant-typed arrays: the reference's freeze canon
-            # (cross-type 1 == 1.0, bool -> "True"/"False" collision,
-            # draft04.py:412-421) via canonical strings
-            x = self._vsql_var()
-            items = (f"transform({site.expr}, {x} -> "
-                     f"{self._variant_canon_sql(x, self.canon_depth)})")
-        # Typed arrays are homogeneous, so the reference's freeze
-        # canonicalization (bool→str etc., draft04.py:412-419) is a no-op
-        # and array_distinct is exact.
-        return [self._rule(site, "uniqueItems", "must contain unique items",
-                           f"(size(array_distinct({items})) < size({site.expr}))")]
-
-    def _kw_items(self, definition, site):
-        items_definition = definition["items"]
-        if not self._array_guard(site) or items_definition is True:
-            return []
-        if items_definition is False:
-            return [self._rule(site, "items", "must not be there",
-                               f"(size({site.expr}) > 0)")]
-
-        if isinstance(items_definition, list):
-            rules = []
-            for idx, item_definition in enumerate(items_definition):
-                element_site = site.child(
-                    f"try_element_at({site.expr}, {idx + 1})",
-                    site.dtype.elementType,
-                    f"[{idx}]", null_is_value=True)
-                for rule in self.compile_value(item_definition, element_site):
-                    rules.append(rule.gated(_and(
-                        site.present(), f"(size({site.expr}) > {idx})")))
-            n_fixed = len(items_definition)
-            extra = definition.get("additionalItems")
-            if extra is False:
-                rules.append(self._rule(
-                    site, "items", "must contain only specified items",
-                    f"(size({site.expr}) > {n_fixed})"))
-            elif isinstance(extra, (dict, bool)) and extra is not True:
-                fail_rule = self._elements_rule(site, extra, start=n_fixed)
-                if fail_rule is not None:
-                    rules.append(fail_rule)
-            return rules
-
-        fail_rule = self._elements_rule(site, items_definition, start=0)
-        return [fail_rule] if fail_rule is not None else []
-
-    def _violation_of(self, rules) -> str:
-        """First-failing-rule violation struct of a compiled rule list
-        (NULL when all pass) — carries the exact inner rule id, name and
-        message, so nested violations match the reference byte-for-byte."""
-        parts = [f"CASE WHEN {rule.fail} THEN {rule.struct_sql()} END"
-                 for rule in rules]
-        return parts[0] if len(parts) == 1 else "coalesce(" + ", ".join(parts) + ")"
-
-    def _first_failing_rule(self, site, rule_id, rule_site, coll, params,
-                            viol) -> Rule:
-        """One rule firing when a member of ``coll`` (array elements or
-        object entries) fails; its violation is the first failing
-        member's struct ``viol`` (lambda ``params``), carrying that
-        member's own name/rule/message (``data.col[i] must be ...``)."""
-        failing = self._failing_sql(coll, params, viol)
-        return Rule(rule_id, rule_site, None, None,
-                    _and(site.present(), _nf(f"size({failing}) > 0")),
-                    dynamic=f"try_element_at({failing}, 1)")
-
-    def _elements_rule(self, site, element_definition, start):
-        """First element from ``start`` violating the element schema."""
-        x, i = self._vsql_var(), self._vsql_var("i")
-        name = (f"concat({site.name_sql}, '[', CAST({i} + {start} AS STRING), "
-                "']')")
-        element = _Site(x, site.dtype.elementType, site.sname + "[*]", name,
-                        site.base_uri, null_is_value=True, lam=True)
-        rules = self.compile_value(element_definition, element)
-        if not rules:
-            return None
-        tail = (f"slice({site.expr}, {start + 1}, "
-                f"greatest(size({site.expr}) - {start}, 0))")
-        return self._first_failing_rule(site, "items", site.sname + "[*]",
-                                        tail, f"({x}, {i})",
-                                        self._violation_of(rules))
-
-    def _kw_contains(self, definition, site):
-        contains_definition = definition["contains"]
-        if not self._array_guard(site):
-            return []
-        if contains_definition is False:
-            return [self._rule(site, "contains", "is always invalid", "true")]
-        if contains_definition is True:
-            return [self._rule(site, "contains", "must not be empty",
-                               f"(size({site.expr}) = 0)")]
-        x = self._vsql_var()
-        element = _Site(x, site.dtype.elementType, site.sname + "[x]", "''",
-                        site.base_uri, null_is_value=True, lam=True)
-        element_pass = self._pass_sql(contains_definition, element)
-        return [self._rule(site, "contains", "must contain one of contains definition",
-                           f"NOT exists({site.expr}, {x} -> {element_pass})")]
 
     # -- objects -----------------------------------------------------------
 
@@ -611,24 +451,24 @@ class _PlanCompiler(_VariantSQLMixin):
         return _ObjectKeys(gate(site.expr), None,
                            lambda key: fields.get(key, "false"), fields)
 
-    def _triple_rules(self, site, triples, gate, value=None) -> list[Rule]:
-        """Rules of varsql triples at ``site``, active where ``gate``
-        holds: one rule per triple, so collect-all output matches.
-        ``value``: the site's value SQL for ``include_value``; a nested
-        violation struct's offending value lies below the site, so it
-        carries none."""
-        rules = []
-        for rule_id, message, fail in triples:
-            fail = _and(gate, _nf(fail))
-            if fail == "false":
-                continue
-            if isinstance(rule_id, _NestedSQL):
-                rules.append(Rule(None, site.sname, None, None, fail,
-                                  dynamic=rule_id.struct_sql))
-            else:
-                rules.append(Rule(rule_id, site.sname, site.name_sql,
-                                  message, fail, value=value))
-        return rules
+    def _placed(self, site, rules, gate, value=None) -> list[Rule]:
+        """Emitted rules placed at ``site``: active where ``gate`` holds,
+        with the site's display name and ``value`` (its value SQL for
+        ``include_value``; a nested violation struct's offending value
+        lies below the site, so it carries none).  Rules compiled at a
+        site already (combinator branches, positional items) stay."""
+        out = []
+        for rule in rules:
+            if rule.site is None:
+                fail = _and(gate, rule.fail)
+                if fail == "false":
+                    continue
+                rule = dataclasses.replace(
+                    rule, site=site.sname, fail=fail,
+                    gate=rule.gate and _and(gate, rule.gate),
+                    value=None if rule.dynamic else value)
+            out.append(rule)
+        return out
 
     def _key_set_rules(self, site, emit, *args) -> list[Rule]:
         """Rules of one object key-set keyword: its varsql emitter over
@@ -640,19 +480,8 @@ class _PlanCompiler(_VariantSQLMixin):
         if ok is None:
             return []
         with self._v_based(site.base_uri):
-            return self._triple_rules(site, emit(*args, ok, site.name_sql),
-                                      site.present(), value=_value_of(site))
-
-    def _kw_min_properties(self, definition, site):
-        return self._key_set_rules(site, self._count_triples, definition,
-                                   "minProperties")
-
-    def _kw_max_properties(self, definition, site):
-        return self._key_set_rules(site, self._count_triples, definition,
-                                   "maxProperties")
-
-    def _kw_required(self, definition, site):
-        return self._key_set_rules(site, self._required_triples, definition)
+            return self._placed(site, emit(*args, ok, site.name_sql),
+                                site.present(), value=_value_of(site))
 
     def _kw_dependencies(self, definition, site):
         ok = self._object_keys(site)
@@ -665,7 +494,7 @@ class _PlanCompiler(_VariantSQLMixin):
                              for rule in self.compile_value(requirement, site))
             else:
                 rules.extend(self._key_set_rules(
-                    site, self._dependency_triples, key, requirement))
+                    site, self._dependency_rules, key, requirement))
         return rules
 
     def _kw_properties(self, definition, site):
@@ -734,10 +563,11 @@ class _PlanCompiler(_VariantSQLMixin):
             value = self._aux("vkey",
                               f"try_element_at({vmap}, {sqlstr(key)})")
             sov = self._aux("sov", f"schema_of_variant({value})")
-            with self._v_based(base.base_uri):
-                triples = self._vpack_compile_top(
+            with self._v_based(base.base_uri), self._vpack_top(
+                    _PackSingle(value, base.name_sql)) as ctx:
+                rules = self._variant_rules(
                     prop_definition, base.name_sql, _Views(value, sov_sql=sov),
-                    _PackSingle(value, base.name_sql))
+                    ctx=ctx)
         except PlanTooLarge:
             # too-large is a final verdict for the columnar engine (the
             # struct fallback would re-raise a misleading secondary
@@ -759,44 +589,39 @@ class _PlanCompiler(_VariantSQLMixin):
                             f"{sqlstr(_json_path(key))})")))
             return [rule.gated(gate)
                     for rule in self.compile_value(prop_definition, child)]
-        return self._triple_rules(base, triples, gate)
+        return self._placed(base, rules, gate)
 
     def _entry_rule(self, site, key_filter, value_definition, rule_label):
         """First violating (key, value) entry of an object's runtime
-        entries, with the inner rule id/name/message surfaced verbatim.
-        ``key_filter``: key SQL text -> boolean SQL text.  Map columns
-        compile their typed values; JSON-backed objects validate their
-        entries over the map<string,variant> view (varsql)."""
-        e = self._vsql_var("e")
-        name = f"concat({site.name_sql}, '.', {e}.key)"
+        entries, with the inner rule id/name/message surfaced verbatim:
+        the shared entries emitter over the object as a map — a map
+        column (its values compile at their typed sites), or a
+        JSON-backed object's map<string,variant> view (its values
+        validate over the variant world).  ``key_filter``: key SQL text
+        -> boolean SQL text."""
+        ctx = None
         if isinstance(site.dtype, T.MapType):
-            entries = f"map_entries({site.expr})"
-            value_site = _Site(f"{e}.value", site.dtype.valueType,
-                               site.sname + ".<k>", name, site.base_uri,
-                               null_is_value=True, lam=True)
-            rules = self.compile_value(value_definition, value_site)
-            if not rules:
-                return []
-            viol = self._violation_of(rules)
+            if not isinstance(site.dtype.keyType, T.StringType):
+                raise PlanUnsupported(
+                    f"{rule_label} over a map column keyed by "
+                    f"{site.dtype.keyType.simpleString()}: JSON object keys "
+                    "are strings; use engine='python'")
+            obj = site
         else:
             if not self.exact_json_types:
                 raise PlanUnsupported(
                     f"{rule_label} value schemas over undeclared keys need "
                     "exact JSON typing; use json_types='exact' (default) or "
                     "engine='python'")
-            entries = f"map_entries({self._vmap(site)})"
-            se = self._vsql_var("e")
-            with self._v_based(site.base_uri):
-                triples = self._vpack_compile_top(
-                    value_definition, name, _Views(f"{e}.value"),
-                    _PackEntries(entries, se, key_filter(f"{se}.key"),
-                                 f"{se}.value",
-                                 f"concat({site.name_sql}, '.', {se}.key)",
-                                 f"{e}.key"))
-            viol = self._violation_sql(triples, name)
-        return [self._first_failing_rule(
-            site, rule_label, site.sname + ".<" + rule_label + ">", entries, e,
-            f"CASE WHEN {key_filter(e + '.key')} THEN {viol} END")]
+            obj = dataclasses.replace(
+                site, expr=self._vmap(site), null_is_value=False, json=None,
+                dtype=T.MapType(T.StringType(), T.VariantType()))
+            ctx = _PackSingle(None, site.name_sql, obj=obj.expr)
+        with self._v_based(site.base_uri), self._vpack_top(ctx) as ctx:
+            rules = self._entries_rules(key_filter, value_definition,
+                                        rule_label, site.name_sql,
+                                        self._views(obj), ctx=ctx)
+        return self._placed(site, rules, site.present())
 
     def _kw_pattern_properties(self, definition, site):
         is_map = isinstance(site.dtype, T.MapType)
@@ -806,7 +631,7 @@ class _PlanCompiler(_VariantSQLMixin):
         for pattern, sub in definition["patternProperties"].items():
             if sub is False:
                 rules.extend(self._key_set_rules(
-                    site, self._pattern_false_triples, pattern))
+                    site, self._pattern_false_rules, pattern))
                 continue
             if sub is True or sub == {}:
                 continue
@@ -818,14 +643,10 @@ class _PlanCompiler(_VariantSQLMixin):
                     if matcher.search(key):
                         rules.extend(self.compile_value(sub, child))
                 continue
-            if is_map:
-                rules.extend(self._entry_rule(
-                    site, lambda k, _j=java: f"rlike({k}, {sqlstr(_j)})",
-                    sub, "patternProperties"))
-                continue
-            # JSON-backed object: declared fields matching the pattern
-            # validate their variant value, like `properties`; UNDECLARED
-            # runtime keys are checked on the variant view's entries
+            # map column or JSON-backed object: declared fields (a JSON
+            # object's) matching the pattern validate their variant value,
+            # like `properties`; the other runtime keys are checked on
+            # the object's entries
             for key, base in fields.items():
                 if matcher.search(key):
                     rules.extend(self._json_property_rules(site, key, base,
@@ -845,7 +666,7 @@ class _PlanCompiler(_VariantSQLMixin):
         if add_definition is True or add_definition == {}:
             return []
         if add_definition is False:
-            return self._key_set_rules(site, self._no_additional_triples,
+            return self._key_set_rules(site, self._no_additional_rules,
                                        definition)
         if isinstance(site.dtype, T.MapType) or self._keys(site) is not None:
             # map column or JSON-backed object: the TRUE runtime key set
@@ -859,21 +680,6 @@ class _PlanCompiler(_VariantSQLMixin):
             if key not in declared and not any(p.search(key) for p in patterns):
                 rules.extend(self.compile_value(add_definition, child))
         return rules
-
-    def _kw_property_names(self, definition, site):
-        return self._key_set_rules(site, self._property_names_triples,
-                                   definition)
-
-
-def _snake(keyword: str) -> str:
-    out = []
-    for ch in keyword:
-        if ch.isupper():
-            out.append("_")
-            out.append(ch.lower())
-        else:
-            out.append(ch)
-    return "".join(out)
 
 
 def _build_plan(definition, options: dict, compile_rules,

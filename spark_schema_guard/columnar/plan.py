@@ -27,7 +27,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .varsql import _nf, sqlstr
+from .varsql import _and, _nf, sqlstr
 
 _NULL_STR = "CAST(NULL AS STRING)"
 
@@ -37,11 +37,13 @@ class Rule:
     """One vectorized validation rule, as SQL text.
 
     ``fail`` is a boolean expression that is true exactly where the rule
-    is violated (never null — the compiler wraps it in coalesce).
+    is violated (never null — the compiler wraps it in coalesce).  Both
+    compilers' emitters return Rules with no ``site`` yet: the caller
+    places them.
     """
 
     rule: str | None  # keyword id ('type', 'minimum', ...) or None
-    site: str  # static dotted path for plan display
+    site: str | None  # static dotted path for plan display
     name: str | None  # runtime name (may embed dynamic indices/keys)
     message: str | None
     fail: str
@@ -51,12 +53,18 @@ class Rule:
     dynamic: str | None = None
     # offending value as a string (reference error objects carry .value)
     value: str | None = None
+    # a dynamic rule's condition without its struct-non-null test: a
+    # first-failing coalesce writes CASE WHEN gate THEN dynamic, the
+    # struct once
+    gate: str | None = None
 
     def gated(self, condition: str) -> "Rule":
         """The same rule, active only where ``condition`` holds (if/then,
         positional items length guards...)."""
+        condition = _nf(condition)
         return dataclasses.replace(
-            self, fail=f"({_nf(condition)} AND {self.fail})")
+            self, fail=_and(condition, self.fail),
+            gate=self.gate and _and(condition, self.gate))
 
     def struct_sql(self, lean: bool = False,
                    include_value: bool = False) -> str:

@@ -51,6 +51,38 @@ def is_temporal(dtype: T.DataType) -> bool:
     return isinstance(dtype, (T.TimestampType, T.TimestampNTZType, T.DateType))
 
 
+def _members(dtype: T.DataType) -> list:
+    if isinstance(dtype, T.StructType):
+        return [f.dataType for f in dtype.fields]
+    if isinstance(dtype, T.ArrayType):
+        return [dtype.elementType]
+    return [dtype.valueType] if isinstance(dtype, T.MapType) else []
+
+
+def holds_map_or_variant(dtype: T.DataType) -> bool:
+    """A map or a VARIANT anywhere in the type: Spark cannot compare or
+    order such values (``array_distinct`` rejects them)."""
+    return isinstance(dtype, (T.MapType, T.VariantType)) or any(
+        holds_map_or_variant(m) for m in _members(dtype))
+
+
+def variant_depth(dtype: T.DataType) -> int | None:
+    """Container depth of a value as ``to_variant_object`` renders it
+    (a VARIANT leaf counts 0: its own depth shows at run time); None
+    where a JSON-equal rendering does not exist: non-string map keys,
+    binary or temporal leaves."""
+    if isinstance(dtype, T.MapType) \
+            and not isinstance(dtype.keyType, T.StringType):
+        return None
+    if isinstance(dtype, (T.StructType, T.ArrayType, T.MapType)):
+        depths = [variant_depth(m) for m in _members(dtype)]
+        return None if None in depths else 1 + max(depths, default=0)
+    if isinstance(dtype, T.VariantType) or (
+            json_types_of(dtype) and not is_temporal(dtype)):
+        return 0
+    return None
+
+
 def _contains_ref(node) -> bool:
     if isinstance(node, dict):
         return "$ref" in node or any(_contains_ref(v) for v in node.values())

@@ -1,5 +1,5 @@
-"""SQL-text helpers of the columnar engine, and the rule compiler for
-VARIANT values.
+"""SQL-text helpers of the columnar engine, the keyword emitters both
+rule worlds share, and the rule compiler for VARIANT values.
 
 Every rule the engine emits is SQL text built by Python string
 concatenation — zero py4j round-trips at compile time; the plan parses
@@ -7,14 +7,16 @@ the finished text when it is applied.  (Building Column objects node by
 node cost one round-trip per expression node: unrolling the draft-04
 metaschema ONE level deep took ~1.45M py4j calls, ~270 s of driver time,
 for a plan whose logic is a few hundred KB of SQL.)  This module holds
-the literal/violation-struct helpers both rule worlds share, the ONE
-emitter per scalar keyword and per object key-set keyword both worlds
-call, and the variant world itself: open-key value schemas, exact-typed
-declared JSON fields and depth-bounded recursive ``$ref``, compiled to
-``(rule_id, message, fail)`` triples.  A scalar emitter reads only the
-value's views: :class:`_Views` of a VARIANT test its runtime type tag,
-:class:`_TypedViews` of a typed column carry literal type facts, which
-``_and``/``_or``/``_not`` fold in Python.
+the literal/violation-struct helpers, ONE emitter per scalar,
+combinator, array and object key-set keyword, dispatched by both worlds
+from ``_VALUE_KEYWORDS``/``_KEY_SET_KEYWORDS``, and the variant world:
+open-key value schemas, exact-typed declared JSON fields, depth-bounded
+recursive ``$ref``.  Emitters return :class:`plan.Rule` s and read only
+the value's views: :class:`_Views` of a VARIANT test its runtime type
+tag, :class:`_TypedViews` of a typed site carry literal type facts that
+``_and``/``_or``/``_not`` fold in Python.  An emitter recurses through
+the view: ``w.rules`` compiles a subschema there (``compile_value`` at a
+typed site, :meth:`_VariantSQLMixin._variant_rules` over a VARIANT).
 
 Semantics are a 1:1 mirror of the reference validator's keyword order
 and messages (fastjsonschema draft04.py:42-68 keyword registration;
@@ -30,16 +32,20 @@ ref_unroll_depth, canon_depth, ...) and its SchemaStore.
 from __future__ import annotations
 
 import contextlib
+import dataclasses
 import decimal
 import math
 import re
 from dataclasses import dataclass
 from typing import Callable
 
+from pyspark.sql import types as T
+
 from ..exceptions import SchemaDefinitionError
 from ..formats import jvm_pattern
 from ..rowcheck.compiler import (_UNESCAPED_DOLLAR, ref_numeric,
                                  schema_value_repr)
+from . import typemap
 
 VIOL_STRUCT_SQL = "STRUCT<name:STRING,rule:STRING,message:STRING>"
 
@@ -82,22 +88,6 @@ def sqlnum(x) -> str:
     return repr(float(x)) + "D"
 
 
-class _NestedSQL:
-    """Marker in the rule-id slot of a triple: the violation struct
-    (name/rule/message) comes pre-built from a nested value's own
-    first-failing rule.  ``gate_sql`` is the presence condition WITHOUT
-    the struct-non-null test, letting :meth:`_violation_sql` embed the
-    struct exactly once per level (a coalesce chain) instead of twice
-    (condition + value) — the difference between exponential and linear
-    plan size in the nesting depth."""
-
-    __slots__ = ("struct_sql", "gate_sql")
-
-    def __init__(self, struct_sql: str, gate_sql: str):
-        self.struct_sql = struct_sql
-        self.gate_sql = gate_sql
-
-
 class _Views:
     """One value as SQL text, as the keyword emitters read it: value
     views (``num`` double, ``lng`` long, ``dec`` decimal(38,0), ``s``,
@@ -116,7 +106,7 @@ class _Views:
     __slots__ = ("v", "sov", "num", "lng", "dec", "s", "b", "arr", "obj",
                  "okeys", "vnull", "present", "is_num", "is_numlike",
                  "is_bigint", "is_intdec", "is_str", "is_bool", "is_arr",
-                 "is_obj")
+                 "is_obj", "arr_gate")
     temporal = False
     exact_long = False
     udf = None
@@ -147,7 +137,7 @@ class _Views:
         # Python floats
         self.is_intdec = (f"(startswith({sov}, 'DECIMAL') "
                           f"AND endswith({sov}, ',0)'))")
-        self.is_arr = f"startswith({sov}, 'ARRAY')"
+        self.is_arr = self.arr_gate = f"startswith({sov}, 'ARRAY')"
         self.is_obj = f"startswith({sov}, 'OBJECT')"
 
     @property
@@ -162,6 +152,33 @@ class _Views:
 
     def item(self, i: int) -> "_Views":
         return _Views(f"try_element_at({self.arr}, {i + 1})")
+
+    # -- view-keyed compile: the one place the two worlds part ----------
+
+    def rules(self, c, definition, name_sql, pass_only=False, ctx=None):
+        """The rules of subschema ``definition`` at this value: the
+        variant keyword table."""
+        return c._variant_rules(definition, name_sql, self, pass_only, ctx)
+
+    def elem(self, c, x: str, name_sql: str, suffix: str = "[*]"):
+        """The view of a member held by lambda variable ``x``: an array
+        element or an object entry's value, named ``name_sql``."""
+        return _Views(x)
+
+    def item_rules(self, c, idx, definition, name_sql, gate, pass_only,
+                   ctx):
+        """Declared positional item ``idx``: its first failing rule as
+        one struct over the bound item, active where ``gate`` holds."""
+        return c._nested_rules(
+            definition, f"concat({name_sql}, '[{idx}]')",
+            f"try_element_at({self.arr}, {idx + 1})", gate, pass_only,
+            _derive_ctx(ctx, lambda lv: f"try_element_at({lv.arr}, {idx + 1})",
+                        lambda nm: f"concat({nm}, '[{idx}]')"))
+
+    def variant_items(self, c) -> str | None:
+        """The elements as VARIANTs for the uniqueItems canon (None:
+        ``array_distinct`` compares them exactly)."""
+        return self.arr
 
 
 _ISO_TS = "yyyy-MM-dd'T'HH:mm:ss'Z'"
@@ -178,19 +195,19 @@ class _TypedViews(_Views):
     a JSON-backed string may hold an object or array the parse flattened
     (its ``is_arr``/``is_obj`` raise), a JSON-backed struct hides its key
     set (no members).  ``udf(expr, hint, test, on_null)``: a Python
-    predicate as a helper column, or a refusal inside a lambda."""
+    predicate as a helper column, or a refusal inside a lambda.
+    ``site``: the compiler site the views were built from, where its
+    subschemas compile (an enum/const member view has none).  The array
+    keywords' ``arr_gate`` is static: over a NULL array they are NULL."""
 
-    __slots__ = ("temporal", "exact_long", "udf", "_arr", "_obj", "_members")
+    __slots__ = ("temporal", "exact_long", "udf", "site", "_arr", "_obj",
+                 "_members")
     _NO_VIEW = {"num": "DOUBLE", "lng": "BIGINT", "dec": "DECIMAL(38,0)",
                 "s": "STRING", "b": "BOOLEAN", "arr": "ARRAY<VARIANT>",
                 "obj": "MAP<STRING,VARIANT>"}
 
     def __init__(self, expr: str | None, dtype, null_is_value=False, *,
-                 json: str | None = None, udf=None):
-        from pyspark.sql import types as T
-
-        from . import typemap
-
+                 json: str | None = None, udf=None, site=None):
         for view, sql_type in self._NO_VIEW.items():
             setattr(self, view, f"CAST(NULL AS {sql_type})")
         self.v = expr
@@ -204,6 +221,8 @@ class _TypedViews(_Views):
              "number", "integer", "string", "boolean", "array", "object"))
         self.is_numlike = _or([self.is_num, self.is_bool])
         self.is_intdec = "false"
+        self.arr_gate = "true" if "array" in types else "false"
+        self.site = site
         self.temporal = typemap.is_temporal(dtype)
         self.exact_long = "integer" in types
         self._members = None
@@ -279,12 +298,42 @@ class _TypedViews(_Views):
         return _typed_views(f"try_element_at({self.arr}, {i + 1})",
                             self._members, null_is_value=True)
 
+    def rules(self, c, definition, name_sql, pass_only=False, ctx=None):
+        return c.compile_value(definition, self.site)
+
+    def elem(self, c, x, name_sql, suffix="[*]"):
+        return c._views(dataclasses.replace(
+            self.site.child(x, self._members, suffix, null_is_value=True),
+            name=name_sql, lam=True))
+
+    def item_rules(self, c, idx, definition, name_sql, gate, pass_only,
+                   ctx):
+        # the item's own rules, each active where ``gate`` holds
+        item = self.site.child(f"try_element_at({self.arr}, {idx + 1})",
+                               self._members, f"[{idx}]", null_is_value=True)
+        return [rule.gated(gate) for rule in c.compile_value(definition, item)]
+
+    def variant_items(self, c):
+        """``array_distinct`` cannot compare a map or a VARIANT: such
+        elements go through ``to_variant_object`` and the variant canon,
+        refused at compile time where that cannot render them."""
+        if isinstance(self._members, T.VariantType):
+            return self.arr
+        if not typemap.holds_map_or_variant(self._members):
+            return None
+        depth = typemap.variant_depth(self._members)
+        if depth is None or depth > c.canon_depth:
+            c._plan_unsupported(
+                f"uniqueItems over {self._members.simpleString()} elements: "
+                "a map with non-string keys, a value with no JSON equal or "
+                "nesting past canon_depth; use engine='python'")
+        x = c._vsql_var()
+        return f"transform({self.arr}, {x} -> to_variant_object({x}))"
+
 
 def _typed_views(expr, dtype, null_is_value=False, **kwargs) -> _Views:
     """The views of a value of Spark type ``dtype``: a VARIANT keeps
     its runtime type tag; any other type gets static facts."""
-    from pyspark.sql import types as T
-
     if isinstance(dtype, T.VariantType):
         return _Views(expr)
     return _TypedViews(expr, dtype, null_is_value, **kwargs)
@@ -315,13 +364,15 @@ class _PackCtx:
 
 class _PackSingle(_PackCtx):
     """A single level-scope value (level root, or a static property /
-    positional-item hop below one)."""
+    positional-item hop below one).  ``obj``: its entries' map, given
+    where the value is an object's map view rather than a VARIANT."""
 
-    __slots__ = ("val", "name")
+    __slots__ = ("val", "name", "obj")
 
-    def __init__(self, val: str, name: str):
+    def __init__(self, val: str | None, name: str, obj: str | None = None):
         self.val = val
         self.name = name
+        self.obj = obj if obj is not None else _Views(val).obj
 
     def replace(self, val, name):
         return _PackSingle(val, name)
@@ -453,9 +504,15 @@ class _Null(str):
         return _Null(self.x, not self.negated)
 
 
+class _Safe(str):
+    """A boolean text that is never NULL (a ``_nf`` result)."""
+
+
 def _nf(x: str) -> str:
-    """NULL-as-false coalesce (a literal needs none)."""
-    return x if x in ("true", "false") else f"coalesce({x}, false)"
+    """NULL-as-false coalesce (a literal or a ``_Safe`` text needs none)."""
+    if x in ("true", "false") or isinstance(x, _Safe):
+        return x
+    return _Safe(f"coalesce({x}, false)")
 
 
 def _complemented(parts) -> bool:
@@ -489,6 +546,8 @@ def _or(parts) -> str:
 def _not(x: str) -> str:
     if isinstance(x, _Null):
         return x.complement
+    if isinstance(x, _Safe):
+        return _Safe(f"NOT {x}")
     return {"true": "false", "false": "true"}.get(x, f"NOT {x}")
 
 
@@ -496,6 +555,43 @@ def _msg(name_sql: str, text: str, pass_only: bool = False) -> str:
     """Message SQL: the runtime name followed by ``text`` ("NULL" in a
     pass-only probe, which never surfaces messages)."""
     return "NULL" if pass_only else f"concat({name_sql}, {sqlstr(' ' + text)})"
+
+
+def _rule(rule_id, name_sql, message, fail, **nested):
+    """An emitted :class:`plan.Rule` (NULL-safe ``fail``, no site yet);
+    ``nested``: a nested value's first-failing ``dynamic`` and ``gate``."""
+    from .plan import Rule
+
+    return Rule(rule_id, None, name_sql, message, _nf(fail), **nested)
+
+
+def _violation_parts(rules) -> list:
+    """Per-rule violation structs (NULL where the rule passes), in order.
+    A nested struct is itself NULL where its value has no violation, so
+    its presence ``gate`` suffices and the struct is written once."""
+    return [f"CASE WHEN {_nf(r.gate)} THEN {r.dynamic} END"
+            if r.gate is not None else
+            f"CASE WHEN {r.fail} THEN {r.struct_sql()} END" for r in rules]
+
+
+def _violation_sql(rules) -> str:
+    """First failing rule as a violation struct (NULL when none): a flat
+    coalesce of per-rule CASEs, every nested struct written once per
+    level — plan size linear, not exponential, in the nesting depth."""
+    parts = _violation_parts(rules)
+    if not parts:
+        return f"CAST(NULL AS {VIOL_STRUCT_SQL})"
+    return parts[0] if len(parts) == 1 else "coalesce(" + ", ".join(parts) + ")"
+
+
+def _any_fail(rules) -> str:
+    return "(" + " OR ".join(r.fail for r in rules) + ")"
+
+
+def _subschemas(definition, keyword) -> list:
+    if not isinstance(definition[keyword], (list, tuple)):
+        raise SchemaDefinitionError(f"{keyword} must be an array")
+    return definition[keyword]
 
 
 @dataclass
@@ -528,17 +624,31 @@ _CANON_V = "__CANON_V__"
 _JSON_TYPES = ("null", "boolean", "number", "integer", "string", "array",
                "object")
 
-# the keywords _scalar_triples emits, for every kind of site
-_SCALAR_KEYWORDS = frozenset({
-    "type", "enum", "const", "minimum", "maximum", "exclusiveMinimum",
-    "exclusiveMaximum", "multipleOf", "minLength", "maxLength", "pattern",
-    "format", "contentEncoding", "contentMediaType"})
+# keyword -> its one emitter (a _VariantSQLMixin method): every scalar,
+# combinator and array keyword, dispatched from here by both worlds
+_VALUE_KEYWORDS = {
+    **dict.fromkeys((
+        "type", "enum", "const", "minimum", "maximum", "exclusiveMinimum",
+        "exclusiveMaximum", "multipleOf", "minLength", "maxLength",
+        "pattern", "format", "contentEncoding", "contentMediaType"),
+        "_scalar_rules"),
+    "allOf": "_all_of_rules", "anyOf": "_any_of_rules",
+    "oneOf": "_one_of_rules", "not": "_not_rules", "if": "_if_rules",
+    "minItems": "_item_count_rules", "maxItems": "_item_count_rules",
+    "uniqueItems": "_unique_items_rules", "items": "_items_rules",
+    "contains": "_contains_rules",
+}
+# keyword -> its one object key-set emitter, over a site's _ObjectKeys
+_KEY_SET_KEYWORDS = {
+    "minProperties": "_count_rules", "maxProperties": "_count_rules",
+    "required": "_required_rules", "propertyNames": "_property_names_rules"}
 
 _JSON_LITERAL_RE = (r"^\s*(-?\d+(\.\d+)?([eE][+-]?\d+)?|true|false|null|\".*\")\s*$")
 
 
 class _VariantSQLMixin:
-    """The VARIANT-value rule compiler (triples of SQL text).
+    """The keyword emitters (rules of SQL text) and the VARIANT-value
+    rule compiler.
 
     Its one host, ``compiler._PlanCompiler``, sets every field it reads
     in ``__init__``: the options (``keyword_order``, ``format_table``,
@@ -554,18 +664,8 @@ class _VariantSQLMixin:
     # evaluated over Spark 4 VariantType: the raw text parses once as
     # map<string,variant>, `schema_of_variant` recovers the exact JSON type
     # per value, and `try_variant_get` projects typed views.
-    _VARIANT_SUPPORTED = _SCALAR_KEYWORDS | {
-        # combinators compose from scalar-subset branches (each branch
-        # recursively compiled to triples; non-scalar branches raise
-        # PlanUnsupported like any other hard keyword)
-        "allOf", "anyOf", "oneOf", "not", "if",
-        # nested containers: the variant casts to array<variant> /
-        # map<string,variant>, element and member schemas recurse with
-        # per-element names carried via _NestedSQL structs; uniqueItems
-        # reproduces the reference's freeze canon (cross-type 1 == 1.0,
-        # bool -> "True"/"False" string collision) via canonical strings
-        "minItems", "maxItems", "items", "contains", "uniqueItems",
-        # recursion: depth-bounded unroll, handled before this table
+    _VARIANT_SUPPORTED = set(_VALUE_KEYWORDS) | {
+        # recursion: depth-bounded unroll, handled before the table
         "$ref",
         "minProperties", "maxProperties", "required", "dependencies",
         "properties", "patternProperties", "additionalProperties",
@@ -701,7 +801,7 @@ class _VariantSQLMixin:
     def _vpack_register(self, canonical, target, doc_uri, ctx, w,
                         pass_only):
         """Register one recursion site in the innermost level frame and
-        return the triple that reads its packed result.  The site's
+        return the rules that read its packed result.  The site's
         values join the group's kid array; the shared child body
         compiles EAGERLY on group creation (so an unsupported target
         raises inside the caller's try/fallback) and the kid array is
@@ -737,10 +837,10 @@ class _VariantSQLMixin:
             fail = (f"exists({group.rsvar}, {rv} -> "
                     f"({rv}.t = {tag}{corr} AND exists({rv}.viols, "
                     f"{yv} -> {yv} IS NOT NULL)))")
-            return [(None, "NULL", self._vsql_spend(fail))]
-        # one triple per target-body slot: the inline expansion returns
-        # the target's full triple list, and top-level consumers build
-        # one RULE per triple — collect-all output must match
+            return [_rule(None, None, "NULL", self._vsql_spend(fail))]
+        # one rule per target-body slot: the inline expansion returns
+        # the target's full rule list, and top-level consumers keep one
+        # plan rule per rule — collect-all output must match
         sel = (f"try_element_at(filter({group.rsvar}, {rv} -> "
                f"({rv}.t = {tag}{corr})), 1).viols")
         out = []
@@ -748,9 +848,10 @@ class _VariantSQLMixin:
             # try_element_at, not [..]: subscripting would throw on an
             # out-of-bound index under ANSI mode instead of NULLing
             struct = f"try_element_at({sel}, {j + 1})"
-            out.append((_NestedSQL(struct, "true"),
-                        "CAST(NULL AS STRING)",
-                        self._vsql_spend(f"(({struct}) IS NOT NULL)")))
+            out.append(_rule(
+                None, None, None,
+                self._vsql_spend(f"(({struct}) IS NOT NULL)"),
+                dynamic=struct, gate="true"))
         return out
 
     def _vpack_child_sql(self, group: _PackGroup) -> str:
@@ -795,12 +896,11 @@ class _VariantSQLMixin:
                 for j, canon in enumerate(group.comp):
                     target, uri = self._vref_targets[canon]
                     with self._v_based(uri):
-                        triples = self._entry_triples_sql(
+                        parts = _violation_parts(self._variant_rules(
                             target, f"{kvar}.nm", _Views(f"{kvar}.v"),
-                            ctx=ctx)
-                    parts = self._violation_parts(triples, f"{kvar}.nm")
+                            ctx=ctx))
                     lengths.append(len(parts))
-                    # per-TRIPLE violation slots, not just the first
+                    # per-RULE violation slots, not just the first
                     # failing: a top-level site expands back to one
                     # rule per slot, so collect-all output matches the
                     # inline unroll exactly
@@ -839,21 +939,21 @@ class _VariantSQLMixin:
                     f"{group.rsvar} -> {text}), 1)")
         return text
 
-    def _vpack_compile_top(self, definition, name_sql, views, ctx,
-                           pass_only: bool = False):
-        """Compile entry triples at a TOP-LEVEL site under the shared
-        global frame: every top-level recursion site of one target
+    @contextlib.contextmanager
+    def _vpack_top(self, ctx):
+        """Compile at a TOP-LEVEL site (pack ctx ``ctx``) under the
+        shared global frame; yields the ctx to compile with (None where
+        nothing packs).  Every top-level recursion site of one target
         joins the SAME group, whose result array becomes ONE helper
         column (``_vpack_flush``) that all consuming rules reference by
         its fixed name — zero per-rule, per-property duplication of the
         packed chain."""
-        if not self.pack_recursion:
-            return self._entry_triples_sql(definition, name_sql, views,
-                                           pass_only=pass_only, ctx=None)
+        if not self.pack_recursion or ctx is None:
+            yield None
+            return
         self._vpack_frames.append(self._vpack_global)
         try:
-            return self._entry_triples_sql(definition, name_sql, views,
-                                           pass_only=pass_only, ctx=ctx)
+            yield ctx
         finally:
             self._vpack_frames.pop()
 
@@ -1013,9 +1113,9 @@ class _VariantSQLMixin:
 
     # -- $ref depth guard ----------------------------------------------------
 
-    def _depth_guard_triple_sql(self, name_sql: str, w: _Views,
-                                pass_only: bool = False):
-        """Triple guarding data that nests past ref_unroll_depth: with
+    def _depth_guard_rule(self, name_sql: str, w: _Views,
+                          pass_only: bool = False):
+        """Rule guarding data that nests past ref_unroll_depth: with
         on_depth_exceeded="error" any VALUE present at the cut-off site
         raises at evaluation time (rows within the bound are untouched);
         with "violation" it emits a distinguishable violation row
@@ -1032,43 +1132,13 @@ class _VariantSQLMixin:
                        f"({self.ref_unroll_depth}); raise "
                        "ref_unroll_depth or use engine=\\'python\\'')")
         if self.on_depth_exceeded == "violation":
-            return ("$ref-depth", message, w.present)
+            return _rule("$ref-depth", name_sql, message, w.present)
         err = f"raise_error({message})"
-        return (None, message,
-                f"CASE WHEN {w.present} THEN ({err} IS NOT NULL) "
-                "ELSE false END")
+        return _rule(None, name_sql, message,
+                     f"CASE WHEN {w.present} THEN ({err} IS NOT NULL) "
+                     "ELSE false END")
 
-    # -- violation struct ----------------------------------------------------
-
-    def _violation_parts(self, triples, name_sql: str) -> list:
-        """Per-triple violation structs (NULL when that triple passes),
-        in keyword order."""
-        parts = []
-        for rule_id, message, fail in triples:
-            if isinstance(rule_id, _NestedSQL):
-                # the struct itself is NULL when the child has no
-                # violation, so coalesce falls through — no separate
-                # struct-non-null test needed
-                parts.append(f"CASE WHEN {_nf(rule_id.gate_sql)} "
-                             f"THEN {rule_id.struct_sql} END")
-            else:
-                rid = sqlstr(rule_id) if rule_id is not None \
-                    else "CAST(NULL AS STRING)"
-                parts.append(f"CASE WHEN {_nf(fail)} THEN named_struct("
-                             f"'name', {name_sql}, 'rule', {rid}, "
-                             f"'message', {message}) END")
-        return parts
-
-    def _violation_sql(self, triples, name_sql: str) -> str:
-        """First failing triple as a violation struct (NULL when none) —
-        a flat coalesce of per-triple CASEs, so every struct (and every
-        nested child's struct) is written exactly once."""
-        parts = self._violation_parts(triples, name_sql)
-        if not parts:
-            return f"CAST(NULL AS {VIOL_STRUCT_SQL})"
-        if len(parts) == 1:
-            return parts[0]
-        return "coalesce(" + ", ".join(parts) + ")"
+    # -- nested values -------------------------------------------------------
 
     def _failing_sql(self, coll: str, params: str, viol: str) -> str:
         """The violation structs of ``coll``'s failing members, in order:
@@ -1080,19 +1150,264 @@ class _VariantSQLMixin:
 
     def _branch_pass_sql(self, sub, name_sql, w: _Views,
                          ctx=None) -> str:
-        """True where a subschema accepts the VARIANT value — no triple
-        of the branch fails.  Compiles in pass-only mode: probes never
-        surface names/messages/structs, so none are generated."""
-        triples = self._entry_triples_sql(sub, name_sql, w,
-                                          pass_only=True, ctx=ctx)
-        if not triples:
+        """True where subschema ``sub`` accepts the value — no rule of
+        the branch fails.  Compiles in pass-only mode where the view
+        has one: probes never surface names/messages/structs."""
+        rules = w.rules(self, sub, name_sql, True, ctx)
+        if not rules:
             return "true"
-        return ("(" + " AND ".join(f"NOT {_nf(fail)}"
-                                   for _, _, fail in triples) + ")")
+        return "(" + " AND ".join(f"NOT {r.fail}" for r in rules) + ")"
+
+    def _nested_rules(self, sub, name_sql, child_sql, gate, pass_only,
+                      ctx):
+        """One rule whose violation struct is the VARIANT child value's
+        own first failing rule, active where ``gate`` holds (pass-only
+        probes reduce to the bare boolean — no struct, no messages).
+
+        The child value expression is BOUND to a lambda variable
+        (``transform(array(v), var -> ...)``) so its text appears once
+        instead of once per view per rule — the rule set references the
+        short variable.  Keeps nested plan size linear instead of
+        multiplicative in the value-path length."""
+        var = self._vsql_var("v")
+        rules = self._variant_rules(sub, name_sql, _Views(var), pass_only,
+                                    ctx)
+        if not rules:
+            return []
+        if pass_only:
+            bound = f"exists(array({child_sql}), {var} -> {_any_fail(rules)})"
+            return [_rule(None, None, "NULL", f"({_nf(gate)} AND {bound})")]
+        struct = (f"try_element_at(transform(array({child_sql}), "
+                  f"{var} -> {_violation_sql(rules)}), 1)")
+        return [_rule(None, None, None,
+                      f"({_nf(gate)} AND ({struct}) IS NOT NULL)",
+                      dynamic=struct, gate=gate)]
+
+    def _elems_ctx(self, ctx, start, inner_i):
+        """Pack ctx for an array-elements hop — only from a Single
+        parent (one collection hop per level, see _PackCtx)."""
+        if not isinstance(ctx, _PackSingle):
+            return None
+        lv = _Views(ctx.val)
+        sx, si = self._vsql_var(), self._vsql_var("i")
+        coll = (f"slice({lv.arr}, {start + 1}, "
+                f"greatest(size({lv.arr}) - {start}, 0))")
+        cname = (f"concat({ctx.name}, '[', CAST({si} + {start} "
+                 f"AS STRING), ']')")
+        return _PackArray(coll, sx, si, sx, cname, inner_i)
+
+    def _entries_ctx(self, ctx, key_filter, inner_e):
+        """Pack ctx for an object-entries hop — only from a Single
+        parent; the segment applies the SAME key filter so packed
+        evaluation never touches an entry the inline form would have
+        skipped."""
+        if not isinstance(ctx, _PackSingle):
+            return None
+        se = self._vsql_var("e")
+        return _PackEntries(
+            f"map_entries({ctx.obj})", se, key_filter(f"{se}.key"),
+            f"{se}.value", f"concat({ctx.name}, '.', {se}.key)",
+            f"{inner_e}.key")
+
+    def _member_rules(self, rule_id, sub, gate, coll, params, member: _Views,
+                      name_sql, keep, pass_only, ctx):
+        """The first member of ``coll`` (lambda ``params``, viewed as
+        ``member``, named ``name_sql``) that ``keep`` selects and ``sub``
+        rejects: one rule, active where ``gate`` holds, whose violation
+        is that member's own (``data...[i] must be ...``)."""
+        rules = member.rules(self, sub, name_sql, pass_only, ctx)
+        if not rules:
+            return []
+        if pass_only:
+            # a transform over (x, i) or entries rather than a bare
+            # exists: packed sites inside correlate by index or key
+            y = self._vsql_var("y")
+            bools = f"transform({coll}, {params} -> {_and(keep, _any_fail(rules))})"
+            return [_rule(None, None, "NULL", _and(
+                gate, _nf(f"exists({bools}, {y} -> {y})")))]
+        viol = _violation_sql(rules)
+        failing = self._failing_sql(coll, params, viol if keep == "true" else
+                                    f"CASE WHEN {keep} THEN {viol} END")
+        return [_rule(rule_id, None, None,
+                      _and(gate, _nf(f"size({failing}) > 0")),
+                      dynamic=f"try_element_at({failing}, 1)", gate=gate)]
+
+    def _elements_rules(self, sub, start, name_sql, w: _Views, pass_only,
+                        ctx):
+        """The first array element from ``start`` that violates ``sub``."""
+        x, i = self._vsql_var(), self._vsql_var("i")
+        ename = ("NULL" if pass_only else
+                 f"concat({name_sql}, '[', CAST({i} + {start} AS STRING), ']')")
+        return self._member_rules(
+            "items", sub, w.arr_gate, f"slice({w.arr}, {start + 1}, "
+            f"greatest(size({w.arr}) - {start}, 0))", f"({x}, {i})",
+            w.elem(self, x, ename), ename, "true", pass_only,
+            self._elems_ctx(ctx, start, i))
+
+    def _entries_rules(self, key_filter, sub, rule_id, name_sql, w: _Views,
+                       pass_only=False, ctx=None):
+        """The first object entry whose key passes ``key_filter`` (key
+        SQL -> boolean SQL) and whose value violates ``sub``."""
+        e = self._vsql_var("e")
+        ename = "NULL" if pass_only else f"concat({name_sql}, '.', {e}.key)"
+        return self._member_rules(
+            rule_id, sub, w.is_obj, f"map_entries({w.obj})", e,
+            w.elem(self, f"{e}.value", ename, ".<k>"), ename,
+            key_filter(f"{e}.key"), pass_only,
+            self._entries_ctx(ctx, key_filter, e))
+
+    # -- combinator and array keywords: one emitter each, for every site --
+    #
+    # Each reads only the value's views and recurses through them:
+    # ``w.rules`` compiles a subschema at the view (``compile_value`` at a
+    # typed site, the variant table over a VARIANT), ``w.elem`` views an
+    # element or entry value, ``w.item_rules`` compiles a declared
+    # positional item and ``w.variant_items`` feeds the uniqueItems canon.
+    # Those four are the only places the worlds part; add no typed branch
+    # here.
+
+    def _all_of_rules(self, keyword, definition, name_sql, w: _Views,
+                      pass_only=False, ctx=None):
+        # reference inlines allOf sub-blocks: inner keywords surface with
+        # their own rules/messages (draft04.py:173)
+        return [rule for sub in _subschemas(definition, keyword)
+                for rule in w.rules(self, sub, name_sql, pass_only, ctx)]
+
+    def _any_of_rules(self, keyword, definition, name_sql, w: _Views,
+                      pass_only=False, ctx=None):
+        passes = [self._branch_pass_sql(sub, name_sql, w, ctx)
+                  for sub in _subschemas(definition, keyword)]
+        return [_rule("anyOf", name_sql, _msg(
+            name_sql, "cannot be validated by any definition", pass_only),
+            _not(_or(passes)))]
+
+    def _one_of_rules(self, keyword, definition, name_sql, w: _Views,
+                      pass_only=False, ctx=None):
+        count = " + ".join(
+            f"CAST({self._branch_pass_sql(sub, name_sql, w, ctx)} AS INT)"
+            for sub in _subschemas(definition, keyword)) or "0"
+        return [_rule("oneOf", name_sql, "NULL" if pass_only else
+                      f"concat({name_sql}, ' must be valid exactly by one "
+                      f"definition (', CAST(({count}) AS STRING), "
+                      "' matches found)')", f"({count}) != 1")]
+
+    def _not_rules(self, keyword, definition, name_sql, w: _Views,
+                   pass_only=False, ctx=None):
+        sub = definition["not"]
+        if sub is False:
+            return []
+        text = ("must not be there" if sub is True
+                else "must NOT match a disallowed definition")
+        return [_rule("not", name_sql, _msg(name_sql, text, pass_only),
+                      self._branch_pass_sql(sub, name_sql, w, ctx))]
+
+    def _if_rules(self, keyword, definition, name_sql, w: _Views,
+                  pass_only=False, ctx=None):
+        if_pass = _nf(self._branch_pass_sql(definition["if"], name_sql, w,
+                                            ctx))
+        return [rule.gated(gate)
+                for branch, gate in (("then", if_pass),
+                                     ("else", _not(if_pass)))
+                for rule in w.rules(self, definition.get(branch, True),
+                                    name_sql, pass_only, ctx)]
+
+    def _item_count_rules(self, keyword, definition, name_sql, w: _Views,
+                          pass_only=False, ctx=None):
+        b = definition[keyword]
+        if not isinstance(b, (int, float)):
+            raise SchemaDefinitionError(f"{keyword} must be a number")
+        op, text = self._ITEM_COUNTS[keyword]
+        return [_rule(keyword, name_sql, _msg(name_sql, text.format(b),
+                                              pass_only),
+                      _and(w.arr_gate, f"size({w.arr}) {op} {sqlnum(b)}"))]
+
+    def _unique_items_rules(self, keyword, definition, name_sql, w: _Views,
+                            pass_only=False, ctx=None):
+        if not definition["uniqueItems"] or w.arr_gate == "false":
+            return []
+        out = []
+        items = w.variant_items(self)
+        if items is None:
+            dup = _and(w.arr_gate,
+                       f"size({w.arr}) > size(array_distinct({w.arr}))")
+        else:
+            # the reference's freeze canon (cross-type 1 == 1.0, bool ->
+            # "True"/"False" collision, draft04.py:412-421) via
+            # canonical strings
+            x = self._vsql_var()
+            canon = self._vsql_spend(
+                self._variant_canon_sql(x, self.canon_depth))
+            dup = _and(w.arr_gate, f"size({w.arr}) > size(array_distinct("
+                                   f"transform({items}, {x} -> {canon})))")
+            if self.on_depth_exceeded == "violation":
+                # scale mode: a too-deep element becomes ONE violation
+                # row and the canon (whose depth-0 branch raises) is
+                # skipped via a lazy CASE — never an aborted job, never
+                # a silent verdict
+                xd = self._vsql_var()
+                probe = self._variant_too_deep_sql(xd, self.canon_depth)
+                too_deep = _and(w.arr_gate,
+                                f"exists({items}, {xd} -> {probe})")
+                out.append(_rule(
+                    "uniqueItems-depth", name_sql, _msg(
+                        name_sql, "nests deeper than the uniqueItems "
+                        f"canonicalization depth (canon_depth="
+                        f"{self.canon_depth}); raise canon_depth for an "
+                        "exact verdict", pass_only), too_deep))
+                dup = f"(CASE WHEN {too_deep} THEN false ELSE {dup} END)"
+        out.append(_rule("uniqueItems", name_sql, _msg(
+            name_sql, "must contain unique items", pass_only), dup))
+        return out
+
+    def _items_rules(self, keyword, definition, name_sql, w: _Views,
+                     pass_only=False, ctx=None):
+        items = definition["items"]
+        if items is True or w.arr_gate == "false":
+            return []
+
+        def longer_than(n):
+            return _and(w.arr_gate, f"size({w.arr}) > {n}")
+
+        if items is False:
+            return [_rule("items", name_sql, _msg(
+                name_sql, "must not be there", pass_only), longer_than(0))]
+        if not isinstance(items, list):
+            return self._elements_rules(items, 0, name_sql, w, pass_only, ctx)
+        out = []
+        for idx, sub in enumerate(items):
+            out.extend(w.item_rules(self, idx, sub, name_sql,
+                                    longer_than(idx), pass_only, ctx))
+        extra = definition.get("additionalItems")
+        if extra is False:
+            out.append(_rule("items", name_sql, _msg(
+                name_sql, "must contain only specified items", pass_only),
+                longer_than(len(items))))
+        elif isinstance(extra, (dict, bool)) and extra is not True:
+            out.extend(self._elements_rules(extra, len(items), name_sql, w,
+                                            pass_only, ctx))
+        return out
+
+    def _contains_rules(self, keyword, definition, name_sql, w: _Views,
+                        pass_only=False, ctx=None):
+        sub = definition["contains"]
+        if w.arr_gate == "false":
+            return []
+        if sub is False:
+            return [_rule("contains", name_sql, _msg(
+                name_sql, "is always invalid", pass_only), w.is_arr)]
+        if sub is True:
+            return [_rule("contains", name_sql, _msg(
+                name_sql, "must not be empty", pass_only),
+                _and(w.arr_gate, f"size({w.arr}) = 0"))]
+        x = self._vsql_var()
+        found = self._branch_pass_sql(sub, "''", w.elem(self, x, "''"))
+        return [_rule("contains", name_sql, _msg(
+            name_sql, "must contain one of contains definition", pass_only),
+            _and(w.arr_gate, f"NOT exists({w.arr}, {x} -> {found})"))]
 
     # -- object key-set keywords: one emitter each, for every site --------
     #
-    # Each takes the site's key facts (_ObjectKeys) and returns triples:
+    # Each takes the site's key facts (_ObjectKeys) and returns rules:
     # variant values call them from the keyword table below, typed struct,
     # map and JSON-backed sites from compiler._PlanCompiler.  Where the
     # message or the test must walk the keys (additionalProperties: false,
@@ -1108,17 +1423,18 @@ class _VariantSQLMixin:
             ">", "must contain less than or equal to {} properties"),
     }
 
-    def _count_triples(self, definition, keyword, ok: _ObjectKeys,
-                       name_sql, pass_only=False):
+    def _count_rules(self, keyword, definition, ok: _ObjectKeys, name_sql,
+                     pass_only=False):
         bound = definition[keyword]
         if not isinstance(bound, (int, float)):
             raise SchemaDefinitionError(f"{keyword} must be a number")
         op, template = self._COUNT_BOUNDS[keyword]
-        return [(keyword, _msg(name_sql, template.format(bound), pass_only),
-                 _and(ok.gate, f"({ok.count()} {op} {sqlnum(bound)})"))]
+        return [_rule(keyword, name_sql,
+                      _msg(name_sql, template.format(bound), pass_only),
+                      _and(ok.gate, f"({ok.count()} {op} {sqlnum(bound)})"))]
 
-    def _required_triples(self, definition, ok: _ObjectKeys, name_sql,
-                          pass_only=False):
+    def _required_rules(self, keyword, definition, ok: _ObjectKeys,
+                        name_sql, pass_only=False):
         required = definition["required"]
         if not isinstance(required, (list, tuple)):
             raise SchemaDefinitionError("required must be an array")
@@ -1145,25 +1461,25 @@ class _VariantSQLMixin:
         message = ("NULL" if pass_only else
                    f"concat({name_sql}, ' must contain [', "
                    f"concat_ws(', '{shown}), '] properties')")
-        return [("required", message,
-                 _and(ok.gate, _or([f for _, f in missing])))]
+        return [_rule("required", name_sql, message,
+                      _and(ok.gate, _or([f for _, f in missing])))]
 
-    def _dependency_triples(self, key, requirement, ok: _ObjectKeys,
+    def _dependency_rules(self, key, requirement, ok: _ObjectKeys,
                             name_sql, pass_only=False):
         """One ``dependencies`` entry in its array or ``false`` form (the
         schema form validates a value, so each world compiles it)."""
         if requirement is True:
             return []
         if requirement is False:
-            return [("dependencies",
-                     "NULL" if pass_only else
-                     f"concat({sqlstr(key + ' in ')}, {name_sql}, "
-                     "' must not be there')",
-                     _and(ok.gate, ok.has(key)))]
-        return [("dependencies",
-                 _msg(name_sql, f"missing dependency {needed} for {key}",
-                      pass_only),
-                 _and(ok.gate, ok.has(key), f"NOT {ok.has(needed)}"))
+            return [_rule("dependencies", name_sql,
+                          "NULL" if pass_only else
+                          f"concat({sqlstr(key + ' in ')}, {name_sql}, "
+                          "' must not be there')",
+                          _and(ok.gate, ok.has(key)))]
+        return [_rule("dependencies", name_sql,
+                      _msg(name_sql, f"missing dependency {needed} for {key}",
+                           pass_only),
+                      _and(ok.gate, ok.has(key), f"NOT {ok.has(needed)}"))
                 for needed in requirement]
 
     def _extra_key(self, definition):
@@ -1180,8 +1496,8 @@ class _VariantSQLMixin:
 
         return is_extra
 
-    def _no_additional_triples(self, definition, ok: _ObjectKeys, name_sql,
-                               pass_only=False):
+    def _no_additional_rules(self, definition, ok: _ObjectKeys, name_sql,
+                             pass_only=False):
         """``additionalProperties: false``."""
         if ok.keys is not None:
             k = self._vsql_var("k")
@@ -1203,14 +1519,14 @@ class _VariantSQLMixin:
             shown = "concat_ws(', '" + "".join(
                 f", CASE WHEN {p} THEN {sqlstr(repr(key))} END"
                 for key, p in sorted(extra.items())) + ")"
-        return [("additionalProperties",
-                 "NULL" if pass_only else
-                 f"concat({name_sql}, ' must not contain ', "
-                 f"concat('{{', {shown}, '}}'), ' properties')",
-                 _and(ok.gate, fail))]
+        return [_rule("additionalProperties", name_sql,
+                      "NULL" if pass_only else
+                      f"concat({name_sql}, ' must not contain ', "
+                      f"concat('{{', {shown}, '}}'), ' properties')",
+                      _and(ok.gate, fail))]
 
-    def _pattern_false_triples(self, pattern, ok: _ObjectKeys, name_sql,
-                               pass_only=False):
+    def _pattern_false_rules(self, pattern, ok: _ObjectKeys, name_sql,
+                             pass_only=False):
         """``patternProperties: {pattern: false}``: a violation named by
         the offending key, with no keyword id (a boolean-false schema's
         error carries none) — one per matching field at a static site,
@@ -1229,16 +1545,16 @@ class _VariantSQLMixin:
                      _and(ok.gate, p))
                     for key, p in ok.fields.items() if matcher.search(key)]
         if pass_only:
-            return [(None, "NULL", fail) for _, fail in hits]
+            return [_rule(None, name_sql, "NULL", fail) for _, fail in hits]
         # gate = the FULL fail condition: the struct is non-null even
         # where nothing matches (a named_struct of a NULL name)
-        return [(_NestedSQL(
+        return [_rule(None, None, None, fail, gate=fail, dynamic=(
             f"named_struct('name', {kname}, 'rule', CAST(NULL AS STRING), "
-            f"'message', concat({kname}, ' must not be there'))", fail),
-            "CAST(NULL AS STRING)", fail) for kname, fail in hits]
+            f"'message', concat({kname}, ' must not be there'))"))
+            for kname, fail in hits]
 
-    def _property_names_triples(self, definition, ok: _ObjectKeys, name_sql,
-                                pass_only=False):
+    def _property_names_rules(self, keyword, definition, ok: _ObjectKeys,
+                              name_sql, pass_only=False):
         names_definition = definition["propertyNames"]
         if names_definition is True or names_definition == {}:
             return []
@@ -1248,13 +1564,15 @@ class _VariantSQLMixin:
             fail = (f"size({ok.keys}) > 0" if ok.keys is not None
                     else _or(list(ok.fields.values())))
         elif ok.keys is not None:
-            # keys are KNOWN strings: typed string views, so the
+            # keys are KNOWN strings: a typed string site, so the
             # non-string branches fold away in Python
-            from pyspark.sql import types as T
+            from .compiler import _Site
 
             k = self._vsql_var("k")
             name_pass = self._branch_pass_sql(
-                names_definition, "''", _TypedViews(k, T.StringType()))
+                names_definition, "''", self._views(_Site(
+                    k, T.StringType(), "<key>", "''",
+                    self._v_base_uri or self.store.root_uri(), lam=True)))
             fail = f"NOT {_nf(f'forall({ok.keys}, {k} -> {name_pass})')}"
         else:
             # static keys: validate the names at plan time, under the
@@ -1273,8 +1591,8 @@ class _VariantSQLMixin:
                         if names.collect(key)])
         if fail == "false":
             return []
-        return [("propertyNames", _msg(name_sql, message, pass_only),
-                 _and(ok.gate, fail))]
+        return [_rule("propertyNames", name_sql,
+                      _msg(name_sql, message, pass_only), _and(ok.gate, fail))]
 
     # -- scalar keywords: one emitter each, for every site ---------------
     #
@@ -1374,7 +1692,7 @@ class _VariantSQLMixin:
                     else _and(w.is_intdec, const))
         return _or([dbl_fail, big_fail, dec_fail])
 
-    def _multiple_of_triples(self, divisor, w: _Views, msg):
+    def _multiple_of_rules(self, divisor, w: _Views, name_sql, msg):
         # Decimal divisors compare as the reference's re-parsed source
         # literal; the message keeps str(original)
         message = msg(f"must be multiple of {divisor}")
@@ -1383,8 +1701,8 @@ class _VariantSQLMixin:
             # exact long modulo — documented deliberate divergence from
             # the reference's float true-division past 2^53 on TYPED
             # integer columns (tests/test_divergences.py)
-            return [("multipleOf", message,
-                     f"(({w.lng} % {sqlnum(divisor)}) != 0L)")]
+            return [_rule("multipleOf", name_sql, message,
+                          f"(({w.lng} % {sqlnum(divisor)}) != 0L)")]
         # the DOUBLE view for every other number, mirroring the
         # reference exactly:
         # - int divisor: q = value / divisor via float TRUE DIVISION,
@@ -1403,8 +1721,9 @@ class _VariantSQLMixin:
             fail = (f"coalesce((try_cast({w.num} AS {dec}) % "
                     f"CAST('{div}' AS {dec})) != CAST(0 AS {dec}), "
                     f"({w.num} % {fdiv}) != 0.0D)")
-        return [("multipleOf", message, _and(w.is_numlike, fail)),
-                ("multipleOf", "'inifinity reached'", _and(
+        return [_rule("multipleOf", name_sql, message,
+                      _and(w.is_numlike, fail)),
+                _rule("multipleOf", name_sql, "'inifinity reached'", _and(
                     w.is_numlike, f"({w.num} / {fdiv}) = double('Infinity')"))]
 
     def _format_fail(self, fmt, w: _Views):
@@ -1435,24 +1754,16 @@ class _VariantSQLMixin:
             return "must be a valid regex", _and(w.is_str, _not(match))
         return None
 
-    def _item_count_triples(self, definition, keyword, is_arr, arr,
-                            name_sql, pass_only=False):
-        """``minItems``/``maxItems`` over an array value ``arr``, where
-        ``is_arr`` holds (no lambda: typed and variant sites share it)."""
-        b = definition[keyword]
-        if not isinstance(b, (int, float)):
-            raise SchemaDefinitionError(f"{keyword} must be a number")
-        op, text = self._ITEM_COUNTS[keyword]
-        return [(keyword, _msg(name_sql, text.format(b), pass_only),
-                 _and(is_arr, f"size({arr}) {op} {sqlnum(b)}"))]
-
-    def _scalar_triples(self, keyword, definition, name_sql, w: _Views,
-                        pass_only=False):
-        """The triples of one scalar keyword (``_SCALAR_KEYWORDS``) over
-        the value's views; a triple that can never fail is dropped.  The
-        definition is checked first, also where the keyword is vacuous."""
+    def _scalar_rules(self, keyword, definition, name_sql, w: _Views,
+                      pass_only=False, ctx=None):
+        """The rules of one scalar keyword over the value's views; a rule
+        that can never fail is dropped.  The definition is checked first,
+        also where the keyword is vacuous."""
         def msg(text):
             return _msg(name_sql, text, pass_only)
+
+        def rule(rule_id, text, fail):
+            return _rule(rule_id, name_sql, text, fail)
 
         value = definition[keyword]
         if keyword == "type":
@@ -1460,7 +1771,8 @@ class _VariantSQLMixin:
             if not all(t in _JSON_TYPES for t in types):
                 raise SchemaDefinitionError("Unknown type")
             ok = _or([self._type_pass(w, t) for t in types])
-            out = [("type", msg("must be " + " or ".join(types)), _not(ok))]
+            out = [rule("type", msg("must be " + " or ".join(types)),
+                        _not(ok))]
         elif keyword in ("enum", "const"):
             if keyword == "enum" and not isinstance(value, (list, tuple)):
                 raise SchemaDefinitionError("enum must be an array")
@@ -1469,7 +1781,7 @@ class _VariantSQLMixin:
                     f"definition: {schema_value_repr(value)}")
             ok = _or([self._member_match_sql(w, m, keyword) for m in
                       (value if keyword == "enum" else [value])])
-            out = [(keyword, msg(text), _not(ok))]
+            out = [rule(keyword, msg(text), _not(ok))]
         elif keyword in self._BOUNDS or keyword == "multipleOf":
             if not isinstance(value, (int, float, decimal.Decimal)):
                 raise SchemaDefinitionError(
@@ -1477,7 +1789,7 @@ class _VariantSQLMixin:
                     if keyword.startswith("exclusive") else
                     f"{keyword} must be a number")
             if keyword == "multipleOf":
-                out = self._multiple_of_triples(value, w, msg)
+                out = self._multiple_of_rules(value, w, name_sql, msg)
             else:
                 # minimum/maximum turn exclusive under the draft-04 truthy
                 # modifier (reference draft04.py:339, inherited by later
@@ -1486,22 +1798,22 @@ class _VariantSQLMixin:
                 op, edge, text = self._BOUNDS[
                     modifier if modifier in self._BOUNDS
                     and definition.get(modifier) else keyword]
-                out = [(keyword, msg(text.format(value)),
-                        self._bound_fail(op, edge, value, w))]
+                out = [rule(keyword, msg(text.format(value)),
+                            self._bound_fail(op, edge, value, w))]
         elif keyword in self._LENGTHS:
             if not isinstance(value, (int, float)):
                 raise SchemaDefinitionError(f"{keyword} must be a number")
             op, text = self._LENGTHS[keyword]
-            out = [(keyword, msg(text.format(value)),
-                    _and(w.is_str, f"length({w.s}) {op} {sqlnum(value)}"))]
+            out = [rule(keyword, msg(text.format(value)),
+                        _and(w.is_str, f"length({w.s}) {op} {sqlnum(value)}"))]
         elif keyword == "pattern":
-            out = [("pattern", msg(f"must match pattern {value}"),
-                    self._regex_fail(w, _UNESCAPED_DOLLAR.sub(r"\\Z", value),
-                                     anchored=False))]
+            out = [rule("pattern", msg(f"must match pattern {value}"),
+                        self._regex_fail(w, _UNESCAPED_DOLLAR.sub(r"\\Z", value),
+                                         anchored=False))]
         elif keyword == "format":
             checked = self._format_fail(value, w) if self.use_formats \
                 else None
-            out = [("format", msg(checked[0]), checked[1])] if checked \
+            out = [rule("format", msg(checked[0]), checked[1])] if checked \
                 else []
         elif keyword == "contentEncoding":
             # the reference runs base64.b64decode WITHOUT validate:
@@ -1509,25 +1821,24 @@ class _VariantSQLMixin:
             # must pad to a multiple of 4 — Spark's try_to_binary alone is
             # laxer (accepts 'abc'), so mirror the filter + padding check
             filt = f"regexp_replace({w.s}, '[^A-Za-z0-9+/=]', '')"
-            out = [(None, msg("must be encoded by base64"), _and(
+            out = [rule(None, msg("must be encoded by base64"), _and(
                 w.is_str, f"((length({filt}) % 4L) != 0L "
                           f"OR try_to_binary({filt}, 'base64') IS NULL)"))
                    ] if value == "base64" else []
         else:  # contentMediaType; scalar JSON literals get_json_object
             # cannot see pass by the literal regex
-            out = [(None, msg("must be valid JSON"), _and(
+            out = [rule(None, msg("must be valid JSON"), _and(
                 w.is_str, f"get_json_object({w.s}, '$') IS NULL",
                 f"NOT rlike({w.s}, {sqlstr(_JSON_LITERAL_RE)})"))
                    ] if value == "application/json" else []
-        return [t for t in out if t[2] != "false"]
+        return [r for r in out if r.fail != "false"]
 
-    # -- the keyword table ---------------------------------------------------
+    # -- the variant keyword table -------------------------------------------
 
-    def _entry_triples_sql(self, definition, name_sql: str, w: _Views,
-                           pass_only: bool = False, ctx=None):
-        """(rule_id, message_sql, fail_sql) triples validating one
-        VARIANT value against a scalar-subset schema, in dialect keyword
-        order with reference-parity messages.
+    def _variant_rules(self, definition, name_sql: str, w: _Views,
+                       pass_only: bool = False, ctx=None):
+        """The rules validating one VARIANT value against a schema, in
+        dialect keyword order with reference-parity messages.
 
         ``pass_only``: the caller is a combinator probe that consumes
         only the fail booleans — names, messages and nested violation
@@ -1541,9 +1852,9 @@ class _VariantSQLMixin:
         if definition is True or definition == {}:
             return []
         if definition is False:
-            return [(None, "NULL" if pass_only else
-                     f"concat({name_sql}, ' must not be there')",
-                     "true")]
+            return [_rule(None, name_sql, "NULL" if pass_only else
+                          f"concat({name_sql}, ' must not be there')",
+                          "true")]
         if not isinstance(definition, dict):
             raise SchemaDefinitionError("definition must be an object")
         if "$ref" in definition:
@@ -1557,8 +1868,8 @@ class _VariantSQLMixin:
             target, doc_uri, canonical = self.store.resolve(
                 definition["$ref"], base)
             if self._vref_stack.count(canonical) >= self.ref_unroll_depth:
-                return [self._depth_guard_triple_sql(
-                    name_sql, w, pass_only=pass_only)]
+                return [self._depth_guard_rule(name_sql, w,
+                                               pass_only=pass_only)]
             if (self.pack_recursion and ctx is not None
                     and self._vpack_frames
                     and self._vref_component(canonical, target, doc_uri)):
@@ -1572,14 +1883,14 @@ class _VariantSQLMixin:
             self._vref_stack.append(canonical)
             try:
                 with self._v_based(doc_uri):
-                    expanded = self._entry_triples_sql(
+                    expanded = self._variant_rules(
                         target, name_sql, w, pass_only=pass_only, ctx=ctx)
             finally:
                 self._vref_stack.pop()
             # account each expansion's text against the size budget —
             # recursion blowup shows up here, where it is created
-            for _, _, fail in expanded:
-                self._vsql_spend(fail)
+            for rule in expanded:
+                self._vsql_spend(rule.fail)
             return expanded
         hard = [k for k in definition if k not in self._VARIANT_SUPPORTED
                 and k not in self._VARIANT_ANNOTATIONS]
@@ -1593,298 +1904,32 @@ class _VariantSQLMixin:
         facts = _ObjectKeys(
             w.is_obj, w.okeys,
             lambda key: _nf(f"map_contains_key({w.obj}, {sqlstr(key)})"))
-
-        def msg(text):
-            return _msg(name_sql, text, pass_only)
-
-        def any_fail(triples):
-            return ("(" + " OR ".join(_nf(f) for _, _, f in triples)
-                    + ")")
-
-        def nested_value(sub, child_name_sql, child_w, gate_sql,
-                         child_ctx=None):
-            """One triple whose violation struct is the child value's
-            own first-failing rule (pass-only probes reduce to the bare
-            boolean — no struct, no messages).
-
-            The child value expression is BOUND to a lambda variable
-            (``transform(array(v), var -> ...)``) so its text appears
-            once instead of once per view per rule — the rule set
-            references the short variable.  Keeps nested plan size
-            linear instead of multiplicative in the value-path length."""
-            var = self._vsql_var("v")
-            triples = self._entry_triples_sql(sub, child_name_sql,
-                                              _Views(var),
-                                              pass_only=pass_only,
-                                              ctx=child_ctx)
-            if not triples:
-                return
-            if pass_only:
-                bound = (f"exists(array({child_w.v}), "
-                         f"{var} -> {any_fail(triples)})")
-                out.append((None, "NULL",
-                            f"({_nf(gate_sql)} AND {bound})"))
-                return
-            viol = self._violation_sql(triples, child_name_sql)
-            struct = (f"try_element_at(transform(array({child_w.v}), "
-                      f"{var} -> {viol}), 1)")
-            out.append((_NestedSQL(struct, gate_sql),
-                        "CAST(NULL AS STRING)",
-                        f"({_nf(gate_sql)} AND ({struct}) IS NOT NULL)"))
-
-        def elems_ctx(start, inner_i):
-            """Pack ctx for an array-elements hop — only from a Single
-            parent (one collection hop per level, see _PackCtx)."""
-            if not isinstance(ctx, _PackSingle):
-                return None
-            lv = _Views(ctx.val)
-            sx, si = self._vsql_var(), self._vsql_var("i")
-            coll = (f"slice({lv.arr}, {start + 1}, "
-                    f"greatest(size({lv.arr}) - {start}, 0))")
-            cname = (f"concat({ctx.name}, '[', CAST({si} + {start} "
-                     f"AS STRING), ']')")
-            return _PackArray(coll, sx, si, sx, cname, inner_i)
-
-        def first_failing_elems(sub, start):
-            """First array element from ``start`` violating the element
-            schema (name ``data...[i]``)."""
-            x, i = self._vsql_var(), self._vsql_var("i")
-            tail = (f"slice({w.arr}, {start + 1}, "
-                    f"greatest(size({w.arr}) - {start}, 0))")
-            if pass_only:
-                # (x, i) transform instead of a bare exists: packed
-                # sites inside the element schema correlate by index
-                triples = self._entry_triples_sql(
-                    sub, "NULL", _Views(x), pass_only=True,
-                    ctx=elems_ctx(start, i))
-                if not triples:
-                    return
-                bools = (f"transform({tail}, ({x}, {i}) -> "
-                         f"{any_fail(triples)})")
-                y = self._vsql_var("y")
-                out.append((None, "NULL",
-                            f"({w.is_arr} AND {_nf(f'exists({bools}, {y} -> {y})')})"))
-                return
-            ename = f"concat({name_sql}, '[', CAST({i} + {start} " \
-                    f"AS STRING), ']')"
-            triples = self._entry_triples_sql(sub, ename, _Views(x),
-                                              ctx=elems_ctx(start, i))
-            if not triples:
-                return
-            failing = self._failing_sql(
-                tail, f"({x}, {i})", self._violation_sql(triples, ename))
-            out.append((
-                _NestedSQL(f"try_element_at({failing}, 1)", w.is_arr),
-                "CAST(NULL AS STRING)",
-                f"({w.is_arr} AND {_nf(f'size({failing}) > 0')})"))
-
-        def entries_ctx(key_filter, inner_e):
-            """Pack ctx for an object-entries hop — only from a Single
-            parent; the segment applies the SAME key filter so packed
-            evaluation never touches an entry the inline form would
-            have skipped."""
-            if not isinstance(ctx, _PackSingle):
-                return None
-            lv = _Views(ctx.val)
-            se = self._vsql_var("e")
-            return _PackEntries(
-                f"map_entries({lv.obj})", se, key_filter(f"{se}.key"),
-                f"{se}.value", f"concat({ctx.name}, '.', {se}.key)",
-                f"{inner_e}.key")
-
-        def first_failing_entry(key_filter, sub, rule_label):
-            """First (key, value) entry passing ``key_filter`` whose
-            value violates ``sub`` (name ``data...key``)."""
-            e = self._vsql_var("e")
-            if pass_only:
-                triples = self._entry_triples_sql(
-                    sub, "NULL", _Views(f"{e}.value"), pass_only=True,
-                    ctx=entries_ctx(key_filter, e))
-                if not triples:
-                    return
-                pred = (f"({key_filter(e + '.key')} "
-                        f"AND {any_fail(triples)})")
-                out.append((None, "NULL",
-                            f"({w.is_obj} AND {_nf(f'exists(map_entries({w.obj}), {e} -> {pred})')})"))
-                return
-            ename = f"concat({name_sql}, '.', {e}.key)"
-            triples = self._entry_triples_sql(sub, ename,
-                                              _Views(f"{e}.value"),
-                                              ctx=entries_ctx(key_filter,
-                                                              e))
-            if not triples:
-                return
-            viol = self._violation_sql(triples, ename)
-            failing = self._failing_sql(
-                f"map_entries({w.obj})", e,
-                f"CASE WHEN {key_filter(e + '.key')} THEN {viol} END")
-            out.append((
-                _NestedSQL(f"try_element_at({failing}, 1)", w.is_obj),
-                "CAST(NULL AS STRING)",
-                f"({w.is_obj} AND {_nf(f'size({failing}) > 0')})"))
-
         for keyword in self.keyword_order:
             if keyword not in definition:
                 continue
-            if keyword in _SCALAR_KEYWORDS:
-                out.extend(self._scalar_triples(keyword, definition,
-                                                name_sql, w, pass_only))
-            elif keyword == "allOf":
-                # reference inlines allOf sub-blocks: inner keywords
-                # surface with their own rules/messages (draft04.py:173)
-                subs = definition["allOf"]
-                if not isinstance(subs, (list, tuple)):
-                    raise SchemaDefinitionError("allOf must be an array")
-                for sub in subs:
-                    out.extend(self._entry_triples_sql(
-                        sub, name_sql, w, pass_only=pass_only, ctx=ctx))
-            elif keyword == "anyOf":
-                subs = definition["anyOf"]
-                if not isinstance(subs, (list, tuple)):
-                    raise SchemaDefinitionError("anyOf must be an array")
-                any_pass = " OR ".join(
-                    self._branch_pass_sql(sub, name_sql, w, ctx=ctx)
-                    for sub in subs) or "false"
-                out.append(("anyOf",
-                            msg("cannot be validated by any definition"),
-                            f"NOT ({any_pass})"))
-            elif keyword == "oneOf":
-                subs = definition["oneOf"]
-                if not isinstance(subs, (list, tuple)):
-                    raise SchemaDefinitionError("oneOf must be an array")
-                count = " + ".join(
-                    f"CAST({self._branch_pass_sql(sub, name_sql, w, ctx=ctx)} "
-                    "AS INT)" for sub in subs) or "0"
-                out.append(("oneOf",
-                            "NULL" if pass_only else
-                            f"concat({name_sql}, ' must be valid exactly "
-                            f"by one definition (', CAST(({count}) AS "
-                            "STRING), ' matches found)')",
-                            f"({count}) != 1"))
-            elif keyword == "not":
-                sub = definition["not"]
-                if sub is True:
-                    out.append(("not", msg("must not be there"), "true"))
-                elif sub is not False:
-                    out.append(("not",
-                                msg("must NOT match a disallowed "
-                                    "definition"),
-                                self._branch_pass_sql(sub, name_sql, w,
-                                                      ctx=ctx)))
-            elif keyword == "if":
-                if_pass = _nf(self._branch_pass_sql(
-                    definition["if"], name_sql, w, ctx=ctx))
-                for rid, message, fail in self._entry_triples_sql(
-                        definition.get("then", True), name_sql, w,
-                        pass_only=pass_only, ctx=ctx):
-                    out.append((rid, message, f"({if_pass} AND {fail})"))
-                for rid, message, fail in self._entry_triples_sql(
-                        definition.get("else", True), name_sql, w,
-                        pass_only=pass_only, ctx=ctx):
-                    out.append((rid, message,
-                                f"(NOT {if_pass} AND {fail})"))
-            elif keyword in self._ITEM_COUNTS:
-                out.extend(self._item_count_triples(
-                    definition, keyword, w.is_arr, w.arr, name_sql, pass_only))
-            elif keyword == "uniqueItems":
-                if definition["uniqueItems"]:
-                    x = self._vsql_var()
-                    canon = self._vsql_spend(
-                        self._variant_canon_sql(x, self.canon_depth))
-                    canons = f"transform({w.arr}, {x} -> {canon})"
-                    dup = (f"({w.is_arr} AND size({w.arr}) > "
-                           f"size(array_distinct({canons})))")
-                    if self.on_depth_exceeded == "violation":
-                        # scale mode: a too-deep element becomes ONE
-                        # violation row and the canon (whose depth-0
-                        # branch raises) is skipped via a lazy CASE —
-                        # never an aborted job, never a silent verdict
-                        xd = self._vsql_var()
-                        probe = self._variant_too_deep_sql(
-                            xd, self.canon_depth)
-                        too_deep = (f"({w.is_arr} AND exists({w.arr}, "
-                                    f"{xd} -> {probe}))")
-                        out.append((
-                            "uniqueItems-depth",
-                            msg("nests deeper than the uniqueItems "
-                                "canonicalization depth (canon_depth="
-                                f"{self.canon_depth}); raise canon_depth "
-                                "for an exact verdict"),
-                            too_deep))
-                        dup = (f"(CASE WHEN {too_deep} THEN false "
-                               f"ELSE {dup} END)")
-                    out.append((
-                        "uniqueItems", msg("must contain unique items"),
-                        dup))
-            elif keyword == "items":
-                items_definition = definition["items"]
-                if items_definition is False:
-                    out.append(("items", msg("must not be there"),
-                                f"({w.is_arr} AND size({w.arr}) > 0)"))
-                elif isinstance(items_definition, list):
-                    for idx, idef in enumerate(items_definition):
-                        nested_value(
-                            idef, f"concat({name_sql}, '[{idx}]')",
-                            _Views(f"try_element_at({w.arr}, {idx + 1})"),
-                            f"({w.is_arr} AND size({w.arr}) > {idx})",
-                            child_ctx=_derive_ctx(
-                                ctx,
-                                lambda lv, _n=idx: (
-                                    f"try_element_at({lv.arr}, {_n + 1})"),
-                                lambda nm, _n=idx: (
-                                    f"concat({nm}, '[{_n}]')")))
-                    n_fixed = len(items_definition)
-                    extra = definition.get("additionalItems")
-                    if extra is False:
-                        out.append(("items",
-                                    msg("must contain only specified "
-                                        "items"),
-                                    f"({w.is_arr} AND size({w.arr}) "
-                                    f"> {n_fixed})"))
-                    elif isinstance(extra, (dict, bool)) \
-                            and extra is not True:
-                        first_failing_elems(extra, start=n_fixed)
-                elif items_definition is not True:
-                    first_failing_elems(items_definition, start=0)
-            elif keyword == "contains":
-                cd = definition["contains"]
-                if cd is False:
-                    out.append(("contains", msg("is always invalid"),
-                                w.is_arr))
-                elif cd is True:
-                    out.append(("contains", msg("must not be empty"),
-                                f"({w.is_arr} AND size({w.arr}) = 0)"))
-                else:
-                    x = self._vsql_var()
-                    elem_pass = self._branch_pass_sql(cd, name_sql,
-                                                      _Views(x))
-                    out.append(("contains",
-                                msg("must contain one of contains "
-                                    "definition"),
-                                f"({w.is_arr} AND NOT exists({w.arr}, "
-                                f"{x} -> {elem_pass}))"))
-            elif keyword in ("minProperties", "maxProperties"):
-                out.extend(self._count_triples(definition, keyword, facts,
-                                               name_sql, pass_only))
-            elif keyword == "required":
-                out.extend(self._required_triples(definition, facts, name_sql,
-                                                  pass_only))
+            emit = _VALUE_KEYWORDS.get(keyword)
+            if emit is not None:
+                out.extend(getattr(self, emit)(keyword, definition, name_sql,
+                                               w, pass_only, ctx))
+            elif keyword in _KEY_SET_KEYWORDS:
+                out.extend(getattr(self, _KEY_SET_KEYWORDS[keyword])(
+                    keyword, definition, facts, name_sql, pass_only))
             elif keyword == "properties":
                 for key, sub in definition["properties"].items():
                     if not isinstance(sub, (dict, bool)):
                         clean = re.sub(r"[^a-zA-Z0-9]", "", key)
                         raise SchemaDefinitionError(
                             "data[{}] must be object".format(clean))
-                    nested_value(
+                    out.extend(self._nested_rules(
                         sub, f"concat({name_sql}, {sqlstr('.' + key)})",
-                        _Views(f"try_element_at({w.obj}, {sqlstr(key)})"),
-                        _and(w.is_obj, facts.has(key)),
-                        child_ctx=_derive_ctx(
+                        f"try_element_at({w.obj}, {sqlstr(key)})",
+                        _and(w.is_obj, facts.has(key)), pass_only,
+                        _derive_ctx(
                             ctx,
                             lambda lv, _k=key: (
                                 f"try_element_at({lv.obj}, {sqlstr(_k)})"),
                             lambda nm, _k=key: (
-                                f"concat({nm}, {sqlstr('.' + _k)})")))
+                                f"concat({nm}, {sqlstr('.' + _k)})"))))
             elif keyword == "dependencies":
                 deps = definition["dependencies"]
                 if not isinstance(deps, dict):
@@ -1892,36 +1937,34 @@ class _VariantSQLMixin:
                         "dependencies must be an object")
                 for key, req in deps.items():
                     if not isinstance(req, dict):
-                        out.extend(self._dependency_triples(
+                        out.extend(self._dependency_rules(
                             key, req, facts, name_sql, pass_only))
                         continue
                     present = _and(w.is_obj, facts.has(key))
-                    for rid, message, fail in self._entry_triples_sql(
-                            req, name_sql, w, pass_only=pass_only, ctx=ctx):
-                        out.append((rid, message,
-                                    f"({present} AND {_nf(fail)})"))
+                    out.extend(rule.gated(present) for rule in
+                               self._variant_rules(req, name_sql, w,
+                                                   pass_only, ctx))
             elif keyword == "additionalProperties":
                 add_def = definition["additionalProperties"]
                 if add_def is True or add_def == {}:
                     continue
                 if add_def is False:
-                    out.extend(self._no_additional_triples(
+                    out.extend(self._no_additional_rules(
                         definition, facts, name_sql, pass_only))
                 else:
-                    first_failing_entry(self._extra_key(definition), add_def,
-                                        "additionalProperties")
+                    out.extend(self._entries_rules(
+                        self._extra_key(definition), add_def,
+                        "additionalProperties", name_sql, w, pass_only, ctx))
             elif keyword == "patternProperties":
                 for pattern, sub in definition["patternProperties"].items():
                     if sub is False:
-                        out.extend(self._pattern_false_triples(
+                        out.extend(self._pattern_false_rules(
                             pattern, facts, name_sql, pass_only))
                     elif sub is not True and sub != {}:
                         java = jvm_pattern(
                             _UNESCAPED_DOLLAR.sub(r"\\Z", pattern))
-                        first_failing_entry(
+                        out.extend(self._entries_rules(
                             lambda k, _j=java: f"rlike({k}, {sqlstr(_j)})",
-                            sub, "patternProperties")
-            elif keyword == "propertyNames":
-                out.extend(self._property_names_triples(
-                    definition, facts, name_sql, pass_only))
+                            sub, "patternProperties", name_sql, w,
+                            pass_only, ctx))
         return out

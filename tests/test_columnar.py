@@ -373,6 +373,42 @@ def test_typed_container_members_match_rowcheck(spark, schema, dtype, values):
                             wrapper)
 
 
+_MAP = T.MapType(T.StringType(), T.LongType())
+
+
+@pytest.mark.parametrize("dtype,values", [
+    (T.ArrayType(_MAP),
+     [[{"a": 1}, {"a": 1}], [{"a": 1}, {"b": 1}], [{"a": 1, "b": 2},
+      {"b": 2, "a": 1}], [{"a": None}, {"a": None}], [None, None], []]),
+    (T.ArrayType(T.StructType([T.StructField("k", T.LongType()),
+                               T.StructField("m", _MAP)])),
+     [[(1, {"a": 1}), (1, {"a": 1})], [(1, {"a": 1}), (1, {"b": 1})],
+      [(None, {"a": 1}), (None, {"a": 1})], [(1, None), (2, None)]]),
+], ids=["map", "struct-of-map"])
+def test_typed_unique_items_over_maps_match_rowcheck(spark, dtype, values):
+    # array_distinct cannot compare a map: map-bearing elements go
+    # through to_variant_object and the variant canon
+    spark_schema = T.StructType([T.StructField("o", dtype)])
+    df = spark.createDataFrame([(v,) for v in values], spark_schema)
+    wrapper = {"type": "object", "properties": {"o": {"uniqueItems": True}}}
+    plan = ssg.compile_plan(wrapper, spark_schema)
+    assert_matches_rowcheck(plan, df, wrapper)
+    assert [row["verdict"] for row in plan.apply(df).collect()][:2] == [
+        False, True]
+
+
+def test_typed_unique_items_refuses_non_string_map_keys():
+    # the variant canon renders string-keyed objects only: refused when
+    # the plan compiles, never at apply
+    from spark_schema_guard.columnar.compiler import PlanUnsupported
+
+    spark_schema = T.StructType([T.StructField(
+        "o", T.ArrayType(T.MapType(T.LongType(), T.LongType())))])
+    with pytest.raises(PlanUnsupported, match="uniqueItems"):
+        ssg.compile_plan({"properties": {"o": {"uniqueItems": True}}},
+                         spark_schema)
+
+
 @pytest.mark.parametrize("schema,options", [
     ({"definitions": {"short": {"maxLength": 1}},
       "propertyNames": {"$ref": "#/definitions/short"}}, {}),

@@ -485,8 +485,36 @@ def test_combinators_on_declared_json_fields(spark):
         assert res["python"] == res["columnar"], (sch, res)
 
 
-# Object-site cases checked against rowcheck: (schema, docs).
 _M = {"type": "string"}
+
+
+@pytest.mark.parametrize("element,docs,verdicts", [
+    ({"if": {"minItems": 2}, "then": {"items": {"type": "string"}}},
+     ['{"t": [[1]]}', '{"t": [[1, 2]]}', '{"t": [["a", "b"]]}',
+      '{"t": [[1], [2, 3]]}'], [True, False, True, False]),
+    ({"dependencies": {"a": {"properties": {"b": {"items": _M}}}}},
+     ['{"t": [{"b": [1]}]}', '{"t": [{"a": 0, "b": [1]}]}',
+      '{"t": [{"b": [1]}, {"a": 0, "b": ["x"]}]}'], [True, False, True]),
+], ids=["if-then", "dependencies"])
+def test_conditional_nested_element_matches_rowcheck(spark, element, docs,
+                                                     verdicts):
+    """A nested value's first failing rule under a condition (if/then, a
+    schema dependency) inside an array element fires only where the
+    condition holds: the element's violation struct is gated by it
+    too, not only by the value's presence."""
+    schema = {"properties": {"t": {"items": element}}}
+    df = spark.createDataFrame([(d,) for d in docs], "doc string")
+    res = {}
+    for engine in ("python", "columnar"):
+        out = validate_json_column(df, "doc", schema, engine=engine)
+        res[engine] = {r["doc"]: (r["verdict"], [
+            (v["rule"], v["name"], v["message"]) for v in r["violations"]][:1])
+            for r in out.collect()}
+    assert res["python"] == res["columnar"]
+    assert [res["python"][d][0] for d in docs] == verdicts
+
+
+# Object-site cases checked against rowcheck: (schema, docs).
 _NESTED_KEYS = {"properties": {"x": {}}, "required": ["x"],
                 "propertyNames": {"maxLength": 3}}
 _NESTED_DOCS = ['{"o": null}', '{"o": 5}', '{"o": "abcd"}', '{"o": {}}',

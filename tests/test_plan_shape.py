@@ -334,7 +334,7 @@ def plan_texts() -> dict:
 def test_plan_text_golden():
     """The compiled plan text of the benchmark schemas and of the typed
     array keywords equals the recorded one (compiling needs no JVM).  A
-    deliberate change rewrites the file with ``python
+    deliberate change rewrites the file with ``PYTHONPATH=. python
     tests/test_plan_shape.py`` and says why in the change log."""
     with open(GOLDEN) as fh:
         golden = json.load(fh)
