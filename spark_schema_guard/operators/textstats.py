@@ -9,6 +9,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..columnar.varsql import sqlstr
+
 # tiny per-language stopword sets for the frequency heuristic — enough to
 # separate the testdata languages deterministically
 LANG_MARKERS = {
@@ -305,11 +307,13 @@ def language_consistency(df: DataFrame, id_col: str, text_col: str, *,
     HITS only, a tiny fraction of tokens."""
     if n_chunks < 1:
         raise ValueError(f"n_chunks must be >= 1, got {n_chunks}")
-    spark = df.sparkSession
-    markers = spark.createDataFrame(
-        [(w, lang) for lang in sorted(LANG_MARKERS)
-         for w in LANG_MARKERS[lang]],
-        "tok string, __lang string")
+    # an inline table is a JVM-local relation: reading it starts no
+    # Python worker, unlike a row-object createDataFrame
+    rows = ", ".join(f"({sqlstr(w)}, {sqlstr(lang)})"
+                     for lang in sorted(LANG_MARKERS)
+                     for w in LANG_MARKERS[lang])
+    markers = df.sparkSession.sql(
+        f"SELECT * FROM VALUES {rows} AS t(tok, `__lang`)")
     toks = _tokens(F.lower(F.col(text_col)))
     st = (df.select(F.col(id_col), F.posexplode(toks).alias("pos", "tok"),
                     F.size(toks).alias("__nt"))

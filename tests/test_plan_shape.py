@@ -344,6 +344,18 @@ def test_plan_text_golden():
         assert text == golden[name], name
 
 
+def test_language_consistency_reads_no_python_rdd(spark, sf_dir):
+    """The marker table is an inline VALUES relation, not a row-object
+    createDataFrame: that is a Python RDD (``ExistingRDD``), and every
+    read of it runs a Python-worker job."""
+    from spark_schema_guard.operators.textstats import language_consistency
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    text = _physical(language_consistency(docs, "doc_id", "text"))
+    assert "ExistingRDD" not in text
+    assert "LocalTableScan" in text
+
+
 def _ks_frame(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return docs.select(F.col("n_chars").cast("double").alias("v"),
