@@ -61,3 +61,65 @@ def test_typed_long_multiple_of_is_exact(spark):
 def test_reference_long_multiple_of_is_float_division(reference):
     # the reference's float path calls the huge odd int valid
     reference.validate({"multipleOf": 2}, 2 ** 60 + 1)  # no raise
+
+
+_AB_STRINGS = {"properties": {"a": {"type": "string"},
+                              "b": {"type": "string"}}}
+
+
+def _collect_all(spark, schema, value):
+    """(rowcheck, typed columnar, JSON columnar) violations of
+    ``{"t": value}``, each as (rule, name, message) tuples; ``value`` is
+    a list of ``{"a": int, "b": int}`` objects."""
+    import json
+
+    from pyspark.sql import types as T
+
+    from spark_schema_guard.columnar.compiler import compile_plan_for_column
+
+    def listed(violations):
+        return [(v["rule"], v["name"], v["message"]) for v in violations]
+
+    data = {"t": value}
+    expected = [(e.rule, e.name, e.message) for e in
+                ssg.compile(schema, fast_fail=False).collect(data)]
+    ab = T.StructType([T.StructField("a", T.LongType()),
+                       T.StructField("b", T.LongType())])
+    typed = spark.createDataFrame(
+        [([(o["a"], o["b"]) for o in value],)],
+        T.StructType([T.StructField("t", T.ArrayType(ab))]))
+    text = spark.createDataFrame([(json.dumps(data),)], "doc string")
+    return (expected,
+            listed(ssg.compile_plan(schema, typed.schema).apply(typed)
+                   .first()["violations"]),
+            listed(compile_plan_for_column(schema, "doc").apply(text)
+                   .first()["violations"]))
+
+
+@pytest.mark.parametrize("array_schema,value", [
+    ({"items": _AB_STRINGS}, [{"a": 1, "b": 2}, {"a": 1, "b": 2}]),
+    ({"items": [True], "additionalItems": _AB_STRINGS},
+     [{"a": 1, "b": 2}, {"a": 1, "b": 2}, {"a": 1, "b": 2}]),
+], ids=["items", "additionalItems"])
+def test_columnar_element_schema_reports_first_failing_element(
+        spark, array_schema, value):
+    # Collect-all mode: the row validator lists every failing rule of
+    # every element; the columnar engine, typed or JSON, reports one
+    # violation per element schema — the first failing element's first
+    # failing rule.  Verdicts and the first violation agree.
+    expected, typed, json_column = _collect_all(
+        spark, {"properties": {"t": array_schema}}, value)
+    assert len(expected) == 4
+    assert typed == json_column == expected[:1]
+
+
+def test_columnar_positional_item_collect_all(spark):
+    # A declared positional item lists every failing rule of the item
+    # on a typed column, as the row validator does; over a JSON column
+    # it is one bound struct: the item's first failing rule only.
+    expected, typed, json_column = _collect_all(
+        spark, {"properties": {"t": {"items": [_AB_STRINGS]}}},
+        [{"a": 1, "b": 2}])
+    assert len(expected) == 2
+    assert typed == expected
+    assert json_column == expected[:1]
