@@ -397,6 +397,23 @@ def test_typed_unique_items_over_maps_match_rowcheck(spark, dtype, values):
         False, True]
 
 
+def test_typed_contains_false_passes_null_element(spark):
+    # a NULL array element is a JSON null, not an array: contains
+    # (even contains: false) does not apply to it
+    spark_schema = T.StructType([T.StructField(
+        "o", T.ArrayType(T.ArrayType(T.LongType())))])
+    df = spark.createDataFrame([([None, [1]],), ([None],), ([None, []],)],
+                               spark_schema)
+    schema = {"properties": {"o": {"items": {"contains": False}}}}
+    validator = ssg.compile(schema, fast_fail=False)
+    for out in ssg.compile_plan(schema, spark_schema).apply(df).collect():
+        want = [(e.rule, e.name, e.message)
+                for e in validator.collect({"o": out["o"]})]
+        have = [(v["rule"], v["name"], v["message"])
+                for v in out["violations"]]
+        assert (out["verdict"], have) == (not want, want[:1])
+
+
 def test_typed_unique_items_refuses_non_string_map_keys():
     # the variant canon renders string-keyed objects only: refused when
     # the plan compiles, never at apply
