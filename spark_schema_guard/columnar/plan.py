@@ -37,9 +37,9 @@ class Rule:
     """One vectorized validation rule, as SQL text.
 
     ``fail`` is a boolean expression that is true exactly where the rule
-    is violated (never null — the compiler wraps it in coalesce).  Both
-    compilers' emitters return Rules with no ``site`` yet: the caller
-    places them.
+    is violated (never null — the compiler wraps it in coalesce).  The
+    keyword emitters return Rules with no ``site`` yet: the compiler
+    places them at one.
     """
 
     rule: str | None  # keyword id ('type', 'minimum', ...) or None
