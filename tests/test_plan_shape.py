@@ -278,6 +278,81 @@ TYPED_ARRAYS_SCHEMA = {"properties": {
 }}
 
 
+_INNER = T.StructType([T.StructField("inner", _AB),
+                       T.StructField("n", T.LongType())])
+TYPED_OBJECTS_DF_SCHEMA = T.StructType([
+    T.StructField("obj", _AB),
+    T.StructField("counts", T.MapType(T.StringType(), T.LongType())),
+    T.StructField("recs", T.MapType(T.StringType(), _AB)),
+    T.StructField("outer", _INNER),
+])
+
+# every object keyword over a struct, a map of scalars, a map of structs,
+# a nested struct and the root row
+TYPED_OBJECTS_SCHEMA = {
+    "required": ["obj"], "minProperties": 1, "maxProperties": 3,
+    "propertyNames": {"maxLength": 6},
+    "dependencies": {"recs": ["counts"], "outer": {"required": ["obj"]}},
+    "patternProperties": {"^c": {"minProperties": 1}, "^zz": False},
+    "additionalProperties": {"not": {"type": "null"}},
+    "properties": {
+        "obj": {"required": ["a"], "minProperties": 1,
+                "properties": {"a": {"minimum": 0}},
+                "patternProperties": {"^b$": {"maxLength": 3}},
+                "additionalProperties": False,
+                "dependencies": {"a": ["b"],
+                                 "b": {"properties": {"a": {"maximum": 9}}}}},
+        "counts": {"required": ["x"], "maxProperties": 4,
+                   "propertyNames": {"pattern": "^[a-z]+$"},
+                   "properties": {"x": {"minimum": 0}},
+                   "patternProperties": {"^y": {"maximum": 5}, "^z": False},
+                   "additionalProperties": {"minimum": 1},
+                   "dependencies": {"x": ["y"], "w": False,
+                                    "v": {"required": ["x"]}}},
+        "recs": {"minProperties": 1,
+                 "patternProperties": {
+                     "^r": {"properties": {"a": {"minimum": 0}}}},
+                 "additionalProperties": {
+                     "required": ["a"],
+                     "properties": {"b": {"maxLength": 2}}}},
+        "outer": {"dependencies": {"n": False},
+                  "additionalProperties": {"type": "integer"},
+                  "properties": {"inner": {
+                      "required": ["b"],
+                      "properties": {"a": {}, "b": {"minLength": 1}},
+                      "additionalProperties": False,
+                      "propertyNames": False}}},
+    },
+}
+
+# the same keywords over a JSON column, with a property declared under
+# allOf (outside the parsed struct) and one whose python-regex pattern
+# falls back to the parsed field
+JSON_OBJECTS_SCHEMA = {
+    "required": ["id"], "minProperties": 1, "maxProperties": 8,
+    "propertyNames": {"maxLength": 8},
+    "properties": {
+        "id": {"type": "integer", "minimum": 0},
+        "name": {"type": "string", "pattern": "^[a-z]+$"},
+        "meta": {"type": "object", "required": ["k"], "minProperties": 1,
+                 "properties": {"k": {"type": "string"}},
+                 "patternProperties": {"^x": {"type": "integer"},
+                                       "^z": False},
+                 "additionalProperties": False,
+                 "dependencies": {"k": ["v"], "v": False}},
+        "tags": {"type": "object", "maxProperties": 4,
+                 "propertyNames": {"maxLength": 3},
+                 "additionalProperties": {"type": "string"}},
+    },
+    "patternProperties": {"^n": {"minLength": 1}, "^q": False,
+                          "^t": {"type": "object"}},
+    "additionalProperties": {"type": ["integer", "string"]},
+    "dependencies": {"meta": ["id"], "zz": False,
+                     "tags": {"properties": {"extra": {"type": "boolean"}}}},
+    "allOf": [{"properties": {"extra2": {"type": "number"}}}],
+}
+
+
 def _perfbench_schemas() -> dict:
     """perfbench's JSON schemas, read from its source without importing
     it (the workloads module imports the benchmark's own helpers)."""
@@ -314,8 +389,9 @@ def _plan_text(plan) -> dict:
 
 def plan_texts() -> dict:
     """The golden plans: the web table, perfbench's JSON schemas (exact,
-    and the flat one in coerce mode) and every combinator and array
-    keyword over typed arrays."""
+    and the flat one in coerce mode), every combinator and array keyword
+    over typed arrays, and every object keyword over typed objects and a
+    JSON column."""
     from spark_schema_guard.columnar.compiler import compile_plan_for_column
 
     bench = _perfbench_schemas()
@@ -327,6 +403,10 @@ def plan_texts() -> dict:
             bench["FLAT_SCHEMA"], "props", json_types="coerce"),
         "typed_arrays": ssg.compile_plan(TYPED_ARRAYS_SCHEMA,
                                          TYPED_ARRAYS_DF_SCHEMA),
+        "typed_objects": ssg.compile_plan(TYPED_OBJECTS_SCHEMA,
+                                          TYPED_OBJECTS_DF_SCHEMA),
+        "json_objects": compile_plan_for_column(
+            JSON_OBJECTS_SCHEMA, "doc", regex_engine="python"),
     }
     return {name: _plan_text(plan) for name, plan in plans.items()}
 
