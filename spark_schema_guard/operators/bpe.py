@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..columnar.varsql import sqlstr
 from .textstats import _tokens
 
 END_OF_WORD = "</w>"
@@ -144,9 +145,14 @@ def bpe_merges_frame(spark: SparkSession, merges: list[dict]) -> DataFrame:
         T.StructField("left", T.StringType()),
         T.StructField("right", T.StringType()),
         T.StructField("n", T.LongType())])
-    return spark.createDataFrame(
-        [(m["rank"], m["left"], m["right"], m["n"]) for m in merges],
-        schema)
+    # an inline table is a JVM-local relation: reading it starts no
+    # Python worker, unlike a row-object createDataFrame
+    rows = ", ".join(f"({int(m['rank'])}, {sqlstr(m['left'])}, "
+                     f"{sqlstr(m['right'])}, {int(m['n'])}L)" for m in merges)
+    return spark.sql(
+        f"SELECT * FROM VALUES {rows or '(NULL, NULL, NULL, NULL)'} "
+        f"AS t(`rank`, `left`, `right`, `n`)"
+        f"{'' if merges else ' WHERE false'}").to(schema)
 
 
 def bpe_encode_word(word: str, merges: list[dict],

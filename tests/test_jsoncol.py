@@ -666,6 +666,36 @@ def test_coerce_null_is_the_json_null(spark, prop):
     assert got == want
 
 
+@pytest.mark.parametrize("json_types", ["exact", "coerce"])
+@pytest.mark.parametrize("prop,options", [
+    ({"type": "string", "pattern": "^[a-z]+$"}, {"regex_engine": "python"}),
+    ({"type": "string", "format": "lower"}, {"formats": {"lower": str.islower}}),
+], ids=["regex-engine", "callable-format"])
+def test_json_property_python_predicate_matches_rowcheck(spark, prop, options,
+                                                          json_types):
+    """A declared JSON property whose keyword needs a Python predicate
+    (the python regex engine, a callable format) has no variant form: it
+    validates the parsed field, the predicate a helper column, and
+    equals rowcheck in both modes."""
+    from spark_schema_guard.columnar.compiler import compile_plan_for_column
+    from spark_schema_guard.rowcheck import compile_row_validator
+
+    schema = {"type": "object", "properties": {"k": prop}}
+    docs = ['{"k": "abc"}', '{"k": "aB1"}', '{"k": "\\u00e9t\\u00e9"}',
+            '{"k": "\\u0661"}', '{"k": null}', '{}']
+    plan = compile_plan_for_column(schema, "doc", json_types=json_types,
+                                   **options)
+    assert any(not isinstance(sql, str) for _, sql in plan._aux)
+    df = spark.createDataFrame(list(enumerate(docs)), "i int, doc string")
+    got = [[v.asDict() for v in r["violations"]]
+           for r in plan.apply(df).orderBy("i").collect()]
+    validator = compile_row_validator(schema, fast_fail=False,
+                                      formats=options.get("formats"))
+    want = [[e.as_row() for e in validator.collect(json.loads(d))]
+            for d in docs]
+    assert got == want
+
+
 # -- a JSON-column plan is one self-contained artifact ----------------------
 
 APPLY_DOCS = [

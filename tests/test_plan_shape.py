@@ -424,6 +424,41 @@ def test_plan_text_golden():
         assert text == golden[name], name
 
 
+PUBLIC_COMPILE_OPTIONS = {
+    "compile_plan": [
+        "regex_engine", "use_formats", "use_default", "detailed_exceptions",
+        "include_value", "formats", "handlers"],
+    "compile_plan_for_column": [
+        "json_types", "regex_engine", "use_formats", "use_default",
+        "formats", "handlers", "ref_unroll_depth", "on_depth_exceeded",
+        "canon_depth", "ref_unroll_budget", "plan_text_budget",
+        "pack_recursion"],
+    "validate_json_column": [
+        "engine", "violations_col", "verdict_col", "formats", "json_types",
+        "ref_unroll_depth", "on_depth_exceeded", "canon_depth",
+        "plan_text_budget", "pack_recursion"],
+}
+
+
+def test_public_compile_options_are_pinned():
+    """The keyword options of the public compile entry points are a
+    tracked surface (no JVM needed): a new option needs a measured
+    reason (ROADMAP aim 2, "prefer deleting a path to adding a knob"),
+    and this list changes with it."""
+    import inspect
+
+    from spark_schema_guard.columnar.compiler import (compile_plan,
+                                                      compile_plan_for_column)
+    from spark_schema_guard.jsoncol import validate_json_column
+
+    for fn in (compile_plan, compile_plan_for_column, validate_json_column):
+        got = [p.name for p in inspect.signature(fn).parameters.values()
+               if p.kind is inspect.Parameter.KEYWORD_ONLY]
+        assert got == PUBLIC_COMPILE_OPTIONS[fn.__name__], (
+            f"{fn.__name__} options changed; ROADMAP aim 2: a new option "
+            "needs a measured reason")
+
+
 def test_language_consistency_reads_no_python_rdd(spark, sf_dir):
     """The marker table is an inline VALUES relation, not a row-object
     createDataFrame: that is a Python RDD (``ExistingRDD``), and every
@@ -434,6 +469,23 @@ def test_language_consistency_reads_no_python_rdd(spark, sf_dir):
     text = _physical(language_consistency(docs, "doc_id", "text"))
     assert "ExistingRDD" not in text
     assert "LocalTableScan" in text
+
+
+def test_bpe_merges_frame_reads_no_python_rdd(spark):
+    """The merge table is an inline VALUES relation too, with the same
+    columns and types, also when there are no merges."""
+    from spark_schema_guard.operators import bpe_merges_frame
+
+    merges = [{"rank": 0, "left": "a'b", "right": "c\\d", "n": 5},
+              {"rank": 1, "left": "ab", "right": "</w>", "n": 2 ** 40}]
+    for rows in (merges, []):
+        frame = bpe_merges_frame(spark, rows)
+        assert frame.schema.simpleString() == (
+            "struct<rank:int,left:string,right:string,n:bigint>")
+        assert [r.asDict() for r in frame.collect()] == rows
+        text = _physical(frame)
+        assert "ExistingRDD" not in text
+        assert "LocalTableScan" in text
 
 
 def _ks_frame(spark, sf_dir):
