@@ -7,12 +7,11 @@ optimizes and whole-stage codegen evaluates JVM-side — no per-row Python
 in the hot path.  Compilation is plain Python string building (zero py4j
 round-trips); the plan parses the finished text when it is applied.
 This module maps typed columns, struct fields, array elements and map
-values onto sites, places emitted rules there (:meth:`_PlanCompiler.
-_placed`) and compiles the object value-schema keywords (``properties``
-and the schema forms of ``patternProperties``, ``additionalProperties``
-and ``dependencies``).  Every other keyword has ONE emitter, in the
-mixed-in ``varsql`` world, which also compiles VARIANT values; a typed
-site reaches them through its views (:meth:`_PlanCompiler._views`).
+values onto sites and places emitted rules there (:meth:`_PlanCompiler.
+_placed`).  Every keyword has ONE emitter, in the mixed-in ``varsql``
+world, which also compiles VARIANT values; a typed site reaches them
+through its views (:meth:`_PlanCompiler._views`), a JSON-backed
+property through its variant value (``_json_property_rules``).
 Evaluation-order parity: rules are emitted in the reference's
 keyword-registration order (``draft04.py:42-68`` + draft-06/07
 extensions), properties in schema order, so the first element of the
@@ -49,15 +48,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..exceptions import SchemaDefinitionError
-from ..formats import jvm_pattern
 from ..ref_resolver import SchemaStore
-from ..rowcheck.compiler import (
-    _UNESCAPED_DOLLAR, _Compiler as _RowCompiler, _pick_dialect,
-)
+from ..rowcheck.compiler import _Compiler as _RowCompiler, _pick_dialect
 from . import typemap
 from .plan import _NULL_STR, Rule, ValidationPlan
-from .varsql import (_KEY_SET_KEYWORDS, _VALUE_KEYWORDS, _and, _nf,
-                     _ObjectKeys, _PackFrame, _PackSingle, _typed_views,
+from .varsql import (_and, _nf, _PackFrame, _PackSingle, _typed_views,
                      _VariantSQLMixin, _Views, sqlident, sqlstr)
 
 
@@ -114,6 +109,20 @@ class _Site:
         return _Site(expr, dtype, self.sname + suffix, name, self.base_uri,
                      null_is_value, json=json, lam=self.lam)
 
+    def fields(self) -> dict[str, "_Site"]:
+        """Child site per statically known field (root columns or a
+        struct's fields); a JSON-backed struct field keeps its JSON text."""
+        if self.expr is not None and not isinstance(self.dtype, T.StructType):
+            return {}
+        return {f.name: self.child(
+            sqlident(f.name) if self.expr is None
+            else f"{self.expr}.{sqlident(f.name)}", f.dataType, "." + f.name,
+            json=(f"get_json_object({self.json}, "
+                  f"{sqlstr(_json_path(f.name))})"
+                  if self.json is not None
+                  and isinstance(f.dataType, T.StructType) else None))
+            for f in self.dtype.fields}
+
 
 def _value_of(site: _Site) -> str | None:
     """The site's value as a string, for ``include_value``."""
@@ -151,13 +160,6 @@ class PlanTooLarge(PlanUnsupported):
     compiled-closure validator is the right tool there; raise
     ``plan_text_budget`` / ``ref_unroll_budget`` to force the columnar
     attempt anyway."""
-
-
-# the object keywords whose values are schemas: each world compiles them
-_OBJECT_VALUE_KEYWORDS = {
-    "dependencies": "_kw_dependencies", "properties": "_kw_properties",
-    "patternProperties": "_kw_pattern_properties",
-    "additionalProperties": "_kw_additional_properties"}
 
 
 class _PlanCompiler(_VariantSQLMixin):
@@ -345,26 +347,10 @@ class _PlanCompiler(_VariantSQLMixin):
             finally:
                 self._ref_stack.pop()
 
-        rules: list[Rule] = []
-        views = None
         with self._v_based(site.base_uri):
-            for keyword in self.keyword_order:
-                if keyword not in definition:
-                    continue
-                emit = _VALUE_KEYWORDS.get(keyword)
-                if emit is not None:
-                    views = views or self._views(site)
-                    rules.extend(self._placed(site, getattr(self, emit)(
-                        keyword, definition, site.name_sql, views),
-                        site.present(), value=_value_of(site)))
-                elif keyword in _KEY_SET_KEYWORDS:
-                    rules.extend(self._key_set_rules(site, getattr(
-                        self, _KEY_SET_KEYWORDS[keyword]), keyword,
-                        definition))
-                elif keyword in _OBJECT_VALUE_KEYWORDS:
-                    rules.extend(getattr(self, _OBJECT_VALUE_KEYWORDS[
-                        keyword])(definition, site))
-        return rules
+            rules = self._keyword_rules(definition, site.name_sql,
+                                        self._views(site))
+        return self._placed(site, rules, site.present(), value=_value_of(site))
 
     # -- helpers -----------------------------------------------------------
 
@@ -400,57 +386,6 @@ class _PlanCompiler(_VariantSQLMixin):
             "callable formats, format 'regex') cannot check array "
             "elements or map entries; use engine='python'")
 
-    # -- objects -----------------------------------------------------------
-
-    def _field_sites(self, site: _Site) -> dict[str, _Site]:
-        """Child site per statically-known field (root columns or struct)."""
-        if site.expr is None:
-            return {
-                f.name: site.child(sqlident(f.name), f.dataType, "." + f.name)
-                for f in site.dtype.fields
-            }
-        if isinstance(site.dtype, T.StructType):
-            return {
-                f.name: site.child(
-                    f"{site.expr}.{sqlident(f.name)}", f.dataType, "." + f.name,
-                    json=(
-                        f"get_json_object({site.json}, "
-                        f"{sqlstr(_json_path(f.name))})"
-                        if site.json is not None
-                        and isinstance(f.dataType, T.StructType) else None))
-                for f in site.dtype.fields
-            }
-        return {}
-
-    def _object_keys(self, site) -> _ObjectKeys | None:
-        """The key facts of an object site for the varsql key-set
-        emitters; None where the value is never an object.  The rule's
-        presence gate implies an object except where NULL is a value (an
-        array element, a map value, a JSON-backed property: a JSON null
-        or a non-object JSON text parses to NULL), so the object gate
-        there is the NULL test — NULL is not an empty object."""
-        def gate(probe):
-            return f"({probe} IS NOT NULL)" if site.null_is_value else "true"
-
-        if isinstance(site.dtype, T.MapType):
-            return _ObjectKeys(
-                gate(site.expr), f"map_keys({site.expr})",
-                lambda key: f"map_contains_key({site.expr}, {sqlstr(key)})")
-        if site.expr is not None and not isinstance(site.dtype, T.StructType):
-            return None
-        keys = self._keys(site)
-        if keys is not None:
-            # JSON-backed sites test TRUE key presence — an explicit null
-            # value is present (reference semantics), unlike the
-            # struct-field NULL-means-absent approximation
-            return _ObjectKeys(
-                gate(keys), keys,
-                lambda key: _nf(f"array_contains({keys}, {sqlstr(key)})"))
-        fields = {key: child.present()
-                  for key, child in self._field_sites(site).items()}
-        return _ObjectKeys(gate(site.expr), None,
-                           lambda key: fields.get(key, "false"), fields)
-
     def _placed(self, site, rules, gate, value=None) -> list[Rule]:
         """Emitted rules placed at ``site``: active where ``gate`` holds,
         with the site's display name and ``value`` (its value SQL for
@@ -469,72 +404,6 @@ class _PlanCompiler(_VariantSQLMixin):
                     value=None if rule.dynamic else value)
             out.append(rule)
         return out
-
-    def _key_set_rules(self, site, emit, *args) -> list[Rule]:
-        """Rules of one object key-set keyword: its varsql emitter over
-        this site's key facts; none at a site that is never an object.
-        (The definition is checked there all the same: ``_build_plan``
-        runs the row-level compile first, which rejects ``required:
-        true`` on a string field as the reference does.)"""
-        ok = self._object_keys(site)
-        if ok is None:
-            return []
-        with self._v_based(site.base_uri):
-            return self._placed(site, emit(*args, ok, site.name_sql),
-                                site.present(), value=_value_of(site))
-
-    def _kw_dependencies(self, definition, site):
-        ok = self._object_keys(site)
-        if ok is None:
-            return []
-        rules = []
-        for key, requirement in definition["dependencies"].items():
-            if isinstance(requirement, dict):
-                rules.extend(rule.gated(ok.has(key))
-                             for rule in self.compile_value(requirement, site))
-            else:
-                rules.extend(self._key_set_rules(
-                    site, self._dependency_rules, key, requirement))
-        return rules
-
-    def _kw_properties(self, definition, site):
-        """Each declared property's value rules.  At a JSON-backed object
-        site every key compiles, also one outside the struct the column
-        parses to (a ``properties`` under a combinator, ``if``/``then``
-        or a schema ``dependencies``): exact mode validates it over the
-        variant view, and coerce mode, with no struct field to validate,
-        raises :class:`PlanUnsupported`."""
-        rules = []
-        fields = self._field_sites(site)
-        is_map = isinstance(site.dtype, T.MapType)
-        keys = self._keys(site)
-        for key, prop_definition in definition["properties"].items():
-            if not isinstance(prop_definition, (dict, bool)):
-                clean = re.sub(r"[^a-zA-Z0-9]", "", key)
-                raise SchemaDefinitionError("data[{}] must be object".format(clean))
-            if keys is not None and not is_map:
-                rules.extend(self._json_property_rules(
-                    site, key, fields.get(key), prop_definition))
-            elif is_map:
-                child = site.child(
-                    f"try_element_at({site.expr}, {sqlstr(key)})",
-                    site.dtype.valueType, "." + key, null_is_value=True)
-                # only applies when the key is present in the map
-                gate = _and(site.present(),
-                            f"map_contains_key({site.expr}, {sqlstr(key)})")
-                for rule in self.compile_value(prop_definition, child):
-                    rules.append(rule.gated(gate))
-            elif key in fields:
-                rules.extend(self.compile_value(prop_definition, fields[key]))
-            # key can never exist in this static type -> no rules
-            if (
-                self.use_default
-                and isinstance(prop_definition, dict)
-                and "default" in prop_definition
-                and site.expr is None
-            ):
-                self.defaults.append((key, prop_definition["default"]))
-        return rules
 
     def _json_property_rules(self, site, key, field, prop_definition):
         """One property of a JSON-backed object: value rules gated on
@@ -590,96 +459,6 @@ class _PlanCompiler(_VariantSQLMixin):
             return [rule.gated(gate)
                     for rule in self.compile_value(prop_definition, child)]
         return self._placed(base, rules, gate)
-
-    def _entry_rule(self, site, key_filter, value_definition, rule_label):
-        """First violating (key, value) entry of an object's runtime
-        entries, with the inner rule id/name/message surfaced verbatim:
-        the shared entries emitter over the object as a map — a map
-        column (its values compile at their typed sites), or a
-        JSON-backed object's map<string,variant> view (its values
-        validate over the variant world).  ``key_filter``: key SQL text
-        -> boolean SQL text."""
-        ctx = None
-        if isinstance(site.dtype, T.MapType):
-            if not isinstance(site.dtype.keyType, T.StringType):
-                raise PlanUnsupported(
-                    f"{rule_label} over a map column keyed by "
-                    f"{site.dtype.keyType.simpleString()}: JSON object keys "
-                    "are strings; use engine='python'")
-            obj = site
-        else:
-            if not self.exact_json_types:
-                raise PlanUnsupported(
-                    f"{rule_label} value schemas over undeclared keys need "
-                    "exact JSON typing; use json_types='exact' (default) or "
-                    "engine='python'")
-            obj = dataclasses.replace(
-                site, expr=self._vmap(site), null_is_value=False, json=None,
-                dtype=T.MapType(T.StringType(), T.VariantType()))
-            ctx = _PackSingle(None, site.name_sql, obj=obj.expr)
-        with self._v_based(site.base_uri), self._vpack_top(ctx) as ctx:
-            rules = self._entries_rules(key_filter, value_definition,
-                                        rule_label, site.name_sql,
-                                        self._views(obj), ctx=ctx)
-        return self._placed(site, rules, site.present())
-
-    def _kw_pattern_properties(self, definition, site):
-        is_map = isinstance(site.dtype, T.MapType)
-        keys = None if is_map else self._keys(site)
-        fields = self._field_sites(site)
-        rules = []
-        for pattern, sub in definition["patternProperties"].items():
-            if sub is False:
-                rules.extend(self._key_set_rules(
-                    site, self._pattern_false_rules, pattern))
-                continue
-            if sub is True or sub == {}:
-                continue
-            matcher = re.compile(pattern)
-            java = jvm_pattern(_UNESCAPED_DOLLAR.sub(r"\\Z", pattern))
-            if keys is None and not is_map:
-                # struct/root: keys are static -> match at plan time
-                for key, child in fields.items():
-                    if matcher.search(key):
-                        rules.extend(self.compile_value(sub, child))
-                continue
-            # map column or JSON-backed object: declared fields (a JSON
-            # object's) matching the pattern validate their variant value,
-            # like `properties`; the other runtime keys are checked on
-            # the object's entries
-            for key, base in fields.items():
-                if matcher.search(key):
-                    rules.extend(self._json_property_rules(site, key, base,
-                                                           sub))
-
-            def matches_undeclared(k_sql, _j=java, _d=sorted(fields)):
-                return "(" + " AND ".join(
-                    [f"rlike({k_sql}, {sqlstr(_j)})"]
-                    + [f"{k_sql} != {sqlstr(d)}" for d in _d]) + ")"
-
-            rules.extend(self._entry_rule(site, matches_undeclared, sub,
-                                          "patternProperties"))
-        return rules
-
-    def _kw_additional_properties(self, definition, site):
-        add_definition = definition["additionalProperties"]
-        if add_definition is True or add_definition == {}:
-            return []
-        if add_definition is False:
-            return self._key_set_rules(site, self._no_additional_rules,
-                                       definition)
-        if isinstance(site.dtype, T.MapType) or self._keys(site) is not None:
-            # map column or JSON-backed object: the TRUE runtime key set
-            # decides what is "additional"
-            return self._entry_rule(site, self._extra_key(definition),
-                                    add_definition, "additionalProperties")
-        declared = definition.get("properties", {})
-        patterns = [re.compile(p) for p in definition.get("patternProperties", {})]
-        rules = []
-        for key, child in self._field_sites(site).items():
-            if key not in declared and not any(p.search(key) for p in patterns):
-                rules.extend(self.compile_value(add_definition, child))
-        return rules
 
 
 def _build_plan(definition, options: dict, compile_rules,

@@ -7,16 +7,18 @@ the finished text when it is applied.  (Building Column objects node by
 node cost one round-trip per expression node: unrolling the draft-04
 metaschema ONE level deep took ~1.45M py4j calls, ~270 s of driver time,
 for a plan whose logic is a few hundred KB of SQL.)  This module holds
-the literal/violation-struct helpers, ONE emitter per scalar,
-combinator, array and object key-set keyword, dispatched by both worlds
-from ``_VALUE_KEYWORDS``/``_KEY_SET_KEYWORDS``, and the variant world:
-open-key value schemas, exact-typed declared JSON fields, depth-bounded
-recursive ``$ref``.  Emitters return :class:`plan.Rule` s and read only
-the value's views: :class:`_Views` of a VARIANT test its runtime type
-tag, :class:`_TypedViews` of a typed site carry literal type facts that
-``_and``/``_or``/``_not`` fold in Python.  An emitter recurses through
-the view: ``w.rules`` compiles a subschema there (``compile_value`` at a
-typed site, :meth:`_VariantSQLMixin._variant_rules` over a VARIANT).
+the literal/violation-struct helpers, ONE emitter per keyword, which
+typed sites and VARIANT values dispatch from ``_KEYWORDS`` by one loop
+(``_keyword_rules``), and the variant world: open-key value schemas,
+exact-typed declared JSON fields, depth-bounded recursive ``$ref``.
+Emitters return :class:`plan.Rule` s and read only the value's views:
+:class:`_Views` of a VARIANT test its runtime type tag,
+:class:`_TypedViews` of a typed site carry literal type facts that
+``_and``/``_or``/``_not`` fold in Python, and each gives its object
+members (key facts, static member names, a member's rules, runtime
+entries).  An emitter recurses through the view: ``w.rules`` compiles a
+subschema there (``compile_value`` at a typed site,
+:meth:`_VariantSQLMixin._variant_rules` over a VARIANT).
 
 Semantics are a 1:1 mirror of the reference validator's keyword order
 and messages (fastjsonschema draft04.py:42-68 keyword registration;
@@ -180,6 +182,38 @@ class _Views:
         ``array_distinct`` compares them exactly)."""
         return self.arr
 
+    # -- object members --------------------------------------------------
+
+    members = ()  # the statically known member names: none, only entries
+
+    def object_keys(self, c) -> "_ObjectKeys":
+        """The key facts the object keywords read (the gate "false" where
+        the value is never an object)."""
+        return _ObjectKeys(self.is_obj, self.okeys, lambda key: _nf(
+            f"map_contains_key({self.obj}, {sqlstr(key)})"))
+
+    def member_rules(self, c, key, definition, name_sql, pass_only, ctx):
+        """Member ``key``: its first failing rule as one struct over the
+        bound member, active where the key is present."""
+        ok = self.object_keys(c)
+        return c._nested_rules(
+            definition, f"concat({name_sql}, {sqlstr('.' + key)})",
+            f"try_element_at({self.obj}, {sqlstr(key)})",
+            _and(ok.gate, ok.has(key)), pass_only,
+            _derive_ctx(ctx,
+                        lambda lv: f"try_element_at({lv.obj}, {sqlstr(key)})",
+                        lambda nm: f"concat({nm}, {sqlstr('.' + key)})"))
+
+    def entries_rules(self, c, key_filter, definition, rule_id, name_sql,
+                      pass_only, ctx):
+        """First entry ``key_filter`` selects and ``definition`` rejects."""
+        return c._entries_rules(key_filter, definition, rule_id, name_sql,
+                                self, pass_only, ctx)
+
+    def record_default(self, c, key, value):
+        """A declared property's ``default``: only the root row of a
+        typed table projects defaults."""
+
 
 _ISO_TS = "yyyy-MM-dd'T'HH:mm:ss'Z'"
 _ISO_DATE = "yyyy-MM-dd"
@@ -329,6 +363,91 @@ class _TypedViews(_Views):
                 "nesting past canon_depth; use engine='python'")
         x = c._vsql_var()
         return f"transform({self.arr}, {x} -> to_variant_object({x}))"
+
+    # -- object members: a struct's fields are static members (NULL
+    # meaning absent), a map has runtime entries, a JSON-backed object
+    # both (its parsed fields, and the true key set ``c._keys``).  The
+    # object gate is the presence gate, except where NULL is a value (an
+    # array element, a map value, a JSON-backed property, where a JSON
+    # null or a non-object text parses to NULL): NULL is no empty object
+
+    def object_keys(self, c):
+        site = self.site
+
+        def gate(probe):
+            return f"({probe} IS NOT NULL)" if site.null_is_value else "true"
+
+        if isinstance(site.dtype, T.MapType):
+            return _ObjectKeys(
+                gate(site.expr), f"map_keys({site.expr})",
+                lambda key: f"map_contains_key({site.expr}, {sqlstr(key)})")
+        if site.expr is not None and not isinstance(site.dtype, T.StructType):
+            # never an object: every key-set rule folds away
+            return _ObjectKeys("false", None, lambda key: "false", {})
+        keys = c._keys(site)
+        if keys is not None:
+            # JSON-backed sites test TRUE key presence — an explicit null
+            # value is present (reference semantics), unlike the
+            # struct-field NULL-means-absent approximation
+            return _ObjectKeys(
+                gate(keys), keys,
+                lambda key: _nf(f"array_contains({keys}, {sqlstr(key)})"))
+        fields = {key: child.present() for key, child in site.fields().items()}
+        return _ObjectKeys(gate(site.expr), None,
+                           lambda key: fields.get(key, "false"), fields)
+
+    @property
+    def members(self):
+        return tuple(self.site.fields())
+
+    def member_rules(self, c, key, definition, name_sql, pass_only, ctx):
+        # a static field's own rules at its site; a map value's, active
+        # where the key is present; a JSON-backed property's over its
+        # JSON value (``_json_property_rules``)
+        site = self.site
+        if isinstance(site.dtype, T.MapType):
+            child = site.child(f"try_element_at({site.expr}, {sqlstr(key)})",
+                               site.dtype.valueType, "." + key,
+                               null_is_value=True)
+            gate = _and(site.present(),
+                        f"map_contains_key({site.expr}, {sqlstr(key)})")
+            return [rule.gated(gate)
+                    for rule in c.compile_value(definition, child)]
+        field = site.fields().get(key)
+        if c._keys(site) is not None:
+            return c._json_property_rules(site, key, field, definition)
+        return [] if field is None else c.compile_value(definition, field)
+
+    def entries_rules(self, c, key_filter, definition, rule_id, name_sql,
+                      pass_only, ctx):
+        # a map's values compile at their typed sites, a JSON-backed
+        # object's over its map<string,variant> view; a struct has none
+        site, obj, ctx = self.site, self, None
+        if isinstance(site.dtype, T.MapType):
+            if not isinstance(site.dtype.keyType, T.StringType):
+                c._plan_unsupported(
+                    f"{rule_id} over a map column keyed by "
+                    f"{site.dtype.keyType.simpleString()}: JSON object keys "
+                    "are strings; use engine='python'")
+        elif c._keys(site) is None:
+            return []
+        elif not c.exact_json_types:
+            c._plan_unsupported(
+                f"{rule_id} value schemas over undeclared keys need "
+                "exact JSON typing; use json_types='exact' (default) or "
+                "engine='python'")
+        else:
+            obj = c._views(dataclasses.replace(
+                site, expr=c._vmap(site), null_is_value=False, json=None,
+                dtype=T.MapType(T.StringType(), T.VariantType())))
+            ctx = _PackSingle(None, name_sql, obj=obj.obj)
+        with c._vpack_top(ctx) as ctx:
+            return c._entries_rules(key_filter, definition, rule_id,
+                                    name_sql, obj, ctx=ctx)
+
+    def record_default(self, c, key, value):
+        if c.use_default and self.site.expr is None:
+            c.defaults.append((key, value))
 
 
 def _typed_views(expr, dtype, null_is_value=False, **kwargs) -> _Views:
@@ -596,12 +715,11 @@ def _subschemas(definition, keyword) -> list:
 
 @dataclass
 class _ObjectKeys:
-    """The key facts of one object site as SQL text — all that the
-    object key-set keywords read.
-
-    ``gate``: true where the value is an object ("true" where the rule's
-    own presence gate already implies it; never "true" where NULL is a
-    value — NULL is not an empty object).  ``keys``: the runtime key
+    """The key facts of one object value as SQL text (its view's
+    ``object_keys``).  ``gate``: true where the value is an object
+    ("true" where the rule's own presence gate already implies it, never
+    where NULL is a value — NULL is not an empty object; "false" where
+    the value is never an object).  ``keys``: the runtime key
     array, or None at a static struct site, whose keys are ``fields``
     (field name -> presence test), known at compile time.
     ``has(key)``: boolean, the key is present."""
@@ -624,9 +742,9 @@ _CANON_V = "__CANON_V__"
 _JSON_TYPES = ("null", "boolean", "number", "integer", "string", "array",
                "object")
 
-# keyword -> its one emitter (a _VariantSQLMixin method): every scalar,
-# combinator and array keyword, dispatched from here by both worlds
-_VALUE_KEYWORDS = {
+# keyword -> its one emitter (a _VariantSQLMixin method), dispatched from
+# here by typed sites and VARIANT values alike (``_keyword_rules``)
+_KEYWORDS = {
     **dict.fromkeys((
         "type", "enum", "const", "minimum", "maximum", "exclusiveMinimum",
         "exclusiveMaximum", "multipleOf", "minLength", "maxLength",
@@ -637,11 +755,12 @@ _VALUE_KEYWORDS = {
     "minItems": "_item_count_rules", "maxItems": "_item_count_rules",
     "uniqueItems": "_unique_items_rules", "items": "_items_rules",
     "contains": "_contains_rules",
-}
-# keyword -> its one object key-set emitter, over a site's _ObjectKeys
-_KEY_SET_KEYWORDS = {
     "minProperties": "_count_rules", "maxProperties": "_count_rules",
-    "required": "_required_rules", "propertyNames": "_property_names_rules"}
+    "required": "_required_rules", "propertyNames": "_property_names_rules",
+    "dependencies": "_dependencies_rules", "properties": "_properties_rules",
+    "patternProperties": "_pattern_properties_rules",
+    "additionalProperties": "_additional_properties_rules",
+}
 
 _JSON_LITERAL_RE = (r"^\s*(-?\d+(\.\d+)?([eE][+-]?\d+)?|true|false|null|\".*\")\s*$")
 
@@ -658,19 +777,10 @@ class _VariantSQLMixin:
     state (budgets, counters, the ref stack, packed-recursion frames and
     memos)."""
 
-    # Keywords the variant rule world expresses; anything else raises
-    # PlanUnsupported (engine="python" is the exact path there).  Undeclared
-    # keys in a JSON column have no static type, so their value schemas are
-    # evaluated over Spark 4 VariantType: the raw text parses once as
-    # map<string,variant>, `schema_of_variant` recovers the exact JSON type
-    # per value, and `try_variant_get` projects typed views.
-    _VARIANT_SUPPORTED = set(_VALUE_KEYWORDS) | {
-        # recursion: depth-bounded unroll, handled before the table
-        "$ref",
-        "minProperties", "maxProperties", "required", "dependencies",
-        "properties", "patternProperties", "additionalProperties",
-        "propertyNames",
-    }
+    # Keywords the variant world expresses (the table, and $ref: a
+    # depth-bounded unroll); anything else raises PlanUnsupported
+    # (engine="python" is the exact path there)
+    _VARIANT_SUPPORTED = set(_KEYWORDS) | {"$ref"}
     _VARIANT_ANNOTATIONS = {
         "title", "description", "default", "examples", "$comment",
         "$schema", "$id", "id", "definitions",
@@ -1263,8 +1373,8 @@ class _VariantSQLMixin:
     # typed site, the variant table over a VARIANT), ``w.elem`` views an
     # element or entry value, ``w.item_rules`` compiles a declared
     # positional item and ``w.variant_items`` feeds the uniqueItems canon.
-    # Those four are the only places the worlds part; add no typed branch
-    # here.
+    # Those, and the object member facts, are the only places the worlds
+    # part; add no typed branch here.
 
     def _all_of_rules(self, keyword, definition, name_sql, w: _Views,
                       pass_only=False, ctx=None):
@@ -1405,17 +1515,18 @@ class _VariantSQLMixin:
             name_sql, "must contain one of contains definition", pass_only),
             _and(w.arr_gate, f"NOT exists({w.arr}, {x} -> {found})"))]
 
-    # -- object key-set keywords: one emitter each, for every site --------
+    # -- object keywords: one emitter each, for every site ---------------
     #
-    # Each takes the site's key facts (_ObjectKeys) and returns rules:
-    # variant values call them from the keyword table below, typed struct,
-    # map and JSON-backed sites from compiler._PlanCompiler.  Where the
-    # message or the test must walk the keys (additionalProperties: false,
+    # Each reads the value's object member facts: its key facts
+    # (``w.object_keys``, an _ObjectKeys), its statically known member
+    # names (``w.members``), a member's rules (``w.member_rules``) and its
+    # runtime entries (``w.entries_rules``).  Where the message or the
+    # test must walk the keys (additionalProperties: false,
     # patternProperties: false, propertyNames), the emitter has a second
     # branch for a static struct site (ok.keys is None) that unrolls the
     # field names at compile time: it exists only to keep lambdas out of
-    # the typed hot path (whole-stage codegen, test_plan_shape.py), and
-    # no further static/runtime branches belong here.
+    # the typed hot path (whole-stage codegen, test_plan_shape.py), and no
+    # further static/runtime branches belong here.
 
     _COUNT_BOUNDS = {
         "minProperties": ("<", "must contain at least {} properties"),
@@ -1423,18 +1534,19 @@ class _VariantSQLMixin:
             ">", "must contain less than or equal to {} properties"),
     }
 
-    def _count_rules(self, keyword, definition, ok: _ObjectKeys, name_sql,
-                     pass_only=False):
+    def _count_rules(self, keyword, definition, name_sql, w: _Views,
+                     pass_only=False, ctx=None):
         bound = definition[keyword]
         if not isinstance(bound, (int, float)):
             raise SchemaDefinitionError(f"{keyword} must be a number")
+        ok = w.object_keys(self)
         op, template = self._COUNT_BOUNDS[keyword]
         return [_rule(keyword, name_sql,
                       _msg(name_sql, template.format(bound), pass_only),
                       _and(ok.gate, f"({ok.count()} {op} {sqlnum(bound)})"))]
 
-    def _required_rules(self, keyword, definition, ok: _ObjectKeys,
-                        name_sql, pass_only=False):
+    def _required_rules(self, keyword, definition, name_sql, w: _Views,
+                        pass_only=False, ctx=None):
         required = definition["required"]
         if not isinstance(required, (list, tuple)):
             raise SchemaDefinitionError("required must be an array")
@@ -1452,6 +1564,7 @@ class _VariantSQLMixin:
                 raise SchemaDefinitionError(
                     "data: items {} are required but not allowed"
                     .format(impossible))
+        ok = w.object_keys(self)
         missing = [(key, f"NOT {ok.has(key)}") for key in required]
         # the message lists ONLY the missing keys, sorted by raw name
         # then repr-quoted (draft04.py:525-528: str(sorted(missing)));
@@ -1464,68 +1577,75 @@ class _VariantSQLMixin:
         return [_rule("required", name_sql, message,
                       _and(ok.gate, _or([f for _, f in missing])))]
 
-    def _dependency_rules(self, key, requirement, ok: _ObjectKeys,
-                            name_sql, pass_only=False):
-        """One ``dependencies`` entry in its array or ``false`` form (the
-        schema form validates a value, so each world compiles it)."""
-        if requirement is True:
-            return []
-        if requirement is False:
-            return [_rule("dependencies", name_sql,
-                          "NULL" if pass_only else
-                          f"concat({sqlstr(key + ' in ')}, {name_sql}, "
-                          "' must not be there')",
-                          _and(ok.gate, ok.has(key)))]
-        return [_rule("dependencies", name_sql,
-                      _msg(name_sql, f"missing dependency {needed} for {key}",
-                           pass_only),
-                      _and(ok.gate, ok.has(key), f"NOT {ok.has(needed)}"))
-                for needed in requirement]
+    def _dependencies_rules(self, keyword, definition, name_sql, w: _Views,
+                            pass_only=False, ctx=None):
+        deps = definition["dependencies"]
+        if not isinstance(deps, dict):
+            raise SchemaDefinitionError("dependencies must be an object")
+        ok = w.object_keys(self)
+        out = []
+        for key, requirement in deps.items():
+            present = _and(ok.gate, ok.has(key))
+            if present == "false":
+                continue  # never an object: nothing to compile
+            if isinstance(requirement, dict):
+                out.extend(rule.gated(present) for rule in w.rules(
+                    self, requirement, name_sql, pass_only, ctx))
+            elif requirement is False:
+                out.append(_rule("dependencies", name_sql,
+                                 "NULL" if pass_only else
+                                 f"concat({sqlstr(key + ' in ')}, {name_sql}, "
+                                 "' must not be there')", present))
+            elif requirement is not True:
+                out.extend(_rule("dependencies", name_sql, _msg(
+                    name_sql, f"missing dependency {needed} for {key}",
+                    pass_only), _and(ok.gate, ok.has(key),
+                                     f"NOT {ok.has(needed)}"))
+                    for needed in requirement)
+        return out
 
-    def _extra_key(self, definition):
-        """Key SQL -> true where the key is neither declared in
-        ``properties`` nor matched by a ``patternProperties`` pattern."""
-        declared = sorted(definition.get("properties", {}))
-        java = [jvm_pattern(_UNESCAPED_DOLLAR.sub(r"\\Z", p))
-                for p in definition.get("patternProperties", {})]
+    def _properties_rules(self, keyword, definition, name_sql, w: _Views,
+                          pass_only=False, ctx=None):
+        out = []
+        for key, sub in definition["properties"].items():
+            if not isinstance(sub, (dict, bool)):
+                clean = re.sub(r"[^a-zA-Z0-9]", "", key)
+                raise SchemaDefinitionError(
+                    "data[{}] must be object".format(clean))
+            out.extend(w.member_rules(self, key, sub, name_sql, pass_only,
+                                      ctx))
+            if isinstance(sub, dict) and "default" in sub:
+                w.record_default(self, key, sub["default"])
+        return out
 
-        def is_extra(k_sql):
-            conds = (["true"] + [f"{k_sql} != {sqlstr(k)}" for k in declared]
-                     + [f"NOT rlike({k_sql}, {sqlstr(j)})" for j in java])
-            return "(" + " AND ".join(conds) + ")"
+    def _pattern_properties_rules(self, keyword, definition, name_sql,
+                                  w: _Views, pass_only=False, ctx=None):
+        """A static member matching a pattern validates as a member (a
+        JSON-backed property over its JSON value, like ``properties``),
+        the other matching keys on the runtime entries."""
+        out = []
+        for pattern, sub in definition["patternProperties"].items():
+            if sub is False:
+                out.extend(self._pattern_false_rules(pattern, name_sql, w,
+                                                     pass_only))
+            elif sub is not True and sub != {}:
+                matcher = re.compile(pattern)
+                out.extend(rule for key in w.members if matcher.search(key)
+                           for rule in w.member_rules(self, key, sub, name_sql,
+                                                      pass_only, ctx))
+                java = jvm_pattern(_UNESCAPED_DOLLAR.sub(r"\\Z", pattern))
 
-        return is_extra
+                def matches_undeclared(k_sql, _j=java, _d=sorted(w.members)):
+                    return "(" + " AND ".join(
+                        [f"rlike({k_sql}, {sqlstr(_j)})"]
+                        + [f"{k_sql} != {sqlstr(d)}" for d in _d]) + ")"
 
-    def _no_additional_rules(self, definition, ok: _ObjectKeys, name_sql,
-                             pass_only=False):
-        """``additionalProperties: false``."""
-        if ok.keys is not None:
-            k = self._vsql_var("k")
-            extras = f"filter({ok.keys}, {k} -> {self._extra_key(definition)(k)})"
-            fail = f"size({extras}) > 0"
-            shown = (f"concat_ws(', ', transform(array_sort({extras}), "
-                     f"{k} -> concat({sqlstr(chr(39))}, {k}, "
-                     f"{sqlstr(chr(39))})))")
-        else:
-            declared = definition.get("properties", {})
-            patterns = [re.compile(p)
-                        for p in definition.get("patternProperties", {})]
-            extra = {key: p for key, p in ok.fields.items()
-                     if key not in declared
-                     and not any(m.search(key) for m in patterns)}
-            if not extra:
-                return []
-            fail = _or(list(extra.values()))
-            shown = "concat_ws(', '" + "".join(
-                f", CASE WHEN {p} THEN {sqlstr(repr(key))} END"
-                for key, p in sorted(extra.items())) + ")"
-        return [_rule("additionalProperties", name_sql,
-                      "NULL" if pass_only else
-                      f"concat({name_sql}, ' must not contain ', "
-                      f"concat('{{', {shown}, '}}'), ' properties')",
-                      _and(ok.gate, fail))]
+                out.extend(w.entries_rules(self, matches_undeclared, sub,
+                                           "patternProperties", name_sql,
+                                           pass_only, ctx))
+        return out
 
-    def _pattern_false_rules(self, pattern, ok: _ObjectKeys, name_sql,
+    def _pattern_false_rules(self, pattern, name_sql, w: _Views,
                              pass_only=False):
         """``patternProperties: {pattern: false}``: a violation named by
         the offending key, with no keyword id (a boolean-false schema's
@@ -1533,6 +1653,7 @@ class _VariantSQLMixin:
         else one naming the first matching runtime key, in the key
         array's order (a map's entry order, a JSON text's key order; a
         variant object's keys come sorted)."""
+        ok = w.object_keys(self)
         if ok.keys is not None:
             java = jvm_pattern(_UNESCAPED_DOLLAR.sub(r"\\Z", pattern))
             k = self._vsql_var("k")
@@ -1553,11 +1674,69 @@ class _VariantSQLMixin:
             f"'message', concat({kname}, ' must not be there'))"))
             for kname, fail in hits]
 
-    def _property_names_rules(self, keyword, definition, ok: _ObjectKeys,
-                              name_sql, pass_only=False):
+    def _additional_properties_rules(self, keyword, definition, name_sql,
+                                     w: _Views, pass_only=False, ctx=None):
+        """A key neither declared in ``properties`` nor matched by a
+        ``patternProperties`` pattern: ``false`` rejects it, a schema
+        validates its value — a static member's as a member, the other
+        keys' on the runtime entries."""
+        add = definition["additionalProperties"]
+        if add is True or add == {}:
+            return []
+        declared = definition.get("properties", {})
+        patterns = [re.compile(p)
+                    for p in definition.get("patternProperties", {})]
+        extra = [key for key in w.members if key not in declared
+                 and not any(p.search(key) for p in patterns)]
+        if add is not False:
+            return [rule for key in extra for rule in w.member_rules(
+                self, key, add, name_sql, pass_only, ctx)] + w.entries_rules(
+                self, self._extra_key(definition, w.members), add,
+                "additionalProperties", name_sql, pass_only, ctx)
+        ok = w.object_keys(self)
+        if ok.keys is not None:
+            k = self._vsql_var("k")
+            extras = f"filter({ok.keys}, {k} -> {self._extra_key(definition)(k)})"
+            fail = f"size({extras}) > 0"
+            shown = (f"concat_ws(', ', transform(array_sort({extras}), "
+                     f"{k} -> concat({sqlstr(chr(39))}, {k}, "
+                     f"{sqlstr(chr(39))})))")
+        elif not extra:
+            return []
+        else:
+            # static keys: the extra fields unroll at compile time
+            fail = _or([ok.fields[key] for key in extra])
+            shown = "concat_ws(', '" + "".join(
+                f", CASE WHEN {ok.fields[key]} THEN {sqlstr(repr(key))} END"
+                for key in sorted(extra)) + ")"
+        return [_rule("additionalProperties", name_sql,
+                      "NULL" if pass_only else
+                      f"concat({name_sql}, ' must not contain ', "
+                      f"concat('{{', {shown}, '}}'), ' properties')",
+                      _and(ok.gate, fail))]
+
+    def _extra_key(self, definition, members=()):
+        """Key SQL -> true where the key is neither declared in
+        ``properties`` (nor a static member) nor matched by a
+        ``patternProperties`` pattern."""
+        declared = sorted(set(definition.get("properties", {}))
+                          | set(members))
+        java = [jvm_pattern(_UNESCAPED_DOLLAR.sub(r"\\Z", p))
+                for p in definition.get("patternProperties", {})]
+
+        def is_extra(k_sql):
+            conds = (["true"] + [f"{k_sql} != {sqlstr(k)}" for k in declared]
+                     + [f"NOT rlike({k_sql}, {sqlstr(j)})" for j in java])
+            return "(" + " AND ".join(conds) + ")"
+
+        return is_extra
+
+    def _property_names_rules(self, keyword, definition, name_sql, w: _Views,
+                              pass_only=False, ctx=None):
         names_definition = definition["propertyNames"]
         if names_definition is True or names_definition == {}:
             return []
+        ok = w.object_keys(self)
         message = "must be named by propertyName definition"
         if names_definition is False:
             message = "must not be there"
@@ -1900,71 +2079,14 @@ class _VariantSQLMixin:
                 "keywords are expressible over dynamically-typed "
                 "undeclared keys; use engine='python'")
 
-        out = []
-        facts = _ObjectKeys(
-            w.is_obj, w.okeys,
-            lambda key: _nf(f"map_contains_key({w.obj}, {sqlstr(key)})"))
-        for keyword in self.keyword_order:
-            if keyword not in definition:
-                continue
-            emit = _VALUE_KEYWORDS.get(keyword)
-            if emit is not None:
-                out.extend(getattr(self, emit)(keyword, definition, name_sql,
-                                               w, pass_only, ctx))
-            elif keyword in _KEY_SET_KEYWORDS:
-                out.extend(getattr(self, _KEY_SET_KEYWORDS[keyword])(
-                    keyword, definition, facts, name_sql, pass_only))
-            elif keyword == "properties":
-                for key, sub in definition["properties"].items():
-                    if not isinstance(sub, (dict, bool)):
-                        clean = re.sub(r"[^a-zA-Z0-9]", "", key)
-                        raise SchemaDefinitionError(
-                            "data[{}] must be object".format(clean))
-                    out.extend(self._nested_rules(
-                        sub, f"concat({name_sql}, {sqlstr('.' + key)})",
-                        f"try_element_at({w.obj}, {sqlstr(key)})",
-                        _and(w.is_obj, facts.has(key)), pass_only,
-                        _derive_ctx(
-                            ctx,
-                            lambda lv, _k=key: (
-                                f"try_element_at({lv.obj}, {sqlstr(_k)})"),
-                            lambda nm, _k=key: (
-                                f"concat({nm}, {sqlstr('.' + _k)})"))))
-            elif keyword == "dependencies":
-                deps = definition["dependencies"]
-                if not isinstance(deps, dict):
-                    raise SchemaDefinitionError(
-                        "dependencies must be an object")
-                for key, req in deps.items():
-                    if not isinstance(req, dict):
-                        out.extend(self._dependency_rules(
-                            key, req, facts, name_sql, pass_only))
-                        continue
-                    present = _and(w.is_obj, facts.has(key))
-                    out.extend(rule.gated(present) for rule in
-                               self._variant_rules(req, name_sql, w,
-                                                   pass_only, ctx))
-            elif keyword == "additionalProperties":
-                add_def = definition["additionalProperties"]
-                if add_def is True or add_def == {}:
-                    continue
-                if add_def is False:
-                    out.extend(self._no_additional_rules(
-                        definition, facts, name_sql, pass_only))
-                else:
-                    out.extend(self._entries_rules(
-                        self._extra_key(definition), add_def,
-                        "additionalProperties", name_sql, w, pass_only, ctx))
-            elif keyword == "patternProperties":
-                for pattern, sub in definition["patternProperties"].items():
-                    if sub is False:
-                        out.extend(self._pattern_false_rules(
-                            pattern, facts, name_sql, pass_only))
-                    elif sub is not True and sub != {}:
-                        java = jvm_pattern(
-                            _UNESCAPED_DOLLAR.sub(r"\\Z", pattern))
-                        out.extend(self._entries_rules(
-                            lambda k, _j=java: f"rlike({k}, {sqlstr(_j)})",
-                            sub, "patternProperties", name_sql, w,
-                            pass_only, ctx))
-        return out
+        return self._keyword_rules(definition, name_sql, w, pass_only, ctx)
+
+    def _keyword_rules(self, definition, name_sql, w: _Views,
+                       pass_only=False, ctx=None):
+        """The rules of ``definition``'s keywords over the value's views,
+        in dialect keyword order: one emitter per keyword, one loop for
+        typed sites (``compile_value``) and VARIANT values
+        (``_variant_rules``)."""
+        return [rule for keyword in self.keyword_order if keyword in definition
+                for rule in getattr(self, _KEYWORDS[keyword])(
+                    keyword, definition, name_sql, w, pass_only, ctx)]

@@ -32,6 +32,8 @@ def _to_json_value(value, dtype):
     nulls."""
     if value is None:
         return None
+    if isinstance(dtype, T.VariantType):
+        return value.toPython()
     if isinstance(dtype, T.StructType):
         out = {}
         for f in dtype.fields:
@@ -442,3 +444,33 @@ def test_static_property_names_match_rowcheck(spark, schema, options):
     plan = ssg.compile_plan(schema, spark_schema, **options)
     assert plan.rules
     assert_matches_rowcheck(plan, df, schema, **options)
+
+
+VARIANT_DOCS = ['{"a": "x"}', '{"a": 1, "b": -1}', '{}', '{"a": "x", "b": 2}',
+                '{"ab": "y", "z": 0}', '{"b": "q", "c": 1}', 'null', '5',
+                '[1]', None]
+
+
+@pytest.mark.parametrize("schema", [
+    {"required": ["a"]},
+    {"minProperties": 1, "maxProperties": 1},
+    {"propertyNames": {"maxLength": 1}},
+    {"properties": {"a": {}}, "additionalProperties": False},
+    {"properties": {"a": {}}, "additionalProperties": {"type": "string"}},
+    {"properties": {"a": {"type": "string"}, "b": {"minimum": 0}}},
+    {"patternProperties": {"^a": {"type": "string"}, "^z": False}},
+    {"dependencies": {"a": ["b"]}},
+    {"dependencies": {"a": {"required": ["b"]}}},
+], ids=["required", "min-max-properties", "property-names",
+        "additional-false", "additional-schema", "properties",
+        "pattern-properties", "dependencies-array", "dependencies-schema"])
+def test_typed_variant_object_keywords_match_rowcheck(spark, schema):
+    # a VARIANT column of a typed table reads its key facts, members and
+    # entries from the variant views: every object keyword compiles
+    spark_schema = T.StructType([T.StructField("v", T.VariantType())])
+    df = spark.createDataFrame([(d,) for d in VARIANT_DOCS],
+                               "s string").selectExpr("parse_json(s) AS v")
+    wrapper = {"properties": {"v": schema}}
+    plan = ssg.compile_plan(wrapper, spark_schema)
+    assert plan.rules
+    assert_matches_rowcheck(plan, df, wrapper)

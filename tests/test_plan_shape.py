@@ -285,10 +285,11 @@ TYPED_OBJECTS_DF_SCHEMA = T.StructType([
     T.StructField("counts", T.MapType(T.StringType(), T.LongType())),
     T.StructField("recs", T.MapType(T.StringType(), _AB)),
     T.StructField("outer", _INNER),
+    T.StructField("v", T.VariantType()),
 ])
 
 # every object keyword over a struct, a map of scalars, a map of structs,
-# a nested struct and the root row
+# a nested struct, a VARIANT column and the root row
 TYPED_OBJECTS_SCHEMA = {
     "required": ["obj"], "minProperties": 1, "maxProperties": 3,
     "propertyNames": {"maxLength": 6},
@@ -322,6 +323,12 @@ TYPED_OBJECTS_SCHEMA = {
                       "properties": {"a": {}, "b": {"minLength": 1}},
                       "additionalProperties": False,
                       "propertyNames": False}}},
+        "v": {"required": ["a"], "minProperties": 1,
+              "propertyNames": {"maxLength": 3},
+              "properties": {"a": {"type": "string"}},
+              "patternProperties": {"^b": {"minimum": 0}, "^z": False},
+              "additionalProperties": {"type": "string"},
+              "dependencies": {"a": ["b"], "c": {"required": ["d"]}}},
     },
 }
 
